@@ -24,7 +24,8 @@ import graft.core.sas.SasCore
   * rest of each subheader is zero-filled at its authentic length.
   *
   * Distributed write is the same two-job shape as the other writers:
-  * job 1 aggregates exact max string widths + row count, job 2 encodes
+  * job 1 is the `WriteStats` fold (exact row count + max string widths
+  * in one `mapPartitions` over the planned RDD), job 2 encodes
   * each partition into whole DATA pages (pages declare their own row
   * count, so partition boundaries never need row padding), and the
   * driver splices header + meta pages + page chunks. `multiFile=true`
@@ -199,7 +200,8 @@ object SasBinaryWriter {
     SasCatalogWriter.write(catPath, numeric.toMap, string.toMap)
   }
 
-  def write(df: DataFrame, path: String, options: Map[String, String]): Unit = {
+  def write(df: DataFrame, path: String, options: Map[String, String],
+      stats: => WriteStats): Unit = {
     val schema = df.schema
     require(schema.nonEmpty, "sas7bdat writer: empty schema")
     // metadata-df-driven options (reference `metadata=` write path):
@@ -294,15 +296,11 @@ object SasBinaryWriter {
       "sas7bdat writer: taggedMissings drops every column")
     val writtenSchema = StructType(writtenFields.toIndexedSeq)
 
-    // ---- job 1: exact row count + max observed string byte widths ----
-    val strCols = writtenFields.filter(_.dataType == StringType).map(_.name)
-    val aggs = count(lit(1)).as("__n") +:
-      strCols.map(c => max(octet_length(col(c))).as(c)).toIndexedSeq
-    val head = StatWriters.statsView(df).agg(aggs.head, aggs.tail: _*).collect()(0)
-    val nObs = head.getLong(0)
-    val widths: Map[String, Int] = strCols.zipWithIndex.map { case (c, i) =>
-      c -> math.max(1, if (head.isNullAt(i + 1)) 1 else head.getInt(i + 1))
-    }.toMap
+    // ---- job 1 (stats fold): exact row count + max string byte widths ----
+    val st = stats
+    val nObs = st.rows
+    val widths: Map[String, Int] = writtenFields.filter(_.dataType == StringType)
+      .map(f => f.name -> math.max(1, st.octets(f.name))).toMap
 
     val numWidths = parseStorageWidths(writtenSchema, options,
       "sas7bdat writer")

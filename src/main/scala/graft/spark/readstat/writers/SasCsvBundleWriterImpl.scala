@@ -61,7 +61,8 @@ object SasCsvBundleWriter {
       }
     }.toMap
 
-  def write(df: DataFrame, path: String, options: Map[String, String]): Unit = {
+  def write(df: DataFrame, path: String, options: Map[String, String],
+      stats: => WriteStats): Unit = {
     val schema = df.schema
     require(path.toLowerCase.endsWith(".csv"), "sas bundle path must end in .csv")
 
@@ -81,26 +82,19 @@ object SasCsvBundleWriter {
       }
     }
 
-    // one distributed stats pass: max observed string widths drive the
-    // LENGTH statements and $w. informats (reference max_string_width),
-    // and int-column ranges gate the length-5 narrowing (SAS length-5
+    // the stats fold: max observed string widths drive the LENGTH
+    // statements and $w. informats (reference max_string_width), and
+    // int-column ranges gate the length-5 narrowing (SAS length-5
     // numerics are exact only to ±536,870,912 — Int32 can exceed that)
     val strCols = schema.fields.filter(_.dataType == StringType).map(_.name)
     val intCols = schema.fields.filter(_.dataType == IntegerType).map(_.name)
     val (widths: Map[String, Int], intMaxAbs: Map[String, Long]) =
       if (strCols.isEmpty && intCols.isEmpty) (Map.empty[String, Int], Map.empty[String, Long])
       else {
-        val aggs = strCols.map(c => max(octet_length(col(c))).cast(LongType).as("w_" + c)) ++
-          intCols.map(c => max(abs(col(c).cast(LongType))).as("a_" + c))
-        val head = StatWriters.statsView(df).agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()(0)
-        val w = strCols.zipWithIndex.map { case (c, i) =>
-          c -> math.max(1, if (head.isNullAt(i)) 1L else head.getLong(i)).toInt
-        }.toMap
-        val a = intCols.zipWithIndex.map { case (c, i) =>
-          val j = strCols.length + i
-          c -> (if (head.isNullAt(j)) 0L else head.getLong(j))
-        }.toMap
-        (w, a)
+        val st = stats
+        (strCols.map(c => c -> math.max(1, st.octets(c))).toMap,
+          intCols.map(c => c -> st.ranges.get(c)
+            .fold(0L) { case (lo, hi) => math.max(math.abs(lo), math.abs(hi)) }).toMap)
       }
 
     val scratch = Files.createTempDirectory("graft_sascsv").toFile

@@ -13,7 +13,7 @@ import graft.core.spss.SpssCore
 
 /** Distributed SPSS .sav writer (uncompressed, layout code 2, LE, UTF-8).
   *
-  * Same two-job shape as [[StataDtaWriter]]: width/count aggregation, then
+  * Same two-job shape as [[StataDtaWriter]]: the `WriteStats` fold, then
   * per-partition fixed-width record encode to scratch chunks, driver
   * splice. Uncompressed records keep the written files row-range
   * partitionable on re-read (the scale path); `.zsav` (zlib block) write
@@ -51,7 +51,7 @@ object SpssSavWriter {
   }
 
   def write(df: DataFrame, path: String, options: Map[String, String],
-      zlib: Boolean): Unit = {
+      stats: => WriteStats, zlib: Boolean): Unit = {
     val spark = df.sparkSession
     val schema = df.schema
     // metadata-df entries seed labels/measures/formats; explicit options
@@ -144,23 +144,10 @@ object SpssSavWriter {
       s"sav writer: varFormats.$c targets a string column — string " +
         "A-formats are bound to the storage width and cannot be overridden"))
 
-    val strCols = schema.fields.filter(_.dataType == StringType).map(_.name)
-    // r15: a compress write's stats job already measured the row count
-    // and every string column's max octet width — reuse them instead of
-    // running a second full pass over the outgoing data
-    val (nObs, widths): (Long, Map[String, Int]) =
-      StatWriters.precomputedStats(options, strCols.toSeq) match {
-        case Some((n, ws)) =>
-          (n, strCols.map(c => c -> math.max(1, ws(c))).toMap)
-        case None =>
-          val aggs = count(lit(1)).as("__n") +:
-            strCols.map(c => max(octet_length(col(c))).as(s"__w_$c"))
-          val head = StatWriters.statsView(df)
-            .agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()(0)
-          (head.getLong(0), strCols.zipWithIndex.map { case (c, i) =>
-            c -> math.max(1, if (head.isNullAt(i + 1)) 1 else head.getInt(i + 1))
-          }.toMap)
-      }
+    // ---- stats fold: row count + max string octet widths ----
+    val st = stats
+    val nObs = st.rows
+    def widths(c: String): Int = math.max(1, st.octets(c))
 
     val used = scala.collection.mutable.Set[String]()
     val cols: Array[ColSpec] = schema.fields.zipWithIndex.map { case (f, i) =>

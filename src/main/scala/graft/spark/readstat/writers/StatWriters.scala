@@ -1,27 +1,12 @@
 package graft.spark.readstat.writers
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.types.TimeType
 
 /** Extension-dispatched write entry (`df.write.format("readstat").save(p)`
   * and `graft.api.Readstat.write`). Mirrors the reference's
   * `write_readstat` dispatch (reference: __init__.py:708-878).
   */
 object StatWriters {
-  /** Stats-job view of the frame: `Dataset.agg` builds the INPUT
-    * dataset's row encoder, which Spark 4.1 still gates for TIME
-    * (UNSUPPORTED_TIME_TYPE) — so the writers' width/range/count
-    * aggregations run over a TIME-free projection. Row counts are
-    * unaffected and TIME columns need no stats (fixed 8-byte numerics
-    * in every target format). */
-  private[writers] def statsView(df: DataFrame): DataFrame = {
-    val keep = df.schema.fields.filterNot(_.dataType.isInstanceOf[TimeType])
-    if (keep.length == df.schema.length) df
-    else if (keep.isEmpty) df.select(lit(1).as("__one"))
-    else df.select(keep.map(f => col(f.name)).toIndexedSeq: _*)
-  }
-
   def write(df: DataFrame, path: String, options: Map[String, String],
       overwrite: Boolean = true): Unit = {
     // `fileFormat` overrides extension detection (reference
@@ -56,65 +41,23 @@ object StatWriters {
           "use mode(\"overwrite\") or a multiFile directory")
     }
     val opts = options + ("__overwrite" -> overwrite.toString)
-    // write-side compress (reference `with_compress`): one exact
-    // distributed stats pass, then the narrowed frame feeds any writer —
-    // the reference only wires compress into its Stata writer, but the
-    // pre-cast is format-independent so every sink gets it here.
-    // r15: that stats pass now also measures the row count and string
-    // widths the writers need, threaded via internal options (the
-    // "__overwrite" pattern) so the sav/dta writers skip their own
-    // full stats job — a compress write is two passes, not three.
-    // Names containing the encoding separators fall back safely.
-    val (out, opts2) =
+    // the batch writers' stats (row count, string widths, integer
+    // ranges) come from ONE fold, then one encode job writes the file.
+    // Write-side compress (reference `with_compress`) folds its
+    // narrowing analysis into that same pass and hands the writer the
+    // narrowed frame with its stats — the reference only wires compress
+    // into its Stata writer, but the pre-cast is format-independent so
+    // every sink gets it here. Without compress the stats run lazily,
+    // after the writer has validated its options.
+    val (out, compressed) =
       if (options.get("compress").exists(_.toBoolean)) {
         val (narrowed, stats) = WriteCompress.applyWithStats(df,
           WriteCompress.Opts.from(options, isDta = lower.endsWith(".dta")))
-        val extra = stats match {
-          case Some((n, widths, ranges))
-              if (widths.keys ++ ranges.keys)
-                .forall(k => !k.contains(":") && !k.contains("|")) =>
-            Map("__statsNObs" -> n.toString,
-              "__statsWidths" ->
-                widths.map { case (k, v) => s"$k:$v" }.mkString("|"),
-              "__statsRanges" ->
-                ranges.map { case (k, (lo, hi)) => s"$k:$lo:$hi" }.mkString("|"))
-          case _ => Map.empty[String, String]
-        }
-        (narrowed, opts ++ extra)
-      } else (df, opts)
-    write0(out, path, opts2, lower)
+        (narrowed, Some(stats))
+      } else (df, None)
+    lazy val stats = compressed.getOrElse(WriteStats.of(out))
+    write0(out, path, opts, lower, stats)
   }
-
-  /** Precomputed (row count, string max-octet-widths) from the compress
-    * stats job, if present and covering every string column the caller
-    * needs — writers call this to skip their own stats pass. */
-  private[writers] def precomputedStats(options: Map[String, String],
-      strCols: Seq[String]): Option[(Long, Map[String, Int])] =
-    for {
-      n <- options.get("__statsNObs").map(_.toLong)
-      ws <- options.get("__statsWidths").map(_.split('|').toSeq
-        .filter(_.nonEmpty)
-        .map { e =>
-          val i = e.lastIndexOf(':'); e.substring(0, i) -> e.substring(i + 1).toInt
-        }.toMap)
-      if strCols.forall(ws.contains)
-    } yield (n, ws)
-
-  /** Precomputed integer min/max ranges (dta storage-type widening) from
-    * the compress stats job, if they cover every range column the
-    * caller needs (date columns never appear — the writer's own pass
-    * runs for those). */
-  private[writers] def precomputedRanges(options: Map[String, String],
-      rangeCols: Seq[String]): Option[Map[String, (Long, Long)]] =
-    options.get("__statsRanges").map(_.split('|').toSeq
-      .filter(_.nonEmpty)
-      .map { e =>
-        val j = e.lastIndexOf(':')
-        val i = e.lastIndexOf(':', j - 1)
-        e.substring(0, i) ->
-          (e.substring(i + 1, j).toLong, e.substring(j + 1).toLong)
-      }.toMap)
-      .filter(rs => rangeCols.forall(rs.contains))
 
   // format-specific metadata options refused on formats that cannot
   // carry them, instead of silently dropping the user's declaration
@@ -135,58 +78,31 @@ object StatWriters {
     }
 
   private def write0(df: DataFrame, path: String,
-      options: Map[String, String], lower: String): Unit = {
-    if (!lower.endsWith(".sav") && !lower.endsWith(".zsav")) {
-      val who =
-        if (lower.endsWith(".csv")) "sas csv bundle"
-        else lower.substring(lower.lastIndexOf('.') + 1)
-      refuseForeign(who, options, SpssOnlyOpts)
-    }
+      options: Map[String, String], lower: String, stats: => WriteStats): Unit = {
+    val who =
+      if (lower.endsWith(".csv")) "sas csv bundle"
+      else lower.substring(lower.lastIndexOf('.') + 1)
+    def is(exts: String*): Boolean = exts.exists(e => lower.endsWith("." + e))
+    if (!is("sav", "zsav")) refuseForeign(who, options, SpssOnlyOpts)
     // user-missing declarations exist in the SPSS family only
     // (sav/zsav var records, por tag-8/B records)
-    if (!lower.endsWith(".sav") && !lower.endsWith(".zsav") &&
-        !lower.endsWith(".por")) {
-      val who =
-        if (lower.endsWith(".csv")) "sas csv bundle"
-        else lower.substring(lower.lastIndexOf('.') + 1)
-      refuseForeign(who, options, Seq("missingValues"))
-    }
-    if (lower.endsWith(".sav") || lower.endsWith(".zsav") ||
-        lower.endsWith(".por") || lower.endsWith(".csv"))
-      refuseForeign(
-        if (lower.endsWith(".csv")) "sas csv bundle"
-        else lower.substring(lower.lastIndexOf('.') + 1),
-        options, Seq("taggedMissings"))
+    if (!is("sav", "zsav", "por")) refuseForeign(who, options, Seq("missingValues"))
+    if (is("sav", "zsav", "por", "csv")) refuseForeign(who, options, Seq("taggedMissings"))
     // single-format options: refuse on any other target rather than
     // silently dropping (e.g. dtaVersion on a .sav write)
-    locally {
-      val who =
-        if (lower.endsWith(".csv")) "sas csv bundle"
-        else lower.substring(lower.lastIndexOf('.') + 1)
-      val formatOnly: Seq[(String, Boolean)] = Seq(
-        "dtaVersion" -> lower.endsWith(".dta"),
-        "xptVersion" -> lower.endsWith(".xpt"),
-        "compression" -> lower.endsWith(".sas7bdat"),
-        "storageWidths" ->
-          (lower.endsWith(".xpt") || lower.endsWith(".sas7bdat")),
-        "tableName" ->
-          (lower.endsWith(".xpt") || lower.endsWith(".sas7bdat")),
-        "catalogPath" ->
-          (lower.endsWith(".xpt") || lower.endsWith(".sas7bdat")),
-        "library" -> lower.endsWith(".csv"),
-        "datasetName" -> lower.endsWith(".csv"),
-        "deleteCsvOnImport" -> lower.endsWith(".csv"))
-      formatOnly.foreach { case (k, applies) =>
-        if (!applies) refuseForeign(who, options, Seq(k))
-      }
-    }
-    if (lower.endsWith(".dta")) StataDtaWriter.write(df, path, options)
-    else if (lower.endsWith(".sav")) SpssSavWriter.write(df, path, options, zlib = false)
-    else if (lower.endsWith(".zsav")) SpssSavWriter.write(df, path, options, zlib = true)
-    else if (lower.endsWith(".xpt")) XptWriterImpl.write(df, path, options)
+    Seq("dtaVersion" -> is("dta"), "xptVersion" -> is("xpt"),
+      "compression" -> is("sas7bdat"), "storageWidths" -> is("xpt", "sas7bdat"),
+      "tableName" -> is("xpt", "sas7bdat"), "catalogPath" -> is("xpt", "sas7bdat"),
+      "library" -> is("csv"), "datasetName" -> is("csv"),
+      "deleteCsvOnImport" -> is("csv"))
+      .foreach { case (k, applies) => if (!applies) refuseForeign(who, options, Seq(k)) }
+    if (lower.endsWith(".dta")) StataDtaWriter.write(df, path, options, stats)
+    else if (lower.endsWith(".sav")) SpssSavWriter.write(df, path, options, stats, zlib = false)
+    else if (lower.endsWith(".zsav")) SpssSavWriter.write(df, path, options, stats, zlib = true)
+    else if (lower.endsWith(".xpt")) XptWriterImpl.write(df, path, options, stats)
     else if (lower.endsWith(".por")) PorWriterImpl.write(df, path, options)
-    else if (lower.endsWith(".sas7bdat")) SasBinaryWriter.write(df, path, options)
-    else if (lower.endsWith(".csv")) SasCsvBundleWriter.write(df, path, options)
+    else if (lower.endsWith(".sas7bdat")) SasBinaryWriter.write(df, path, options, stats)
+    else if (lower.endsWith(".csv")) SasCsvBundleWriter.write(df, path, options, stats)
     else throw new IllegalArgumentException(
       s"readstat writer: unsupported extension for $path " +
         "(expected .dta/.sav/.zsav/.xpt/.por/.sas7bdat/.csv[+sas script])")

@@ -24,7 +24,8 @@ import graft.core.Bin
   * is written, so this is a two-job write mirroring the reference's
   * streaming sink (`sink_stata`, reference: pybindings.rs:951-1096):
   *
-  *   Job 1: `agg(count, max(octet_length(c)) …)` → widths + row count.
+  *   Job 1: the `WriteStats` fold (one `mapPartitions` over the planned
+  *          RDD job 2 reuses) → row count, widths, integer ranges.
   *   Job 2: `mapPartitions` encodes each partition's rows to a scratch
   *          chunk file (records are fixed-width and independent; strL
   *          payloads go to a per-partition GSO chunk keyed (v,o) =
@@ -47,7 +48,7 @@ object StataDtaWriter {
   // collides with the sysmiss/.a–.z sentinels (byte 0x65+, int 0x7fe5+,
   // long 0x7fffffe5+) or the type's reserved minimum. The reference
   // writer raises NumericOutOfRange for these (writer.rs write_i8/
-  // write_i16/write_i32); we instead aggregate min/max per promotable
+  // write_i16/write_i32); we instead measure min/max per promotable
   // column in job 1 and widen the storage type (byte→int→long→double)
   // when the observed range collides. RowEncoder still range-checks as
   // a backstop (throws like the reference) in case the source is
@@ -102,7 +103,8 @@ object StataDtaWriter {
 
 
 
-  def write(df: DataFrame, path: String, options: Map[String, String]): Unit = {
+  def write(df: DataFrame, path: String, options: Map[String, String],
+      stats: => WriteStats): Unit = {
     val spark = df.sparkSession
     val schema = df.schema
     val metaOpts = options.get("metadataPath")
@@ -182,72 +184,30 @@ object StataDtaWriter {
     require(writtenFields.nonEmpty,
       "stata writer: taggedMissings drops every column")
 
-    // ---- job 1: row count + max string byte-widths + numeric ranges ----
-    val strCols = writtenFields.filter(_.dataType == StringType).map(_.name)
-    // Promotable integer-backed columns: their natural Stata storage type
-    // has a valid range narrower than the Spark type, so job 1 also
-    // collects min/max (as the value Stata would store) to decide whether
-    // to widen the storage type.
-    val rangeCols = writtenFields.filter(f => f.dataType match {
-      case ByteType | ShortType | IntegerType | DateType => true
-      case _ => false
-    }).map(_.name)
-    def storedValue(name: String): Column = schema(name).dataType match {
-      case DateType => // stored as days since 1960-01-01
-        (unix_date(col(name)) + lit(graft.core.stata.StataTypes.EpochShiftDays))
-          .cast(LongType)
-      case _ => col(name).cast(LongType)
-    }
+    // ---- stats fold: row count + max string widths + numeric ranges ----
+    // Promotable integer-backed columns (byte/short/int/date): their
+    // natural Stata storage type has a valid range narrower than the
+    // Spark type, so the observed min/max (as the value Stata would
+    // store: dates as days since 1960) decides whether to widen it.
     // dta <118 encodes strings in windows-1252, where every char is one
     // byte (unmappable chars degrade to a 1-byte '?'), so the stored
     // width is the CHAR count; 118/119 store UTF-8, so it's the octet
     // count. Measuring 114/117 in UTF-8 octets would reject valid writes
     // (200 'é' chars = 400 octets but only 200 cp1252 bytes).
+    val st = stats
     val legacyCharset = options.getOrElse("dtaVersion", "auto") match {
       case "114" | "117" => true
       case _ => false
     }
-    def strWidth(c: String): Column =
-      if (legacyCharset) length(col(c)) else octet_length(col(c))
-    // r15: a compress write's stats job already measured the row count,
-    // string widths (octet_length — only valid here for the UTF-8
-    // versions, so legacyCharset falls back), and integer min/max ranges
-    // — reuse them instead of a second full pass. Date columns never
-    // carry precomputed ranges, so frames with DateType range columns
-    // fall back too.
-    val pre: Option[(Long, Map[String, Int], Map[String, (Long, Long)])] =
-      if (legacyCharset) None
-      else for {
-        (n, ws) <- StatWriters.precomputedStats(options, strCols.toSeq)
-        rs <- StatWriters.precomputedRanges(options, rangeCols.toSeq)
-      } yield (n, ws, rs)
-    val (nObs, widths, ranges): (Long, Map[String, Int], Map[String, (Long, Long)]) =
-      pre match {
-        case Some((n, ws, rs)) =>
-          (n, strCols.map(c => c -> math.max(1, ws(c))).toMap, rs)
-        case None =>
-          val aggs = (count(lit(1)).as("__n") +:
-            strCols.map(c => max(strWidth(c)).as(s"__w_$c"))) ++
-            rangeCols.flatMap(c => Seq(
-              min(storedValue(c)).as(s"__lo_$c"), max(storedValue(c)).as(s"__hi_$c")))
-          val head = StatWriters.statsView(df)
-            .agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()(0)
-          val w: Map[String, Int] = strCols.zipWithIndex.map { case (c, i) =>
-            c -> math.max(1, if (head.isNullAt(i + 1)) 1 else head.getInt(i + 1))
-          }.toMap
-          val base = 1 + strCols.length
-          val r: Map[String, (Long, Long)] = rangeCols.zipWithIndex.map {
-            case (c, i) =>
-              val lo = if (head.isNullAt(base + 2 * i)) 0L else head.getLong(base + 2 * i)
-              val hi = if (head.isNullAt(base + 2 * i + 1)) 0L else head.getLong(base + 2 * i + 1)
-              c -> (lo, hi)
-          }.toMap
-          (head.getLong(0), w, r)
+    val nObs = st.rows
+    def widths(c: String): Int = math.max(1, (if (legacyCharset) st.chars else st.octets)(c))
+    def fits(name: String, lo: Long, hi: Long): Boolean =
+      st.ranges.get(name).forall { case (mn, mx) =>
+        val shift =
+          if (schema(name).dataType == DateType) graft.core.stata.StataTypes.EpochShiftDays
+          else 0L
+        mn + shift >= lo && mx + shift <= hi
       }
-    def fits(name: String, lo: Long, hi: Long): Boolean = {
-      val (mn, mx) = ranges(name)
-      mn >= lo && mx <= hi
-    }
 
     val usedNames = scala.collection.mutable.Set[String]()
     val cols: Array[ColSpec] = writtenFields.map { f =>

@@ -34,12 +34,12 @@ import org.apache.spark.sql.types._
   *
   * Scale shape — and the one deliberate divergence from the reference:
   * the reference probes a materialized local frame; here the stats come
-  * from ONE distributed aggregate job over the outgoing DataFrame
-  * (min/max/integrality per column, all map-side combinable), so the
+  * from ONE distributed fold over the outgoing DataFrame (min/max/
+  * integrality per column, merged per partition — `WriteStats`), so the
   * narrowing is EXACT over every row — no probe-undersampling failure
   * mode, no strict-cast surprise in a later partition — and the frame
-  * itself never lands anywhere. One extra pass over data that is about
-  * to be written once is the right trade for a deterministic schema.
+  * itself never lands anywhere. The same fold measures the writers'
+  * row count, widths and ranges, so compress adds no pass to a write.
   */
 object WriteCompress {
 
@@ -81,20 +81,20 @@ object WriteCompress {
 
   def apply(df: DataFrame, opts: Opts): DataFrame = applyWithStats(df, opts)._1
 
-  /** r15: the compress stats job now ALSO measures row count,
-    * max-octet-width of every string column, and min/max of every
-    * integer-width output column, and hands them to the writer — before
-    * this, a compress write ran THREE full passes over the outgoing
-    * data (compress stats, writer width/count/range agg, encode); the
-    * writer skips its own stats job when these cover its needs (guide
-    * §1.2: remove whole passes before tuning anything inside one).
-    * Width entries are for the string columns that SURVIVE narrowing (a
-    * narrowed column's width is meaningless); an all-null surviving
-    * string reports width 0 and the writers floor at 1 exactly as they
-    * did reading a null max. */
-  def applyWithStats(df: DataFrame, opts: Opts):
-      (DataFrame, Option[(Long, Map[String, Int], Map[String, (Long, Long)])]) = {
-    val targeted = df.schema.fields.filter(f => opts.cols.forall(_(f.name)))
+  /** The narrowed frame plus the writer stats of that frame, from ONE
+    * `WriteStats` fold over a Catalyst projection of `df`'s per-row
+    * inputs (each column's numeric view as a double, the string-parse
+    * veto, the midnight check). The fold measures count, integrality,
+    * min/max (Spark's null and NaN semantics) and the vetoes in Scala,
+    * together with the raw string widths and integer/date/timestamp
+    * ranges — the output frame's stats follow from those, so a compress
+    * write is one stats job plus one encode job. Only the projection is
+    * planned, never an aggregate: `Dataset.agg` builds the input's row
+    * encoder, which Spark 4.1 still refuses for TIME columns. */
+  def applyWithStats(df: DataFrame, opts: Opts): (DataFrame, WriteStats) = {
+    import WriteStats._
+    val fields = df.schema.fields
+    val targeted = fields.filter(f => opts.cols.forall(_(f.name)))
 
     // the numeric view of each column that participates in narrowing:
     // floats/ints as themselves; strings only under checkString, parsed
@@ -112,74 +112,65 @@ object WriteCompress {
       case _ => false
     }
 
-    // ---- one aggregate job: per-column (count, integral?, min, max, …)
-    val aggExprs = targeted.zipWithIndex.flatMap { case (f, i) =>
-      // checkString columns count the PARSED view, not the raw column:
-      // the reference applies its all-null rule AFTER parsing, so a
-      // column of empty strings is all-null → boolean, never numeric
-      val base = Seq((f.dataType match {
-        case StringType if opts.checkString => count(parsedString(f.name))
-        case _ => count(col(f.name))
-      }).as(s"c$i"))
-      val num = numericView(f).toSeq.flatMap { v =>
-        val d = v.cast(DoubleType)
-        Seq(
-          // NaN/±Inf are never integral; round(double) is rint
-          coalesce(bool_and(!isnan(d) && abs(d) =!= lit(Double.PositiveInfinity)
-            && d === round(d)), lit(true)).as(s"i$i"),
-          min(d).as(s"mn$i"), max(d).as(s"mx$i")) ++
-          (if (f.dataType == StringType)
-            // a single unparseable non-empty string vetoes the column
-            Seq(coalesce(bool_and(
-              length(trim(col(f.name))) === 0 ||
-                trim(col(f.name)).try_cast(DoubleType).isNotNull),
-              lit(true)).as(s"p$i"))
-          else Nil)
+    // ---- the fold's inputs: (column, measure) appended in order ----
+    val inputs = scala.collection.mutable.ArrayBuffer[(Column, Int)]()
+    def input(c: Column, kind: Int): Int = { inputs += (c -> kind); inputs.length - 1 }
+    val isTargeted = targeted.map(_.name).toSet
+    // raw columns: string widths and integer/date ranges for the
+    // writers; timestamps for the date ranges of a midnight narrowing;
+    // the non-null count of every other targeted column
+    val raw: Map[String, Int] = fields.flatMap { f =>
+      val kind = plainKind(f.dataType) match {
+        case Skip if isTargeted(f.name) && isTemporal(f) => LongRange
+        case Skip if isTargeted(f.name) && numericView(f).isEmpty => Count
+        case k => k
       }
-      // midnight check: zoned timestamps use epoch millis % 86400000 == 0
-      // (UTC), exactly the reference's physical check — date_trunc("DAY")
-      // on TimestampType would make the narrowing depend on
-      // spark.sql.session.timeZone. NTZ has no zone, so wall-clock
-      // midnight (date_trunc) IS the stable semantic there.
-      val temporal = f.dataType match {
-        case TimestampType if opts.checkDateTime =>
-          Seq(coalesce(bool_and(
-            pmod(unix_millis(col(f.name)), lit(MillisPerDay)) === lit(0L)),
-            lit(true)).as(s"m$i"))
-        case TimestampNTZType if opts.checkDateTime =>
-          Seq(coalesce(bool_and(
-            col(f.name) === date_trunc("DAY", col(f.name))), lit(true))
-            .as(s"m$i"))
-        case _ => Nil
-      }
-      base ++ num ++ temporal
-    }
-    if (aggExprs.isEmpty) return (df, None)
-    // piggy-backed writer stats: every string column's max octet width
-    // (TIME columns never reach here as strings; null max → 0 → writer
-    // floors at 1). Computed for ALL strings, filtered to survivors below.
-    val allStrCols = df.schema.fields.filter(_.dataType == StringType).map(_.name)
-    val widthExprs = allStrCols.map(c =>
-      coalesce(max(octet_length(col(c))), lit(0)).as(s"__w_$c"))
-    // __total guards the all-null → Boolean rule: the reference applies
-    // it only to frames with rows (compress.rs:123 `s.len() > 0`)
-    val withTotal = count(lit(1)).as("__total") +: (aggExprs ++ widthExprs)
-    val stats = df.agg(withTotal.head, withTotal.tail: _*).collect()(0)
-    val totalRows = stats.getAs[Long]("__total")
+      if (kind == Skip) None else Some(f.name -> input(col(f.name), kind))
+    }.toMap
+    val view: Map[String, Int] = targeted.flatMap(f =>
+      numericView(f).map(v => f.name -> input(v.cast(DoubleType), Dbl))).toMap
+    // a single unparseable non-empty string vetoes the column
+    val parses: Map[String, Int] = targeted.collect {
+      case f if f.dataType == StringType && opts.checkString =>
+        f.name -> input(length(trim(col(f.name))) === 0 ||
+          trim(col(f.name)).try_cast(DoubleType).isNotNull, Bool)
+    }.toMap
+    // midnight check: zoned timestamps use epoch millis % 86400000 == 0
+    // (UTC), exactly the reference's physical check — date_trunc("DAY")
+    // on TimestampType would make the narrowing depend on
+    // spark.sql.session.timeZone. NTZ has no zone, so wall-clock
+    // midnight (date_trunc) IS the stable semantic there.
+    val midnight: Map[String, Int] = targeted.collect {
+      case f if isTemporal(f) => f.name -> input(f.dataType match {
+        case TimestampType =>
+          pmod(unix_millis(col(f.name)), lit(MillisPerDay)) === lit(0L)
+        case _ => col(f.name) === date_trunc("DAY", col(f.name))
+      }, Bool)
+    }.toMap
+    val kinds = inputs.map(_._2).toArray
+    val acc = fold(df.select(inputs.map(_._1).toIndexedSeq: _*)
+      .queryExecution.toRdd, kinds)
+    // the row count guards the all-null → Boolean rule: the reference
+    // applies it only to frames with rows (compress.rs:123 `s.len() > 0`)
+    val totalRows = acc.rows
 
     val ((b8lo, b8hi), (b16lo, b16hi), (b32lo, b32hi)) =
       if (opts.stataBounds) StataBounds else StandardBounds
 
-    def narrowType(i: Int, f: StructField): DataType = {
-      val cnt = stats.getAs[Long](s"c$i")
+    // checkString columns count the PARSED view, not the raw column:
+    // the reference applies its all-null rule AFTER parsing, so a
+    // column of empty strings is all-null → boolean, never numeric
+    def cnt(c: String): Long = acc.n(view.getOrElse(c, raw(c)))
+
+    def narrowType(f: StructField): DataType = {
       def allNull: DataType =
         if (opts.allNullToBoolean && totalRows > 0L) BooleanType
         else f.dataType
       def numericTarget(asFloat64: DataType): DataType = {
-        val integral = stats.getAs[Boolean](s"i$i")
-        if (!integral) return f.dataType
-        val mn = stats.getAs[Double](s"mn$i")
-        val mx = stats.getAs[Double](s"mx$i")
+        val v = view(f.name)
+        if (!acc.all(v)) return f.dataType
+        val mn = acc.dlo(v)
+        val mx = acc.dhi(v)
         if (!opts.noBoolean && mn >= 0.0 && mx <= 1.0) BooleanType
         else if (mn >= b8lo && mx <= b8hi) ByteType
         else if (mn >= b16lo && mx <= b16hi) ShortType
@@ -191,32 +182,30 @@ object WriteCompress {
           // reference ordering (compress.rs): parse → all-null → numeric.
           // An unparseable value vetoes the whole column FIRST; cnt is
           // the post-parse count, so all-empty columns take the
-          // all-null rule instead of unboxing null stats to 0.0.
-          if (!stats.getAs[Boolean](s"p$i")) f.dataType
-          else if (cnt == 0L) allNull
+          // all-null rule instead of reading min/max of no values.
+          if (!acc.all(parses(f.name))) f.dataType
+          else if (cnt(f.name) == 0L) allNull
           else {
             // parseable strings become f64 even when non-integral
             val t = numericTarget(DoubleType)
             if (t == StringType) DoubleType else t
           }
-        case _ if cnt == 0L => allNull
-        case DoubleType | FloatType => numericTarget(DoubleType)
-        case ByteType | ShortType | IntegerType | LongType | BooleanType =>
-          numericTarget(DoubleType)
+        case _ if cnt(f.name) == 0L => allNull
+        case DoubleType | FloatType | ByteType | ShortType | IntegerType |
+             LongType | BooleanType => numericTarget(DoubleType)
         case TimestampType | TimestampNTZType if isTemporal(f) &&
-            stats.getAs[Boolean](s"m$i") => DateType
+            acc.all(midnight(f.name)) => DateType
         case other => other
       }
     }
 
-    val idx = targeted.map(_.name).zipWithIndex.toMap
-    val outCols = df.schema.fields.map { f =>
-      idx.get(f.name) match {
-        case Some(i) =>
-          val to = narrowType(i, f)
-          if (to == f.dataType) col(f.name)
-          else f.dataType match {
-            case _ if stats.getAs[Long](s"c$i") == 0L =>
+    val narrowed: Map[String, DataType] =
+      targeted.map(f => f.name -> narrowType(f)).toMap
+    val outCols = fields.map { f =>
+      narrowed.get(f.name) match {
+        case Some(to) if to != f.dataType =>
+          f.dataType match {
+            case _ if cnt(f.name) == 0L =>
               // all-null narrowing (→ boolean by default): every value is
               // null by construction, so emit typed nulls directly — a
               // raw cast(timestamp AS boolean) would throw DATATYPE_
@@ -236,33 +225,35 @@ object WriteCompress {
                 lit(MillisPerDay.toDouble)).cast(IntegerType)).as(f.name)
             case _ => col(f.name).cast(to).as(f.name)
           }
-        case None => col(f.name)
+        case _ => col(f.name)
       }
     }
-    val out = df.select(outCols.toIndexedSeq: _*)
-    val survivingWidths: Map[String, Int] = out.schema.fields
-      .filter(_.dataType == StringType).map(_.name)
-      .filter(allStrCols.contains)
-      .map(c => c -> stats.getAs[Int](s"__w_$c")).toMap
-    // integer value ranges for the dta writer's storage-type widening:
-    // every targeted column whose OUTPUT type is an integer width and
-    // whose min/max the stats job measured (values are integral by the
-    // narrowing proof, so the double → long conversion is exact; date
-    // columns are never covered — their stored-value shift lives in the
-    // writer — and force the writer's own stats pass)
-    val intRanges: Map[String, (Long, Long)] = out.schema.fields.flatMap { f =>
-      idx.get(f.name).flatMap { i =>
-        f.dataType match {
-          case ByteType | ShortType | IntegerType
-              if numericView(targeted(i)).isDefined &&
-                stats.getAs[Long](s"c$i") > 0L &&
-                !stats.isNullAt(stats.fieldIndex(s"mn$i")) =>
-            Some(f.name -> (stats.getAs[Double](s"mn$i").toLong,
-              stats.getAs[Double](s"mx$i").toLong))
-          case _ => None
-        }
+
+    // the output frame's writer stats: strings pass through unchanged,
+    // so their widths are the raw ones; an integer or date column keeps
+    // its raw range unless narrowed — then the range is its numeric
+    // view's (integral by the narrowing proof, so the double → long
+    // conversion is exact) or, for a midnight timestamp, the days of
+    // its min/max instant (day extraction is monotonic)
+    val ranges: Map[String, (Long, Long)] = fields.flatMap { f =>
+      val to = narrowed.getOrElse(f.name, f.dataType)
+      (to, f.dataType) match {
+        case (DateType, TimestampType | TimestampNTZType) =>
+          val (r, microsPerDay) = (raw(f.name), MillisPerDay * 1000L)
+          Some(f.name -> (Math.floorDiv(acc.lo(r), microsPerDay),
+            Math.floorDiv(acc.hi(r), microsPerDay)))
+        case (ByteType | ShortType | IntegerType, from) if from != to =>
+          val v = view(f.name)
+          Some(f.name -> (acc.dlo(v).toLong, acc.dhi(v).toLong))
+        case (ByteType | ShortType | IntegerType | DateType, _) =>
+          raw.get(f.name).filter(acc.n(_) > 0).map(r => f.name -> (acc.lo(r), acc.hi(r)))
+        case _ => None
       }
     }.toMap
-    (out, Some((totalRows, survivingWidths, intRanges)))
+    val strs = fields.filter(f => narrowed.getOrElse(f.name, f.dataType) == StringType)
+      .map(f => f.name -> raw(f.name))
+    (df.select(outCols.toIndexedSeq: _*), WriteStats(totalRows,
+      strs.map { case (c, r) => c -> acc.hi(r).toInt }.toMap,
+      strs.map { case (c, r) => c -> acc.lo(r).toInt }.toMap, ranges))
   }
 }

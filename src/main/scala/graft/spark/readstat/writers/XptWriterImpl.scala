@@ -44,7 +44,8 @@ object XptWriterImpl {
 
   private val Ts = "01JAN26:00:00:00"
 
-  def write(df: DataFrame, path: String, options: Map[String, String]): Unit = {
+  def write(df: DataFrame, path: String, options: Map[String, String],
+      stats: => WriteStats): Unit = {
     val spark = df.sparkSession
     val schema = df.schema
     val version = options.getOrElse("xptVersion", "5") match {
@@ -181,13 +182,10 @@ object XptWriterImpl {
       "xpt writer: a taggedMissings indicator column cannot itself be tagged")
     val writtenFields = schema.fields.filterNot(f => indicatorCols(f.name))
     require(writtenFields.nonEmpty, "xpt writer: taggedMissings drops every column")
-    val strCols = writtenFields.filter(_.dataType == StringType).map(_.name)
-    val aggs = count(lit(1)).as("__n") +:
-      strCols.map(c => max(octet_length(col(c))).as(s"__w_$c"))
-    val head = StatWriters.statsView(df).agg(aggs.head, aggs.tail.toIndexedSeq: _*).collect()(0)
-    val widths: Map[String, Int] = strCols.zipWithIndex.map { case (c, i) =>
-      c -> math.max(1, if (head.isNullAt(i + 1)) 1 else math.min(200, head.getInt(i + 1)))
-    }.toMap
+    // ---- stats fold: row count + max string octet widths ----
+    val st = stats
+    val nObs = st.rows
+    def widths(c: String): Int = math.max(1, math.min(200, st.octets(c)))
 
     val used = scala.collection.mutable.Set[String]()
     val cols: Array[ColSpec] = writtenFields.map { f =>
@@ -287,8 +285,7 @@ object XptWriterImpl {
             Iterator(rows)
           }
         }.collect()
-      require(counts.sum == head.getLong(0),
-        s"row count drift: agg=${head.getLong(0)} write=${counts.sum}")
+      require(counts.sum == nObs, s"row count drift: agg=$nObs write=${counts.sum}")
       writeCatalog()
       return
     }
@@ -304,6 +301,8 @@ object XptWriterImpl {
       out.close()
       Iterator((pid, f.getAbsolutePath, enc.rows))
     }.collect().sortBy(_._1)
+    val written = chunks.map(_._3).sum
+    require(written == nObs, s"row count drift: agg=$nObs write=$written")
 
     val header = buildHeader(cols, version, varLabels, tableName, fileLabel)
     AtomicFile.write(path) { tmpOut =>
@@ -328,8 +327,7 @@ object XptWriterImpl {
         java.util.Arrays.fill(pad, ' '.toByte)
         ch.write(java.nio.ByteBuffer.wrap(pad))
       }
-      pandasTailFix(ch, header.length.toLong, cols.map(_.width).sum,
-        head.getLong(0))
+      pandasTailFix(ch, header.length.toLong, cols.map(_.width).sum, nObs)
     } finally ch.close()
     }
     chunks.foreach(c => new File(c._2).delete())

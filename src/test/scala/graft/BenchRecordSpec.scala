@@ -45,6 +45,21 @@ class BenchRecordSpec extends AnyFunSuite {
     assert(line.contains(""""query_entry_name_007":1.00"""))
   }
 
+  test("packLine stops at the first entry that does not fit") {
+    // long names first, then short ones: greedy skipping would keep
+    // short lower-priority entries after a long one stopped fitting
+    val entries = (0 until 60).map(i =>
+      (if (i % 3 == 0) f"e$i%02d_" + "x" * 80 else f"e$i%02d", i.toDouble))
+    val tail = ""","sf":"/x"}"""
+    val line = Bench.packLine(1.0, entries, tail, 1000)
+    assert(line.length <= 1000, s"line ${line.length} chars")
+    val kept = """"e(\d\d)[_x]*"""".r
+      .findAllMatchIn(line).map(_.group(1).toInt).toSeq
+    assert(kept.nonEmpty && kept == (0 until kept.size), s"not a prefix: $kept")
+    assert(kept.size < 60, "budget never hit — the test packs nothing")
+    assert(line.contains(s""","omitted":${60 - kept.size}"""))
+  }
+
   test("packLine emits no omitted field when everything fits") {
     val entries = Seq(("a_query", 1.0), ("b_query", 2.5))
     val line = Bench.packLine(3.5, entries, ""","sf":"/x"}""", 1820)

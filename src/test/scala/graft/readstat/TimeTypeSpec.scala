@@ -87,6 +87,30 @@ class TimeTypeSpec extends SparkTestBase {
     }
   }
 
+  test("compress writes a frame with a TIME column to every format and roundtrips") {
+    // the compress analysis must not build the TIME-gated row encoder
+    // (Dataset.agg did: UNSUPPORTED_TIME_TYPE on any frame with a TIME)
+    val src = spark.read.format("readstat")
+      .option("timeAsTimeType", "true").load(res("fixtures/spss/sample.sav"))
+    assert(src.schema("mytime").dataType == TimeType(6))
+    val want = src.orderBy("mynum")
+      .selectExpr("cast(mytime as string) AS t").collect()
+      .map(r => Option(r.getString(0)).orNull).toSeq
+    for (ext <- Seq("dta", "sav", "xpt", "sas7bdat")) {
+      val p = tmp(s"t_compress.$ext")
+      graft.api.Readstat.write(src, p, Map("compress" -> "true"))
+      val back = spark.read.format("readstat")
+        .option("timeAsTimeType", "true").load(p)
+      def named(n: String): String = back.columns.find(_.equalsIgnoreCase(n)).get
+      assert(back.schema(named("mytime")).dataType == TimeType(6),
+        s"$ext: ${back.schema.treeString}")
+      val got = back.orderBy(named("mynum"))
+        .selectExpr(s"cast(${named("mytime")} as string) AS t").collect()
+        .map(r => Option(r.getString(0)).orNull).toSeq
+      assert(got == want, s"$ext: $got vs $want")
+    }
+  }
+
   test("streaming TIME is gated by Spark itself, not by our sinks") {
     import spark.implicits._
     // `Dataset.writeStream` eagerly builds the (TIME-gated) row encoder
