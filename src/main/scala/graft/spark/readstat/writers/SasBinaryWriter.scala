@@ -25,7 +25,7 @@ import graft.core.sas.SasCore
   *
   * Distributed write is the same two-job shape as the other writers:
   * job 1 is the `WriteStats` fold (exact row count + max string widths
-  * in one `mapPartitions` over the planned RDD), job 2 encodes
+  * in one `mapPartitions` over the measured columns), job 2 encodes
   * each partition into whole DATA pages (pages declare their own row
   * count, so partition boundaries never need row padding), and the
   * driver splices header + meta pages + page chunks. `multiFile=true`

@@ -79,23 +79,50 @@ object StatWriters {
 
   private def write0(df: DataFrame, path: String,
       options: Map[String, String], lower: String, stats: => WriteStats): Unit = {
-    val who =
-      if (lower.endsWith(".csv")) "sas csv bundle"
-      else lower.substring(lower.lastIndexOf('.') + 1)
-    def is(exts: String*): Boolean = exts.exists(e => lower.endsWith("." + e))
-    if (!is("sav", "zsav")) refuseForeign(who, options, SpssOnlyOpts)
+    if (!lower.endsWith(".sav") && !lower.endsWith(".zsav")) {
+      val who =
+        if (lower.endsWith(".csv")) "sas csv bundle"
+        else lower.substring(lower.lastIndexOf('.') + 1)
+      refuseForeign(who, options, SpssOnlyOpts)
+    }
     // user-missing declarations exist in the SPSS family only
     // (sav/zsav var records, por tag-8/B records)
-    if (!is("sav", "zsav", "por")) refuseForeign(who, options, Seq("missingValues"))
-    if (is("sav", "zsav", "por", "csv")) refuseForeign(who, options, Seq("taggedMissings"))
+    if (!lower.endsWith(".sav") && !lower.endsWith(".zsav") &&
+        !lower.endsWith(".por")) {
+      val who =
+        if (lower.endsWith(".csv")) "sas csv bundle"
+        else lower.substring(lower.lastIndexOf('.') + 1)
+      refuseForeign(who, options, Seq("missingValues"))
+    }
+    if (lower.endsWith(".sav") || lower.endsWith(".zsav") ||
+        lower.endsWith(".por") || lower.endsWith(".csv"))
+      refuseForeign(
+        if (lower.endsWith(".csv")) "sas csv bundle"
+        else lower.substring(lower.lastIndexOf('.') + 1),
+        options, Seq("taggedMissings"))
     // single-format options: refuse on any other target rather than
     // silently dropping (e.g. dtaVersion on a .sav write)
-    Seq("dtaVersion" -> is("dta"), "xptVersion" -> is("xpt"),
-      "compression" -> is("sas7bdat"), "storageWidths" -> is("xpt", "sas7bdat"),
-      "tableName" -> is("xpt", "sas7bdat"), "catalogPath" -> is("xpt", "sas7bdat"),
-      "library" -> is("csv"), "datasetName" -> is("csv"),
-      "deleteCsvOnImport" -> is("csv"))
-      .foreach { case (k, applies) => if (!applies) refuseForeign(who, options, Seq(k)) }
+    locally {
+      val who =
+        if (lower.endsWith(".csv")) "sas csv bundle"
+        else lower.substring(lower.lastIndexOf('.') + 1)
+      val formatOnly: Seq[(String, Boolean)] = Seq(
+        "dtaVersion" -> lower.endsWith(".dta"),
+        "xptVersion" -> lower.endsWith(".xpt"),
+        "compression" -> lower.endsWith(".sas7bdat"),
+        "storageWidths" ->
+          (lower.endsWith(".xpt") || lower.endsWith(".sas7bdat")),
+        "tableName" ->
+          (lower.endsWith(".xpt") || lower.endsWith(".sas7bdat")),
+        "catalogPath" ->
+          (lower.endsWith(".xpt") || lower.endsWith(".sas7bdat")),
+        "library" -> lower.endsWith(".csv"),
+        "datasetName" -> lower.endsWith(".csv"),
+        "deleteCsvOnImport" -> lower.endsWith(".csv"))
+      formatOnly.foreach { case (k, applies) =>
+        if (!applies) refuseForeign(who, options, Seq(k))
+      }
+    }
     if (lower.endsWith(".dta")) StataDtaWriter.write(df, path, options, stats)
     else if (lower.endsWith(".sav")) SpssSavWriter.write(df, path, options, stats, zlib = false)
     else if (lower.endsWith(".zsav")) SpssSavWriter.write(df, path, options, stats, zlib = true)

@@ -24,8 +24,8 @@ import graft.core.Bin
   * is written, so this is a two-job write mirroring the reference's
   * streaming sink (`sink_stata`, reference: pybindings.rs:951-1096):
   *
-  *   Job 1: the `WriteStats` fold (one `mapPartitions` over the planned
-  *          RDD job 2 reuses) → row count, widths, integer ranges.
+  *   Job 1: the `WriteStats` fold (one `mapPartitions` over the
+  *          measured columns) → row count, widths, integer ranges.
   *   Job 2: `mapPartitions` encodes each partition's rows to a scratch
   *          chunk file (records are fixed-width and independent; strL
   *          payloads go to a per-partition GSO chunk keyed (v,o) =

@@ -148,8 +148,7 @@ object WriteCompress {
       }, Bool)
     }.toMap
     val kinds = inputs.map(_._2).toArray
-    val acc = fold(df.select(inputs.map(_._1).toIndexedSeq: _*)
-      .queryExecution.toRdd, kinds)
+    val acc = fold(df, inputs.map(_._1).toIndexedSeq, kinds)
     // the row count guards the all-null → Boolean rule: the reference
     // applies it only to frames with rows (compress.rs:123 `s.len() > 0`)
     val totalRows = acc.rows

@@ -1,8 +1,9 @@
 package graft.spark.readstat.writers
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types._
 
 /** What a batch stat-file writer must know before it lays out a record:
@@ -16,11 +17,13 @@ final case class WriteStats(rows: Long, octets: Map[String, Int],
     chars: Map[String, Int], ranges: Map[String, (Long, Long)])
 
 /** The one stats pass behind every batch write: a single `mapPartitions`
-  * job over the frame's planned RDD (`queryExecution.toRdd`, the RDD the
-  * encode job then reuses — no second plan, no shuffle) that folds each
+  * job over the planned RDD of the measured columns' projection
+  * (`queryExecution.toRdd` — no aggregate, no shuffle) that folds each
   * partition's rows in Scala and merges the collected per-partition
-  * partials. `WriteCompress` folds its narrowing inputs through the
-  * same pass, so a compress write is one stats job plus one encode job.
+  * partials. Only the measured columns are projected, so a frame read
+  * from a stat file decodes those alone. `WriteCompress` folds its
+  * narrowing inputs through the same pass, so a compress write is one
+  * stats job plus one encode job.
   */
 object WriteStats {
 
@@ -108,20 +111,35 @@ object WriteStats {
     }
   }
 
-  /** One job: fold every partition of `rdd` under `kinds` (one per
-    * column) and merge the collected partials. */
-  private[writers] def fold(rdd: RDD[InternalRow], kinds: Array[Int]): Acc =
-    rdd.mapPartitions { it =>
+  /** One job: fold every partition of `df.select(cols)` under `kinds`
+    * (one per column) and merge the collected partials. With no columns
+    * to measure only the row count is needed: a source that answers
+    * `count` from metadata (the readstat scan's complete COUNT(*)
+    * pushdown) reads no data for it; any other source folds the
+    * zero-column projection. */
+  private[writers] def fold(df: DataFrame, cols: Seq[Column], kinds: Array[Int]): Acc = {
+    lazy val counted = df.select(count(lit(1)))
+    if (cols.isEmpty && !counted.queryExecution.optimizedPlan.exists(_.isInstanceOf[Aggregate])) {
+      val acc = new Acc(kinds)
+      acc.rows = counted.collect()(0).getLong(0)
+      acc
+    } else df.select(cols: _*).queryExecution.toRdd.mapPartitions { it =>
       val acc = new Acc(kinds)
       it.foreach(acc.add)
       Iterator(acc)
     }.collect().foldLeft(new Acc(kinds))(_ merge _)
+  }
 
-  /** The stats of `df` in one job over `df.queryExecution.toRdd`. */
+  /** `name` as a column reference, dots and backticks taken literally. */
+  private def column(name: String): Column =
+    col("`" + name.replace("`", "``") + "`")
+
+  /** The stats of `df` in one job over its measured columns. */
   def of(df: DataFrame): WriteStats = {
-    val kinds = df.schema.fields.map(f => plainKind(f.dataType))
-    val acc = fold(df.queryExecution.toRdd, kinds)
-    val cols = df.schema.fieldNames.toSeq.zipWithIndex
+    val measured = df.schema.fields.filter(f => plainKind(f.dataType) != Skip)
+    val kinds = measured.map(f => plainKind(f.dataType))
+    val acc = fold(df, measured.map(f => column(f.name)).toIndexedSeq, kinds)
+    val cols = measured.map(_.name).toSeq.zipWithIndex
     val strs = cols.filter { case (_, i) => kinds(i) == Str }
     WriteStats(acc.rows, strs.map { case (c, i) => c -> acc.hi(i).toInt }.toMap,
       strs.map { case (c, i) => c -> acc.lo(i).toInt }.toMap,

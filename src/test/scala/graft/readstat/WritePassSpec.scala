@@ -179,6 +179,47 @@ class WritePassSpec extends SparkTestBase {
     }
   }
 
+  test("the stats fold evaluates only the columns it measures") {
+    // a column no writer measures (doubles here) must not be computed —
+    // or, from a stat file, decoded — by the stats pass
+    val boom = udf { (id: Long) =>
+      if (id >= 0L) throw new IllegalStateException("unmeasured column evaluated")
+      0.0
+    }
+    // (a dotted name is a column name, not a struct field path)
+    val df = spark.range(0, 50, 1, 3).select(boom(col("id")).as("x"),
+      concat(lit("v"), col("id").cast("string")).as("s.1"), col("id").cast("int").as("i"))
+    assert(WriteStats.of(df) ==
+      WriteStats(50L, Map("s.1" -> 3), Map("s.1" -> 3), Map("i" -> (0L, 49L))))
+    // nothing measured: the count folds the zero-column projection
+    assert(WriteStats.of(df.select("x")) == WriteStats(50L, Map.empty, Map.empty, Map.empty))
+  }
+
+  test("a numeric-only stat file's row count comes from its metadata") {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val p = s"${tmpDir()}/numeric.dta"
+    Readstat.write(frame.select("x", "code", "flag"), p)
+    val src = spark.read.format("readstat").load(p)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+          case _ => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    def pushed = plans.toArray.exists(_.toString.contains("count-star (metadata-only)"))
+    val stats = try {
+      val st = WriteStats.of(src)
+      var waited = 0 // listener events are async
+      while (!pushed && waited < 50) { Thread.sleep(100); waited += 1 }
+      st
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(stats == WriteStats(2000L, Map.empty, Map.empty, Map.empty))
+    assert(pushed, plans.toArray.mkString("\n"))
+  }
+
   test("a source that drifts between the stats fold and the encode job fails the write") {
     // second evaluation of the single partition yields twice the rows
     // and twice-as-long strings: the encode job must refuse to splice
