@@ -5,9 +5,12 @@ import org.apache.spark.sql.types.StructType
 
 /** One statistical-file format (dta/sav/sas7bdat/xpt/por) as seen by the
   * DSv2 connector: driver-side schema + partition planning, executor-side
-  * row decoding. Implementations must keep `metadata` cheap (header/meta
-  * parse only — no data read) because it runs at planning time, and
-  * `rows` embarrassingly parallel across disjoint row ranges.
+  * decoding. Each format has ONE decoder, [[columnarRows]]: per-column
+  * tight loops into ColumnarBatches (the reference's columnar chunk
+  * stream). Row-shaped consumers read the same batches through [[rows]].
+  * Implementations must keep `metadata` cheap (header/meta parse only —
+  * no data read) because it runs at planning time, and the decode
+  * embarrassingly parallel across disjoint row ranges.
   */
 trait FormatModule extends Serializable {
 
@@ -66,12 +69,6 @@ trait FormatModule extends Serializable {
     }
   }
 
-  /** Decode one partition, emitting only `required` columns (names are a
-    * subset of `schema`, in requested order). Runs on executors.
-    */
-  def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[InternalRow]
-
   /** Exact total data-row count when obtainable from metadata alone
     * (header fields, record-length arithmetic, page indexes) — the basis
     * for COUNT(*) aggregate pushdown, where a count never touches row
@@ -92,49 +89,67 @@ trait FormatModule extends Serializable {
   def salvageableRowCount(path: String, opts: ReadstatOptions): Option[Long] = None
 
   /** Whether [[columnarRows]] can serve this (path, options, schema)
-    * combination. Must be cheap — called at planning time. */
-  def supportsColumnar(path: String, opts: ReadstatOptions,
-      required: StructType): Boolean = false
-
-  /** Vectorized decode: per-column tight loops into
-    * [[org.apache.spark.sql.vectorized.ColumnarBatch]]es, skipping the
-    * per-cell dispatch and boxing of the row path (the same reason
-    * Spark's parquet reader is columnar). Only called when
-    * [[supportsColumnar]] returned true. */
-  def columnarRows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    throw new UnsupportedOperationException("no columnar decode")
+    * combination: every required field carries the module's own name and
+    * (natural) type. Compress narrowing and schema overrides do not
+    * change a module's schema — the connector decodes natural types and
+    * casts afterwards — so they need no check here. Must be cheap:
+    * called at planning time. */
+  final def supportsColumnar(path: String, opts: ReadstatOptions,
+      required: StructType): Boolean = {
+    val byName = schema(path, opts).fields.map(f => f.name -> f.dataType).toMap
+    required.fields.forall(f => byName.get(f.name).contains(f.dataType))
+  }
 
   /** Whether this module can evaluate the pushed filter against its
     * decoded output values (the basis of the scan builder's
-    * pushedFilters() claim). Purely advisory: every pushed filter is
-    * also returned as a residual, so a module that answers true here
-    * but ignores the filter at decode time (e.g. the columnar regime
-    * can't skip on that column) stays correct — it just skips fewer
-    * rows. See [[PushedFilters]]. */
-  def canEvalFilter(path: String, opts: ReadstatOptions,
-      filter: org.apache.spark.sql.sources.Filter): Boolean = false
+    * pushedFilters() claim): any filter over columns that decode numeric
+    * or string, label-decoded and indicator columns included. Compress
+    * narrowing and overrides reshape types AFTER the decode, so the
+    * value a predicate would see differs from the filter's typed
+    * literal: refuse them. Purely advisory: every pushed filter is also
+    * returned as a residual, so a decoder that cannot skip on a claimed
+    * column stays correct — it just skips fewer rows. See
+    * [[PushedFilters]]. */
+  final def canEvalFilter(path: String, opts: ReadstatOptions,
+      filter: org.apache.spark.sql.sources.Filter): Boolean =
+    !opts.compress && opts.schemaOverrides.isEmpty && {
+      val types = schema(path, opts).fields.map(f => f.name -> f.dataType).toMap
+      PushedFilters.isSupported(filter, types.get)
+    }
 
-  /** Filter-aware row decode: implementations that honor `pushed` must
-    * only SKIP rows the filters definitely reject (Catalyst re-applies
-    * the residual predicate, so emitting extra rows is always safe —
-    * dropping a passing row never is). Default ignores the filters. */
-  def rows(part: RangePartition, opts: ReadstatOptions, required: StructType,
-      pushed: Array[org.apache.spark.sql.sources.Filter]): Iterator[InternalRow] =
-    rows(part, opts, required)
-
-  /** Filter-aware columnar decode; same contract as the row overload. */
+  /** Decode one partition, emitting only `required` columns (names are a
+    * subset of `schema` under these options, in requested order) as
+    * [[org.apache.spark.sql.vectorized.ColumnarBatch]]es. Runs on
+    * executors. Implementations that honor `pushed` must only SKIP rows
+    * the filters definitely reject (Catalyst re-applies the residual
+    * predicate, so emitting extra rows is always safe — dropping a
+    * passing row never is). Only called when [[supportsColumnar]] holds. */
   def columnarRows(part: RangePartition, opts: ReadstatOptions,
       required: StructType,
       pushed: Array[org.apache.spark.sql.sources.Filter])
-      : Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    columnarRows(part, opts, required)
+      : Iterator[org.apache.spark.sql.vectorized.ColumnarBatch]
+
+  /** [[columnarRows]] with no pushed filters. */
+  final def columnarRows(part: RangePartition, opts: ReadstatOptions,
+      required: StructType): Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    columnarRows(part, opts, required, Array.empty)
+
+  /** The rows of [[columnarRows]], for the consumers that reshape a whole
+    * row (struct/merged informative nulls, mergeSchema null-fill, the
+    * stream source, the compress probe). `required` holds natural-typed
+    * fields of `schema`; compress and overrides in `opts` are ignored
+    * (the caller casts). The returned row is one mutable view reused for
+    * every row: read it before advancing, or `copy()` it to keep it. */
+  final def rows(part: RangePartition, opts: ReadstatOptions,
+      required: StructType,
+      pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+      : Iterator[InternalRow] = {
+    import scala.jdk.CollectionConverters._
+    columnarRows(part, opts.decodeNatural, required, pushed)
+      .flatMap(_.rowIterator().asScala)
+  }
 }
 
-/** Decoder state at a row boundary of a compressed SPSS stream: the
-  * uncompressed-logical offset of the next byte, plus the pending
-  * control-byte group. Lets an executor start decoding mid-stream
-  * without replaying everything before its range. */
 /** THE integral-rendering rule for numeric value-label codes: exact
   * integers print without a decimal point (the form label tables key
   * on), the 1e15 guard keeps huge doubles off the lossy Long render.
@@ -146,6 +161,10 @@ private[readstat] object NumRender {
     else d.toString
 }
 
+/** Decoder state at a row boundary of a compressed SPSS stream: the
+  * uncompressed-logical offset of the next byte, plus the pending
+  * control-byte group. Lets an executor start decoding mid-stream
+  * without replaying everything before its range. */
 final case class SavCheckpoint(uOff: Long, ctrl: Array[Byte], ctrlI: Int)
 
 /** Decoder state at a row boundary of a POR stream: file byte offset,
@@ -206,11 +225,6 @@ final case class ReadstatOptions(
     compressStringToNumeric: Boolean = true,
     schemaOverrides: String = "",
     mergeSchema: Boolean = false,
-    // debugging / parity escape hatch: force the row decode path (the
-    // ColumnarParitySpec harness pins batch==row values with it; before
-    // r13 a no-op schemaOverride served this purpose, but reshaping
-    // regimes now decode columnar too)
-    columnarEnabled: Boolean = true,
     // 0 = admit new stream files immediately (this library's writers
     // rename atomically into place and .inprogress temps are filtered,
     // so presence == completeness — same contract as Spark's built-in
@@ -244,11 +258,10 @@ final case class ReadstatOptions(
   def infoNullEligible(name: String): Boolean =
     informativeNullCols.isEmpty || informativeNullCols.contains(name)
 
-  /** The same options with the type-reshaping regimes stripped: the r13
-    * columnar-narrowing path decodes batches with the format's NATURAL
-    * types (modules refuse compress/overrides, their loops write native
-    * values) and the connector casts whole vectors afterwards
-    * ([[Narrowing.castingBatchIterator]]). */
+  /** The same options with the type-reshaping regimes stripped: modules
+    * decode the format's NATURAL types and the connector casts afterwards
+    * (whole vectors in [[Narrowing.castingBatchIterator]], rows in
+    * [[Narrowing.castingIterator]]). */
   def decodeNatural: ReadstatOptions =
     if (!compress && schemaOverrides.isEmpty) this
     else copy(compress = false, schemaOverrides = "")
@@ -297,7 +310,6 @@ object ReadstatOptions {
       compressStringToNumeric = b("compressStringToNumeric", dflt = true),
       schemaOverrides = Option(m.get("schemaOverrides")).getOrElse(""),
       mergeSchema = b("mergeSchema", dflt = false),
-      columnarEnabled = b("columnar", dflt = true),
       streamStabilityMs = parse("streamStabilityMs", 0L)(_.toLong),
       mode = parse("mode", defaultMode(m)) { v =>
         val norm = v.toLowerCase

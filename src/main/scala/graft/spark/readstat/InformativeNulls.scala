@@ -124,7 +124,7 @@ object InformativeNulls {
             out.update(i, new GenericInternalRow(Array[Any](main, ind)))
           case AsMerged(mi, ii, mt) =>
             val v: Any =
-              if (!row.isNullAt(mi)) mergedString(row.get(mi, mt), mt)
+              if (!row.isNullAt(mi)) mergedString(Narrowing.cell(row, mi, mt), mt)
               else if (!row.isNullAt(ii)) row.getUTF8String(ii)
               else null
             out.update(i, v)

@@ -1,24 +1,9 @@
 package graft.spark.readstat
 
-import org.apache.spark.unsafe.types.UTF8String
-
-/** Pre-encoded numeric-label lookup for row decoders (bits-keyed LongMap,
-  * no boxing): one UTF8String per LABEL per partition instead of one per
-  * ROW — `UTF8String.fromString` re-encodes UTF-8 on every call, and
-  * labeled survey reads repeat the same handful of labels millions of
-  * times. UTF8String is immutable, so sharing across rows is safe
-  * (consumers copy bytes into their own unsafe buffers). */
-private[readstat] final class DoubleLabelLut(m: Map[Double, String]) {
-  private val lm = new scala.collection.mutable.LongMap[UTF8String](m.size * 2)
-  m.foreach { case (k, s) =>
-    lm(java.lang.Double.doubleToLongBits(k)) = UTF8String.fromString(s) }
-  def get(d: Double): UTF8String =
-    lm.getOrNull(java.lang.Double.doubleToLongBits(d))
-}
-
-/** The columnar-path twin of [[DoubleLabelLut]]: labels pre-encode to
-  * raw UTF-8 byte arrays, assigned stable ids 0..L-1 so the columnar
-  * loaders can DICTIONARY-encode labeled columns — per cell one
+/** Pre-encoded numeric-label lookup (bits-keyed LongMap, no boxing):
+  * labels pre-encode once per partition to raw UTF-8 byte arrays,
+  * assigned stable ids 0..L-1 so the column loaders can
+  * DICTIONARY-encode labeled columns — per cell one
   * dictionary-id `putInt` instead of a byte-array append, the same
   * design as Spark's parquet dictionary read path. */
 private[readstat] final class DoubleByteLut(m: Map[Double, String]) {
@@ -36,10 +21,9 @@ private[readstat] final class DoubleByteLut(m: Map[Double, String]) {
   }
 }
 
-/** Int-keyed byte-array label LUT for the Stata columnar path (labels key
-  * on int codes there): dense id array when the code range is compact,
-  * boxing-free LongMap otherwise — the same layout as StataModule's
-  * row-path LabelLut, plus dictionary ids (see [[DoubleByteLut]]). */
+/** Int-keyed byte-array label LUT for Stata (labels key on int codes
+  * there): dense id array when the code range is compact, boxing-free
+  * LongMap otherwise, plus dictionary ids (see [[DoubleByteLut]]). */
 private[readstat] final class IntByteLut(m: Map[Int, String]) {
   /** id-indexed label bytes (the dictionary base). */
   val baseBytes: Array[Array[Byte]] = m.values.map(

@@ -114,7 +114,9 @@ object Narrowing {
   }
 
   /** Wrap a natural-type row iterator so fields come out in the target
-    * (narrowed/overridden) types. Field order must match. */
+    * (narrowed/overridden) types. Field order must match. Each input
+    * row is read before the next is pulled (rows off a ColumnarBatch
+    * are one reused view). */
   def castingIterator(it: Iterator[InternalRow], from: StructType,
       to: StructType): Iterator[InternalRow] = {
     val n = from.length
@@ -137,8 +139,7 @@ object Narrowing {
     * differs are re-materialized through the same castValue semantics
     * (strict downcasts throw, string→double parse failures null);
     * same-typed columns pass through by reference, zero copy. Keeps
-    * compress / schemaOverrides scans columnar — previously the last
-    * row-path-only regimes. */
+    * compress / schemaOverrides scans columnar. */
   def castingBatchIterator(
       it: Iterator[org.apache.spark.sql.vectorized.ColumnarBatch],
       from: StructType, to: StructType)
@@ -207,9 +208,17 @@ object Narrowing {
     case other => throw new IllegalArgumentException(s"not numeric: $other")
   }
 
+  /** `row.get` for every type a module emits. Rows read off a
+    * ColumnarBatch have no TIME case in `get`; TIME is a physical long. */
+  private[readstat] def cell(row: InternalRow, i: Int, dt: DataType): Any =
+    dt match {
+      case _: TimeType => row.getLong(i)
+      case _ => row.get(i, dt)
+    }
+
   private[readstat] def castValue(row: InternalRow, i: Int, from: DataType,
       to: DataType): Any = (from, to) match {
-    case (f, t) if f == t => row.get(i, f)
+    case (f, t) if f == t => cell(row, i, f)
     case (TimestampNTZType, DateType) =>
       math.floorDiv(row.getLong(i), 86400000000L).toInt
     case (DateType, TimestampNTZType) => row.getInt(i).toLong * 86400000000L
@@ -218,7 +227,7 @@ object Narrowing {
       try java.lang.Double.valueOf(s)
       catch { case _: NumberFormatException => null }
     case (f, StringType) =>
-      UTF8String.fromString(String.valueOf(row.get(i, f)))
+      UTF8String.fromString(String.valueOf(cell(row, i, f)))
     case (f: NumericType, t) =>
       castValue2(numericOf(row, i, f), t, f)
     case (BooleanType, t: NumericType) =>

@@ -2,8 +2,6 @@ package graft.spark.readstat
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -85,8 +83,8 @@ object PorModule extends FormatModule {
       v.missingLoThru.exists(d <= _) || v.missingHiThru.exists(d >= _) ||
       v.missingRange.exists { case (lo, hi) => d >= lo && d <= hi })
 
-  /** sav semantics (SpssModule.userMissingLabel): a value label for the
-    * missing code beats the code form; range-only matches render as
+  /** sav semantics (SpssModule's indicator column): a value label for
+    * the missing code beats the code form; range-only matches render as
     * "MISSING" when unlabeled. */
   private def userMissingLabel(v: PorVar, d: Double,
       useValueLabels: Boolean): String = {
@@ -183,260 +181,11 @@ object PorModule extends FormatModule {
     Some(parts.result())
   }
 
-  /** Pushed predicates evaluate on decoded output values, same as the
-    * fixed-width modules. POR can't seek, but it CAN skim: once the
-    * last filter cell of a row is decoded and the predicate fails, the
+  /** Batch decode of the base-30 text stream: cells decode straight
+    * into column vectors. POR can't seek, but it CAN skim: once the last
+    * filter cell of a row is decoded and the pushed predicate fails, the
     * remaining cells are boundary-skimmed (no string building, no
     * base-30 parse) — the sequential-format analog of decode skipping. */
-  override def canEvalFilter(path: String, opts: ReadstatOptions,
-      filter: org.apache.spark.sql.sources.Filter): Boolean = {
-    if (opts.compress || opts.schemaOverrides.nonEmpty) return false
-    val types = schema(path, opts).fields.map(f => f.name -> f.dataType).toMap
-    PushedFilters.isSupported(filter, types.get)
-  }
-
-  override def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[InternalRow] =
-    rows(part, opts, required, Array.empty)
-
-  override def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType,
-      pushed: Array[org.apache.spark.sql.sources.Filter]): Iterator[InternalRow] = {
-    val md = metadata(part.path)
-    val stream = part.por match {
-      case Some(r) =>
-        // parallel partition: resume the checkpointed line state directly
-        new PorStream(part.path, r.byteOff, r.pos, r.pending, md.charTable)
-      case None =>
-        val s = new PorStream(part.path)
-        PorCore.parseMeta(s) // re-parse to position at data start
-        s
-    }
-    // offset pushdown: boundary-skim from the resume point (checkpoint
-    // or data start) to the partition's first emitted row. An end
-    // marker inside the skim means the offset is past EOF — emit nothing
-    val skimEof = {
-      var t = part.skipRows; var eof = false
-      while (t > 0 && !eof) {
-        if (PorCore.skimRow(stream, md.vars)) t -= 1 else eof = true
-      }
-      eof
-    }
-    val byName = md.vars.map(_.name).zipWithIndex.toMap
-    // pre-encoded label LUTs, one per labeled var (see [[DoubleLabelLut]])
-    val labelNum: Array[DoubleLabelLut] = md.vars.map(v =>
-      if (!v.isString && opts.valueLabelsAsStrings && v.numLabels.nonEmpty)
-        new DoubleLabelLut(v.numLabels) else null).toArray
-    // labels pre-encode once per partition (same rationale as
-    // [[DoubleLabelLut]]: one UTF8String per LABEL, not per row)
-    val labelStr: Array[Map[String, UTF8String]] = md.vars.map(v =>
-      if (v.isString && opts.valueLabelsAsStrings && v.strLabels.nonEmpty)
-        v.strLabels.map { case (k, l) => k -> UTF8String.fromString(l) }
-      else null).toArray
-    val plans = required.fields.zipWithIndex.map { case (f, fi) =>
-      if (opts.rowIndexName.contains(f.name)) (fi, -1, false)
-      else {
-        val indicator = opts.informativeNulls &&
-          f.name.endsWith(opts.informativeNullSuffix) &&
-          byName.contains(f.name.stripSuffix(opts.informativeNullSuffix)) &&
-          !byName.contains(f.name)
-        val base =
-          if (indicator) f.name.stripSuffix(opts.informativeNullSuffix)
-          else f.name
-        (fi, byName.getOrElse(base,
-          throw new IllegalArgumentException(s"no such column: ${f.name}")),
-          indicator)
-      }
-    }
-    val needInd = new Array[Boolean](md.vars.length)
-    plans.foreach { case (_, vi, ind) => if (ind && vi >= 0) needInd(vi) = true }
-    // projection: cells no required field reads (data or indicator) are
-    // skimmed past, never decoded
-    val needCol = new Array[Boolean](md.vars.length)
-    plans.foreach { case (_, vi, _) => if (vi >= 0) needCol(vi) = true }
-
-    // pushed predicate over decoded cell values (slot = var index);
-    // row-index / indicator references don't resolve → those conjuncts
-    // are ignored (the Catalyst residual still applies them)
-    val typeByName = required.fields.map(f => f.name -> f.dataType).toMap
-    val predSlots: String => Option[Int] = n => byName.get(n)
-    val pred: PushedFilters.Pred =
-      if (pushed.isEmpty) null
-      else PushedFilters.compile(pushed.toSeq, predSlots, typeByName.get).orNull
-    val maxPredVar: Int =
-      if (pred == null) -1
-      else pushed.flatMap(_.references).flatMap(byName.get).foldLeft(-1)(math.max)
-
-    new Iterator[InternalRow] {
-      private var limit = if (skimEof) 0L else part.numRows
-      private var nextRow: Array[Any] = _
-      private var done = false
-      // filtered-out row marker (identity-compared, never escapes)
-      private val Skip = new Array[Any](0)
-      private var curVals: Array[Any] = _
-      private val getter: Int => Any = slot => curVals(slot)
-      // indicator cells for the row in nextRow (reused; consumed in next()
-      // before the following readFullRow overwrites it)
-      private val inds = new Array[Any](md.vars.length)
-
-      private def truncated(): Nothing = throw new java.io.IOException(
-        "por: stream ended without the 'Z' end-of-data marker — file truncated")
-
-      /** One row. Cells the projection does not need are SKIMMED (cell
-        * boundaries only — no String building, no base-30 value parse):
-        * POR cannot seek past bytes, but a 2-column read of a wide file
-        * skips the decode work of every other column. */
-      private def readFullRow(): Array[Any] = {
-        // guard the zero-variable degenerate file (see PorCore.skimRow)
-        require(md.vars.nonEmpty, "por: file declares no variables")
-        val vals = new Array[Any](md.vars.length)
-        var i = 0
-        while (i < md.vars.length) {
-          val v = md.vars(i)
-          val c = stream.readChar()
-          if (c == 'Z') {
-            require(i == 0, "POR: Z in middle of row")
-            return null
-          }
-          if (c < 0) truncated()
-          if (v.isString) {
-            val len = stream.readDoublePeek(c).toInt
-            if (!needCol(i)) stream.skipChars(len)
-            else {
-              val s0 = new String(stream.readChars(len),
-                java.nio.charset.StandardCharsets.ISO_8859_1)
-              var e = s0.length
-              while (e > 0 && s0(e - 1) == ' ') e -= 1
-              val s = s0.substring(0, e)
-              val userMiss = v.missingStrings.nonEmpty &&
-                v.missingStrings.contains(s)
-              if (needInd(i))
-                inds(i) = if (!userMiss) null else {
-                  val lbl = if (opts.informativeNullUseValueLabels)
-                    v.strLabels.get(s) else None
-                  UTF8String.fromString(lbl.getOrElse(s))
-                }
-              vals(i) =
-                if ((s.isEmpty && opts.missingStringAsNull) || userMiss) null
-                else if (labelStr(i) != null) {
-                  val l = labelStr(i).getOrElse(s, null)
-                  if (l != null) l else UTF8String.fromString(s)
-                }
-                else UTF8String.fromString(s)
-            }
-          } else if (!needCol(i)) {
-            // skim to the cell terminator without parsing the value
-            PorCore.skimCell(stream, isString = false, c)
-          } else {
-            val d =
-              if (c == '*') {
-                val c2 = stream.readChar()
-                require(c2 == '.', s"POR: expected '.' after '*', got ${c2.toChar}")
-                Double.NaN
-              } else stream.readDoublePeek(c)
-            val userMiss = !d.isNaN && isUserMissing(v, d)
-            if (needInd(i))
-              inds(i) = if (!userMiss) null
-                else UTF8String.fromString(userMissingLabel(v, d,
-                  opts.informativeNullUseValueLabels))
-            vals(i) =
-              if (d.isNaN || userMiss) null
-              else if (labelNum(i) != null) {
-                // unlabeled codes fall back to the value's string form,
-                // same as the sav reader (SpssModule.formatNum)
-                val l = labelNum(i).get(d)
-                if (l != null) l else UTF8String.fromString(NumRender.code(d))
-              }
-              else v.formatClass match {
-                case Some("Date") => ((d.toLong - SecShift) / 86400L).toInt
-                case Some("DateTime") =>
-                  math.round((d - SecShift) * 1000.0) * 1000L
-                case Some("Time") => math.round(d * 1e9)
-                case _ => d
-              }
-          }
-          // decode-skip: the last filter cell just decoded — if the
-          // pushed predicate definitely fails, SKIM the remaining cells
-          // (boundary walk only) instead of decoding them
-          if (pred != null && i == maxPredVar) {
-            curVals = vals
-            if (!pred(getter)) {
-              var j = i + 1
-              while (j < md.vars.length) {
-                val vj = md.vars(j)
-                val cj = stream.readChar()
-                if (cj < 0) truncated()
-                require(cj != 'Z', "POR: Z in middle of row")
-                if (vj.isString) stream.skipChars(stream.readDoublePeek(cj).toInt)
-                else PorCore.skimCell(stream, isString = false, cj)
-                j += 1
-              }
-              return Skip
-            }
-          }
-          i += 1
-        }
-        vals
-      }
-
-      override def hasNext: Boolean = {
-        if (done) return false
-        while (nextRow == null) {
-          if (limit <= 0) { done = true; stream.close(); return false }
-          // do NOT swallow here: a decode error (truncated stream,
-          // corrupt base-30 digits) must fail the read, not masquerade
-          // as a clean end-of-data — 'Z'/EOF handling lives in
-          // readFullRow itself. Close the stream before rethrowing so
-          // an abandoning caller (salvage wrapper, task teardown) does
-          // not leak the handle
-          val r =
-            try readFullRow()
-            catch { case e: Throwable => done = true; stream.close(); throw e }
-          if (r == null) { done = true; stream.close(); return false }
-          if (r eq Skip) { limit -= 1; rowIdx += 1 } // filtered out
-          else nextRow = r
-        }
-        true
-      }
-
-      // global row index (parallel partitions start mid-file)
-      private var rowIdx = part.startRow
-      override def next(): InternalRow = {
-        if (!hasNext) throw new NoSuchElementException
-        val vals = nextRow; nextRow = null; limit -= 1
-        val row = new GenericInternalRow(plans.length)
-        plans.foreach { case (fi, vi, ind) =>
-          row.update(fi,
-            if (vi == -1) rowIdx else if (ind) inds(vi) else vals(vi)) }
-        rowIdx += 1
-        row
-      }
-    }
-  }
-
-  // ---- vectorized decode path ----
-
-  /** r12: POR was the one format still serving rows only. The stream
-    * decode itself is inherently scalar (base-30 text cells), but
-    * emitting straight into ColumnVectors drops the per-row
-    * GenericInternalRow + per-cell boxing the row path pays, and lets
-    * the scan run inside ColumnarToRow codegen like the other four
-    * formats. Plain + label regimes, same coverage rule as dta/sav. */
-  override def supportsColumnar(path: String, opts: ReadstatOptions,
-      required: StructType): Boolean = {
-    if (opts.compress || opts.schemaOverrides.nonEmpty) return false
-    val nat = schema(path, opts)
-    val byName = nat.fields.map(f => f.name -> f.dataType).toMap
-    // column-mode informative-null indicator fields are IN the natural
-    // schema, so they pass this check; struct/merged modes reshape the
-    // schema and fall to the row path here
-    required.fields.forall(f => byName.get(f.name).contains(f.dataType))
-  }
-
-  override def columnarRows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    columnarRows(part, opts, required, Array.empty)
-
   override def columnarRows(part: RangePartition, opts: ReadstatOptions,
       required: StructType,
       pushed: Array[org.apache.spark.sql.sources.Filter])
@@ -454,7 +203,7 @@ object PorModule extends FormatModule {
         PorCore.parseMeta(s)
         s
     }
-    // offset pushdown: same resume-point boundary skim as the row path
+    // offset pushdown: boundary-skim from the resume point to startRow
     val skimEof = {
       var t = part.skipRows; var eof = false
       while (t > 0 && !eof) {

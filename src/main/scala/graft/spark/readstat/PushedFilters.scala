@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * rows — the skip is free because every cell is O(1)-addressable.
   *
   * Evaluation happens on the DECODED output value (the same value the
-  * row path emits), so label decode, missing-value nulling and charset
+  * scan emits), so label decode, missing-value nulling and charset
   * handling are automatically consistent with the unfiltered read.
   *
   * Null/NaN semantics match Catalyst: comparisons with a null cell are
@@ -49,8 +49,8 @@ private[readstat] object PushedFilters {
     * with cell 2^53+1 would compare EQUAL and wrongly skip a kept row)
     * and the natural space for the temporal internal representations
     * (DateType = days-since-epoch Int, Timestamp[NTZ] = micros Long).
-    * Cells arrive as the decoded internal value: Integer days from the
-    * row path and date vectors, Long micros/nanos, any integral box
+    * Cells arrive as the decoded internal value: Integer days from
+    * date vectors, Long micros/nanos, any integral box
     * for LongType columns. */
   private def longSpace(dt: DataType): Boolean = dt match {
     case LongType | DateType | TimestampType | TimestampNTZType => true

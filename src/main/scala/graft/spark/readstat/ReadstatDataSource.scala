@@ -724,35 +724,23 @@ class ReadstatScan(paths: Seq[String], rawPaths: Seq[String],
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // Spark requires every partition of a scan to agree on row-vs-columnar
-    // (BatchScanExec rejects mixed partitions), so the decision is made
-    // once per scan across ALL files: any file that can't serve the batch
-    // loaders — unsupported regime, or (merged scans) a missing/pre-
-    // widening required column that the row path must null-fill or cast —
-    // degrades the whole scan to rows.
+    // Every file decodes through its module's columnar decoder. Spark
+    // requires every partition of a scan to agree on batch-vs-row output
+    // (BatchScanExec rejects mixed partitions), so the output shape is
+    // chosen once per scan: batches when every file's batches already
+    // hold the required columns — natural types, or (compress /
+    // schemaOverrides) types the connector casts vector-wise
+    // ([[Narrowing.castingBatchIterator]]) — else rows read off the same
+    // batches and reshaped whole (struct/merged informative nulls,
+    // mergeSchema null-fill and widening).
     val reshape = opts.compress || opts.schemaOverrides.trim.nonEmpty
-    val columnar = opts.columnarEnabled && paths.forall { p =>
+    val rowShaped = opts.informativeNulls && opts.informativeNullMode != "column"
+    val columnar = !rowShaped && paths.forall { p =>
       val module = Formats.moduleFor(p)
-      if (reshape) {
-        // columnar narrowing (r13): decode batches with the NATURAL
-        // types (modules refuse the reshaping regimes themselves), cast
-        // vectors in the connector (Narrowing.castingBatchIterator) —
-        // compress / schemaOverrides scans were the last row-only
-        // regimes. Struct/merged informative-null fields and
-        // mergeSchema-missing columns fail the name check and keep the
-        // row path (they reshape the ROW, not just cell types).
-        val byName = module.schema(p, opts.decodeNatural)
-          .fields.map(f => f.name -> f).toMap
-        required.fields.forall(f => byName.contains(f.name)) && {
-          val naturalRequired = StructType(required.fields.map(f => byName(f.name)))
-          module.supportsColumnar(p, opts.decodeNatural, naturalRequired)
-        }
-      } else {
-        val mergeable = !opts.mergeSchema || {
-          val natural = module.schema(p, opts).fields.map(f => f.name -> f.dataType).toMap
-          required.fields.forall(f => natural.get(f.name).contains(f.dataType))
-        }
-        mergeable && module.supportsColumnar(p, opts, required)
+      if (!reshape) module.supportsColumnar(p, opts, required)
+      else {
+        val natural = module.schema(p, opts.decodeNatural).fieldNames.toSet
+        required.fieldNames.forall(natural.contains)
       }
     }
     new ReadstatPartitionReaderFactory(required, opts, columnar, pushed)
@@ -785,14 +773,15 @@ class ReadstatPartitionReaderFactory(required: StructType,
 
   /** `mode=permissive` executor-side salvage: keep what this range
     * partition already decoded, end it on the first decode failure
-    * (logged) instead of failing the task — the backstop behind the
-    * planner's truncated-tail clamp, covering regimes whose damage is
-    * only discoverable by decoding (bad zlib block, corrupt RLE control
-    * byte, dangling strL ref). Wraps construction too: a corrupt file
-    * throws at open just as well as mid-stream. Per-partition, so a
-    * damaged file inside a packed [[MultiFilePartition]] doesn't take
-    * its healthy bin-mates down with it. Identity under the other
-    * modes. */
+    * (logged) instead of failing the task. Both output shapes decode
+    * batches, so the kept prefix ends at a batch boundary. This is the
+    * backstop behind the planner's truncated-tail clamp, covering
+    * regimes whose damage is only discoverable by decoding (bad zlib
+    * block, corrupt RLE control byte, dangling strL ref). Wraps
+    * construction too: a corrupt file throws at open just as well as
+    * mid-stream. Per-partition, so a damaged file inside a packed
+    * [[MultiFilePartition]] doesn't take its healthy bin-mates down
+    * with it. Identity under the other modes. */
   private def salvaged[T](part: RangePartition,
       mk: () => Iterator[T]): Iterator[T] =
     if (!opts.salvage) mk()
@@ -930,7 +919,7 @@ class ReadstatPartitionReaderFactory(required: StructType,
             var i = 0
             while (i < slots.length) {
               out(i) = slots(i) match {
-                case Some(j) => if (row.isNullAt(j)) null else row.get(j, types(j))
+                case Some(j) => if (row.isNullAt(j)) null else Narrowing.cell(row, j, types(j))
                 case None => null
               }
               i += 1

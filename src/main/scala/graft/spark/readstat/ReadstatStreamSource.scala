@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.StructType
   * stat-file drops are immutable once present, so a name either is or
   * is not in the offset). Each batch plans the NEW files through the
   * regular per-format partitioners, so a single large arrival still
-  * fans out across executors; decoding reuses the batch row readers
-  * unchanged (mergeSchema semantics included).
+  * fans out across executors; decoding reuses the batch scan's row
+  * reader unchanged (mergeSchema semantics included).
   */
 class ReadstatMicroBatchStream(dir: String, required: StructType,
     opts: ReadstatOptions) extends MicroBatchStream {
@@ -139,8 +139,10 @@ class ReadstatMicroBatchStream(dir: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // row path unconditionally: future files' regimes are unknown at
-    // stream start, and Spark requires uniform row-vs-columnar partitions
+    // rows unconditionally (read off the same columnar decode as batch
+    // scans): future files' schemas are unknown at stream start, so only
+    // the row reshaping (mergeSchema null-fill) can serve every arrival,
+    // and Spark requires uniform batch-vs-row partitions
     new ReadstatPartitionReaderFactory(required, opts, columnar = false)
 
   override def commit(end: Offset): Unit = end match {

@@ -3,8 +3,6 @@ package graft.spark.readstat
 import java.io.RandomAccessFile
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -218,7 +216,7 @@ object StataModule extends FormatModule {
   }
 
   /** strL (GSO) reference cell: (v, o) key into the strL table. One
-    * definition for the row, columnar and filter-predicate decoders. */
+    * definition for the column loops and the filter-predicate decoders. */
   private def decodeStrlRefIn(b: Array[Byte], off: Int,
       md: StataTypes.Metadata, little: Boolean): (Int, Long) =
     if (md.version >= 118) {
@@ -235,359 +233,6 @@ object StataModule extends FormatModule {
             ((b(off + 6) & 0xffL) << 8) | (b(off + 7) & 0xffL)
       (v, o)
     } else (Bin.i32(b, off, little), Bin.u32(b, off + 4, little))
-
-  /** Pre-encoded label lookup for the row decode: one UTF8String per
-    * LABEL for the whole partition instead of one per ROW —
-    * `UTF8String.fromString` re-encodes UTF-8 on every call, and a
-    * 10M-row labeled read repeats the same 50 labels millions of times.
-    * Dense array when the code range is compact, boxing-free LongMap
-    * otherwise. UTF8String is immutable, so sharing across rows is safe
-    * (consumers copy bytes into their own unsafe buffers). */
-  private final class LabelLut(m: Map[Int, String]) {
-    private val lo: Int = if (m.isEmpty) 0 else m.keys.min
-    private val hi: Int = if (m.isEmpty) -1 else m.keys.max
-    private val dense: Array[UTF8String] =
-      if (hi.toLong - lo.toLong < 65536L) {
-        val a = new Array[UTF8String](hi - lo + 1)
-        m.foreach { case (k, v) => a(k - lo) = UTF8String.fromString(v) }
-        a
-      } else null
-    private val sparse: scala.collection.mutable.LongMap[UTF8String] =
-      if (dense == null) {
-        val lm = new scala.collection.mutable.LongMap[UTF8String](m.size * 2)
-        m.foreach { case (k, v) => lm(k.toLong) = UTF8String.fromString(v) }
-        lm
-      } else null
-    def get(code: Int): UTF8String =
-      if (dense != null) {
-        if (code < lo || code > hi) null else dense(code - lo)
-      } else sparse.getOrNull(code.toLong)
-  }
-
-  // Decode plan for one output field
-  private final case class ColPlan(
-      fieldIdx: Int,
-      varIdx: Int,            // -1 = row index
-      byteOff: Int,
-      vt: VarType,
-      outKind: OutKind,
-      labels: LabelLut,        // null = plain decode
-      indicator: Boolean)       // true = informative-null indicator column
-
-  /** Pushed filters are evaluable whenever the column's decoded output
-    * is a plain numeric or string — including label-decoded and
-    * indicator columns (their output IS a string the predicate sees).
-    * Compress narrowing and overrides reshape types AFTER the module
-    * decode (castingIterator), so the decoded value the predicate would
-    * see differs from the filter's typed literal → refuse. */
-  override def canEvalFilter(path: String, opts: ReadstatOptions,
-      filter: org.apache.spark.sql.sources.Filter): Boolean = {
-    if (opts.compress || opts.schemaOverrides.nonEmpty) return false
-    val types = schema(path, opts).fields.map(f => f.name -> f.dataType).toMap
-    PushedFilters.isSupported(filter, types.get)
-  }
-
-  override def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[InternalRow] =
-    rows(part, opts, required, Array.empty)
-
-  /** Decode-skipping scan (SURVEY §2.2): filter columns decode FIRST;
-    * when the pushed predicate definitely fails, the row's remaining
-    * cells are never decoded — free on this fixed-width layout because
-    * the next row is a stride away, no per-cell walk needed. */
-  override def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType,
-      pushed: Array[org.apache.spark.sql.sources.Filter]): Iterator[InternalRow] = {
-    val md = metadata(part.path)
-    val little = md.littleEndian
-    val rules = md.rules
-    val cs = md.charset
-    val rowLen = md.rowLen
-    val nFields = required.length
-
-    // var name → (index, byte offset)
-    val offsets = new Array[Int](md.nVars)
-    var acc = 0
-    var i = 0
-    while (i < md.nVars) {
-      offsets(i) = acc; acc += md.variables(i).varType.width; i += 1
-    }
-    val byName = md.variables.zipWithIndex.map { case (v, idx) => v.name -> idx }.toMap
-
-    val plans = required.fields.zipWithIndex.map { case (f, fi) =>
-      if (opts.rowIndexName.contains(f.name))
-        ColPlan(fi, -1, 0, TDouble, ODouble, null, indicator = false)
-      else {
-        val (baseName, indicator) =
-          if (opts.informativeNulls && f.name.endsWith(opts.informativeNullSuffix) &&
-              byName.contains(f.name.stripSuffix(opts.informativeNullSuffix)) &&
-              !byName.contains(f.name))
-            (f.name.stripSuffix(opts.informativeNullSuffix), true)
-          else (f.name, false)
-        val vi = byName.getOrElse(baseName,
-          throw new IllegalArgumentException(s"no such column: ${f.name}"))
-        val v = md.variables(vi)
-        // indicator columns also carry the label map when
-        // informativeNullUseValueLabels: a label defined for the raw
-        // extended-missing code wins over ".a" (reference
-        // data.rs:1104-1136 indicator_from_offset)
-        val labels =
-          if (!indicator && opts.valueLabelsAsStrings && isNumeric(v))
-            labelMapFor(md, v).map(new LabelLut(_)).orNull
-          else if (indicator && opts.informativeNullUseValueLabels && isNumeric(v))
-            labelMapFor(md, v).map(new LabelLut(_)).orNull
-          else null
-        ColPlan(fi, vi, offsets(vi), v.varType, v.outKind, labels, indicator)
-      }
-    }
-
-    val needStrl = plans.exists(p => p.varIdx >= 0 && p.vt == TStrL)
-    val strlMap: Map[(Int, Long), String] =
-      if (needStrl) strls(part.path) else Map.empty
-
-    // compile the pushed predicate against field slots; split plans so
-    // predicate fields decode first and the rest only for passing rows
-    val slotByName = required.fields.zipWithIndex.map { case (f, i) => f.name -> i }.toMap
-    val typeByName = required.fields.map(f => f.name -> f.dataType).toMap
-    val pred: PushedFilters.Pred =
-      if (pushed.isEmpty) null
-      else PushedFilters.compile(pushed.toSeq, slotByName.get, typeByName.get).orNull
-    val predFields: Set[Int] =
-      if (pred == null) Set.empty
-      else pushed.flatMap(_.references).flatMap(slotByName.get).toSet
-    val predPlans = plans.filter(p => predFields.contains(p.fieldIdx))
-    val restPlans = if (pred == null) plans else plans.filterNot(p => predFields.contains(p.fieldIdx))
-
-    val raf = new RandomAccessFile(part.path, "r")
-    // xmlish map offsets point at the "<data>" tag itself — skip it
-    val dataStart = md.dataOffset + (if (md.version >= 117) 6 else 0)
-    raf.seek(dataStart + part.startRow * rowLen)
-    val chunkRows = math.max(1, math.min(
-      if (opts.batchRows > 0) opts.batchRows
-      else math.max(1024, (4 << 20) / math.max(1, rowLen)),
-      Int.MaxValue)).toInt
-
-    new Iterator[InternalRow] {
-      private var remaining = part.numRows
-      private var buf: Array[Byte] = _
-      private var bufRows = 0
-      private var bufPos = 0
-      private var globalRow = part.startRow
-      private var closed = false
-
-      private def fill(): Unit = {
-        if (remaining <= 0) { close(); return }
-        val n = math.min(chunkRows.toLong, remaining).toInt
-        val bytes = new Array[Byte](n * rowLen)
-        try raf.readFully(bytes)
-        catch { case e: Throwable => close(); throw e }
-        buf = bytes; bufRows = n; bufPos = 0
-      }
-
-      private def close(): Unit =
-        if (!closed) { closed = true; raf.close() }
-
-      // one reused mutable row per partition: the scan's unsafe projection
-      // copies each row before it is buffered, so in-place reuse is safe
-      // (same contract JDBC/file sources rely on) and removes per-row
-      // allocation from the hot decode loop
-      private val row = new GenericInternalRow(nFields)
-      private val getter: Int => Any = slot => row.values(slot)
-      private var rowReady = false
-
-      override def hasNext: Boolean = {
-        if (rowReady) return true
-        while (remaining > 0) {
-          if (buf == null || bufPos >= bufRows) {
-            fill()
-            if (remaining <= 0) return false
-          }
-          val base = bufPos * rowLen
-          var pass = true
-          if (pred != null) {
-            var p = 0
-            while (p < predPlans.length) {
-              val pl = predPlans(p)
-              row.update(pl.fieldIdx, decodeCell(pl, buf, base, globalRow))
-              p += 1
-            }
-            pass = pred(getter)
-          }
-          if (pass) {
-            var p = 0
-            while (p < restPlans.length) {
-              val pl = restPlans(p)
-              row.update(pl.fieldIdx, decodeCell(pl, buf, base, globalRow))
-              p += 1
-            }
-            rowReady = true
-            return true
-          }
-          // pushed predicate definitely fails: skip without decoding
-          // the remaining cells of this row
-          bufPos += 1; remaining -= 1; globalRow += 1
-        }
-        close()
-        false
-      }
-
-      override def next(): InternalRow = {
-        if (!rowReady && !hasNext) throw new NoSuchElementException
-        rowReady = false
-        bufPos += 1; remaining -= 1; globalRow += 1
-        row
-      }
-
-      private def decodeCell(pl: ColPlan, b: Array[Byte], base: Int,
-          rowIdx: Long): Any = {
-        if (pl.varIdx == -1) return rowIdx // row-index column
-        val off = base + pl.byteOff
-        if (pl.indicator) return decodeIndicator(pl, b, off)
-        pl.vt match {
-          case TByte =>
-            val v = b(off).toInt
-            if (rules.sysMissingEnabled && v >= rules.sysInt8) null
-            else if (v > rules.maxInt8) null
-            else finishNumeric(pl, v.toDouble, v.toByte)
-          case TInt =>
-            val v = Bin.i16(b, off, little).toInt
-            if (rules.sysMissingEnabled && v >= rules.sysInt16) null
-            else if (v > rules.maxInt16) null
-            else finishNumeric(pl, v.toDouble, v.toShort)
-          case TLong =>
-            val v = Bin.i32(b, off, little)
-            if (rules.sysMissingEnabled && v >= rules.sysInt32) null
-            else if (v > rules.maxInt32) null
-            else finishNumeric(pl, v.toDouble, v)
-          case TFloat =>
-            val bits = Bin.f32bits(b, off, little)
-            val ubits = bits & 0xffffffffL
-            if ((bits & 0x80000000) == 0 && ubits > rules.maxFloatBits) {
-              if (ubits == rules.missFloatBits) null
-              else finishNumeric(pl, Double.NaN, Float.NaN)
-            } else finishNumeric(pl, java.lang.Float.intBitsToFloat(bits).toDouble,
-              java.lang.Float.intBitsToFloat(bits))
-          case TDouble =>
-            val bits = Bin.f64bits(b, off, little)
-            if ((bits & 0x8000000000000000L) == 0 &&
-                java.lang.Long.compareUnsigned(bits, rules.maxDoubleBits) > 0) {
-              if (bits == rules.missDoubleBits) null
-              else finishNumeric(pl, Double.NaN, Double.NaN)
-            } else {
-              val d = java.lang.Double.longBitsToDouble(bits)
-              finishNumeric(pl, d, d)
-            }
-          case TStr(w) =>
-            val s = Bin.zstr(b, off, w, cs)
-            if (s.isEmpty && opts.missingStringAsNull) null
-            else UTF8String.fromString(s)
-          case TStrL =>
-            val (v, o) = decodeStrlRef(b, off)
-            strlMap.get((v, o)) match {
-              case Some(s) =>
-                if (s.isEmpty && opts.missingStringAsNull) null
-                else UTF8String.fromString(s)
-              case None => null
-            }
-        }
-      }
-
-      /** Apply label decode / temporal conversion to a valid numeric. */
-      private def finishNumeric(pl: ColPlan, asDouble: Double, raw: Any): Any = {
-        if (pl.labels != null) {
-          if (asDouble == math.floor(asDouble) && !asDouble.isInfinite &&
-              math.abs(asDouble) < Int.MaxValue.toDouble) {
-            val label = pl.labels.get(asDouble.toInt)
-            if (label != null) return label
-          }
-          return UTF8String.fromString(NumRender.code(asDouble))
-        }
-        pl.outKind match {
-          case ODate(unit) =>
-            if (asDouble.isNaN) null
-            else StataTypes.stataDateToEpochDays(math.floor(asDouble).toLong, unit)
-          case ODatetimeMs =>
-            if (asDouble.isNaN) null
-            else (asDouble.toLong - EpochShiftMs) * 1000L // → micros
-          case OTimeNs =>
-            if (asDouble.isNaN) null
-            else {
-              val dayMs = 86400000L
-              (((asDouble.toLong % dayMs) + dayMs) % dayMs) * 1000000L
-            }
-          case _ => raw
-        }
-      }
-
-      private def decodeIndicator(pl: ColPlan, b: Array[Byte], off: Int): Any = {
-        if (!rules.sysMissingEnabled) return null
-        // a value label defined for the raw missing code wins over the
-        // ".a" form (reference indicator_from_offset, data.rs:1104-1121);
-        // only int-typed codes are int-keyed in the label map
-        var raw = Int.MinValue
-        val k: Int = pl.vt match {
-          case TByte =>
-            val v = b(off).toInt
-            raw = v
-            if (v >= rules.sysInt8) v - rules.sysInt8 else -1
-          case TInt =>
-            val v = Bin.i16(b, off, little).toInt
-            raw = v
-            if (v >= rules.sysInt16) v - rules.sysInt16 else -1
-          case TLong =>
-            val v = Bin.i32(b, off, little)
-            raw = v
-            if (v >= rules.sysInt32) v - rules.sysInt32 else -1
-          // Stata float user-missings step by n<<11, doubles by n<<40
-          // (stata.com/help.cgi?missing; the reference's +1 step for
-          // doubles is a bug we don't replicate)
-          case TFloat =>
-            val bits = Bin.f32bits(b, off, little) & 0xffffffffL
-            if ((bits & 0x80000000L) == 0 && bits > rules.maxFloatBits)
-              ((bits - rules.missFloatBits) >> 11).toInt
-            else -1
-          case TDouble =>
-            val bits = Bin.f64bits(b, off, little)
-            if ((bits & 0x8000000000000000L) == 0 &&
-                java.lang.Long.compareUnsigned(bits, rules.maxDoubleBits) > 0)
-              ((bits - rules.missDoubleBits) >> 40).toInt
-            else -1
-          case _ => -1
-        }
-        if (k >= 1 && k <= 26) {
-          if (pl.labels != null && raw != Int.MinValue) {
-            val lbl = pl.labels.get(raw)
-            if (lbl != null) return lbl
-          }
-          UTF8String.fromString("." + ('a' + k - 1).toChar)
-        } else null
-      }
-
-      private def decodeStrlRef(b: Array[Byte], off: Int): (Int, Long) =
-        decodeStrlRefIn(b, off, md, little)
-    }
-  }
-
-  // ---- vectorized decode path ----
-
-  /** Columnar decode covers the plain-scan configurations plus label
-    * decode (r12: labeled reads are THE hot path for real survey data)
-    * plus column-mode informative-null indicators (r12: mostly-null
-    * string columns — per cell a missing-tag check, rarely a byte
-    * write). struct/merged informative-null modes reshape the schema,
-    * so the name/type check below rejects them automatically; compress
-    * narrowing and overrides still reshape types per-cell → row path. */
-  override def supportsColumnar(path: String, opts: ReadstatOptions,
-      required: StructType): Boolean = {
-    if (opts.compress || opts.schemaOverrides.nonEmpty) return false
-    val nat = schema(path, opts)
-    val byName = nat.fields.map(f => f.name -> f.dataType).toMap
-    required.fields.forall(f => byName.get(f.name).contains(f.dataType))
-  }
-
-  override def columnarRows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType): Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    columnarRows(part, opts, required, Array.empty)
 
   /** Per-column tight loops over each fixed-width row chunk: the vt/
     * outKind dispatch happens once per column per batch instead of once
@@ -634,9 +279,8 @@ object StataModule extends FormatModule {
             else (f.name, false)
           val i = byName(baseName)
           val v = md.variables(i)
-          // indicator LUT rule matches the row path: a label defined for
-          // the raw missing code wins over the ".a" form when
-          // informativeNullUseValueLabels
+          // indicator LUT: a label defined for the raw missing code
+          // wins over the ".a" form when informativeNullUseValueLabels
           val lut =
             if (!indicator && opts.valueLabelsAsStrings && isNumeric(v))
               labelMapFor(md, v).map(new IntByteLut(_)).orNull
@@ -722,8 +366,7 @@ object StataModule extends FormatModule {
               }
             }
           }
-          // temporal wrap: same transform as the row path's
-          // finishNumeric — extended missings surface as NaN from the
+          // temporal wrap: extended missings surface as NaN from the
           // raw decoder and become null here, matching the output
           val dec: (Array[Byte], Int) => Any = v.outKind match {
             case ODate(unit) => (b, base) => {
@@ -939,7 +582,7 @@ object StataModule extends FormatModule {
         * the same design as Spark's parquet dictionary read, and the
         * reason labeled decode costs barely more than the raw read
         * (a byte-array append per row measured 1.7× raw; this is
-        * ~1.1×). Missing handling matches the row path exactly:
+        * ~1.1×). Missing handling matches the unlabeled decode:
         * sys/extended missings → null; the float/double "NaN but not
         * the sys-missing pattern" zone renders through the code form
         * ("NaN"); unlabeled codes get per-batch fallback ids. */
@@ -1027,8 +670,8 @@ object StataModule extends FormatModule {
         ("." + ('a' + k).toChar).getBytes(java.nio.charset.StandardCharsets.UTF_8))
 
       /** Informative-null indicator column → mostly-null string vector:
-        * per cell the row path's decodeIndicator rule (extended-missing
-        * tag k∈1..26 → label-for-raw-code or ".a"-".z"; else null). */
+        * per cell, extended-missing tag k∈1..26 → label-for-raw-code or
+        * ".a"-".z"; else null. */
       private def decodeIndicatorCol(vt: VarType, off: Int, lut: IntByteLut,
           buf: Array[Byte], n: Int, vec: OnHeapColumnVector): Unit = {
         if (!rules.sysMissingEnabled) {

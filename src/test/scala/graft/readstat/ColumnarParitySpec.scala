@@ -8,12 +8,11 @@ import org.apache.spark.sql.functions._
 /** Columnar coverage: POR batch decode, dictionary-encoded label decode
   * and column-mode informative-null indicators on all five formats
   * (r12), plus compress / schemaOverrides narrowing through the
-  * connector's vector-cast wrapper (r13 — the last row-only regimes).
-  * Each case pins BOTH properties: the plan actually runs
-  * ColumnarToRow, and the values match the row path bit-for-bit (row
-  * path forced via the `columnar=false` escape hatch; a no-op
-  * schemaOverride no longer forces rows now that overrides decode
-  * columnar).
+  * connector's vector-cast wrapper (r13). Each case pins BOTH
+  * properties: the plan actually runs ColumnarToRow, and the values
+  * equal an expectation built without the reader — the frame the test
+  * wrote, mapped through the labels / missing declarations / casts the
+  * read options ask for.
   */
 class ColumnarParitySpec extends SparkTestBase {
 
@@ -23,29 +22,23 @@ class ColumnarParitySpec extends SparkTestBase {
     d.getAbsolutePath
   }
 
-  private def assertColumnarParity(read: => DataFrame,
-      rowRead: => DataFrame, ctx: String): Unit = {
-    val df = read
-    val plan = df.queryExecution.executedPlan.toString
+  /** `want` is renamed positionally to the read's column names (the
+    * SAS family and POR upper-case names on write). */
+  private def assertColumnarReads(read: DataFrame, want: DataFrame,
+      ctx: String): Unit = {
+    val plan = read.queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"), s"$ctx not columnar:\n$plan")
-    val rows = rowRead
-    assert(!rows.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
-      s"$ctx: row-path forcing failed")
-    assertSameData(df, rows, ctx)
+    assertSameData(read, want.toDF(read.columns.toIndexedSeq: _*), ctx)
   }
 
-  test("por scan runs the columnar path with row-path parity") {
+  test("por scan runs the columnar path and returns the written rows") {
     import spark.implicits._
     val p = s"$dir/plain.por"
-    (1 to 4000).map(i =>
+    val src = (1 to 4000).map(i =>
       (i.toDouble, if (i % 7 == 0) null else s"s$i", i % 13 * 0.25))
       .toDF("num", "txt", "frac")
-      .write.format("readstat").mode("overwrite").save(p)
-    def base = spark.read.format("readstat").load(p)
-    assertColumnarParity(
-      base,
-      spark.read.format("readstat")
-        .option("columnar", "false").load(p),
+    src.write.format("readstat").mode("overwrite").save(p)
+    assertColumnarReads(spark.read.format("readstat").load(p), src,
       "por plain")
     // projection skim + row index stay correct through the batch path
     val withIdx = spark.read.format("readstat")
@@ -85,11 +78,11 @@ class ColumnarParitySpec extends SparkTestBase {
       .option("valueLabels", "code:1=One,2=Two,3=Three").save(p)
     def labeled = spark.read.format("readstat")
       .option("valueLabelsAsStrings", "true").load(p)
-    assertColumnarParity(
-      labeled,
-      spark.read.format("readstat")
-        .option("valueLabelsAsStrings", "true")
-        .option("columnar", "false").load(p),
+    val dtaLabels = Map(1 -> "One", 2 -> "Two", 3 -> "Three")
+    assertColumnarReads(labeled,
+      (1 to 5000).map(i =>
+        (if (i % 11 == 0) null else dtaLabels.getOrElse(i % 7, (i % 7).toString),
+          i * 1.5)).toDF("code", "x"),
       "dta labeled")
     val vals = labeled.select("code").distinct().collect().map(_.getString(0)).toSet
     assert(vals == Set(null, "One", "Two", "Three", "0", "4", "5", "6"))
@@ -106,11 +99,11 @@ class ColumnarParitySpec extends SparkTestBase {
       .option("valueLabels", "sex:1=Male,2=Female|tag:ab=Alpha").save(p)
     def labeled = spark.read.format("readstat")
       .option("valueLabelsAsStrings", "true").load(p)
-    assertColumnarParity(
-      labeled,
-      spark.read.format("readstat")
-        .option("valueLabelsAsStrings", "true")
-        .option("columnar", "false").load(p),
+    val sexLabels = Map(1 -> "Male", 2 -> "Female")
+    assertColumnarReads(labeled,
+      (1 to 5000).map(i =>
+        (if (i % 11 == 0) null else sexLabels.getOrElse(i % 5, (i % 5).toString),
+          if (i % 3 == 0) "Alpha" else "zz", i * 0.5)).toDF("sex", "tag", "x"),
       "sav labeled")
     val sexes = labeled.select("sex").distinct().collect().map(_.getString(0)).toSet
     assert(sexes == Set(null, "Male", "Female", "0", "3", "4"))
@@ -127,11 +120,11 @@ class ColumnarParitySpec extends SparkTestBase {
       .option("valueLabels", "grade:1=Low,2=Mid,3=High").save(p)
     def labeled = spark.read.format("readstat")
       .option("valueLabelsAsStrings", "true").load(p)
-    assertColumnarParity(
-      labeled,
-      spark.read.format("readstat")
-        .option("valueLabelsAsStrings", "true")
-        .option("columnar", "false").load(p),
+    val gradeLabels = Map(1 -> "Low", 2 -> "Mid", 3 -> "High")
+    assertColumnarReads(labeled,
+      (1 to 3000).map(i =>
+        (gradeLabels.getOrElse(i % 4, (i % 4).toString), i * 2.0))
+        .toDF("grade", "x"),
       "por labeled")
     val vals = labeled.select("grade").distinct().collect().map(_.getString(0)).toSet
     assert(vals == Set("0", "Low", "Mid", "High"))
@@ -150,12 +143,11 @@ class ColumnarParitySpec extends SparkTestBase {
       def labeled = spark.read.format("readstat")
         .option("catalog", catPath)
         .option("valueLabelsAsStrings", "true").load(p)
-      assertColumnarParity(
-        labeled,
-        spark.read.format("readstat")
-          .option("catalog", catPath)
-          .option("valueLabelsAsStrings", "true")
-          .option("columnar", "false").load(p),
+      val sexLabels = Map(1 -> "Male", 2 -> "Female")
+      assertColumnarReads(labeled,
+        (1 to 4000).map(i =>
+          (sexLabels.getOrElse(i % 4, (i % 4).toString),
+            if (i % 3 == 0) "Alpha" else "zz", i * 1.5)).toDF("sex", "tag", "x"),
         s"$ext catalog-labeled")
       val sexCol = if (ext == "xpt") "SEX" else "sex"
       val tagCol = if (ext == "xpt") "TAG" else "tag"
@@ -174,7 +166,7 @@ class ColumnarParitySpec extends SparkTestBase {
       val p = s"$dir/inul.$ext"
       // dta tags are .a-.z; the SAS family writes .A-.Z
       val (ta, tz) = if (ext == "dta") (".a", ".z") else (".A", ".Z")
-      (1 to 3000).map { i =>
+      val src = (1 to 3000).map { i =>
         val tag = i % 7 match {
           case 0 => ta
           case 3 => tz
@@ -183,17 +175,15 @@ class ColumnarParitySpec extends SparkTestBase {
         (if (tag == null) java.lang.Double.valueOf(i.toDouble) else null,
           tag, i.toDouble)
       }.toDF("v", "v_null", "ord")
-        .write.format("readstat").mode("overwrite")
+      src.write.format("readstat").mode("overwrite")
         .option("taggedMissings", "v:v_null").save(p)
       def read = spark.read.format("readstat")
         .option("informativeNulls", "true")
         .option("informativeNullUseValueLabels", "false").load(p)
-      assertColumnarParity(
-        read,
-        spark.read.format("readstat")
-          .option("informativeNulls", "true")
-          .option("informativeNullUseValueLabels", "false")
-          .option("columnar", "false").load(p),
+      // the indicator column the write consumed is exactly what the
+      // read re-derives next to its value column; ord has no missings
+      assertColumnarReads(read,
+        src.withColumn("ord_null", lit(null).cast("string")),
         s"$ext informativeNulls")
       val vCol = if (ext == "dta") "v_null" else "V_null"
       val ordCol = if (ext == "dta") "ord" else "ORD"
@@ -215,11 +205,15 @@ class ColumnarParitySpec extends SparkTestBase {
       .option("missingValues", "q:9|s:NA").save(p)
     def savRead = spark.read.format("readstat")
       .option("informativeNulls", "true").load(p)
-    assertColumnarParity(
-      savRead,
-      spark.read.format("readstat")
-        .option("informativeNulls", "true")
-        .option("columnar", "false").load(p),
+    assertColumnarReads(savRead,
+      (1 to 3000).map { i =>
+        val q = i % 10
+        val s = if (i % 5 == 0) "NA" else s"ok$i"
+        (if (q == 9) null else java.lang.Double.valueOf(q.toDouble),
+          if (q == 9) "Refused" else null,
+          if (s == "NA") null else s, if (s == "NA") "NA" else null,
+          i.toDouble, null: String)
+      }.toDF("q", "q_null", "s", "s_null", "ord", "ord_null"),
       "sav informativeNulls")
     val qInds = savRead.select("q_null").distinct().collect()
       .map(r => Option(r.getString(0)).orNull).toSet
@@ -239,11 +233,12 @@ class ColumnarParitySpec extends SparkTestBase {
       .option("missingValues", "q:9").save(pp)
     def porRead = spark.read.format("readstat")
       .option("informativeNulls", "true").load(pp)
-    assertColumnarParity(
-      porRead,
-      spark.read.format("readstat")
-        .option("informativeNulls", "true")
-        .option("columnar", "false").load(pp),
+    assertColumnarReads(porRead,
+      (1 to 3000).map { i =>
+        val q = i % 10
+        (if (q == 9) null else java.lang.Double.valueOf(q.toDouble),
+          if (q == 9) "Refused" else null, i.toDouble, null: String)
+      }.toDF("q", "q_null", "ord", "ord_null"),
       "por informativeNulls")
     val pInds = porRead.select("Q_null").distinct().collect()
       .map(r => Option(r.getString(0)).orNull).toSet
@@ -285,11 +280,11 @@ class ColumnarParitySpec extends SparkTestBase {
       .write.format("readstat").mode("overwrite").save(p)
     def compressed = spark.read.format("readstat")
       .option("compress", "true").option("compressProbeRows", "6000").load(p)
-    assertColumnarParity(
-      compressed,
-      spark.read.format("readstat")
-        .option("compress", "true").option("compressProbeRows", "6000")
-        .option("columnar", "false").load(p),
+    assertColumnarReads(compressed,
+      (1 to 6000).map { i =>
+        (i % 2 == 1, (i % 100).toByte, (i % 20000 - 10000).toShort,
+          i * 0.25, (i % 50).toDouble, java.time.LocalDate.of(2020, 5, i % 28 + 1))
+      }.toDF("flag", "small", "wide", "frac", "numstr", "ts"),
       "dta compress")
     val sch = compressed.schema.fields.map(f => f.name -> f.dataType.sql).toMap
     assert(sch("flag") == "BOOLEAN" && sch("small") == "TINYINT" &&
@@ -303,21 +298,18 @@ class ColumnarParitySpec extends SparkTestBase {
   test("schemaOverrides run columnar through the vector-cast wrapper (r13)") {
     import spark.implicits._
     val p = s"$dir/ovr.sav"
-    (1 to 4000).map(i => ((i % 120).toDouble, i.toDouble, s"${i % 7}"))
+    val src = (1 to 4000).map(i => ((i % 120).toDouble, i.toDouble, s"${i % 7}"))
       .toDF("a", "b", "s")
-      .write.format("readstat").mode("overwrite").save(p)
+    src.write.format("readstat").mode("overwrite").save(p)
     def overridden = spark.read.format("readstat")
       .option("schemaOverrides", "a TINYINT, s DOUBLE").load(p)
-    assertColumnarParity(
-      overridden,
-      spark.read.format("readstat")
-        .option("schemaOverrides", "a TINYINT, s DOUBLE")
-        .option("columnar", "false").load(p),
+    assertColumnarReads(overridden,
+      src.select(col("a").cast("tinyint"), col("b"), col("s").cast("double")),
       "sav overrides")
     val sch = overridden.schema.fields.map(f => f.name -> f.dataType.sql).toMap
     assert(sch("a") == "TINYINT" && sch("b") == "DOUBLE" && sch("s") == "DOUBLE")
     // untouched column passes through by reference; strict downcast
-    // overflow still throws (same castValue as the row path)
+    // overflow still throws (castValue's strict rule)
     val bad = spark.read.format("readstat")
       .option("schemaOverrides", "b TINYINT").load(p)
     val e = intercept[org.apache.spark.SparkException] { bad.collect() }

@@ -16,17 +16,18 @@ class FuzzCorruptionSpec extends SparkTestBase {
 
   private implicit val ec: ExecutionContext = ExecutionContext.global
 
-  /** Read metadata + every row through the format module directly (the
-    * same code a Spark scan runs, without per-trial job overhead).
-    * Returns the row count; any throw is the caller's to interpret. */
+  /** Read metadata + every batch through the format module's columnar
+    * decoder directly (the same decode a Spark scan runs, without
+    * per-trial job overhead). Returns the row count; any throw is the
+    * caller's to interpret. */
   private def readAll(path: String): Long = {
     val m = Formats.moduleFor(path)
     val opts = ReadstatOptions()
     val schema = m.schema(path, opts)
     var n = 0L
     m.planPartitions(path, opts, None).foreach { part =>
-      val it = m.rows(part, opts, schema)
-      while (it.hasNext) { it.next(); n += 1 }
+      val it = m.columnarRows(part, opts, schema)
+      while (it.hasNext) n += it.next().numRows()
     }
     n
   }

@@ -99,32 +99,32 @@ class PushdownPlanSpec extends SparkTestBase {
 
   test("compressed SAS pages (RLE and RDC) run the columnar path") {
     // test2 = SASYZCRL (RLE), test.sas7bdat = SASYZCR2 (RDC, 10k rows);
-    // both must plan ColumnarToRow and match the row path value-for-value
-    // (row path forced via the columnar=false escape hatch)
-    for (fixture <- Seq("fixtures/sas/test2.sas7bdat", "fixtures/sas/test.sas7bdat")) {
-      val path = res(fixture)
-      val df = spark.read.format("readstat").load(path)
+    // both must plan ColumnarToRow and match their pandas goldens
+    for (name <- Seq("test2", "test")) {
+      val fixture = s"fixtures/sas/$name.sas7bdat"
+      val df = spark.read.format("readstat").load(res(fixture))
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("ColumnarToRow"), s"$fixture not columnar:\n$plan")
-      val rowPath = spark.read.format("readstat")
-        .option("columnar", "false").load(path)
-      assert(!rowPath.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      assertSameData(df, rowPath, fixture)
+      assertSameData(df, sasGolden(df, res(s"golden/sas/$name.parquet")), fixture)
     }
   }
 
   test("compressed SPSS (bytecode and zsav) runs the columnar path") {
-    for (fixture <- Seq("fixtures/spss/sample.sav", "fixtures/spss/sample.zsav",
-        "fixtures/spss/sample_large.sav")) {
-      val path = res(fixture)
-      val df = spark.read.format("readstat").load(path)
+    // the same 5 rows three ways: bytecode (sample.sav), zlib blocks
+    // (sample.zsav) and, uncompressed, repeated 97 times (sample_large)
+    def read(fixture: String) = {
+      val df = spark.read.format("readstat").load(res(s"fixtures/spss/$fixture"))
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("ColumnarToRow"), s"$fixture not columnar:\n$plan")
-      val rowPath = spark.read.format("readstat")
-        .option("columnar", "false").load(path)
-      assert(!rowPath.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
-      assertSameData(df, rowPath, fixture)
+      df
     }
+    val sav = read("sample.sav")
+    assertSameData(read("sample.zsav"), sav, "sample.zsav vs sample.sav")
+    val rows = sav.collect().toSeq
+    assertSameData(read("sample_large.sav"),
+      spark.createDataFrame(java.util.Arrays.asList(Seq.fill(97)(rows).flatten: _*),
+        sav.schema),
+      "sample_large.sav vs 97 x sample.sav")
   }
 
   test("override scans stay columnar (r13 vector cast) with same results") {

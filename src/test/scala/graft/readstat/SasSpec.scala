@@ -65,21 +65,7 @@ class SasSpec extends SparkTestBase {
       val sas = s"$fixdir/$name.sas7bdat"
       val got = spark.read.format("readstat")
         .option("missingStringAsNull", "false").load(sas)
-      var want = spark.read.parquet(g.getAbsolutePath)
-      got.schema.fields.foreach { f =>
-        import org.apache.spark.sql.functions.{col, timestamp_micros}
-        import org.apache.spark.sql.types._
-        val isTemporal = f.dataType == DateType || f.dataType == TimestampNTZType
-        if (isTemporal && want.schema(f.name).dataType == LongType)
-          want = want.withColumn(f.name,
-            timestamp_micros((col(f.name) / 1000L).cast("long")))
-        // our TIME columns are nanos-of-day longs; pandas keeps raw seconds
-        if (f.dataType == LongType &&
-            f.metadata.contains("readstat.type") &&
-            f.metadata.getString("readstat.type") == "time")
-          want = want.withColumn(f.name, (col(f.name) * 1e9).cast(LongType))
-      }
-      assertSameData(got, want, name)
+      assertSameData(got, sasGolden(got, g.getAbsolutePath), name)
     }
   }
 

@@ -39,6 +39,25 @@ trait SparkTestBase extends AnyFunSuite {
     df.select(cols.toIndexedSeq: _*)
   }
 
+  /** The pandas golden of a sas7bdat fixture, re-typed to compare with
+    * `got` (the fixture's read): pandas stores temporals as epoch nanos
+    * and TIME as raw seconds, where the reader emits dates/timestamps
+    * and nanos-of-day longs. */
+  def sasGolden(got: DataFrame, golden: String): DataFrame = {
+    var want = spark.read.parquet(golden)
+    got.schema.fields.foreach { f =>
+      val isTemporal = f.dataType == DateType || f.dataType == TimestampNTZType
+      if (isTemporal && want.schema(f.name).dataType == LongType)
+        want = want.withColumn(f.name,
+          timestamp_micros((col(f.name) / 1000L).cast("long")))
+      if (f.dataType == LongType &&
+          f.metadata.contains("readstat.type") &&
+          f.metadata.getString("readstat.type") == "time")
+        want = want.withColumn(f.name, (col(f.name) * 1e9).cast(LongType))
+    }
+    want
+  }
+
   /** Row-by-row equality after normalization (row order preserved). */
   def assertSameData(got: DataFrame, want: DataFrame, ctx: String): Unit = {
     val gotCols = got.columns.toSeq

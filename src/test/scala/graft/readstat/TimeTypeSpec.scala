@@ -143,6 +143,40 @@ class TimeTypeSpec extends SparkTestBase {
     assert(spark.read.format("readstat").load(s"$dir/out.dta").count() == 2L)
   }
 
+  test("TIME columns read through the row reshapes (struct, merged, mergeSchema)") {
+    // the reshapes read rows off columnar batches, whose generic getter
+    // has no TIME case: every reshape must read TIME as its long
+    val sav = res("fixtures/spss/sample.sav")
+    def times(df: org.apache.spark.sql.DataFrame, expr: String) =
+      df.selectExpr(s"cast($expr as string) AS t").collect()
+        .map(r => Option(r.getString(0)).orNull).toSeq
+    val want = times(spark.read.format("readstat")
+      .option("timeAsTimeType", "true").load(sav), "mytime")
+    assert(want.contains("10:10:10"), want.toString)
+    val struct = spark.read.format("readstat").option("timeAsTimeType", "true")
+      .option("informativeNulls", "true")
+      .option("informativeNullMode", "struct").load(sav)
+    assert(times(struct, "mytime.mytime") == want)
+    val merged = spark.read.format("readstat").option("timeAsTimeType", "true")
+      .option("informativeNulls", "true")
+      .option("informativeNullMode", "merged").load(sav)
+    assert(merged.collect().length == want.length)
+    // mergeSchema null-fill: the TIME file lacks `extra`, the other file
+    // lacks the TIME column
+    import spark.implicits._
+    val dir = tmp("t_merge")
+    new java.io.File(dir).mkdirs()
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sav),
+      java.nio.file.Paths.get(s"$dir/a.sav"))
+    Seq((1.5, "x")).toDF("mynum", "extra").write.format("readstat")
+      .mode("overwrite").save(s"$dir/b.sav")
+    val both = spark.read.format("readstat").option("timeAsTimeType", "true")
+      .option("mergeSchema", "true").load(dir)
+    assert(both.columns.contains("extra"))
+    assert(times(both, "mytime").filter(_ != null).sorted ==
+      want.filter(_ != null).sorted)
+  }
+
   test("por varFormats validate loudly") {
     import spark.implicits._
     val df = Seq((1.0, "x")).toDF("v", "s")
