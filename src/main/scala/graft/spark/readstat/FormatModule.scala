@@ -1,13 +1,12 @@
 package graft.spark.readstat
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
 /** One statistical-file format (dta/sav/sas7bdat/xpt/por) as seen by the
   * DSv2 connector: driver-side schema + partition planning, executor-side
   * decoding. Each format has ONE decoder, [[columnarRows]]: per-column
   * tight loops into ColumnarBatches (the reference's columnar chunk
-  * stream). Row-shaped consumers read the same batches through [[rows]].
+  * stream); the connector casts and reshapes those batches.
   * Implementations must keep `metadata` cheap (header/meta parse only —
   * no data read) because it runs at planning time, and the decode
   * embarrassingly parallel across disjoint row ranges.
@@ -133,21 +132,6 @@ trait FormatModule extends Serializable {
   final def columnarRows(part: RangePartition, opts: ReadstatOptions,
       required: StructType): Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
     columnarRows(part, opts, required, Array.empty)
-
-  /** The rows of [[columnarRows]], for the consumers that reshape a whole
-    * row (struct/merged informative nulls, mergeSchema null-fill, the
-    * stream source, the compress probe). `required` holds natural-typed
-    * fields of `schema`; compress and overrides in `opts` are ignored
-    * (the caller casts). The returned row is one mutable view reused for
-    * every row: read it before advancing, or `copy()` it to keep it. */
-  final def rows(part: RangePartition, opts: ReadstatOptions,
-      required: StructType,
-      pushed: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-      : Iterator[InternalRow] = {
-    import scala.jdk.CollectionConverters._
-    columnarRows(part, opts.decodeNatural, required, pushed)
-      .flatMap(_.rowIterator().asScala)
-  }
 }
 
 /** THE integral-rendering rule for numeric value-label codes: exact
@@ -259,9 +243,8 @@ final case class ReadstatOptions(
     informativeNullCols.isEmpty || informativeNullCols.contains(name)
 
   /** The same options with the type-reshaping regimes stripped: modules
-    * decode the format's NATURAL types and the connector casts afterwards
-    * (whole vectors in [[Narrowing.castingBatchIterator]], rows in
-    * [[Narrowing.castingIterator]]). */
+    * decode the format's NATURAL types and the connector casts whole
+    * vectors afterwards ([[Narrowing.castingBatchIterator]]). */
   def decodeNatural: ReadstatOptions =
     if (!compress && schemaOverrides.isEmpty) this
     else copy(compress = false, schemaOverrides = "")

@@ -1,8 +1,8 @@
 package graft.spark.readstat
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarBatch, ColumnarMap}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The three informative-null output shapes of the reference
@@ -19,7 +19,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Struct/merged are a pure reshaping of the separate-column output, so
   * they live here in the connector layer: the modules always decode
-  * separate columns and the partition reader combines them.
+  * separate columns, and the partition reader builds each struct or
+  * merged column from the batch's (main, indicator) vectors.
   */
 object InformativeNulls {
 
@@ -65,75 +66,49 @@ object InformativeNulls {
     })
   }
 
-  private sealed trait OutCol
-  private final case class Pass(midIdx: Int) extends OutCol
-  private final case class AsStruct(mainIdx: Int, indIdx: Int, innerType: DataType)
-    extends OutCol
-  private final case class AsMerged(mainIdx: Int, indIdx: Int, mainType: DataType)
-    extends OutCol
+  /** Struct mode's `struct<name, null_indicator>` column over the
+    * pair's own vectors, with no copy. The struct itself is never null. */
+  def structVector(dt: DataType, main: ColumnVector,
+      ind: ColumnVector): ColumnVector = new ColumnVector(dt) {
+    override def getChild(i: Int): ColumnVector = if (i == 0) main else ind
+    override def isNullAt(r: Int): Boolean = false
+    override def hasNull: Boolean = false
+    override def numNulls: Int = 0
+    override def close(): Unit = { main.close(); ind.close() }
+    private def leaf = throw new UnsupportedOperationException("struct column")
+    override def getBoolean(r: Int): Boolean = leaf
+    override def getByte(r: Int): Byte = leaf
+    override def getShort(r: Int): Short = leaf
+    override def getInt(r: Int): Int = leaf
+    override def getLong(r: Int): Long = leaf
+    override def getFloat(r: Int): Float = leaf
+    override def getDouble(r: Int): Double = leaf
+    override def getArray(r: Int): ColumnarArray = leaf
+    override def getMap(r: Int): ColumnarMap = leaf
+    override def getDecimal(r: Int, p: Int, s: Int): Decimal = leaf
+    override def getUTF8String(r: Int): UTF8String = leaf
+    override def getBinary(r: Int): Array[Byte] = leaf
+  }
 
-  /** Wrap a module-row iterator so struct/merged output fields are
-    * combined from their separate (main, indicator) columns.
-    *
-    * @param required  final output schema (struct/merged shapes)
-    * @param sepNatural the module's full separate-column schema (natural types)
-    * @param prs       (main, indicator) pairs present in sepNatural
-    * @return (moduleRequired, wrap): the separate-column schema to request
-    *         from the module, and the row-combining wrapper
-    */
-  def combiner(required: StructType, sepNatural: StructType,
-      prs: Seq[(String, String)], mode: String)
-      : (StructType, Iterator[InternalRow] => Iterator[InternalRow]) = {
-    val byMain = prs.toMap
-    val natByName = sepNatural.fields.map(f => f.name -> f).toMap
-    val modFields = scala.collection.mutable.ArrayBuffer[StructField]()
-    def fieldIdx(f: StructField): Int = {
-      val i = modFields.indexWhere(_.name == f.name)
-      if (i >= 0) i else { modFields += f; modFields.length - 1 }
+  /** Merged mode's string column from `batch`'s main column `mi` (of
+    * type `mainType`) and indicator column `ii`: the value's string
+    * form, else the indicator, else null. */
+  def mergedVector(batch: ColumnarBatch, mi: Int, ii: Int,
+      mainType: DataType): ColumnVector = {
+    val rows = batch.numRows
+    val out = new OnHeapColumnVector(math.max(rows, 1), StringType)
+    var r = 0
+    while (r < rows) {
+      val row = batch.getRow(r)
+      val s =
+        if (!row.isNullAt(mi)) mergedString(Narrowing.cell(row, mi, mainType), mainType)
+        else if (!row.isNullAt(ii)) row.getUTF8String(ii)
+        else null
+      if (s == null) out.putNull(r)
+      else { val b = s.getBytes; out.putByteArray(r, b, 0, b.length) }
+      r += 1
     }
-    val outPlan: Array[OutCol] = required.fields.map { f =>
-      byMain.get(f.name) match {
-        case Some(ind) if mode == "struct" || mode == "merged" =>
-          val mainNat = natByName(f.name)
-          val indNat = natByName(ind)
-          val mi = fieldIdx(mainNat); val ii = fieldIdx(indNat)
-          if (mode == "struct") {
-            // the struct's inner main type may be compress-narrowed or
-            // overridden — cast from the module's natural type to it
-            val inner = f.dataType.asInstanceOf[StructType].fields(0).dataType
-            AsStruct(mi, ii, inner)
-          } else AsMerged(mi, ii, mainNat.dataType)
-        case _ =>
-          Pass(fieldIdx(natByName.getOrElse(f.name, f)))
-      }
-    }
-    val moduleRequired = StructType(modFields.toSeq)
-    val wrap = (it: Iterator[InternalRow]) => it.map { row =>
-      val out = new GenericInternalRow(outPlan.length)
-      var i = 0
-      while (i < outPlan.length) {
-        outPlan(i) match {
-          case Pass(mi) =>
-            out.update(i, if (row.isNullAt(mi)) null
-              else Narrowing.castValue(row, mi, moduleRequired(mi).dataType,
-                required(i).dataType))
-          case AsStruct(mi, ii, inner) =>
-            val main = if (row.isNullAt(mi)) null
-              else Narrowing.castValue(row, mi, moduleRequired(mi).dataType, inner)
-            val ind = if (row.isNullAt(ii)) null else row.getUTF8String(ii)
-            out.update(i, new GenericInternalRow(Array[Any](main, ind)))
-          case AsMerged(mi, ii, mt) =>
-            val v: Any =
-              if (!row.isNullAt(mi)) mergedString(Narrowing.cell(row, mi, mt), mt)
-              else if (!row.isNullAt(ii)) row.getUTF8String(ii)
-              else null
-            out.update(i, v)
-        }
-        i += 1
-      }
-      out: InternalRow
-    }
-    (moduleRequired, wrap)
+    out
   }
 
   /** String form of a valid value for merged mode (Polars-like cast). */

@@ -1,7 +1,6 @@
 package graft.spark.readstat
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -32,7 +31,9 @@ object Narrowing {
       case Some(n) => math.min(probeRows.toLong, n)
       case None => probeRows.toLong
     }
-    val probe = module.rows(RangePartition(path, 0, clamped), opts, base)
+    val probe = module.columnarRows(RangePartition(path, 0, clamped),
+        opts.decodeNatural, base)
+      .flatMap(b => Iterator.tabulate(b.numRows)(b.getRow))
     val n = base.length
     val isIntegral = Array.fill(n)(true)
     val isBool = Array.fill(n)(true)
@@ -113,33 +114,11 @@ object Narrowing {
     })
   }
 
-  /** Wrap a natural-type row iterator so fields come out in the target
-    * (narrowed/overridden) types. Field order must match. Each input
-    * row is read before the next is pulled (rows off a ColumnarBatch
-    * are one reused view). */
-  def castingIterator(it: Iterator[InternalRow], from: StructType,
-      to: StructType): Iterator[InternalRow] = {
-    val n = from.length
-    val needs = (0 until n).exists(i => from(i).dataType != to(i).dataType)
-    if (!needs) return it
-    it.map { row =>
-      val out = new GenericInternalRow(n)
-      var i = 0
-      while (i < n) {
-        if (row.isNullAt(i)) out.update(i, null)
-        else out.update(i, castValue(row, i, from(i).dataType, to(i).dataType))
-        i += 1
-      }
-      out
-    }
-  }
-
-  /** Columnar analog of [[castingIterator]] (r13): batches decode with
-    * the format's NATURAL types, then only the columns whose target type
-    * differs are re-materialized through the same castValue semantics
-    * (strict downcasts throw, string→double parse failures null);
-    * same-typed columns pass through by reference, zero copy. Keeps
-    * compress / schemaOverrides scans columnar. */
+  /** Batches decode with the format's NATURAL types, then only the
+    * columns whose target type differs are re-materialized through the
+    * castValue semantics (strict downcasts throw, string→double parse
+    * failures null); same-typed columns pass through by reference, zero
+    * copy. Serves compress, schemaOverrides and mergeSchema widening. */
   def castingBatchIterator(
       it: Iterator[org.apache.spark.sql.vectorized.ColumnarBatch],
       from: StructType, to: StructType)
@@ -216,7 +195,7 @@ object Narrowing {
       case _ => row.get(i, dt)
     }
 
-  private[readstat] def castValue(row: InternalRow, i: Int, from: DataType,
+  private def castValue(row: InternalRow, i: Int, from: DataType,
       to: DataType): Any = (from, to) match {
     case (f, t) if f == t => cell(row, i, f)
     case (TimestampNTZType, DateType) =>

@@ -9,8 +9,10 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsOverwrite, V1Write, WriteBuilder}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter, InsertableRelation}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
+import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** `spark.read.format("readstat").load(path)` — DataSource V2 connector for
@@ -723,36 +725,17 @@ class ReadstatScan(paths: Seq[String], rawPaths: Seq[String],
       RuntimeFilteredPartition(p, rt): InputPartition).toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // Every file decodes through its module's columnar decoder. Spark
-    // requires every partition of a scan to agree on batch-vs-row output
-    // (BatchScanExec rejects mixed partitions), so the output shape is
-    // chosen once per scan: batches when every file's batches already
-    // hold the required columns — natural types, or (compress /
-    // schemaOverrides) types the connector casts vector-wise
-    // ([[Narrowing.castingBatchIterator]]) — else rows read off the same
-    // batches and reshaped whole (struct/merged informative nulls,
-    // mergeSchema null-fill and widening).
-    val reshape = opts.compress || opts.schemaOverrides.trim.nonEmpty
-    val rowShaped = opts.informativeNulls && opts.informativeNullMode != "column"
-    val columnar = !rowShaped && paths.forall { p =>
-      val module = Formats.moduleFor(p)
-      if (!reshape) module.supportsColumnar(p, opts, required)
-      else {
-        val natural = module.schema(p, opts.decodeNatural).fieldNames.toSet
-        required.fieldNames.forall(natural.contains)
-      }
-    }
-    new ReadstatPartitionReaderFactory(required, opts, columnar, pushed)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    new ReadstatPartitionReaderFactory(required, opts, pushed)
 }
 
+/** Every readstat scan emits ColumnarBatches in the `required` shape,
+  * one file at a time (see [[batches]]). */
 class ReadstatPartitionReaderFactory(required: StructType,
-    opts: ReadstatOptions, columnar: Boolean,
+    opts: ReadstatOptions,
     pushed: Array[Filter] = Array.empty) extends PartitionReaderFactory {
 
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   /** Runtime (DPP) filters ride on re-planned partitions — peel them
     * off and union with the statically pushed set. Both sets are
@@ -773,8 +756,8 @@ class ReadstatPartitionReaderFactory(required: StructType,
 
   /** `mode=permissive` executor-side salvage: keep what this range
     * partition already decoded, end it on the first decode failure
-    * (logged) instead of failing the task. Both output shapes decode
-    * batches, so the kept prefix ends at a batch boundary. This is the
+    * (logged) instead of failing the task. Scans decode whole batches,
+    * so the kept prefix ends at a batch boundary. This is the
     * backstop behind the planner's truncated-tail clamp, covering
     * regimes whose damage is only discoverable by decoding (bad zlib
     * block, corrupt RLE control byte, dangling strL ref). Wraps
@@ -818,118 +801,103 @@ class ReadstatPartitionReaderFactory(required: StructType,
       }
     }
 
-  override def createColumnarReader(partition: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val reshape = opts.compress || opts.schemaOverrides.trim.nonEmpty
-    val pushed = effectiveFilters(partition)
-    val it = rangeParts(partition).iterator.flatMap { part =>
-      salvaged(part, () => {
-        val module = Formats.moduleFor(part.path)
-        if (!reshape) module.columnarRows(part, opts, required, pushed)
-        else {
-          // columnar narrowing (r13): natural-typed batches + vector cast
-          // (pushed is empty here — canEvalFilter refuses the reshaping
-          // regimes, so every filter stays a pure Catalyst residual)
-          val byName = module.schema(part.path, opts.decodeNatural)
-            .fields.map(f => f.name -> f).toMap
-          val naturalRequired = StructType(required.fields.map(f => byName(f.name)))
-          Narrowing.castingBatchIterator(
-            module.columnarRows(part, opts.decodeNatural, naturalRequired, pushed),
-            naturalRequired, required)
-        }
-      })
+  /** One file's batches in the `required` shape. The module decodes the
+    * required columns the file has, in their natural types; they are
+    * cast to the required types (compress, schemaOverrides, mergeSchema
+    * widening) and placed at their required positions. A column the file
+    * lacks (mergeSchema) is an all-null constant; a file holding none of
+    * them decodes its first column only to pace the null batches. Under
+    * struct/merged informative nulls, each (main, indicator) pair becomes
+    * one struct or string column. When `required` is the file's own
+    * columns, the module's batches pass through untouched. */
+  private def batches(part: RangePartition,
+      pushed: Array[Filter]): Iterator[ColumnarBatch] = {
+    val module = Formats.moduleFor(part.path)
+    val nat = opts.decodeNatural
+    val natural = module.schema(part.path, nat)
+    val byName = natural.fields.map(f => f.name -> f).toMap
+    val reshapeNulls = opts.informativeNulls && opts.informativeNullMode != "column"
+    val pairs: Map[String, String] =
+      if (!reshapeNulls) Map.empty
+      else InformativeNulls.pairs(natural,
+        module.schema(part.path, nat.copy(informativeNulls = false)),
+        opts.informativeNullSuffix).toMap
+    val absent = required.fields.filterNot(f => byName.contains(f.name))
+    if (absent.nonEmpty && !opts.mergeSchema)
+      throw new IllegalArgumentException(
+        s"readstat: ${part.path} has no column(s) ${absent.map(_.name).mkString(", ")}" +
+          " — reading files with differing schemas requires .option(\"mergeSchema\", \"true\")")
+    // pushed filters reach the decoder only for a file that holds every
+    // required column, outside the struct/merged reshapes: modules
+    // compile them against their decoded output values (canEvalFilter
+    // already refuses compress and overrides)
+    val filters = if (reshapeNulls || absent.nonEmpty) Array.empty[Filter] else pushed
+    if (required.fields.forall(f => !pairs.contains(f.name) &&
+        byName.get(f.name).exists(_.dataType == f.dataType)))
+      return module.columnarRows(part, nat, required, filters)
+    val decode = scala.collection.mutable.ArrayBuffer[StructField]()
+    def slot(f: StructField, to: DataType): Int = {
+      decode += f.copy(dataType = to); decode.length - 1
     }
-    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      private var current: org.apache.spark.sql.vectorized.ColumnarBatch = _
+    val cols: Array[ColumnarBatch => ColumnVector] = required.fields.map { f =>
+      (byName.get(f.name), pairs.get(f.name)) match {
+        case (None, _) => (b: ColumnarBatch) =>
+          val v = new ConstantColumnVector(b.numRows, f.dataType)
+          v.setNull(); v
+        case (Some(main), Some(ind)) if opts.informativeNullMode == "struct" =>
+          // the struct's value field may be narrowed or overridden
+          val mi = slot(main, f.dataType.asInstanceOf[StructType].fields(0).dataType)
+          val ii = slot(byName(ind), StringType)
+          (b: ColumnarBatch) =>
+            InformativeNulls.structVector(f.dataType, b.column(mi), b.column(ii))
+        case (Some(main), Some(ind)) =>
+          // merged renders the value's natural type
+          val mi = slot(main, main.dataType)
+          val ii = slot(byName(ind), StringType)
+          (b: ColumnarBatch) => InformativeNulls.mergedVector(b, mi, ii, main.dataType)
+        case (Some(col), None) =>
+          val j = slot(col, f.dataType)
+          (b: ColumnarBatch) => b.column(j)
+      }
+    }
+    if (decode.isEmpty) slot(natural.fields.head, natural.fields.head.dataType)
+    val target = StructType(decode.toArray)
+    val source = StructType(target.fields.map(f => byName(f.name)))
+    Narrowing.castingBatchIterator(
+      module.columnarRows(part, nat, source, filters), source, target)
+      .map(b => new ColumnarBatch(cols.map(_(b)), b.numRows))
+  }
+
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[ColumnarBatch] = {
+    val pushed = effectiveFilters(partition)
+    val it = rangeParts(partition).iterator.flatMap(part =>
+      salvaged(part, () => batches(part, pushed)))
+    new PartitionReader[ColumnarBatch] {
+      private var current: ColumnarBatch = _
       override def next(): Boolean =
         if (it.hasNext) { current = it.next(); true } else false
-      override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
+      override def get(): ColumnarBatch = current
       override def close(): Unit = if (current != null) current.close()
     }
   }
 
+  /** Rows of [[createColumnarReader]] (each one a reused view of its
+    * batch), for callers that drive the factory directly. */
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val eff = effectiveFilters(partition)
-    val it0 = rangeParts(partition).iterator.flatMap(p =>
-      salvaged(p, () => rowIterator(p, eff)))
+    val reader = createColumnarReader(partition)
     new PartitionReader[InternalRow] {
-      private var current: InternalRow = _
-      override def next(): Boolean =
-        if (it0.hasNext) { current = it0.next(); true } else false
-      override def get(): InternalRow = current
-      override def close(): Unit = ()
-    }
-  }
-
-  private def rowIterator(part: RangePartition,
-      pushed: Array[Filter]): Iterator[InternalRow] = {
-    val module = Formats.moduleFor(part.path)
-    // decode with the format's natural types, then cast to the requested
-    // (compress-narrowed / overridden) types; struct/merged informative-
-    // null fields are combined from their separate module columns
-    val natural = module.schema(part.path, opts)
-    val it: Iterator[InternalRow] =
-      if (opts.informativeNulls && opts.informativeNullMode != "column") {
-        val base = module.schema(part.path, opts.copy(informativeNulls = false))
-        val prs = InformativeNulls.pairs(natural, base, opts.informativeNullSuffix)
-        val (moduleRequired, wrap) = InformativeNulls.combiner(
-          required, natural, prs, opts.informativeNullMode)
-        wrap(module.rows(part, opts, moduleRequired))
-      } else {
-        val naturalByName = natural.fields.map(f => f.name -> f).toMap
-        val absent = required.fields.filterNot(f => naturalByName.contains(f.name))
-        if (absent.isEmpty) {
-          val naturalRequired = StructType(required.fields.map(f =>
-            naturalByName(f.name)))
-          // pushed filters reach the decoder only in this plain flow:
-          // modules compile them against their decoded output values,
-          // which ARE the required values here (canEvalFilter refuses
-          // the type-reshaping regimes, so natural == required types)
-          Narrowing.castingIterator(
-            module.rows(part, opts, naturalRequired, pushed),
-            naturalRequired, required)
-        } else if (!opts.mergeSchema) {
-          throw new IllegalArgumentException(
-            s"readstat: ${part.path} has no column(s) ${absent.map(_.name).mkString(", ")}" +
-              " — reading files with differing schemas requires .option(\"mergeSchema\", \"true\")")
-        } else {
-          // merged scan over a file missing some columns: decode what the
-          // file has, null-fill the rest at the required positions. If the
-          // file holds NONE of the required columns, drive row cadence off
-          // its first natural column (cheapest way to get the exact row
-          // count in every partition regime) and emit all-null rows.
-          val present = required.fields.filter(f => naturalByName.contains(f.name))
-          if (present.isEmpty) {
-            val pacer = StructType(Array(natural.fields.head))
-            val width = required.fields.length
-            module.rows(part, opts, pacer).map { _ =>
-              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-                new Array[Any](width))
-            }
-          } else {
-          val naturalPresent = StructType(present.map(f => naturalByName(f.name)))
-          val presentTarget = StructType(present)
-          val inner = Narrowing.castingIterator(
-            module.rows(part, opts, naturalPresent), naturalPresent, presentTarget)
-          val presentPos = present.map(_.name).zipWithIndex.toMap
-          val slots = required.fields.map(f => presentPos.get(f.name))
-          val types = presentTarget.fields.map(_.dataType)
-          inner.map { row =>
-            val out = new Array[Any](slots.length)
-            var i = 0
-            while (i < slots.length) {
-              out(i) = slots(i) match {
-                case Some(j) => if (row.isNullAt(j)) null else Narrowing.cell(row, j, types(j))
-                case None => null
-              }
-              i += 1
-            }
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(out)
-          }
-          }
+      private var batch: ColumnarBatch = _
+      private var row = 0
+      override def next(): Boolean = {
+        while ((batch == null || row == batch.numRows) && reader.next()) {
+          batch = reader.get(); row = 0
         }
+        batch != null && row < batch.numRows && { row += 1; true }
       }
-    it
+      override def get(): InternalRow = batch.getRow(row - 1)
+      override def close(): Unit = reader.close()
+    }
   }
 }
 

@@ -13,8 +13,10 @@ import org.apache.spark.sql.types.StructType
   * stat-file drops are immutable once present, so a name either is or
   * is not in the offset). Each batch plans the NEW files through the
   * regular per-format partitioners, so a single large arrival still
-  * fans out across executors; decoding reuses the batch scan's row
-  * reader unchanged (mergeSchema semantics included).
+  * fans out across executors; decoding reuses the batch scan's reader
+  * factory unchanged. It emits ColumnarBatches per file in the stream's
+  * schema, so an arrival that lacks a column or holds a narrower type
+  * reads null-filled and widened under mergeSchema.
   */
 class ReadstatMicroBatchStream(dir: String, required: StructType,
     opts: ReadstatOptions) extends MicroBatchStream {
@@ -139,11 +141,9 @@ class ReadstatMicroBatchStream(dir: String, required: StructType,
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // rows unconditionally (read off the same columnar decode as batch
-    // scans): future files' schemas are unknown at stream start, so only
-    // the row reshaping (mergeSchema null-fill) can serve every arrival,
-    // and Spark requires uniform batch-vs-row partitions
-    new ReadstatPartitionReaderFactory(required, opts, columnar = false)
+    // future files' schemas are unknown at stream start: the factory
+    // shapes each file's batches to the stream schema when it reads it
+    new ReadstatPartitionReaderFactory(required, opts)
 
   override def commit(end: Offset): Unit = end match {
     case FilesOffset(files) => committedFiles = files.toSet

@@ -84,11 +84,11 @@ class FilterPushdownSpec extends SparkTestBase {
     assert(got.getLong(1) == want.map(_.getInt(0).toLong).sum)
   }
 
-  test("mergeSchema row-path scan still skips via pushed filters") {
+  test("mergeSchema null-fill scan stays columnar and pushes filters") {
     import spark.implicits._
-    // two files with differing columns force the whole scan to rows
-    // (the merged regime null-fills), and file A's plain branch still
-    // receives the pushed predicate — the ROW decode-skip path
+    // two files with differing columns: file B null-fills the column it
+    // lacks, and file A, which has every column, still receives the
+    // pushed predicate in its decoder
     val d2 = Files.createTempDirectory("graft_fpd_ms").toFile
     d2.deleteOnExit()
     val pa = s"${d2.getAbsolutePath}/a.dta"
@@ -99,7 +99,7 @@ class FilterPushdownSpec extends SparkTestBase {
       .write.format("readstat").mode("overwrite").save(pb)
     val df = spark.read.format("readstat")
       .option("mergeSchema", "true").load(pa, pb)
-    assert(!df.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     val q = df.filter(col("id") > 4000 && col("id") <= 6000)
     assert(scanDesc(q).contains("PushedFilters:"), scanDesc(q))
     assert(q.count() == 2000)

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
 
 /** Struct and merged informative-null shapes on the SPSS family. Both are
-  * row reshapes of the column-mode read (value column + `<name>_null`
+  * reshapes of the column-mode read (value column + `<name>_null`
   * indicator), so each case checks them against the column-mode read of
   * the same file: struct carries the same value and indicator, merged
   * carries the value's string form, else the indicator, else null.
@@ -36,6 +36,9 @@ class InformativeNullShapeSpec extends SparkTestBase {
     val sep = read(path, "column")
     val st = read(path, "struct")
     val mg = read(path, "merged")
+    // both shapes are built from the decoded batches, not from rows
+    Seq(st, mg).foreach(df =>
+      assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow")))
     val mains = sep.columns.filter(c => sep.columns.contains(c + "_null")).toSeq
     assert(mains.nonEmpty, s"$path: no indicator columns")
     assert(st.columns.toSeq == sep.columns.filterNot(_.endsWith("_null")).toSeq)

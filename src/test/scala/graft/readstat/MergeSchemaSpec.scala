@@ -31,6 +31,8 @@ class MergeSchemaSpec extends SparkTestBase {
     assert(df.columns.toSeq == Seq("id", "x", "shared", "y"))
     // shared: int-ish in a, double in b -> double
     assert(df.schema("shared").dataType == DoubleType)
+    // the null-fill is a constant column: the scan stays columnar
+    assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     val rows = df.orderBy("id").collect()
     assert(rows.length == 4)
     assert(rows(0).getDouble(1) == 1.5 && rows(0).isNullAt(3))
@@ -55,8 +57,46 @@ class MergeSchemaSpec extends SparkTestBase {
     val df = spark.read.format("readstat").option("mergeSchema", "true")
       .load(s"$dir/a.dta", s"$dir/b.dta")
       .select("y") // a.dta has NO requested column -> all-null pacer path
+    assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     val ys = df.collect().map(r => if (r.isNullAt(0)) null else r.getString(0))
     assert(ys.count(_ == null) == 2 && ys.filter(_ != null).toSet == Set("hey", "ho"))
+  }
+
+  test("struct and merged informative nulls null-fill a column one file lacks") {
+    import spark.implicits._
+    // a.sav (q, s) and b.sav (q): q declares 9 user-missing in both
+    val ab = s"$dir/inull"
+    (1 to 50).map(i => (java.lang.Double.valueOf((i % 10).toDouble), s"s$i"))
+      .toDF("q", "s").write.format("readstat").mode("overwrite")
+      .option("missingValues", "q:9").save(s"$ab/a.sav")
+    (51 to 80).map(i => Tuple1(java.lang.Double.valueOf((i % 10).toDouble)))
+      .toDF("q").write.format("readstat").mode("overwrite")
+      .option("missingValues", "q:9").save(s"$ab/b.sav")
+    def read(mode: String) = spark.read.format("readstat")
+      .option("informativeNulls", "true").option("informativeNullMode", mode)
+      .option("mergeSchema", "true").load(s"$ab/a.sav", s"$ab/b.sav")
+    val sep = read("column").select("q", "q_null", "s").collect()
+    assert(sep.length == 80)
+    assert(sep.count(_.getString(1) != null) == 8) // q = 9 in 8 of 80 rows
+    def str(v: Any): String = if (v == null) null else String.valueOf(v)
+    Seq("struct", "merged").foreach { mode =>
+      val df = read(mode)
+      assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"), mode)
+      val got = df.select("q", "s").collect()
+      assert(got.length == 80, mode)
+      got.indices.foreach { r =>
+        val (v, ind) = (sep(r).get(0), sep(r).getString(1))
+        if (mode == "struct") {
+          val cell = got(r).getStruct(0)
+          assert(str(cell.get(0)) == str(v) && cell.getString(1) == ind, s"$mode row $r")
+        } else
+          assert(got(r).getString(0) == (if (v != null) str(v) else ind), s"$mode row $r")
+        // s (a string without declared missings, so no pair): a's
+        // values, null-filled for b's rows
+        if (r < 50) assert(got(r).getString(1) == sep(r).getString(2), s"$mode row $r s")
+        else assert(got(r).isNullAt(1), s"$mode row $r s")
+      }
+    }
   }
 
   test("aggregate over merged load is correct") {

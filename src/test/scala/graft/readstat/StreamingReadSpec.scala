@@ -68,6 +68,34 @@ class StreamingReadSpec extends SparkTestBase {
     } finally query.stop()
   }
 
+  test("mergeSchema streams null-fill and widen a later arrival") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_stream_merge").toFile
+    dir.deleteOnExit()
+    Seq((1.0, 1.5, "a"), (2.0, 2.5, "b")).toDF("id", "x", "s")
+      .write.format("readstat").mode("overwrite").save(s"$dir/a.dta")
+    val stream = spark.readStream.format("readstat")
+      .schema("id DOUBLE, x DOUBLE, s STRING")
+      .option("mergeSchema", "true").load(dir.getAbsolutePath)
+    val query = stream.writeStream.format("memory")
+      .queryName("readstat_stream_merge").outputMode("append")
+      .trigger(Trigger.ProcessingTime(100)).start()
+    try {
+      query.processAllAvailable()
+      // the later file lacks s and stores x as an integer
+      Seq((3.0, 30), (4.0, 40)).toDF("id", "x")
+        .write.format("readstat").mode("overwrite").save(s"$dir/b.dta")
+      assert(spark.read.format("readstat").load(s"$dir/b.dta").schema("x").dataType ==
+        org.apache.spark.sql.types.IntegerType)
+      query.processAllAvailable()
+      val rows = spark.table("readstat_stream_merge").orderBy("id").collect()
+      assert(rows.map(r => (r.getDouble(0), r.getDouble(1))).toSeq ==
+        Seq((1.0, 1.5), (2.0, 2.5), (3.0, 30.0), (4.0, 40.0)))
+      assert(rows.map(r => Option(r.getString(2))).toSeq ==
+        Seq(Some("a"), Some("b"), None, None))
+    } finally query.stop()
+  }
+
   test("a file still being written is not admitted until its bytes settle") {
     val dir = Files.createTempDirectory("graft_stream_stab").toFile
     dir.deleteOnExit()
