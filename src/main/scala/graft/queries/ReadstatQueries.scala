@@ -1,5 +1,13 @@
 package graft.queries
 
+import java.nio.file.{Files, Paths}
+import java.util.UUID
+import java.util.concurrent.{Executors, TimeoutException}
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import Tables._
@@ -23,21 +31,49 @@ object ReadstatQueries {
     * overlap — Spark schedules concurrent jobs FIFO and back-fills idle
     * cores (guide §2.6); the stat writers hold no shared mutable state.
     * r14 optimization: the setup writes of the roundtrip queries ran
-    * strictly sequentially, serializing 2-4 single-task jobs each. */
-  private def parActions(fs: Seq[() => Unit]): Unit = if (fs.nonEmpty) {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
-    try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      // no deadline (r15, ADVICE): the old sequential code had none, and
-      // a fixed 10-min Await would turn a merely-slow large-SF write
-      // into a TimeoutException; a genuinely wedged write should hang
-      // visibly (and be diagnosed), not be converted into a failure here
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(fs.map(f => scala.concurrent.Future(f()))),
-        scala.concurrent.duration.Duration.Inf)
-      ()
-    } finally pool.shutdown()
+    * strictly sequentially, serializing 2-4 single-task jobs each.
+    * Actions still running at `deadline` fail the calling query with a
+    * TimeoutException (Bench and Verify record it as that query's error)
+    * instead of hanging the run with no record. The actions run their
+    * Spark jobs under one job group of their own, and on expiry those
+    * jobs are cancelled (their tasks interrupted) and the daemon threads
+    * interrupted, so a wedged write frees its executor slots before the
+    * next query runs. */
+  private[graft] def parActions(s: SparkSession, deadline: FiniteDuration)(
+      fs: Seq[() => Unit]): Unit =
+    if (fs.nonEmpty) {
+      val sc = s.sparkContext
+      val group = "graft-par-actions-" + UUID.randomUUID()
+      val pool = Executors.newFixedThreadPool(fs.size, (r: Runnable) => {
+        val t = new Thread(r, "graft-par-action")
+        t.setDaemon(true)
+        t
+      })
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+      val runs = fs.map(f => Future {
+        sc.setJobGroup(group, "parallel setup actions", interruptOnCancel = true)
+        try f() finally sc.clearJobGroup()
+      })
+      try Await.result(Future.sequence(runs), deadline)
+      catch { case _: TimeoutException =>
+        sc.cancelJobGroup(group)
+        pool.shutdownNow()
+        throw new TimeoutException(
+          s"${fs.size} parallel setup actions did not finish within $deadline")
+      } finally pool.shutdown()
+    }
+
+  /** `parActions`' deadline for writes over the tables in `d`: 10 minutes
+    * plus one per 64 MB of input, so a merely slow large-SF write is not
+    * cut short while a wedged one still ends. The 64 MB a minute is an
+    * assumed floor, not a measured rate: it is about 50 times below the
+    * ~50 MB/s the write_roundtrip benchmark measures for a write plus its
+    * read-back on a 4-core VM. */
+  private[graft] def writeDeadline(d: String): FiniteDuration = {
+    val files = Files.walk(Paths.get(d))
+    val bytes = try files.iterator.asScala.filter(Files.isRegularFile(_)).map(Files.size).sum
+      finally files.close()
+    (600L + 60L * (bytes >> 26)).seconds
   }
 
   /** lineitem → .dta → read → Q1-style aggregate (dates as strings). */
@@ -401,7 +437,7 @@ object ReadstatQueries {
         .collect().toMap
       val b: IndexedSeq[Long] =
         targets.map(t => if (t < 1L) Long.MinValue else keyAtRank(t)).toIndexedSeq
-      parActions((0 until 4).map { k => () =>
+      parActions(s, writeDeadline(d))((0 until 4).map { k => () =>
         val lo = if (k == 0) lit(true) else col("o_orderkey") > b(k - 1)
         val hi = if (k == 3) lit(true) else col("o_orderkey") <= b(k)
         src.filter(lo && hi)
@@ -787,7 +823,7 @@ object ReadstatQueries {
     val savPath = scratch(d, "meta_customer.sav")
     val src = customer(s, d)
       .select(col("c_custkey"), col("c_name"), col("c_acctbal"), col("c_mktsegment"))
-    parActions(Seq(
+    parActions(s, writeDeadline(d))(Seq(
       () => src.write.format("readstat").mode("overwrite").save(dtaPath),
       () => src.write.format("readstat").mode("overwrite").save(savPath)))
     s.read.format("readstat-file-metadata").load(dtaPath, savPath)
@@ -811,7 +847,7 @@ object ReadstatQueries {
   def fileMetadataMalformed(s: SparkSession, d: String): DataFrame = {
     val dir = scratch(d, "meta_badhdr_dir")
     val src = customer(s, d).select(col("c_custkey"), col("c_acctbal"))
-    parActions(Seq(
+    parActions(s, writeDeadline(d))(Seq(
       () => src.coalesce(1).write.format("readstat").mode("overwrite")
         .save(s"$dir/ok.dta"),
       () => src.coalesce(1).write.format("readstat").mode("overwrite")
@@ -844,7 +880,7 @@ object ReadstatQueries {
     val ordPath = scratch(d, "xf_orders.xpt")
     val custPath = scratch(d, "xf_customer.sav")
     // three independent single-table writes — overlapped (guide §2.6)
-    parActions(Seq(
+    parActions(s, writeDeadline(d))(Seq(
       () => lineitem(s, d)
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
         .write.format("readstat").mode("overwrite").save(liPath),
@@ -1275,7 +1311,7 @@ object ReadstatQueries {
     val dir = scratch(d, "mixed_dir")
     val base = customer(s, d).select(col("c_custkey"), col("c_acctbal"),
       col("c_mktsegment"), col("c_nationkey"))
-    parActions(Seq(
+    parActions(s, writeDeadline(d))(Seq(
       () => base.filter(col("c_custkey") % 2 === 0)
         .select("c_custkey", "c_acctbal", "c_mktsegment")
         .write.format("readstat").mode("overwrite").save(s"$dir/even.dta"),

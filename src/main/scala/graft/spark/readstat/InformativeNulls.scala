@@ -48,6 +48,19 @@ object InformativeNulls {
     }
   }
 
+  /** Struct mode's `struct<name: value, null_indicator: string>`. */
+  def structType(name: String, value: DataType): StructType = StructType(Seq(
+    StructField(name, value, nullable = true),
+    StructField("null_indicator", StringType, nullable = true)))
+
+  /** The value type of a struct-mode column, if `t` is one (no stat file
+    * stores a struct, so the shape alone identifies it). */
+  def structValue(t: DataType): Option[DataType] = t match {
+    case s: StructType if s.length == 2 && s(1).name == "null_indicator" &&
+        s(1).dataType == StringType => Some(s(0).dataType)
+    case _ => None
+  }
+
   /** Reshape a separate-column schema into the struct/merged shape. */
   def transformSchema(sep: StructType, prs: Seq[(String, String)],
       mode: String): StructType = {
@@ -56,9 +69,7 @@ object InformativeNulls {
     StructType(sep.fields.flatMap { f =>
       if (indSet.contains(f.name)) None
       else if (mains.contains(f.name)) mode match {
-        case "struct" => Some(f.copy(dataType = StructType(Seq(
-          StructField(f.name, f.dataType, nullable = true),
-          StructField("null_indicator", StringType, nullable = true)))))
+        case "struct" => Some(f.copy(dataType = structType(f.name, f.dataType)))
         case "merged" => Some(f.copy(dataType = StringType))
         case _ => Some(f)
       }

@@ -174,8 +174,9 @@ object Formats {
     * option — the semantics of spark.read.parquet's mergeSchema, extended
     * to heterogeneous stat formats: a .dta and a .sav can merge). Name
     * collisions with different types widen within the numeric tower
-    * (integral→larger integral, anything fractional→double); any other
-    * conflict is an error naming the column and files. Columns absent
+    * (integral→larger integral, anything fractional→double), and a
+    * struct-mode informative-null column absorbs its bare value type;
+    * any other conflict is an error naming the column and files. Columns absent
     * from at least one file become nullable (those files null-fill).
     */
   def mergedSchema(paths: Seq[String], opts: ReadstatOptions): StructType = {
@@ -183,6 +184,14 @@ object Formats {
     val integral: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
     def widen(a: DataType, b: DataType, name: String): DataType = (a, b) match {
       case (x, y) if x == y => x
+      // struct informative nulls: where a file declares no missing values
+      // the column has no indicator, and reads as the value, indicator null;
+      // two such structs widen by their value types
+      case (x: StructType, y) if InformativeNulls.structValue(x).isDefined =>
+        InformativeNulls.structType(x(0).name, widen(x(0).dataType,
+          InformativeNulls.structValue(y).getOrElse(y), name))
+      case (x, y: StructType) if InformativeNulls.structValue(y).isDefined =>
+        widen(y, x, name)
       case (x, y) if integral.contains(x) && integral.contains(y) =>
         if (x.defaultSize >= y.defaultSize) x else y
       case (x: NumericType, y: NumericType) => DoubleType
@@ -855,6 +864,13 @@ class ReadstatPartitionReaderFactory(required: StructType,
           val mi = slot(main, main.dataType)
           val ii = slot(byName(ind), StringType)
           (b: ColumnarBatch) => InformativeNulls.mergedVector(b, mi, ii, main.dataType)
+        case (Some(col), None) if InformativeNulls.structValue(f.dataType).isDefined =>
+          // no indicator in this file (mergeSchema): a null one
+          val j = slot(col, InformativeNulls.structValue(f.dataType).get)
+          (b: ColumnarBatch) =>
+            val ind = new ConstantColumnVector(b.numRows, StringType)
+            ind.setNull()
+            InformativeNulls.structVector(f.dataType, b.column(j), ind)
         case (Some(col), None) =>
           val j = slot(col, f.dataType)
           (b: ColumnarBatch) => b.column(j)
@@ -903,9 +919,11 @@ class ReadstatPartitionReaderFactory(required: StructType,
 
 /** Write path: V1Write fallback gives us the full DataFrame, which we need
   * because stat-file headers require row counts and max string widths up
-  * front — a two-job write (width aggregation, then partitioned encode +
-  * driver stitch), mirroring the reference's two-pass `sink_stata`
-  * (reference: pybindings.rs:951-1096). See graft.spark.readstat.writers.
+  * front — one job folds them while each partition encodes under its own
+  * layout, then the driver stitches (re-encoding any partition whose
+  * layout differs), the one-pass counterpart of the reference's
+  * `sink_stata` (reference: pybindings.rs:951-1096). See
+  * graft.spark.readstat.writers.WritePass.
   */
 class ReadstatWriteBuilder(path: String, schema: StructType,
     options: Map[String, String], queryId: String = "")

@@ -23,12 +23,13 @@ import graft.core.sas.SasCore
   * written here is one the reader (and pandas) actually consumes; the
   * rest of each subheader is zero-filled at its authentic length.
   *
-  * Distributed write is the same two-job shape as the other writers:
-  * job 1 is the `WriteStats` fold (exact row count + max string widths
-  * in one `mapPartitions` over the measured columns), job 2 encodes
-  * each partition into whole DATA pages (pages declare their own row
-  * count, so partition boundaries never need row padding), and the
-  * driver splices header + meta pages + page chunks. `multiFile=true`
+  * Distributed write is the same one-job shape as the other writers
+  * (`WritePass`): each task folds its partition's stats (exact row count
+  * + max string widths) and encodes its rows into whole DATA pages under
+  * its own layout (pages declare their own row count, so partition
+  * boundaries never need row padding); the driver merges the stats,
+  * re-encodes any partition whose layout differs from the global one,
+  * and splices header + meta pages + page chunks. `multiFile=true`
   * writes one self-contained .sas7bdat per partition instead.
   */
 object SasBinaryWriter {
@@ -201,7 +202,7 @@ object SasBinaryWriter {
   }
 
   def write(df: DataFrame, path: String, options: Map[String, String],
-      stats: => WriteStats): Unit = {
+      known: Option[WriteStats]): Unit = {
     val schema = df.schema
     require(schema.nonEmpty, "sas7bdat writer: empty schema")
     // metadata-df-driven options (reference `metadata=` write path):
@@ -296,29 +297,8 @@ object SasBinaryWriter {
       "sas7bdat writer: taggedMissings drops every column")
     val writtenSchema = StructType(writtenFields.toIndexedSeq)
 
-    // ---- job 1 (stats fold): exact row count + max string byte widths ----
-    val st = stats
-    val nObs = st.rows
-    val widths: Map[String, Int] = writtenFields.filter(_.dataType == StringType)
-      .map(f => f.name -> math.max(1, st.octets(f.name))).toMap
-
     val numWidths = parseStorageWidths(writtenSchema, options,
       "sas7bdat writer")
-
-    // labeled columns reference their generated catalog format (an
-    // explicit varFormats entry still wins); ordinals remap to the FULL
-    // incoming row since indicator columns are dropped from the layout
-    val specs: Array[Col] = layoutSpecs(writtenSchema, widths, varFormats,
-        numWidths).map { c =>
-      val c2 = c.copy(ordinal = schema.fieldIndex(c.name),
-        tagOrdinal = taggedMissings.get(c.name)
-          .map(schema.fieldIndex).getOrElse(-1))
-      if (c2.fmtName.isEmpty && catFmtNames.contains(c2.name))
-        c2.copy(fmtName = catFmtNames(c2.name))
-      else c2
-    }
-    val rowLen = specs.map(_.width).sum
-
     // `compression=rle` opts into SASYZCRL row compression (the reader
     // and pandas both decode it); default is uncompressed
     val rle = options.get("compression").map(_.trim.toLowerCase) match {
@@ -327,8 +307,6 @@ object SasBinaryWriter {
       case Some(other) => throw new IllegalArgumentException(
         s"sas7bdat writer: unknown compression '$other' (expected none|rle)")
     }
-    val (pageLen, rowsPerPage) = pageGeometry(rowLen, rle)
-
     val dsName = options.getOrElse("tableName", {
       val base = new File(path).getName
       val dot = base.lastIndexOf('.')
@@ -343,25 +321,39 @@ object SasBinaryWriter {
       writeLabelCatalog(catPath, schema, valueLabels, catFmtNames, "sas7bdat")
     }
 
-    val spark = df.sparkSession
-    val specsB = spark.sparkContext.broadcast(specs)
-    val labelsB = spark.sparkContext.broadcast(varLabels)
-    val pageLenL = pageLen; val rowsPerPageL = rowsPerPage
-    val rowLenL = rowLen; val dsNameL = dsName; val rleL = rle
-
+    // ---- record layout from the stats: max string byte widths ----
+    // labeled columns reference their generated catalog format (an
+    // explicit varFormats entry still wins); ordinals remap to the FULL
+    // incoming row since indicator columns are dropped from the layout.
+    // The page geometry must fit the row.
+    val layoutOf = (st: WriteStats) => {
+      val widths: Map[String, Int] = writtenFields.filter(_.dataType == StringType)
+        .map(f => f.name -> math.max(1, st.octets(f.name))).toMap
+      val specs = layoutSpecs(writtenSchema, widths, varFormats, numWidths).map { c =>
+        val c2 = c.copy(ordinal = schema.fieldIndex(c.name),
+          tagOrdinal = taggedMissings.get(c.name)
+            .map(schema.fieldIndex).getOrElse(-1))
+        if (c2.fmtName.isEmpty && catFmtNames.contains(c2.name))
+          c2.copy(fmtName = catFmtNames(c2.name))
+        else c2
+      }
+      pageGeometry(specs.map(_.width).sum, rle)
+      specs
+    }
     if (options.get("multiFile").exists(_.toBoolean)) {
+      val st = known.getOrElse(WriteStats.of(df))
+      val nObs = st.rows
+      val specsB = df.sparkSession.sparkContext.broadcast(layoutOf(st))
+      val labelsB = df.sparkSession.sparkContext.broadcast(varLabels)
       val partPrefix = MultiFileParts.prepare(new File(path), "sas7bdat", options)
       val counts: Array[Long] =
         df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
           if (!it.hasNext) Iterator.empty
           else {
             val f = File.createTempFile(s"graft_msas_${pid}_", ".chunk")
-            val rows =
-              if (rleL) encodeRlePages(it, specsB.value, f, pageLenL, rowLenL)
-              else encodePages(it, specsB.value, f, pageLenL, rowsPerPageL, rowLenL)
-            val target = s"$path/$partPrefix" + f"$pid%05d.sas7bdat"
-            assemble(target, specsB.value, labelsB.value, rows, rowLenL,
-              pageLenL, rowsPerPageL, dsNameL, Seq(f.getAbsolutePath), rleL)
+            val rows = encodeTo(specsB.value, rle, it, f)
+            assemble(s"$path/$partPrefix" + f"$pid%05d.sas7bdat", specsB.value,
+              labelsB.value, rows, dsName, rle, Seq(f.getAbsolutePath))
             f.delete()
             Iterator(rows)
           }
@@ -371,23 +363,25 @@ object SasBinaryWriter {
       return
     }
 
-    val chunks: Array[(Int, String, Long)] =
-      df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-        if (!it.hasNext) Iterator.empty
-        else {
-          val f = File.createTempFile(s"graft_sas_${pid}_", ".chunk")
-          val rows =
-            if (rleL) encodeRlePages(it, specsB.value, f, pageLenL, rowLenL)
-            else encodePages(it, specsB.value, f, pageLenL, rowsPerPageL, rowLenL)
-          Iterator((pid, f.getAbsolutePath, rows))
-        }
-      }.collect().sortBy(_._1)
-    require(chunks.map(_._3).sum == nObs,
-      s"row count drift: agg=$nObs write=${chunks.map(_._3).sum}")
-    assemble(path, specs, varLabels, nObs, rowLen, pageLen, rowsPerPage,
-      dsName, chunks.map(_._2).toIndexedSeq, rle)
-    chunks.foreach(c => new File(c._2).delete())
+    val encode: WritePass.Encode[Array[Col], String] = (specs, _, rows, scratch) => {
+      val f = scratch("sas")
+      encodeTo(specs, rle, rows, f)
+      f.getAbsolutePath
+    }
+    WritePass.run(df, options, known, layoutOf, encode) { pass =>
+      assemble(path, pass.layout, varLabels, pass.stats.rows, dsName, rle, pass.chunks)
+    }
     writeCatalog()
+  }
+
+  /** One partition's rows into whole DATA pages (pages declare their own
+    * row count, so partition boundaries never need row padding). */
+  private def encodeTo(specs: Array[Col], rle: Boolean,
+      it: Iterator[org.apache.spark.sql.catalyst.InternalRow], f: File): Long = {
+    val rowLen = specs.map(_.width).sum
+    val (pageLen, rowsPerPage) = pageGeometry(rowLen, rle)
+    if (rle) encodeRlePages(it, specs, f, pageLen, rowLen)
+    else encodePages(it, specs, f, pageLen, rowsPerPage, rowLen)
   }
 
   /** Encode one partition's rows into whole DATA pages (each page
@@ -579,10 +573,11 @@ object SasBinaryWriter {
   }
 
   /** Header + meta pages + data page chunks → one valid .sas7bdat. */
-  private[writers] def assemble(path: String, specs: Array[Col],
-      varLabels: Map[String, String], rowCount: Long, rowLen: Int,
-      pageLen: Int, rowsPerPage: Int, dsName: String,
-      chunkFiles: Seq[String], rle: Boolean = false): Unit = {
+  private def assemble(path: String, specs: Array[Col],
+      varLabels: Map[String, String], rowCount: Long, dsName: String,
+      rle: Boolean, chunkFiles: Seq[String]): Unit = {
+    val rowLen = specs.map(_.width).sum
+    val (pageLen, rowsPerPage) = pageGeometry(rowLen, rle)
     val metaPages = buildMetaPages(specs, varLabels, rowCount, rowLen,
       pageLen, rowsPerPage, rle)
     val dataPages = chunkFiles.map(f => new File(f).length() / pageLen).sum

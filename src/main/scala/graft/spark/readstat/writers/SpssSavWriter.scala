@@ -13,11 +13,11 @@ import graft.core.spss.SpssCore
 
 /** Distributed SPSS .sav writer (uncompressed, layout code 2, LE, UTF-8).
   *
-  * Same two-job shape as [[StataDtaWriter]]: the `WriteStats` fold, then
-  * per-partition fixed-width record encode to scratch chunks, driver
-  * splice. Uncompressed records keep the written files row-range
-  * partitionable on re-read (the scale path); `.zsav` (zlib block) write
-  * is a later round.
+  * Same one-job shape as [[StataDtaWriter]] (`WritePass`): each task
+  * folds its partition's stats and encodes its fixed-width records to a
+  * scratch chunk under its own layout, and the driver splices.
+  * Uncompressed records keep the written files row-range partitionable
+  * on re-read (the scale path); `.zsav` writes deflated blocks instead.
   *
   * Layout follows the public SAV spec; behavioral reference:
   * /root/reference crates/polars_readstat_rs/src/spss/writer.rs
@@ -51,7 +51,7 @@ object SpssSavWriter {
   }
 
   def write(df: DataFrame, path: String, options: Map[String, String],
-      stats: => WriteStats, zlib: Boolean): Unit = {
+      known: Option[WriteStats], zlib: Boolean): Unit = {
     val spark = df.sparkSession
     val schema = df.schema
     // metadata-df entries seed labels/measures/formats; explicit options
@@ -144,15 +144,65 @@ object SpssSavWriter {
       s"sav writer: varFormats.$c targets a string column — string " +
         "A-formats are bound to the storage width and cannot be overridden"))
 
-    // ---- stats fold: row count + max string octet widths ----
-    val st = stats
-    val nObs = st.rows
-    def widths(c: String): Int = math.max(1, st.octets(c))
+    // ---- record layout from the stats: max string octet widths ----
+    val layoutOf = (st: WriteStats) => colSpecs(schema, varFormats, st)
+    val zlibB = zlib
 
-    val used = scala.collection.mutable.Set[String]()
-    val cols: Array[ColSpec] = schema.fields.zipWithIndex.map { case (f, i) =>
+    // ---- multiFile mode: one self-contained .sav/.zsav per partition ----
+    // (same contract as the dta writer: `path` becomes a directory of
+    // part files, executor-side assembly, no driver splice; global
+    // widths from a stats job keep every part's dictionary identical)
+    if (options.get("multiFile").exists(_.toBoolean)) {
+      val st = known.getOrElse(WriteStats.of(df))
+      val nObs = st.rows
+      val specsB = spark.sparkContext.broadcast(layoutOf(st))
+      val ext = if (zlib) "zsav" else "sav"
+      val partPrefix = MultiFileParts.prepare(new File(path), "(sav|zsav)", options)
+      val vls = valueLabels
+      val vlbB = varLabels
+      val vmB = varMeasures
+      val vdwB = varDisplayWidths
+      val vaB = varAlignments
+      val mvB = missingValues
+      val counts: Array[Long] =
+        df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+          if (!it.hasNext) Iterator.empty
+          else {
+            val specs = specsB.value
+            val f = File.createTempFile(s"graft_msav_${pid}_", ".chunk")
+            val (rows, blocks) = encodeChunk(specs, zlibB, it, f)
+            val dictLocal = buildDictionary(specs, rows, zlibB, vls, vlbB,
+              vmB, vdwB, vaB, mvB)
+            assembleSav(s"$path/$partPrefix" + f"$pid%05d.$ext", dictLocal, zlibB,
+              Seq(f.getAbsolutePath), blocks)
+            f.delete()
+            Iterator(rows)
+          }
+        }.collect()
+      require(counts.sum == nObs,
+        s"row count drift: agg=$nObs write=${counts.sum}")
+      return
+    }
+
+    // ---- one pass, then the driver writes header + dictionary and
+    // splices the chunks ----
+    val encode: WritePass.Encode[Array[ColSpec], (String, Seq[(Int, Int)])] =
+      (cols, pid, rows, scratch) => {
+        val f = scratch("sav")
+        (f.getAbsolutePath, encodeChunk(cols, zlibB, rows, f)._2)
+      }
+    WritePass.run(df, options, known, layoutOf, encode) { pass =>
+      val dict = buildDictionary(pass.layout, pass.stats.rows, zlib, valueLabels,
+        varLabels, varMeasures, varDisplayWidths, varAlignments, missingValues)
+      assembleSav(path, dict, zlib, pass.chunks.map(_._1), pass.chunks.flatMap(_._2))
+    }
+  }
+
+  private def colSpecs(schema: StructType,
+      varFormats: Map[String, (Int, Int, Int)], st: WriteStats): Array[ColSpec] = {
+    def widths(c: String): Int = math.max(1, st.octets(c))
+    schema.fields.zipWithIndex.map { case (f, i) =>
       val short = s"V${i + 1}"
-      used.add(short)
       f.dataType match {
         case StringType =>
           val wdt = widths(f.name)
@@ -175,108 +225,36 @@ object SpssSavWriter {
         case None => c
       }
     }
-    val recordLen = cols.map(_.widthUnits).sum * 8
+  }
 
-    val scratch = options.getOrElse("scratchDir",
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-    Files.createDirectories(Paths.get(scratch))
-    val specsB = spark.sparkContext.broadcast(cols)
-    val zlibB = zlib
-
-    // ---- multiFile mode: one self-contained .sav/.zsav per partition ----
-    // (same contract as the dta writer: `path` becomes a directory of
-    // part files, executor-side assembly, no driver splice; global job-1
-    // widths keep every part's dictionary identical)
-    if (options.get("multiFile").exists(_.toBoolean)) {
-      val ext = if (zlib) "zsav" else "sav"
-      val partPrefix = MultiFileParts.prepare(new File(path), "(sav|zsav)", options)
-      val vls = valueLabels
-      val vlbB = varLabels
-      val vmB = varMeasures
-      val vdwB = varDisplayWidths
-      val vaB = varAlignments
-      val mvB = missingValues
-      val counts: Array[Long] =
-        df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-          if (!it.hasNext) Iterator.empty
-          else {
-            val specs = specsB.value
-            val f = File.createTempFile(s"graft_msav_${pid}_", ".chunk")
-            val raw = new java.io.BufferedOutputStream(new FileOutputStream(f), 1 << 20)
-            var rows = 0L
-            var blocks = List.empty[(Int, Int)]
-            val enc = new SavRowEncoder(specs)
-            if (!zlibB) {
-              it.foreach { row =>
-                enc.encode(row)
-                raw.write(enc.buf, 0, enc.recordLen)
-                rows += 1
-              }
-              raw.close()
-            } else {
-              val zenc = new ZsavBlockEncoder(raw)
-              it.foreach { row =>
-                enc.encode(row)
-                zenc.addRow(enc.buf, 0, enc.recordLen)
-                rows += 1
-              }
-              blocks = zenc.finish()
-              raw.close()
-            }
-            val dictLocal = buildDictionary(specs, rows, zlibB, vls, vlbB,
-              vmB, vdwB, vaB, mvB)
-            assembleSav(s"$path/$partPrefix" + f"$pid%05d.$ext", dictLocal, zlibB,
-              Seq(f.getAbsolutePath), blocks)
-            f.delete()
-            Iterator(rows)
-          }
-        }.collect()
-      require(counts.sum == nObs,
-        s"row count drift: agg=$nObs write=${counts.sum}")
-      return
-    }
-
-    // toRdd: encode straight from InternalRows — df.rdd would deserialize
-    // every row into external Row objects first
-    val chunks: Array[(Int, String, Long, Seq[(Int, Int)])] =
-      df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-        val specs = specsB.value
-        val f = File.createTempFile(s"graft_sav_${pid}_", ".chunk", new File(scratch))
-        val raw = new java.io.BufferedOutputStream(new FileOutputStream(f), 1 << 20)
-        var rows = 0L
-        var blocks = List.empty[(Int, Int)]
-        val enc = new SavRowEncoder(specs)
-        if (!zlibB) {
-          it.foreach { row =>
-            enc.encode(row)
-            raw.write(enc.buf, 0, enc.recordLen)
-            rows += 1
-          }
-          raw.close()
-        } else {
-          // zsav: bytecode-encode (all-literal 253 codes, control groups of
-          // 8 padded with 0s) into ~4 MB blocks, deflate each block
-          val zenc = new ZsavBlockEncoder(raw)
-          it.foreach { row =>
-            enc.encode(row)
-            zenc.addRow(enc.buf, 0, enc.recordLen)
-            rows += 1
-          }
-          blocks = zenc.finish()
-          raw.close()
+  /** One partition's records into `f`: raw fixed-width records, or for
+    * zsav bytecode-encoded (all-literal 253 codes, control groups of 8
+    * padded with 0s) into ~4 MB deflated blocks. Returns the row count
+    * and the zsav blocks' (raw, deflated) sizes. */
+  private def encodeChunk(specs: Array[ColSpec], zlib: Boolean,
+      it: Iterator[org.apache.spark.sql.catalyst.InternalRow],
+      f: File): (Long, List[(Int, Int)]) = {
+    val raw = new java.io.BufferedOutputStream(new FileOutputStream(f), 1 << 20)
+    try {
+      val enc = new SavRowEncoder(specs)
+      var rows = 0L
+      if (!zlib) {
+        it.foreach { row =>
+          enc.encode(row)
+          raw.write(enc.buf, 0, enc.recordLen)
+          rows += 1
         }
-        Iterator((pid, f.getAbsolutePath, rows, blocks: Seq[(Int, Int)]))
-      }.collect().sortBy(_._1)
-
-    val totalRows = chunks.map(_._3).sum
-    require(totalRows == nObs, s"row count drift: agg=$nObs write=$totalRows")
-
-    // ---- driver: header + dictionary, then splice chunks ----
-    val dict = buildDictionary(cols, nObs, zlib, valueLabels, varLabels,
-      varMeasures, varDisplayWidths, varAlignments, missingValues)
-    assembleSav(path, dict, zlib, chunks.map(_._2).toIndexedSeq,
-      chunks.flatMap(_._4).toIndexedSeq)
-    chunks.foreach(c => new File(c._2).delete())
+        (rows, Nil)
+      } else {
+        val zenc = new ZsavBlockEncoder(raw)
+        it.foreach { row =>
+          enc.encode(row)
+          zenc.addRow(enc.buf, 0, enc.recordLen)
+          rows += 1
+        }
+        (rows, zenc.finish())
+      }
+    } finally raw.close()
   }
 
   /** SPSS print-format spec "NAME[width[.dec]]" → (type code, width,

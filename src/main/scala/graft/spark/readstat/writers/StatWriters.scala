@@ -42,21 +42,21 @@ object StatWriters {
     }
     val opts = options + ("__overwrite" -> overwrite.toString)
     // the batch writers' stats (row count, string widths, integer
-    // ranges) come from ONE fold, then one encode job writes the file.
+    // ranges): a single-file write folds them inside its one encode job
+    // (`WritePass`); multiFile and the csv bundle run one stats fold
+    // first, after the writer has validated its options.
     // Write-side compress (reference `with_compress`) folds its
-    // narrowing analysis into that same pass and hands the writer the
-    // narrowed frame with its stats — the reference only wires compress
-    // into its Stata writer, but the pre-cast is format-independent so
-    // every sink gets it here. Without compress the stats run lazily,
-    // after the writer has validated its options.
+    // narrowing analysis into a stats fold and hands the writer the
+    // narrowed frame with its stats, so its encode job needs no fold —
+    // the reference only wires compress into its Stata writer, but the
+    // pre-cast is format-independent so every sink gets it here.
     val (out, compressed) =
       if (options.get("compress").exists(_.toBoolean)) {
         val (narrowed, stats) = WriteCompress.applyWithStats(df,
           WriteCompress.Opts.from(options, isDta = lower.endsWith(".dta")))
         (narrowed, Some(stats))
       } else (df, None)
-    lazy val stats = compressed.getOrElse(WriteStats.of(out))
-    write0(out, path, opts, lower, stats)
+    write0(out, path, opts, lower, compressed)
   }
 
   // format-specific metadata options refused on formats that cannot
@@ -78,7 +78,7 @@ object StatWriters {
     }
 
   private def write0(df: DataFrame, path: String,
-      options: Map[String, String], lower: String, stats: => WriteStats): Unit = {
+      options: Map[String, String], lower: String, known: Option[WriteStats]): Unit = {
     if (!lower.endsWith(".sav") && !lower.endsWith(".zsav")) {
       val who =
         if (lower.endsWith(".csv")) "sas csv bundle"
@@ -123,13 +123,14 @@ object StatWriters {
         if (!applies) refuseForeign(who, options, Seq(k))
       }
     }
-    if (lower.endsWith(".dta")) StataDtaWriter.write(df, path, options, stats)
-    else if (lower.endsWith(".sav")) SpssSavWriter.write(df, path, options, stats, zlib = false)
-    else if (lower.endsWith(".zsav")) SpssSavWriter.write(df, path, options, stats, zlib = true)
-    else if (lower.endsWith(".xpt")) XptWriterImpl.write(df, path, options, stats)
+    if (lower.endsWith(".dta")) StataDtaWriter.write(df, path, options, known)
+    else if (lower.endsWith(".sav")) SpssSavWriter.write(df, path, options, known, zlib = false)
+    else if (lower.endsWith(".zsav")) SpssSavWriter.write(df, path, options, known, zlib = true)
+    else if (lower.endsWith(".xpt")) XptWriterImpl.write(df, path, options, known)
     else if (lower.endsWith(".por")) PorWriterImpl.write(df, path, options)
-    else if (lower.endsWith(".sas7bdat")) SasBinaryWriter.write(df, path, options, stats)
-    else if (lower.endsWith(".csv")) SasCsvBundleWriter.write(df, path, options, stats)
+    else if (lower.endsWith(".sas7bdat")) SasBinaryWriter.write(df, path, options, known)
+    else if (lower.endsWith(".csv"))
+      SasCsvBundleWriter.write(df, path, options, known.getOrElse(WriteStats.of(df)))
     else throw new IllegalArgumentException(
       s"readstat writer: unsupported extension for $path " +
         "(expected .dta/.sav/.zsav/.xpt/.por/.sas7bdat/.csv[+sas script])")

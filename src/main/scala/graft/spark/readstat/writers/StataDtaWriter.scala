@@ -21,19 +21,25 @@ import graft.core.Bin
   * 244-byte string cap).
   *
   * Stat-file headers need row count and max string widths before any row
-  * is written, so this is a two-job write mirroring the reference's
-  * streaming sink (`sink_stata`, reference: pybindings.rs:951-1096):
+  * is written. A single-file write is one `WritePass` job, mirroring the
+  * reference's streaming sink (`sink_stata`, reference:
+  * pybindings.rs:951-1096):
   *
-  *   Job 1: the `WriteStats` fold (one `mapPartitions` over the
-  *          measured columns) → row count, widths, integer ranges.
-  *   Job 2: `mapPartitions` encodes each partition's rows to a scratch
-  *          chunk file (records are fixed-width and independent; strL
-  *          payloads go to a per-partition GSO chunk keyed (v,o) =
-  *          (partitionId+1, localIdx), which stays valid under plain
-  *          concatenation).
-  *   Driver: stream header + metadata tables, splice data chunks, GSO
-  *          chunks, value-label section; all offsets are computed up
-  *          front so the file is written in one forward pass.
+  *   Tasks:  each folds its partition's `WriteStats` while spilling its
+  *          rows, then encodes the spill under the layout its own stats
+  *          give into a scratch chunk (records are fixed-width and
+  *          independent; strL payloads go to a per-partition GSO chunk
+  *          keyed (v,o) = (partitionId+1, localIdx), which stays valid
+  *          under plain concatenation).
+  *   Driver: merges the stats into the global layout; partitions whose
+  *          layout differs are re-encoded from their spills in one small
+  *          job. Then it streams header + metadata tables, splices data
+  *          chunks, GSO chunks, value-label section; all offsets are
+  *          computed up front so the file is written in one forward pass.
+  *
+  * `compress=true` hands over stats measured while narrowing, so its
+  * tasks encode directly; `multiFile=true` runs a stats job, then one
+  * encode job that assembles a part file per partition.
   *
   * On a real cluster the scratch dir must be shared storage (set
   * `scratchDir`); the final splice is sequential IO on the driver —
@@ -49,10 +55,10 @@ object StataDtaWriter {
   // long 0x7fffffe5+) or the type's reserved minimum. The reference
   // writer raises NumericOutOfRange for these (writer.rs write_i8/
   // write_i16/write_i32); we instead measure min/max per promotable
-  // column in job 1 and widen the storage type (byte→int→long→double)
-  // when the observed range collides. RowEncoder still range-checks as
-  // a backstop (throws like the reference) in case the source is
-  // non-deterministic between the two jobs.
+  // column in the stats fold and widen the storage type
+  // (byte→int→long→double) when the observed range collides. RowEncoder
+  // still range-checks as a backstop (throws like the reference) in case
+  // the source changes between a stats job and the encode job.
   private[writers] val ByteMin = -127L;        private[writers] val ByteMax = 100L
   private[writers] val IntMin  = -32767L;      private[writers] val IntMax  = 32740L
   private[writers] val LongMin = -2147483647L; private[writers] val LongMax = 2147483620L
@@ -104,7 +110,7 @@ object StataDtaWriter {
 
 
   def write(df: DataFrame, path: String, options: Map[String, String],
-      stats: => WriteStats): Unit = {
+      known: Option[WriteStats]): Unit = {
     val spark = df.sparkSession
     val schema = df.schema
     val metaOpts = options.get("metadataPath")
@@ -184,22 +190,148 @@ object StataDtaWriter {
     require(writtenFields.nonEmpty,
       "stata writer: taggedMissings drops every column")
 
-    // ---- stats fold: row count + max string widths + numeric ranges ----
-    // Promotable integer-backed columns (byte/short/int/date): their
-    // natural Stata storage type has a valid range narrower than the
-    // Spark type, so the observed min/max (as the value Stata would
-    // store: dates as days since 1960) decides whether to widen it.
+    // ---- record layout from the stats: max string widths, ranges ----
     // dta <118 encodes strings in windows-1252, where every char is one
     // byte (unmappable chars degrade to a 1-byte '?'), so the stored
     // width is the CHAR count; 118/119 store UTF-8, so it's the octet
     // count. Measuring 114/117 in UTF-8 octets would reject valid writes
     // (200 'é' chars = 400 octets but only 200 cp1252 bytes).
-    val st = stats
     val legacyCharset = options.getOrElse("dtaVersion", "auto") match {
       case "114" | "117" => true
       case _ => false
     }
-    val nObs = st.rows
+    val layoutOf = (st: WriteStats) =>
+      colSpecs(schema, writtenFields, varFormats, legacyCharset, st)
+    // row ordinals for the encoder: the written schema is a projection
+    // of the incoming rows when indicator columns are dropped
+    val ordinalsArr: Array[Int] = writtenFields.map(f => schema.fieldIndex(f.name))
+    val tagOrdinalsArr: Array[Int] = writtenFields.map(f =>
+      tagByData.get(f.name).map(schema.fieldIndex).getOrElse(-1))
+
+    // ---- version selection (before any job: 114/117 encode differently) ----
+    // auto matches the reference (writer.rs choose_dta_version): 119
+    // ("wide") only when the 118 u16 variable-count field overflows.
+    // 114/117 are explicit opt-ins for old-Stata consumers.
+    val nCols = writtenFields.length
+    val version = options.getOrElse("dtaVersion", "auto") match {
+      case "auto" => if (nCols > 32767) 119 else 118
+      case v @ ("114" | "117" | "118") =>
+        require(nCols <= 32767,
+          s"stata writer: $nCols variables exceed the dta $v limit")
+        v.toInt
+      case "119" => 119
+      case other => throw new IllegalArgumentException(
+        s"stata writer: dtaVersion must be auto, 114, 117, 118 or 119 (got $other)")
+    }
+    // the version's limits on what the stats measured
+    def checkVersion(cols: Array[ColSpec], nObs: Long): Unit = if (version < 118) {
+      require(nObs <= 0xFFFFFFFFL,
+        s"stata writer: $nObs rows overflow the dta $version u32 row count")
+      if (version == 114) cols.foreach { c => c.w match {
+        case WStrL => throw new IllegalArgumentException(
+          s"stata writer: column ${c.name} exceeds $MaxStrWidth114 bytes — " +
+            "dta 114 has no strL; use dtaVersion=117 or newer")
+        case WStr(w) if w > MaxStrWidth114 => throw new IllegalArgumentException(
+          s"stata writer: column ${c.name} is $w bytes wide — dta 114 caps " +
+            s"strings at $MaxStrWidth114; use dtaVersion=117 or newer")
+        case _ => ()
+      } }
+    }
+    // strings (names, labels, data) are windows-1252 before 118, UTF-8 after
+    val csName = graft.core.stata.StataTypes.charsetFor(version).name()
+    // custom formats must fit the version's fixed fmt record (NUL-
+    // terminated) — putZPad would otherwise truncate mid-spec silently
+    if (varFormats.nonEmpty) {
+      val maxFmt = graft.core.stata.StataParser.layoutFor(
+        math.max(version, 117)).fmtLen - 1
+      varFormats.foreach { case (c, f) =>
+        require(f.getBytes(csName).length <= maxFmt,
+          s"stata writer: varFormats.$c exceeds the dta $version format " +
+            s"field ($maxFmt bytes)") }
+    }
+
+    // ---- multiFile mode: one self-contained .dta per partition ----
+    // `path` becomes a DIRECTORY of part-NNNNN.dta files (parquet-style),
+    // each with the full header/metadata/value-label sections and its own
+    // row count, encoded AND assembled on the executor — the write is
+    // fully parallel with no driver splice, which is the 100 TB write
+    // path (single-file stat formats are inherently single-writer; a
+    // directory of them is not). Global widths/promotions from a stats
+    // job keep every part file's schema identical, so `load(dir)` reads
+    // the set back as one frame.
+    if (options.get("multiFile").exists(_.toBoolean)) {
+      val st = known.getOrElse(WriteStats.of(df))
+      val nObs = st.rows
+      val cols = layoutOf(st)
+      checkVersion(cols, nObs)
+      val partPrefix = MultiFileParts.prepare(new File(path), "dta", options)
+      val specsB = spark.sparkContext.broadcast(cols)
+      val ordsB = spark.sparkContext.broadcast(ordinalsArr)
+      val tagOrdsB = spark.sparkContext.broadcast(tagOrdinalsArr)
+      val vls = valueLabels
+      val mvl = varLabels
+      val counts: Array[Long] =
+        df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+          if (!it.hasNext) Iterator.empty
+          else {
+            val specs = specsB.value
+            val cs2 = java.nio.charset.Charset.forName(csName)
+            val dataF = File.createTempFile(s"graft_mdta_${pid}_", ".chunk")
+            val gsoF = File.createTempFile(s"graft_mgso_${pid}_", ".chunk")
+            val out = new BufferedOutputStream(new FileOutputStream(dataF), 1 << 20)
+            val gso = new BufferedOutputStream(new FileOutputStream(gsoF), 1 << 20)
+            // v16 = 1: each part file is self-contained, so strL refs
+            // restart as if it were a single-chunk file
+            val enc = new RowEncoder(specs, version, cs2, 1, out, gso,
+              ordsB.value, tagOrdsB.value)
+            it.foreach(enc.encode)
+            out.close(); gso.close()
+            val rows = enc.rows
+            assembleFile(s"$path/$partPrefix" + f"$pid%05d.dta", version, specs, rows,
+              Seq((dataF.getAbsolutePath, gsoF.getAbsolutePath)), vls, mvl)
+            dataF.delete(); gsoF.delete()
+            Iterator(rows)
+          }
+        }.collect()
+      require(counts.sum == nObs,
+        s"row count drift: agg=$nObs write=${counts.sum}")
+      return
+    }
+
+    // ---- one pass: each partition's records to a data chunk, its strL
+    // payloads to a GSO chunk keyed (v,o) = (partitionId+1, localIdx),
+    // which stays valid under plain concatenation ----
+    require(df.queryExecution.toRdd.getNumPartitions <= 0xFFFE,
+      "too many partitions for strL v field")
+    val encode: WritePass.Encode[Array[ColSpec], (String, String)] =
+      (cols, pid, rows, scratch) => {
+        val dataF = scratch("dta")
+        val gsoF = scratch("gso")
+        val out = new BufferedOutputStream(new FileOutputStream(dataF), 1 << 20)
+        val gso = new BufferedOutputStream(new FileOutputStream(gsoF), 1 << 20)
+        try {
+          val enc = new RowEncoder(cols, version, java.nio.charset.Charset.forName(csName),
+            pid + 1, out, gso, ordinalsArr, tagOrdinalsArr)
+          rows.foreach(enc.encode)
+        } finally { out.close(); gso.close() }
+        (dataF.getAbsolutePath, gsoF.getAbsolutePath)
+      }
+    // ---- driver: assemble final file in one forward pass ----
+    WritePass.run(df, options, known, layoutOf, encode) { pass =>
+      checkVersion(pass.layout, pass.stats.rows)
+      assembleFile(path, version, pass.layout, pass.stats.rows, pass.chunks,
+        valueLabels, varLabels)
+    }
+  }
+
+  /** Column specs from the stats. Promotable integer-backed columns
+    * (byte/short/int/date): their natural Stata storage type has a valid
+    * range narrower than the Spark type, so the observed min/max (as the
+    * value Stata would store: dates as days since 1960) decides whether
+    * to widen it. */
+  private def colSpecs(schema: StructType, writtenFields: Array[StructField],
+      varFormats: Map[String, String], legacyCharset: Boolean,
+      st: WriteStats): Array[ColSpec] = {
     def widths(c: String): Int = math.max(1, (if (legacyCharset) st.chars else st.octets)(c))
     def fits(name: String, lo: Long, hi: Long): Boolean =
       st.ranges.get(name).forall { case (mn, mx) =>
@@ -208,9 +340,8 @@ object StataDtaWriter {
           else 0L
         mn + shift >= lo && mx + shift <= hi
       }
-
     val usedNames = scala.collection.mutable.Set[String]()
-    val cols: Array[ColSpec] = writtenFields.map { f =>
+    writtenFields.map { f =>
       val w: W = f.dataType match {
         case BooleanType => WByte
         case ByteType => if (fits(f.name, ByteMin, ByteMax)) WByte else WInt
@@ -240,140 +371,6 @@ object StataDtaWriter {
       })
       ColSpec(f.name, stataName(f.name, usedNames), w, fmt, f.dataType)
     }
-    val rowLen = cols.map(_.w.width).sum
-    // row ordinals for the encoder: the written schema is a projection
-    // of the incoming rows when indicator columns are dropped
-    val ordinalsArr: Array[Int] = writtenFields.map(f => schema.fieldIndex(f.name))
-    val tagOrdinalsArr: Array[Int] = writtenFields.map(f =>
-      tagByData.get(f.name).map(schema.fieldIndex).getOrElse(-1))
-
-    // ---- version selection (before job 2: 114/117 encode differently) ----
-    // auto matches the reference (writer.rs choose_dta_version): 119
-    // ("wide") only when the 118 u16 variable-count field overflows.
-    // 114/117 are explicit opt-ins for old-Stata consumers.
-    val version = options.getOrElse("dtaVersion", "auto") match {
-      case "auto" => if (cols.length > 32767) 119 else 118
-      case "114" =>
-        require(cols.length <= 32767,
-          s"stata writer: ${cols.length} variables exceed the dta 114 limit")
-        require(nObs <= 0xFFFFFFFFL,
-          s"stata writer: $nObs rows overflow the dta 114 u32 row count")
-        cols.foreach { c => c.w match {
-          case WStrL => throw new IllegalArgumentException(
-            s"stata writer: column ${c.name} exceeds $MaxStrWidth114 bytes — " +
-              "dta 114 has no strL; use dtaVersion=117 or newer")
-          case WStr(w) if w > MaxStrWidth114 => throw new IllegalArgumentException(
-            s"stata writer: column ${c.name} is $w bytes wide — dta 114 caps " +
-              s"strings at $MaxStrWidth114; use dtaVersion=117 or newer")
-          case _ => ()
-        } }
-        114
-      case "117" =>
-        require(cols.length <= 32767,
-          s"stata writer: ${cols.length} variables exceed the dta 117 limit")
-        require(nObs <= 0xFFFFFFFFL,
-          s"stata writer: $nObs rows overflow the dta 117 u32 row count")
-        117
-      case "118" => require(cols.length <= 32767,
-        s"stata writer: ${cols.length} variables exceed the dta 118 limit"); 118
-      case "119" => 119
-      case other => throw new IllegalArgumentException(
-        s"stata writer: dtaVersion must be auto, 114, 117, 118 or 119 (got $other)")
-    }
-    // strings (names, labels, data) are windows-1252 before 118, UTF-8 after
-    val csName = graft.core.stata.StataTypes.charsetFor(version).name()
-    // custom formats must fit the version's fixed fmt record (NUL-
-    // terminated) — putZPad would otherwise truncate mid-spec silently
-    if (varFormats.nonEmpty) {
-      val maxFmt = graft.core.stata.StataParser.layoutFor(
-        math.max(version, 117)).fmtLen - 1
-      varFormats.foreach { case (c, f) =>
-        require(f.getBytes(csName).length <= maxFmt,
-          s"stata writer: varFormats.$c exceeds the dta $version format " +
-            s"field ($maxFmt bytes)") }
-    }
-
-    // ---- multiFile mode: one self-contained .dta per partition ----
-    // `path` becomes a DIRECTORY of part-NNNNN.dta files (parquet-style),
-    // each with the full header/metadata/value-label sections and its own
-    // row count, encoded AND assembled on the executor — the write is
-    // fully parallel with no driver splice, which is the 100 TB write
-    // path (single-file stat formats are inherently single-writer; a
-    // directory of them is not). Global job-1 widths/promotions keep
-    // every part file's schema identical, so `load(dir)` reads the set
-    // back as one frame.
-    if (options.get("multiFile").exists(_.toBoolean)) {
-      val partPrefix = MultiFileParts.prepare(new File(path), "dta", options)
-      val specsB = spark.sparkContext.broadcast(cols)
-      val ordsB = spark.sparkContext.broadcast(ordinalsArr)
-      val tagOrdsB = spark.sparkContext.broadcast(tagOrdinalsArr)
-      val vls = valueLabels
-      val mvl = varLabels
-      val counts: Array[Long] =
-        df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-          if (!it.hasNext) Iterator.empty
-          else {
-            val specs = specsB.value
-            val cs2 = java.nio.charset.Charset.forName(csName)
-            val dataF = File.createTempFile(s"graft_mdta_${pid}_", ".chunk")
-            val gsoF = File.createTempFile(s"graft_mgso_${pid}_", ".chunk")
-            val out = new BufferedOutputStream(new FileOutputStream(dataF), 1 << 20)
-            val gso = new BufferedOutputStream(new FileOutputStream(gsoF), 1 << 20)
-            // v16 = 1: each part file is self-contained, so strL refs
-            // restart as if it were a single-chunk file
-            val enc = new RowEncoder(specs, version, cs2, 1, out, gso,
-              ordsB.value, tagOrdsB.value)
-            it.foreach(enc.encode)
-            out.close(); gso.close()
-            val rows = enc.rows
-            assembleFile(s"$path/$partPrefix" + f"$pid%05d.dta", version, specs, rows,
-              rowLen, dataF.length(), gsoF.length(),
-              Array((0, dataF.getAbsolutePath, gsoF.getAbsolutePath, rows)),
-              vls, mvl)
-            dataF.delete(); gsoF.delete()
-            Iterator(rows)
-          }
-        }.collect()
-      require(counts.sum == nObs,
-        s"row count drift: agg=$nObs write=${counts.sum}")
-      return
-    }
-
-    // ---- job 2: encode partitions to scratch chunks ----
-    val scratch = options.getOrElse("scratchDir",
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-    Files.createDirectories(Paths.get(scratch))
-    val specsB = spark.sparkContext.broadcast(cols)
-    val ordsB = spark.sparkContext.broadcast(ordinalsArr)
-    val tagOrdsB = spark.sparkContext.broadcast(tagOrdinalsArr)
-    // toRdd: encode straight from InternalRows — df.rdd would deserialize
-    // every row into external Row objects (java.sql.Date etc.) first
-    val chunks: Array[(Int, String, String, Long)] = // (pid, dataFile, gsoFile, rows)
-      df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-        val specs = specsB.value
-        val cs = java.nio.charset.Charset.forName(csName)
-        val dataF = File.createTempFile(s"graft_dta_${pid}_", ".chunk", new File(scratch))
-        val gsoF = File.createTempFile(s"graft_gso_${pid}_", ".chunk", new File(scratch))
-        val out = new BufferedOutputStream(new FileOutputStream(dataF), 1 << 20)
-        val gso = new BufferedOutputStream(new FileOutputStream(gsoF), 1 << 20)
-        val enc = new RowEncoder(specs, version, cs, pid + 1, out, gso,
-          ordsB.value, tagOrdsB.value)
-        it.foreach(enc.encode)
-        out.close(); gso.close()
-        Iterator((pid, dataF.getAbsolutePath, gsoF.getAbsolutePath, enc.rows))
-      }.collect()
-
-    val ordered = chunks.sortBy(_._1)
-    val totalRows = ordered.map(_._4).sum
-    require(totalRows == nObs, s"row count drift: agg=$nObs write=$totalRows")
-    require(ordered.length <= 0xFFFE, "too many partitions for strL v field")
-
-    // ---- driver: assemble final file in one forward pass ----
-    val dataBytes = ordered.map(c => new File(c._2).length()).sum
-    val gsoBytes = ordered.map(c => new File(c._3).length()).sum
-    assembleFile(path, version, cols, nObs, rowLen, dataBytes, gsoBytes, ordered,
-      valueLabels, varLabels)
-    ordered.foreach { c => new File(c._2).delete(); new File(c._3).delete() }
   }
 
   private[writers] def stataName(name: String, used: scala.collection.mutable.Set[String]): String = {
@@ -424,8 +421,8 @@ object StataDtaWriter {
         s"stata writer: value $v for column ${spec.stataName} outside " +
           s"[$lo, $hi] — collides with Stata missing sentinels " +
           "(NumericOutOfRange). Batch writes widen storage from observed " +
-          "ranges in job 1, so this means the source changed between " +
-          "jobs; the streaming sink maps types directly (future batches " +
+          "ranges in a stats fold, so this means the source changed " +
+          "between jobs; the streaming sink maps types directly (future batches " +
           "are unknowable), so pre-cast the column to a wider type")
 
     private type Cell = org.apache.spark.sql.catalyst.InternalRow => Unit
@@ -639,18 +636,17 @@ object StataDtaWriter {
   }
 
   /** Assemble the final .dta via a same-directory temp + atomic rename
-    * (partial files are never visible at the target name). */
+    * (partial files are never visible at the target name). `chunks` are
+    * (data, GSO) file pairs in partition order. */
   private def assembleFile(path: String, version: Int, cols: Array[ColSpec],
-      nObs: Long, rowLen: Int, dataBytes: Long, gsoBytes: Long,
-      chunks: Array[(Int, String, String, Long)],
+      nObs: Long, chunks: Seq[(String, String)],
       valueLabels: Map[String, Seq[(Int, String)]],
-      varLabels: Map[String, String] = Map.empty): Unit =
+      varLabels: Map[String, String]): Unit =
     AtomicFile.write(path)(tmp => assembleFileRaw(tmp, version, cols, nObs,
-      rowLen, dataBytes, gsoBytes, chunks, valueLabels, varLabels))
+      chunks, valueLabels, varLabels))
 
   private def assembleFileRaw(path: String, version: Int, cols: Array[ColSpec],
-      nObs: Long, rowLen: Int, dataBytes: Long, gsoBytes: Long,
-      chunks: Array[(Int, String, String, Long)],
+      nObs: Long, chunks: Seq[(String, String)],
       valueLabels: Map[String, Seq[(Int, String)]],
       varLabels: Map[String, String]): Unit = {
     if (version < 117) {
@@ -700,9 +696,9 @@ object StataDtaWriter {
     val chOff = vlbOff + vlbLen
     val chLen = 17 + 18
     val dataOff = chOff + chLen
-    val dataLen = 6 + dataBytes + 7
+    val dataLen = 6 + chunks.map(c => new File(c._1).length()).sum + 7
     val strlOff = dataOff + dataLen
-    val strlLen = 7 + gsoBytes + 8
+    val strlLen = 7 + chunks.map(c => new File(c._2).length()).sum + 8
     val vlTables = buildVlTables(cols, valueLabels, cs)
     val vlBody = vlTables.map { case (_, t) => 5 + 4 + nameLen + 3 + t.length + 6 }.sum
     val vlOff = strlOff + strlLen
@@ -745,9 +741,9 @@ object StataDtaWriter {
     val ch = openOut(path)
     try {
       ch.write(java.nio.ByteBuffer.wrap(bos.toByteArray))
-      spliceChunks(ch, chunks.iterator.map(_._2))
+      spliceChunks(ch, chunks.iterator.map(_._1))
       ch.write(java.nio.ByteBuffer.wrap(ascii("</data><strls>")))
-      spliceChunks(ch, chunks.iterator.map(_._3))
+      spliceChunks(ch, chunks.iterator.map(_._2))
       val vlOut = new java.io.ByteArrayOutputStream()
       vlOut.write(ascii("</strls><value_labels>"))
       vlTables.foreach { case (name, table) =>
@@ -763,11 +759,11 @@ object StataDtaWriter {
     } finally ch.close()
   }
 
-  /** Pre-xml binary layout (dta 114). Same two-job encode; only the
+  /** Pre-xml binary layout (dta 114). Same chunk encode; only the
     * metadata framing differs: fixed header, one-byte typlist codes,
     * 5-zero-byte expansion terminator, value-label tables to EOF. */
   private def assembleLegacy(path: String, version: Int, cols: Array[ColSpec],
-      nObs: Long, chunks: Array[(Int, String, String, Long)],
+      nObs: Long, chunks: Seq[(String, String)],
       valueLabels: Map[String, Seq[(Int, String)]],
       varLabels: Map[String, String]): Unit = {
     require(version == 114, s"legacy dta writer supports 114 (got $version)")
@@ -812,7 +808,7 @@ object StataDtaWriter {
     val ch = openOut(path)
     try {
       ch.write(java.nio.ByteBuffer.wrap(bos.toByteArray))
-      spliceChunks(ch, chunks.iterator.map(_._2))
+      spliceChunks(ch, chunks.iterator.map(_._1))
       // value-label section runs to EOF: {len, labname[33], pad[3], table}
       val vlOut = new java.io.ByteArrayOutputStream()
       buildVlTables(cols, valueLabels, cs).foreach { case (name, table) =>

@@ -43,7 +43,7 @@ object StataStreamSink extends StreamSinkCore.Format {
   def readState(path: String): Option[StreamSinkCore.StreamState] =
     StreamSinkCore.readState(path)
 
-  /** Column specs for streaming: direct dtype mapping (no job-1 range
+  /** Column specs for streaming: direct dtype mapping (no stats-fold range
     * probe — future batches are unknowable), declared string widths.
     * Sentinel-colliding values throw at encode time, matching the
     * reference's NumericOutOfRange instead of silently corrupting. */
@@ -258,7 +258,7 @@ class StataChunkWriter(schema: StructType, options: Map[String, String],
   private val enc = new RowEncoder(cols,
     version, graft.core.stata.StataTypes.charsetFor(version), 1, out, gsoGuard)
   // strict declared-width check: the batch encoder zero-pads/truncates at
-  // the job-1-measured exact width, but a stream's widths are declared,
+  // the stats-measured exact width, but a stream's widths are declared,
   // so an over-wide string must FAIL (reference sink_stata errors on
   // strL-required data), never silently truncate
   private val strChecks: Array[(Int, Int, String)] =

@@ -178,12 +178,20 @@ object StreamSinkCore {
         schema: StructType, options: Map[String, String]): Unit
   }
 
+  /** Where chunks and spills go: `scratchDir`, else `java.io.tmpdir`. */
+  def scratchDir(options: Map[String, String]): File =
+    new File(options.getOrElse("scratchDir",
+      sys.props.getOrElse("java.io.tmpdir", "/tmp")))
+
   def scratchFile(options: Map[String, String], tag: String, pid: Int): File = {
-    val scratch = options.getOrElse("scratchDir",
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-    Files.createDirectories(Paths.get(scratch))
-    File.createTempFile(s"graft_${tag}_${pid}_", ".chunk", new File(scratch))
+    val scratch = scratchDir(options)
+    Files.createDirectories(scratch.toPath)
+    scratchFileIn(scratch, tag, pid)
   }
+
+  /** A new scratch file in `dir`, which must exist. */
+  def scratchFileIn(dir: File, tag: String, pid: Int): File =
+    File.createTempFile(s"graft_${tag}_${pid}_", ".chunk", dir)
 }
 
 /** One commit message shape for every format's chunk. */

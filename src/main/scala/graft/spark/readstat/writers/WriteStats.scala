@@ -16,12 +16,13 @@ import org.apache.spark.sql.types._
 final case class WriteStats(rows: Long, octets: Map[String, Int],
     chars: Map[String, Int], ranges: Map[String, (Long, Long)])
 
-/** The one stats pass behind every batch write: a single `mapPartitions`
-  * job over the planned RDD of the measured columns' projection
-  * (`queryExecution.toRdd` — no aggregate, no shuffle) that folds each
-  * partition's rows in Scala and merges the collected per-partition
-  * partials. Only the measured columns are projected, so a frame read
-  * from a stat file decodes those alone. `WriteCompress` folds its
+/** The stats fold behind every batch write: an `Acc` per partition,
+  * folded over `InternalRow`s in Scala (no aggregate, no shuffle), then
+  * merged on the driver. A plain single-file write folds it inside its
+  * one encode job (`WritePass`). `of` runs it as a job of its own over
+  * the planned RDD of the measured columns' projection, so a frame read
+  * from a stat file decodes those alone: multiFile writes and the csv
+  * bundle use it before their encode job, and `WriteCompress` folds its
   * narrowing inputs through the same pass, so a compress write is one
   * stats job plus one encode job.
   */
@@ -139,7 +140,13 @@ object WriteStats {
     val measured = df.schema.fields.filter(f => plainKind(f.dataType) != Skip)
     val kinds = measured.map(f => plainKind(f.dataType))
     val acc = fold(df, measured.map(f => column(f.name)).toIndexedSeq, kinds)
-    val cols = measured.map(_.name).toSeq.zipWithIndex
+    of(measured.map(_.name).toIndexedSeq, kinds, acc)
+  }
+
+  /** The stats an `Acc` folded under `plainKind`s, its columns named by
+    * `names` (unmeasured ones are skipped). */
+  private[writers] def of(names: Seq[String], kinds: Array[Int], acc: Acc): WriteStats = {
+    val cols = names.zipWithIndex
     val strs = cols.filter { case (_, i) => kinds(i) == Str }
     WriteStats(acc.rows, strs.map { case (c, i) => c -> acc.hi(i).toInt }.toMap,
       strs.map { case (c, i) => c -> acc.lo(i).toInt }.toMap,

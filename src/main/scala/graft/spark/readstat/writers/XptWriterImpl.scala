@@ -2,7 +2,7 @@ package graft.spark.readstat.writers
 
 import java.io.{BufferedOutputStream, File, FileOutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -10,9 +10,9 @@ import org.apache.spark.sql.types._
 
 import graft.core.xpt.XptCore
 
-/** SAS transport (.xpt) v5/v8 writer — same distributed two-job shape as
-  * the dta/sav writers. 80-byte records, 140-byte namestrs, IBM hex
-  * floats. v8 swaps the header record names (LIBV8/MEMBV8/…), carries
+/** SAS transport (.xpt) v5/v8 writer — same distributed one-job shape
+  * (`WritePass`) as the dta/sav writers. 80-byte records, 140-byte
+  * namestrs, IBM hex floats. v8 swaps the header record names (LIBV8/MEMBV8/…), carries
   * 32-char member and variable names, and fills the namestr longname
   * field. Record layout follows the public TS-140 spec (behavioral
   * reference: xpt_writer.rs:560-681).
@@ -45,7 +45,7 @@ object XptWriterImpl {
   private val Ts = "01JAN26:00:00:00"
 
   def write(df: DataFrame, path: String, options: Map[String, String],
-      stats: => WriteStats): Unit = {
+      known: Option[WriteStats]): Unit = {
     val spark = df.sparkSession
     val schema = df.schema
     val version = options.getOrElse("xptVersion", "5") match {
@@ -182,13 +182,108 @@ object XptWriterImpl {
       "xpt writer: a taggedMissings indicator column cannot itself be tagged")
     val writtenFields = schema.fields.filterNot(f => indicatorCols(f.name))
     require(writtenFields.nonEmpty, "xpt writer: taggedMissings drops every column")
-    // ---- stats fold: row count + max string octet widths ----
-    val st = stats
-    val nObs = st.rows
-    def widths(c: String): Int = math.max(1, math.min(200, st.octets(c)))
+    // ---- record layout from the stats: max string octet widths ----
+    val layoutOf = (st: WriteStats) =>
+      colSpecs(writtenFields, varFormatsL, storageWidths, metaStrWidths, st)
+    val ordinalsArr: Array[Int] = writtenFields.map(f => schema.fieldIndex(f.name))
+    val tagOrdinalsArr: Array[Int] = writtenFields.map(f =>
+      taggedMissings.get(f.name).map(schema.fieldIndex).getOrElse(-1))
 
+    // ---- multiFile mode: one self-contained .xpt per partition ----
+    // (same contract as the dta/sav writers; the XPT header carries no
+    // row count, so each part is just header + its records + 80-pad)
+    if (options.get("multiFile").exists(_.toBoolean)) {
+      val st = known.getOrElse(WriteStats.of(df))
+      val nObs = st.rows
+      val cols = layoutOf(st)
+      val specsB = spark.sparkContext.broadcast(cols)
+      val ordsB = spark.sparkContext.broadcast(ordinalsArr)
+      val tagOrdsB = spark.sparkContext.broadcast(tagOrdinalsArr)
+      val partPrefix = MultiFileParts.prepare(new File(path), "xpt", options)
+      val header = buildHeader(cols, version, varLabels, tableName, fileLabel)
+      val counts: Array[Long] =
+        df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+          if (!it.hasNext) Iterator.empty
+          else {
+            val specs = specsB.value
+            val partPath = s"$path/$partPrefix" + f"$pid%05d.xpt"
+            var rows = 0L
+            AtomicFile.write(partPath) { tmp =>
+            val out = new BufferedOutputStream(new FileOutputStream(tmp), 1 << 20)
+            out.write(header)
+            val enc = new XptRowEncoder(specs, out, ordsB.value, tagOrdsB.value)
+            it.foreach(enc.encode)
+            rows = enc.rows
+            val partRowLen = specs.map(_.width).sum
+            val rem = ((rows * partRowLen) % 80).toInt
+            if (rem != 0) {
+              val pad = new Array[Byte](80 - rem)
+              java.util.Arrays.fill(pad, ' '.toByte)
+              out.write(pad)
+            }
+            out.close()
+            val fix = java.nio.channels.FileChannel.open(Paths.get(tmp),
+              StandardOpenOption.READ, StandardOpenOption.WRITE)
+            try pandasTailFix(fix, header.length.toLong, partRowLen, rows)
+            finally fix.close()
+            }
+            Iterator(rows)
+          }
+        }.collect()
+      require(counts.sum == nObs, s"row count drift: agg=$nObs write=${counts.sum}")
+      writeCatalog()
+      return
+    }
+
+    val encode: WritePass.Encode[Array[ColSpec], String] = (cols, _, rows, scratch) => {
+      val f = scratch("xpt")
+      val out = new BufferedOutputStream(new FileOutputStream(f), 1 << 20)
+      try {
+        val enc = new XptRowEncoder(cols, out, ordinalsArr, tagOrdinalsArr)
+        rows.foreach(enc.encode)
+      } finally out.close()
+      f.getAbsolutePath
+    }
+    WritePass.run(df, options, known, layoutOf, encode) { pass =>
+      val cols = pass.layout
+      val header = buildHeader(cols, version, varLabels, tableName, fileLabel)
+      AtomicFile.write(path) { tmpOut =>
+        val ch = java.nio.channels.FileChannel.open(Paths.get(tmpOut),
+          StandardOpenOption.CREATE, StandardOpenOption.READ,
+          StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
+        try {
+          ch.write(java.nio.ByteBuffer.wrap(header))
+          var written = 0L
+          pass.chunks.foreach { c =>
+            val in = java.nio.channels.FileChannel.open(Paths.get(c), StandardOpenOption.READ)
+            try { var p = 0L; val n = in.size()
+              while (p < n) p += in.transferTo(p, n - p, ch)
+              written += n
+            } finally in.close()
+          }
+          // pad data section to an 80-byte boundary with spaces
+          val rem = (written % 80).toInt
+          if (rem != 0) {
+            val pad = new Array[Byte](80 - rem)
+            java.util.Arrays.fill(pad, ' '.toByte)
+            ch.write(java.nio.ByteBuffer.wrap(pad))
+          }
+          pandasTailFix(ch, header.length.toLong, cols.map(_.width).sum, pass.stats.rows)
+        } finally ch.close()
+      }
+    }
+    writeCatalog()
+  }
+
+  /** Column specs from the stats. A numeric `storageWidths` entry cuts
+    * the IBM float to 3-8 bytes; a character one may pad beyond the
+    * observed maximum but never truncate it. */
+  private def colSpecs(writtenFields: Array[StructField],
+      varFormatsL: Map[String, (String, Int, Int)], storageWidths: Map[String, Int],
+      metaStrWidths: Map[String, Int], st: WriteStats): Array[ColSpec] = {
+    def widths(c: String): Int = math.max(1, math.min(200, st.octets(c)))
     val used = scala.collection.mutable.Set[String]()
-    val cols: Array[ColSpec] = writtenFields.map { f =>
+    writtenFields.map { f =>
       var short = f.name.toUpperCase.filter(c => c.isLetterOrDigit || c == '_').take(8)
       if (short.isEmpty || !short(0).isLetter) short = ("V" + short).take(8)
       var cand = short; var i = 1
@@ -238,100 +333,6 @@ object XptWriterImpl {
           s"xpt writer: unsupported type $other for ${f.name}")
       }
     }
-    val rowLen = cols.map(_.width).sum
-
-    val scratch = options.getOrElse("scratchDir",
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"))
-    Files.createDirectories(Paths.get(scratch))
-    val ordinalsArr: Array[Int] = writtenFields.map(f => schema.fieldIndex(f.name))
-    val tagOrdinalsArr: Array[Int] = writtenFields.map(f =>
-      taggedMissings.get(f.name).map(schema.fieldIndex).getOrElse(-1))
-    val specsB = spark.sparkContext.broadcast(cols)
-    val ordsB = spark.sparkContext.broadcast(ordinalsArr)
-    val tagOrdsB = spark.sparkContext.broadcast(tagOrdinalsArr)
-
-    // ---- multiFile mode: one self-contained .xpt per partition ----
-    // (same contract as the dta/sav writers; the XPT header carries no
-    // row count, so each part is just header + its records + 80-pad)
-    if (options.get("multiFile").exists(_.toBoolean)) {
-      val partPrefix = MultiFileParts.prepare(new File(path), "xpt", options)
-      val header = buildHeader(cols, version, varLabels, tableName, fileLabel)
-      val counts: Array[Long] =
-        df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-          if (!it.hasNext) Iterator.empty
-          else {
-            val specs = specsB.value
-            val partPath = s"$path/$partPrefix" + f"$pid%05d.xpt"
-            var rows = 0L
-            AtomicFile.write(partPath) { tmp =>
-            val out = new BufferedOutputStream(new FileOutputStream(tmp), 1 << 20)
-            out.write(header)
-            val enc = new XptRowEncoder(specs, out, ordsB.value, tagOrdsB.value)
-            it.foreach(enc.encode)
-            rows = enc.rows
-            val partRowLen = specs.map(_.width).sum
-            val rem = ((rows * partRowLen) % 80).toInt
-            if (rem != 0) {
-              val pad = new Array[Byte](80 - rem)
-              java.util.Arrays.fill(pad, ' '.toByte)
-              out.write(pad)
-            }
-            out.close()
-            val fix = java.nio.channels.FileChannel.open(Paths.get(tmp),
-              StandardOpenOption.READ, StandardOpenOption.WRITE)
-            try pandasTailFix(fix, header.length.toLong, partRowLen, rows)
-            finally fix.close()
-            }
-            Iterator(rows)
-          }
-        }.collect()
-      require(counts.sum == nObs, s"row count drift: agg=$nObs write=${counts.sum}")
-      writeCatalog()
-      return
-    }
-
-    // toRdd: encode straight from InternalRows — df.rdd would deserialize
-    // every row into external Row objects first
-    val chunks = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val specs = specsB.value
-      val f = File.createTempFile(s"graft_xpt_${pid}_", ".chunk", new File(scratch))
-      val out = new BufferedOutputStream(new FileOutputStream(f), 1 << 20)
-      val enc = new XptRowEncoder(specs, out, ordsB.value, tagOrdsB.value)
-      it.foreach(enc.encode)
-      out.close()
-      Iterator((pid, f.getAbsolutePath, enc.rows))
-    }.collect().sortBy(_._1)
-    val written = chunks.map(_._3).sum
-    require(written == nObs, s"row count drift: agg=$nObs write=$written")
-
-    val header = buildHeader(cols, version, varLabels, tableName, fileLabel)
-    AtomicFile.write(path) { tmpOut =>
-    val outPath = Paths.get(tmpOut)
-    val ch = java.nio.channels.FileChannel.open(outPath,
-      StandardOpenOption.CREATE, StandardOpenOption.READ,
-      StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      ch.write(java.nio.ByteBuffer.wrap(header))
-      var written = 0L
-      chunks.foreach { c =>
-        val in = java.nio.channels.FileChannel.open(Paths.get(c._2), StandardOpenOption.READ)
-        try { var p = 0L; val n = in.size()
-          while (p < n) p += in.transferTo(p, n - p, ch)
-          written += n
-        } finally in.close()
-      }
-      // pad data section to an 80-byte boundary with spaces
-      val rem = (written % 80).toInt
-      if (rem != 0) {
-        val pad = new Array[Byte](80 - rem)
-        java.util.Arrays.fill(pad, ' '.toByte)
-        ch.write(java.nio.ByteBuffer.wrap(pad))
-      }
-      pandasTailFix(ch, header.length.toLong, cols.map(_.width).sum, nObs)
-    } finally ch.close()
-    }
-    chunks.foreach(c => new File(c._2).delete())
-    writeCatalog()
   }
 
   /** pandas' xport reader estimates the row count by subtracting

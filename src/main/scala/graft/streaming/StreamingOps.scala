@@ -383,7 +383,7 @@ object StreamingOps {
 
   /** Streaming sink into stat-file formats: single-file formats cannot
     * append, so each microbatch writes one complete file
-    * `<dir>/batch_<id>.<ext>` via the distributed two-job writer — the
+    * `<dir>/batch_<id>.<ext>` via the distributed batch writer — the
     * stat-format analog of a partitioned streaming parquet sink, and the
     * streaming counterpart of the reference's `sink_stata`. Consume the
     * result set with a multi-file `spark.read.format("readstat")` load

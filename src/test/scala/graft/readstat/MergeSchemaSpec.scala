@@ -99,6 +99,65 @@ class MergeSchemaSpec extends SparkTestBase {
     }
   }
 
+  test("struct and merged informative nulls merge a string declaring missings in one file only") {
+    import spark.implicits._
+    // a.sav declares "NA" user-missing on s; b.sav holds "NA" as a value
+    val ab = s"$dir/inull_str"
+    def rows(from: Int, tag: String) = (from until from + 20)
+      .map(i => (i.toDouble, if (i % 5 == 0) "NA" else s"$tag$i")).toDF("id", "s")
+    rows(0, "a").write.format("readstat").mode("overwrite")
+      .option("missingValues", "s:NA").save(s"$ab/a.sav")
+    rows(20, "b").write.format("readstat").mode("overwrite").save(s"$ab/b.sav")
+    def read(mode: String) = spark.read.format("readstat")
+      .option("informativeNulls", "true").option("informativeNullMode", mode)
+      .option("mergeSchema", "true").load(s"$ab/a.sav", s"$ab/b.sav")
+      .orderBy(if (mode == "merged") col("id").cast("double") else col("id")) // merged id is a string
+    val sep = read("column").select("s", "s_null").collect()
+    assert(sep.length == 40)
+    assert(sep.count(_.getString(1) != null) == 4) // a's four "NA" rows
+    val struct = read("struct")
+    assert(struct.schema("s").dataType ==
+      StructType(Seq(StructField("s", StringType), StructField("null_indicator", StringType))))
+    val gotStruct = struct.select("s").collect()
+    val gotMerged = read("merged").select("s").collect()
+    sep.indices.foreach { r =>
+      val (v, ind) = (sep(r).getString(0), sep(r).getString(1))
+      val cell = gotStruct(r).getStruct(0)
+      assert(cell.getString(0) == v && cell.getString(1) == ind, s"struct row $r")
+      assert(gotMerged(r).getString(0) == (if (v != null) v else ind), s"merged row $r")
+    }
+  }
+
+  test("struct informative nulls widen two files' value types inside the struct") {
+    import spark.implicits._
+    // a.dta stores q as int with tagged missings, b.sav as double with 9
+    // declared user-missing: q merges to struct<q: double, null_indicator>
+    val ab = s"$dir/inull_widen"
+    (0 until 20).map(i => if (i % 4 == 1) (Option.empty[Int], Some(".a")) else (Some(i), None))
+      .toDF("q", "q_null").write.format("readstat").mode("overwrite")
+      .option("taggedMissings", "q:q_null").save(s"$ab/a.dta")
+    (20 until 40).map(i => Tuple1((i % 10).toDouble)).toDF("q")
+      .write.format("readstat").mode("overwrite")
+      .option("missingValues", "q:9").save(s"$ab/b.sav")
+    def read(mode: String) = spark.read.format("readstat")
+      .option("informativeNulls", "true").option("informativeNullMode", mode)
+      .option("informativeNullUseValueLabels", "false")
+      .option("mergeSchema", "true").load(s"$ab/a.dta", s"$ab/b.sav")
+    val sep = read("column").select("q", "q_null").collect()
+    assert(sep.length == 40)
+    assert(sep.count(_.getString(1) != null) == 7) // a's five ".a", b's two 9s
+    val struct = read("struct")
+    assert(struct.schema("q").dataType ==
+      StructType(Seq(StructField("q", DoubleType), StructField("null_indicator", StringType))))
+    val got = struct.select("q").collect()
+    assert(got.length == 40)
+    got.indices.foreach { r =>
+      val cell = got(r).getStruct(0)
+      assert(cell.get(0) == sep(r).get(0) && cell.getString(1) == sep(r).getString(1),
+        s"row $r")
+    }
+  }
+
   test("aggregate over merged load is correct") {
     val df = spark.read.format("readstat").option("mergeSchema", "true")
       .load(s"$dir/a.dta", s"$dir/b.dta", s"$dir/c.sav")

@@ -9,16 +9,19 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.api.Readstat
-import graft.spark.readstat.writers.{WriteCompress, WriteStats}
+import graft.spark.readstat.writers.{WriteCompress, WritePass, WriteStats}
 
 /** Pass structure and output bytes of the batch stat-file writers.
   *
-  * A batch write is one stats fold (`writers.WriteStats`: row count,
-  * string widths, integer ranges and — under `compress=true` — the
-  * narrowing analysis) plus one encode job. A SparkListener counts the
-  * jobs one `Readstat.write` starts, and the SHA-256 of every target's
-  * output for one fixed, seeded frame pins that measuring the stats in
-  * one fold changed no byte of any file.
+  * A plain single-file write is one job (`writers.WritePass`): each task
+  * folds its stats (`writers.WriteStats`: row count, string widths,
+  * integer ranges), spills its rows and encodes them under its own
+  * layout; partitions whose layout differs from the global one are
+  * re-encoded from their spills. `compress=true` (whose stats fold also
+  * runs the narrowing analysis) and `multiFile=true` are one stats fold
+  * plus one encode job. A SparkListener counts the jobs one
+  * `Readstat.write` starts, and the SHA-256 of every target's output for
+  * fixed, seeded frames pins that neither change moved a byte.
   */
 class WritePassSpec extends SparkTestBase {
 
@@ -48,6 +51,23 @@ class WritePassSpec extends SparkTestBase {
     date_add(lit("2000-01-01").cast("date"), h(9, 9000).cast("int")).as("d"),
     timestamp_seconds(lit(946684800L) + h(10, 5000) * 86400L).as("tmid"),
     h(11, 2).cast("double").as("flag"))
+
+  /** 300 rows in 3 partitions whose own layouts differ: partition 0
+    * holds the narrowest strings, and only partition 1 holds a byte above
+    * Stata's byte range (dta widens the column to int). So partition 0
+    * is re-encoded for every target, partition 2 for dta only, and
+    * partition 1's chunk is spliced as it is. */
+  private def skewed: DataFrame = {
+    val part = (col("id") / 100).cast("int")
+    val k = when(part === 0, lit(2)).otherwise(lit(5))
+    spark.range(0, 300, 1, 3).select(
+      col("id").cast("double").as("v"),
+      when(pmod(col("id"), lit(7)) === 3, lit(null))
+        .otherwise(repeat(lit("é"), (pmod(col("id"), k) + 1).cast("int"))).as("s"),
+      when(part === 1 && pmod(col("id"), lit(10)) === 0, lit(120))
+        .otherwise(pmod(col("id"), lit(50)) - 25).cast("byte").as("b"),
+      date_add(lit("2000-01-01").cast("date"), col("id").cast("int")).as("d"))
+  }
 
   private def tmpDir(): File = {
     val d = Files.createTempDirectory("graft_writepass").toFile
@@ -112,6 +132,19 @@ class WritePassSpec extends SparkTestBase {
     assert(got.forall(_._2 >= 1), s"no job recorded — listener broken? $got")
   }
 
+  test("a plain single-file write runs one Spark job; compress and multiFile at most two") {
+    val dir = tmpDir()
+    val plain = Targets.map(ext => ext -> jobsOf(Readstat.write(frame, s"$dir/one.$ext")))
+    assert(plain.forall(_._2 == 1), plain.mkString(", "))
+    val two = Targets.flatMap { ext => Seq(
+      s"$ext+compress" -> jobsOf(Readstat.write(frame, s"$dir/two_c.$ext",
+        Map("compress" -> "true"))),
+      s"$ext.multiFile" -> jobsOf(Readstat.write(frame, s"$dir/two_m_$ext",
+        Map("multiFile" -> "true", "fileFormat" -> ext))))
+    }
+    assert(two.forall { case (_, n) => n >= 1 && n <= 2 }, two.mkString(", "))
+  }
+
   /** (case name, target file, options) → SHA-256 of the output. */
   private val Cases: Seq[(String, String, Map[String, String])] =
     Targets.flatMap(ext => Seq(
@@ -156,6 +189,28 @@ class WritePassSpec extends SparkTestBase {
       else Seq(main)
     }.toMap
     assert(got == Pinned)
+  }
+
+  /** Recorded at the commit before the one-job pass (two jobs, one
+    * global layout for every partition). */
+  private val SkewedPinned: Map[String, String] = Map(
+    "dta" -> "4f5b49dd817500d2eaaa316014abcc1921038f84e229e897ac9d53dfa030c9c9",
+    "sav" -> "e5b2f8ff7466297ead19221865938e34220fb9f5433a0f617680892114707b92",
+    "zsav" -> "f8cd683970c5baf4d683493cd54a474f82486ebffaf5fb5714720a874fe1c75d",
+    "sas7bdat" -> "8ffdb9b994cd038d98f0f74ef3e5065ea83f35f6caf3cedcdea14f36a58c3d1d",
+    "xpt" -> "40841857a1fb222b33470efd5f9c7b94486086a572e228c9a484ad9624e16d6b")
+
+  test("partitions whose own layout differs are re-encoded to the same bytes") {
+    val dir = tmpDir()
+    val reencoded = Targets.map { ext =>
+      val before = WritePass.reencoded.get()
+      Readstat.write(skewed, s"$dir/skew.$ext")
+      ext -> (WritePass.reencoded.get() - before)
+    }.toMap
+    val got = Targets.map(ext => ext -> sha256(new File(s"$dir/skew.$ext"))).toMap
+    assert(got == SkewedPinned)
+    assert(reencoded == Map("dta" -> 2L, "sav" -> 1L, "zsav" -> 1L,
+      "sas7bdat" -> 1L, "xpt" -> 1L))
   }
 
   test("compress derives the narrowed frame's stats exactly as a fold over it measures them") {
@@ -220,30 +275,84 @@ class WritePassSpec extends SparkTestBase {
     assert(pushed, plans.toArray.mkString("\n"))
   }
 
-  test("a source that drifts between the stats fold and the encode job fails the write") {
-    // second evaluation of the single partition yields twice the rows
-    // and twice-as-long strings: the encode job must refuse to splice
-    // a file whose header describes the first evaluation
+  /** Single partition: its second evaluation yields twice the rows and
+    * twice-as-long strings. */
+  private def drifting: DataFrame = {
     val pass = udf { (id: Long) =>
       if (id == 0L) WritePassSpec.evaluations.incrementAndGet()
       WritePassSpec.evaluations.get()
     }.asNondeterministic()
-    val drifting = spark.range(0, 20, 1, 1)
+    spark.range(0, 20, 1, 1)
       .withColumn("pass", pass(col("id")))
       .where(col("id") < col("pass") * 10)
       .select(col("id").cast("double").as("v"),
         repeat(lit("x"), col("pass")).as("s"))
+  }
+
+  test("a plain write evaluates its source once and writes that evaluation") {
     val dir = tmpDir()
     for (ext <- Seq("dta", "sav", "xpt", "sas7bdat")) {
       WritePassSpec.evaluations.set(0)
-      val target = new File(s"$dir/drift.$ext")
-      val e = intercept[Exception](Readstat.write(drifting, target.getPath))
+      val target = s"$dir/once.$ext"
+      Readstat.write(drifting, target)
+      assert(WritePassSpec.evaluations.get() == 1, s"$ext: source evaluated again")
+      val back = spark.read.format("readstat").load(target)
+        .select(col("v").cast("double"), col("s")).collect()
+        .map(r => (r.getDouble(0), r.getString(1))).toSeq
+      assert(back == (0 until 10).map(i => (i.toDouble, "x")), s"$ext: $back")
+    }
+  }
+
+  test("a source that drifts between the stats fold and the encode job fails the write") {
+    // compress and multiFile still evaluate the source twice: the encode
+    // job must refuse to splice a file whose header describes the first
+    // evaluation
+    val dir = tmpDir()
+    for (ext <- Seq("dta", "sav", "xpt", "sas7bdat");
+         opts <- Seq(Map("compress" -> "true"), Map("multiFile" -> "true", "fileFormat" -> ext))) {
+      WritePassSpec.evaluations.set(0)
+      val target = new File(s"$dir/drift_${opts.size}.$ext")
+      val e = intercept[Exception](Readstat.write(drifting, target.getPath, opts))
       val msgs = Iterator.iterate[Throwable](e)(_.getCause)
         .takeWhile(_ != null).map(t => String.valueOf(t.getMessage)).mkString(" | ")
       assert(msgs.contains("row count drift") ||
-        msgs.contains("different rows across jobs"), s"$ext: $msgs")
-      assert(WritePassSpec.evaluations.get() >= 2, s"$ext: source evaluated once")
-      assert(!target.exists(), s"$ext: a file was left at $target")
+        msgs.contains("different rows across jobs"), s"$ext $opts: $msgs")
+      assert(WritePassSpec.evaluations.get() >= 2, s"$ext $opts: source evaluated once")
+      // (multiFile parts are assembled before the count check)
+      if (opts.contains("compress"))
+        assert(!target.exists(), s"$ext $opts: a file was left at $target")
+    }
+  }
+
+  test("every scratch file goes to scratchDir") {
+    val notADir = File.createTempFile("graft_scratch_", ".file")
+    notADir.deleteOnExit()
+    val dir = tmpDir()
+    for (ext <- Targets) {
+      intercept[Exception](Readstat.write(frame, s"$dir/nodir.$ext",
+        Map("scratchDir" -> notADir.getPath)))
+      assert(!new File(s"$dir/nodir.$ext").exists(), ext)
+    }
+  }
+
+  test("a failed write leaves no scratch file behind") {
+    // one of three partitions throws mid-encode; the double column is
+    // unmeasured, so only the encode evaluates it
+    val boom = udf { (id: Long) =>
+      if (id == 250L) throw new IllegalStateException("boom")
+      id.toDouble
+    }
+    val df = spark.range(0, 300, 1, 3).select(boom(col("id")).as("x"),
+      concat(lit("v"), col("id").cast("string")).as("s"))
+    val dir = tmpDir()
+    for (ext <- Targets) {
+      val scratch = Files.createTempDirectory(dir.toPath, "scratch").toFile
+      val e = intercept[Exception](Readstat.write(df, s"$dir/fail.$ext",
+        Map("scratchDir" -> scratch.getPath)))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("boom")), s"$ext: $e")
+      assert(scratch.list().isEmpty, s"$ext: left ${scratch.list().mkString(", ")}")
+      assert(!new File(s"$dir/fail.$ext").exists(), ext)
     }
   }
 }
