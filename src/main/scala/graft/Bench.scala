@@ -36,7 +36,8 @@ object Bench {
     * raw reads, so the driver's round-over-round comparison always sees
     * the queries under test (the r14 lesson: every actually-optimized
     * query fell outside the record's capture window while only untouched
-    * raw reads were compared). Updated per optimization round. */
+    * raw reads were compared). Updated per optimization round;
+    * BenchRecordSpec fails on a name that is not a registered query. */
   private[graft] val touchedThisRound: Set[String] = Set(
     "text_decontaminate", "dedup_winnow_pairs", "q22_recursive_clusters",
     "spss_compress_roundtrip", "stata_compress_roundtrip",

@@ -17,8 +17,10 @@ trait FormatModule extends Serializable {
   def schema(path: String, opts: ReadstatOptions): StructType
 
   /** Plan row-range partitions. `limit` is the pushed-down row cap.
-    * Implementations choose the regime the format supports: fixed-width
-    * seek → many ranges; sequential-only (compressed) → single range.
+    * Every regime sizes its ranges with the session's [[SplitRule]]
+    * (`opts.split`): fixed-width rows and SAS pages split by arithmetic;
+    * compressed sav and POR split at the checkpoints of a driver-side
+    * skim, which a file the rule plans as one range never pays.
     */
   def planPartitions(path: String, opts: ReadstatOptions,
       limit: Option[Long]): Seq[RangePartition]
@@ -50,21 +52,20 @@ trait FormatModule extends Serializable {
     * is even accepted. Must be consistent with planPartitionsAt. */
   def plansOffset(path: String, opts: ReadstatOptions): Boolean = false
 
-  /** Shared clamp/stride arithmetic for the O(1)-seekable
-    * [[planPartitionsAt]] implementations (dta/xpt/uncompressed sav):
-    * row ranges covering [clamp(offset), min(limit, rowCount)), strided
-    * by partitionTargetBytes worth of fixed-width rows. One definition —
-    * an edge-case fix here must not be applied three times. */
+  /** Shared clamp arithmetic for the O(1)-seekable planners
+    * (dta/xpt/uncompressed sav, with and without an offset): row ranges
+    * covering [clamp(offset), min(limit, rowCount)), split by the
+    * session's [[SplitRule]]. One definition — an edge-case fix here
+    * must not be applied three times. */
   protected final def seekableRowRanges(path: String, opts: ReadstatOptions,
       offset: Long, limit: Option[Long], rowCount: Long,
       rowLen: Int): Seq[RangePartition] = {
     val total = limit.map(math.min(_, rowCount)).getOrElse(rowCount)
     val start0 = math.min(math.max(0L, offset), total)
     if (total - start0 <= 0) return Seq(RangePartition(path, start0, 0))
-    val rowsPerPart =
-      math.max(1L, opts.partitionTargetBytes / math.max(1, rowLen))
-    (start0 until total by rowsPerPart).map { start =>
-      RangePartition(path, start, math.min(rowsPerPart, total - start))
+    val stride = opts.split.stride(total - start0, rowLen, opts.partitionTargetBytes)
+    (start0 until total by stride).map { start =>
+      RangePartition(path, start, math.min(stride, total - start))
     }
   }
 
@@ -178,6 +179,53 @@ final case class RangePartition(
     skipRows: Long = 0L)
   extends org.apache.spark.sql.connector.read.InputPartition
 
+/** The one rule that sizes a file's range partitions, after SplitDF
+  * (PAPERS.md): size the splits to the slots that run them. A range of
+  * `units` units of `unitBytes` each (rows × record length, pages × page
+  * length, checkpoint intervals × their mean bytes) needs at least
+  * `n0 = ceil(units / (targetBytes / unitBytes))` ranges, so no range
+  * holds more than `targetBytes` (or one unit, when a unit is larger).
+  * `n0` rounds up to whole waves of `slots` tasks, but to no more than
+  * `work / floorBytes` ranges, so a range under 2 × `floorBytes` stays
+  * one range. The ranges share one stride, `ceil(units / n)`, so only
+  * the last is short. `slots` and `floorBytes` are what Spark's own file
+  * scans size splits by (`FilePartition.maxSplitBytes`). */
+final case class SplitRule(slots: Int, floorBytes: Long) {
+  /** Units per range (at least 1). */
+  def stride(units: Long, unitBytes: Long, targetBytes: Long): Long = {
+    if (units <= 1) return 1L
+    val ub = math.max(1L, unitBytes)
+    val n0 = (units - 1) / math.max(1L, targetBytes / ub) + 1
+    val work = if (units > Long.MaxValue / ub) Long.MaxValue else units * ub
+    val wave = if (n0 > Long.MaxValue - slots) n0 else (n0 + slots - 1) / slots * slots
+    val n = math.min(units, math.max(n0, math.min(wave, work / floorBytes)))
+    (units - 1) / n + 1
+  }
+
+  /** The rule for one file of a scan: the file fills its byte share of
+    * the slots, so files that fill the slots between them keep one range
+    * each (and pack) rather than each splitting toward a full wave. */
+  def share(bytes: Long, scanBytes: Long): SplitRule =
+    if (bytes >= scanBytes) this
+    else copy(slots = math.max(1, (slots.toDouble * bytes / scanBytes).toInt))
+}
+
+object SplitRule {
+  /** No slots to fill: one range per target's worth. */
+  val Plain = SplitRule(1, 4L << 20)
+
+  /** The active session's `spark.sql.files.minPartitionNum`, else its
+    * leaf-node default parallelism, and `spark.sql.files.openCostInBytes`;
+    * [[Plain]] without a session. */
+  def session(): SplitRule = try {
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    val slots = conf.filesMinPartitionNum.getOrElse(
+      conf.getConf(org.apache.spark.sql.internal.SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+        .getOrElse(org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism))
+    SplitRule(math.max(1, slots), math.max(1L, conf.filesOpenCostInBytes))
+  } catch { case scala.util.control.NonFatal(_) => Plain }
+}
+
 /** Scan/write options (mirrors the reference's ScanOptions surface,
   * reference: src/lib.rs:80-132, python __init__.py:498-676).
   */
@@ -194,6 +242,9 @@ final case class ReadstatOptions(
     // the indicator string over the code form (lib.rs:115-131)
     informativeNullCols: Set[String] = Set.empty, // empty = all eligible
     informativeNullUseValueLabels: Boolean = true,
+    // upper bound on one range partition's bytes; the split rule plans
+    // more, smaller ranges when that fills the session's task slots
+    // (see [[SplitRule]])
     partitionTargetBytes: Long = 128L * 1024 * 1024,
     batchRows: Int = 0, // 0 = auto (~2M cells per batch)
     compress: Boolean = false,
@@ -233,10 +284,25 @@ final case class ReadstatOptions(
     //     rows physically present (truncated-tail arithmetic), and any
     //     remaining mid-decode failure ends that partition's output
     //     with the rows already decoded rather than the query.
-    mode: String = ReadstatOptions.ModeFailfast) {
+    mode: String = ReadstatOptions.ModeFailfast,
+    // not an option: the session's task slots and open-cost floor, which
+    // size every file's ranges; `from` resolves them once on the driver
+    // (like `mode`'s default) and executors receive them resolved
+    split: SplitRule = SplitRule.Plain) {
 
   def tolerant: Boolean = mode != ReadstatOptions.ModeFailfast
   def salvage: Boolean = mode == ReadstatOptions.ModePermissive
+
+  /** Each file's options in a scan of `paths`. The split rule's wave
+    * fill is decided for the scan, as Spark's `maxSplitBytes` is: a file
+    * fills its byte share of the slots ([[SplitRule.share]]). */
+  def perFile(paths: Seq[String]): String => ReadstatOptions =
+    if (paths.lengthCompare(2) < 0) _ => this
+    else {
+      val sizes = paths.iterator.map(p => p -> new java.io.File(p).length()).toMap
+      val total = sizes.values.sum
+      p => copy(split = split.share(sizes(p), total))
+    }
 
   /** Reference InformativeNullColumns: empty set = "all" eligible. */
   def infoNullEligible(name: String): Boolean =
@@ -300,7 +366,8 @@ object ReadstatOptions {
           .contains(norm),
           "expected one of: failfast, dropmalformed, permissive")
         norm
-      })
+      },
+      split = SplitRule.session())
   }
 
   /** Spark-idiomatic default: with no explicit `mode` option, honor the

@@ -170,7 +170,8 @@ class ReadstatFileMetadataSource extends TableProvider with DataSourceRegister {
     // failing the scan — one metadata query sweeps a 100 TB drop
     // directory and lists exactly which files a tolerant data scan
     // would skip
-    new FileMetadataTable(paths, ReadstatOptions.from(properties).tolerant)
+    val opts = ReadstatOptions.from(properties)
+    new FileMetadataTable(paths, opts.tolerant, opts.split.slots)
   }
 }
 
@@ -378,7 +379,7 @@ object FileMetadataRows {
   }
 }
 
-class FileMetadataTable(paths: Seq[String], tolerant: Boolean = false)
+class FileMetadataTable(paths: Seq[String], tolerant: Boolean, slots: Int)
     extends Table with SupportsRead {
   override def name(): String = s"readstat-file-metadata:${paths.mkString(",")}"
   override def schema(): StructType = FileMetadataRows.schema
@@ -389,10 +390,12 @@ class FileMetadataTable(paths: Seq[String], tolerant: Boolean = false)
       override def build(): Scan = this
       override def readSchema(): StructType = FileMetadataRows.schema
       override def toBatch: Batch = this
-      // one partition per file: header parsing is a few KB of I/O per task,
-      // and a directory of thousands of files fans out across executors
+      // a header parse costs a millisecond or two, far less than a task:
+      // consecutive files pack into two waves of the session's slots
       override def planInputPartitions(): Array[InputPartition] =
-        paths.map(p => RangePartition(p, 0, 1): InputPartition).toArray
+        paths.grouped(math.max(1, (paths.length - 1) / (2 * slots) + 1)).map { g =>
+          MultiFilePartition(g.map(RangePartition(_, 0, 1)).toArray): InputPartition
+        }.toArray
       override def createReaderFactory(): PartitionReaderFactory =
         FileMetadataReaderFactory(tolerant)
     }
@@ -403,13 +406,13 @@ class FileMetadataTable(paths: Seq[String], tolerant: Boolean = false)
 private[readstat] case class FileMetadataReaderFactory(tolerant: Boolean)
     extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val path = p.asInstanceOf[RangePartition].path
-    val it = Iterator.single(
-      if (!tolerant) FileMetadataRows.rowFor(path)
-      else try FileMetadataRows.rowFor(path) catch {
+    val it = p.asInstanceOf[MultiFilePartition].parts.iterator.map { rp =>
+      if (!tolerant) FileMetadataRows.rowFor(rp.path)
+      else try FileMetadataRows.rowFor(rp.path) catch {
         case scala.util.control.NonFatal(e) =>
-          FileMetadataRows.errorRow(path, e)
-      })
+          FileMetadataRows.errorRow(rp.path, e)
+      }
+    }
     new PartitionReader[InternalRow] {
       private var cur: InternalRow = _
       override def next(): Boolean =

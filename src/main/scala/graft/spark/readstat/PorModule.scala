@@ -27,9 +27,9 @@ object PorModule extends FormatModule {
       try PorCore.parseMeta(s) finally s.close()
     })
 
-  /** Checkpoint interval for the parallel-scan index: fine enough to
-    * pack partitions near partitionTargetBytes, coarse enough that the
-    * index stays metadata-sized (32 B per 8k rows). */
+  /** Checkpoint interval for the parallel-scan index: fine enough for
+    * the split rule's ranges, coarse enough that the index stays
+    * metadata-sized (32 B per 8k rows). */
   private val IndexEvery = 8192L
   private val idxCache = new ConcurrentHashMap[FileKey, PorIndex]()
   private def porIndex(path: String): PorIndex =
@@ -94,18 +94,50 @@ object PorModule extends FormatModule {
     else NumRender.code(d)
   }
 
+  /** Whether the split rule plans the file as one range: counted in
+    * bytes, so it needs no index. */
+  private def oneRange(path: String, opts: ReadstatOptions): Boolean = {
+    val size = new java.io.File(path).length()
+    opts.split.stride(size, 1L, opts.partitionTargetBytes) >= size
+  }
+
+  /** Ranges over rows [start0, total) of an indexed file: the checkpoint
+    * intervals they touch, split by the rule at their mean byte size.
+    * The first range resumes at the checkpoint at or before `start0`
+    * and boundary-skims the rest ([[RangePartition.skipRows]]). */
+  private def indexedRanges(path: String, opts: ReadstatOptions,
+      idx: PorIndex, start0: Long, total: Long): Seq[RangePartition] = {
+    val cps = idx.cps
+    var c0 = 0
+    while (c0 + 1 < cps.length && cps(c0 + 1).row <= start0) c0 += 1
+    var c1 = c0 + 1
+    while (c1 < cps.length && cps(c1).row < total) c1 += 1
+    val units = c1 - c0
+    val work = (if (c1 < cps.length) cps(c1).byteOff
+      else new java.io.File(path).length()) - cps(c0).byteOff
+    val q = opts.split.stride(units, (work + units - 1) / units,
+      opts.partitionTargetBytes).toInt
+    (c0 until c1 by q).map { i =>
+      val c = cps(i)
+      val first = math.max(c.row, start0)
+      val last = if (i + q < cps.length) math.min(cps(i + q).row, total) else total
+      RangePartition(path, first, last - first,
+        por = Some(PorResume(c.byteOff, c.pos, c.pending)),
+        skipRows = first - c.row)
+    }
+  }
+
   /** r11, BEYOND the reference (por.rs decodes strictly serially): files
-    * past the partition target split into PARALLEL row-range partitions.
-    * A plan-time cell-boundary skim (no value materialization, cached
-    * per file) records a [[PorCkpt]] every [[IndexEvery]] rows; each
-    * partition resumes its checkpoint's (byteOff, linePos, pending)
-    * state — the same amortized-skim trade as the compressed-SPSS
-    * checkpoint index. Limit reads stay sequential (they touch a
-    * prefix anyway). */
+    * the split rule plans as more than one range split into PARALLEL
+    * row-range partitions. A plan-time cell-boundary skim (no value
+    * materialization, cached per file) records a [[PorCkpt]] every
+    * [[IndexEvery]] rows; each partition resumes its checkpoint's
+    * (byteOff, linePos, pending) state — the same amortized-skim trade
+    * as the compressed-SPSS checkpoint index. Limit reads stay
+    * sequential (they touch a prefix anyway). */
   override def planPartitions(path: String, opts: ReadstatOptions,
       limit: Option[Long]): Seq[RangePartition] = {
-    val size = new java.io.File(path).length()
-    if (limit.isDefined || size < 2 * opts.partitionTargetBytes)
+    if (limit.isDefined || oneRange(path, opts))
       return Seq(RangePartition(path, 0, limit.getOrElse(Long.MaxValue)))
     // mode=permissive: a truncated stream fails the checkpoint skim
     // (no Z end-of-data marker) — degrade to ONE sequential partition
@@ -118,20 +150,7 @@ object PorModule extends FormatModule {
     }
     if (idx.rows == 0 || idx.cps.isEmpty)
       return Seq(RangePartition(path, 0, Long.MaxValue))
-    val parts = Seq.newBuilder[RangePartition]
-    var start = idx.cps.head
-    var i = 1
-    while (i < idx.cps.length) {
-      if (idx.cps(i).byteOff - start.byteOff >= opts.partitionTargetBytes) {
-        parts += RangePartition(path, start.row, idx.cps(i).row - start.row,
-          por = Some(PorResume(start.byteOff, start.pos, start.pending)))
-        start = idx.cps(i)
-      }
-      i += 1
-    }
-    parts += RangePartition(path, start.row, idx.rows - start.row,
-      por = Some(PorResume(start.byteOff, start.pos, start.pending)))
-    parts.result()
+    indexedRanges(path, opts, idx, 0L, idx.rows)
   }
 
   /** OFFSET pushdown (r14 — the reference's slice pushdown reaches
@@ -140,13 +159,14 @@ object PorModule extends FormatModule {
     * line state at the nearest checkpoint ≤ offset; the ≤[[IndexEvery]]
     * mid-interval remainder is boundary-SKIMMED ([[RangePartition
     * .skipRows]] — cell boundaries only, no base-30 parse, no String
-    * building). Small files skip the index and skim from data start. */
+    * building). Files the split rule plans as one range skip the index
+    * and skim from data start. */
   override def plansOffset(path: String, opts: ReadstatOptions): Boolean = true
 
   override def planPartitionsAt(path: String, opts: ReadstatOptions,
       offset: Long, limit: Option[Long]): Option[Seq[RangePartition]] = {
     val off0 = math.max(0L, offset)
-    if (new java.io.File(path).length() < 2 * opts.partitionTargetBytes) {
+    if (oneRange(path, opts)) {
       // `limit` is an absolute row cap from file start; numRows caps
       // the rows emitted AFTER the skipRows skim
       val numRows = limit.map(l => math.max(0L, l - off0)).getOrElse(Long.MaxValue)
@@ -157,28 +177,7 @@ object PorModule extends FormatModule {
     val start0 = math.min(off0, total)
     if (idx.rows == 0 || idx.cps.isEmpty || total - start0 <= 0)
       return Some(Seq(RangePartition(path, start0, 0)))
-    // nearest checkpoint at or before the offset row (cps sorted by row)
-    var c0 = 0
-    while (c0 + 1 < idx.cps.length && idx.cps(c0 + 1).row <= start0) c0 += 1
-    // byte-target boundary walk, same packing rule as planPartitions
-    val parts = Seq.newBuilder[RangePartition]
-    var start = idx.cps(c0)
-    var firstRow = start0 // first EMITTED row of the current partition
-    var skip = start0 - start.row
-    var i = c0 + 1
-    while (i < idx.cps.length && idx.cps(i).row < total) {
-      if (idx.cps(i).byteOff - start.byteOff >= opts.partitionTargetBytes) {
-        parts += RangePartition(path, firstRow, idx.cps(i).row - firstRow,
-          por = Some(PorResume(start.byteOff, start.pos, start.pending)),
-          skipRows = skip)
-        start = idx.cps(i); firstRow = idx.cps(i).row; skip = 0L
-      }
-      i += 1
-    }
-    parts += RangePartition(path, firstRow, total - firstRow,
-      por = Some(PorResume(start.byteOff, start.pos, start.pending)),
-      skipRows = skip)
-    Some(parts.result())
+    Some(indexedRanges(path, opts, idx, start0, total))
   }
 
   /** Batch decode of the base-30 text stream: cells decode straight

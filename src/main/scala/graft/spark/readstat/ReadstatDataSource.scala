@@ -632,6 +632,7 @@ class ReadstatScan(paths: Seq[String], rawPaths: Seq[String],
   }
 
   override def planInputPartitions(): Array[InputPartition] = {
+    val optsFor = opts.perFile(paths)
     val perFile: Seq[(String, Long, Seq[RangePartition])] =
       if (paths.length > 1 && (offset.isDefined || limit.isDefined)) {
         // multi-file slice (r14): the global window [offset, limit)
@@ -656,13 +657,13 @@ class ReadstatScan(paths: Seq[String], rawPaths: Seq[String],
           val parts: Seq[RangePartition] =
             if (e <= s) Seq.empty
             else if (s == 0 && e == rows)
-              Formats.moduleFor(p).planPartitions(p, opts, None)
+              Formats.moduleFor(p).planPartitions(p, optsFor(p), None)
             else
               // defined by construction: a capped tail (e < rows) only
               // occurs under a pushed LIMIT, which every module here
               // accepted via plansExactLimit; an offset head (s > 0)
               // passed the plansOffset probe
-              Formats.moduleFor(p).planPartitionsAt(p, opts, s,
+              Formats.moduleFor(p).planPartitionsAt(p, optsFor(p), s,
                 if (e == rows) None else Some(e)).get
           (p, bytes, parts)
         }
@@ -672,8 +673,8 @@ class ReadstatScan(paths: Seq[String], rawPaths: Seq[String],
             // pushOffset only accepted single-file + module-supported, so
             // planPartitionsAt is defined here by construction
             case Some(o) => Formats.moduleFor(p)
-              .planPartitionsAt(p, opts, o, limit).get
-            case None => Formats.moduleFor(p).planPartitions(p, opts, limit)
+              .planPartitionsAt(p, optsFor(p), o, limit).get
+            case None => Formats.moduleFor(p).planPartitions(p, optsFor(p), limit)
           }
           if (!opts.salvage) parts
           else Formats.moduleFor(p).salvageableRowCount(p, opts) match {

@@ -123,14 +123,15 @@ class ReadstatMicroBatchStream(dir: String, required: StructType,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val seen = start.asInstanceOf[FilesOffset].files.toSet
     val fresh = end.asInstanceOf[FilesOffset].files.filterNot(seen)
+    val optsFor = opts.perFile(fresh)
     DriverPar.mapOrdered(fresh) { p =>
         // mode=permissive: a file already in the offset history (e.g.
         // admitted before a restart, damaged since) must not wedge the
         // stream permanently — drop it with a warning, like the batch
         // planner. dropmalformed keeps its header-corrupt-only contract:
         // data-region damage still fails the batch
-        if (!opts.salvage) Formats.moduleFor(p).planPartitions(p, opts, None)
-        else try Formats.moduleFor(p).planPartitions(p, opts, None) catch {
+        if (!opts.salvage) Formats.moduleFor(p).planPartitions(p, optsFor(p), None)
+        else try Formats.moduleFor(p).planPartitions(p, optsFor(p), None) catch {
           case scala.util.control.NonFatal(e) =>
             Formats.log.warn(s"readstat stream: mode=${opts.mode} dropping " +
               s"unplannable file $p: ${e.getMessage}")

@@ -304,9 +304,8 @@ object SasModule extends FormatModule {
         i
       } else math.max(0, -(found + 1) - 1) // insertion point - 1
     }
-    val pagesPerPart =
-      math.max(1L, opts.partitionTargetBytes / math.max(1, md.pageLength))
     val n = md.pageCount.toLong
+    val pagesPerPart = opts.split.stride(n - sp, md.pageLength, opts.partitionTargetBytes)
     Some((sp.toLong until n by pagesPerPart).map { s =>
       RangePartition(path, s, math.min(pagesPerPart, n - s),
         rowsBefore = Some(prefix(s.toInt)),
@@ -317,21 +316,17 @@ object SasModule extends FormatModule {
   override def planPartitions(path: String, opts: ReadstatOptions,
       limit: Option[Long]): Seq[RangePartition] = {
     val md = metadata(path)
-    val pagesPerPart = math.max(1L, opts.partitionTargetBytes / math.max(1, md.pageLength))
     val n = md.pageCount.toLong
     if (n == 0) return Seq(RangePartition(path, 0, 0))
-    if (md.compression != 0) {
-      // small file → one partition, no index pass needed
-      if (n <= pagesPerPart) return Seq(RangePartition(path, 0, n))
-      val prefix = compressedPagePrefix(path)
-      return (0L until n by pagesPerPart).map { s =>
-        RangePartition(path, s, math.min(pagesPerPart, n - s),
-          rowsBefore = Some(prefix(s.toInt)))
-      }
-    }
-    // uncompressed: page-range partitions
+    val pagesPerPart = opts.split.stride(n, md.pageLength, opts.partitionTargetBytes)
+    // compressed pages need the row-prefix pass for their row-index
+    // base, which a one-range file skips
+    val prefix =
+      if (md.compression == 0 || pagesPerPart >= n) None
+      else Some(compressedPagePrefix(path))
     (0L until n by pagesPerPart).map { s =>
-      RangePartition(path, s, math.min(pagesPerPart, n - s))
+      RangePartition(path, s, math.min(pagesPerPart, n - s),
+        rowsBefore = prefix.map(_(s.toInt)))
     }
   }
 

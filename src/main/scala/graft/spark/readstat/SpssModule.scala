@@ -42,6 +42,25 @@ object SpssModule extends FormatModule {
   private def savIndex(path: String, md: SpssMeta, k: Long): SavIndex =
     savIndexCache.computeIfAbsent((keyOf(path), k), _ => buildSavIndex(path, md, k))
 
+  /** Checkpoint skims cached for `path` (one per distinct stride). */
+  private[graft] def savIndexEntries(path: String): Int = {
+    val k = keyOf(path)
+    savIndexCache.keySet.stream.filter(_._1 == k).count.toInt
+  }
+
+  /** THE checkpoint stride of a compressed file, over all its rows
+    * whatever the limit or offset: [[planPartitions]] and
+    * [[planPartitionsAt]] derive the same `k`, so they share one cached
+    * skim. Without a case count (bytecode may omit it) the rule has no
+    * rows to split: ranges are then a target's worth of records each. */
+  private def compressedStride(path: String, opts: ReadstatOptions,
+      md: SpssMeta): Long = {
+    val n = rowCount(path, md)
+    if (n == Long.MaxValue)
+      math.max(1L, opts.partitionTargetBytes / math.max(1, md.recordLen))
+    else opts.split.stride(n, md.recordLen, opts.partitionTargetBytes)
+  }
+
   def sparkTypeOf(v: SpssVar, opts: ReadstatOptions): DataType =
     if (v.isString) StringType
     else if (opts.valueLabelsAsStrings && v.numLabels.nonEmpty) StringType
@@ -125,36 +144,29 @@ object SpssModule extends FormatModule {
       limit: Option[Long]): Seq[RangePartition] = {
     val md = metadata(path)
     val n0 = rowCount(path, md)
-    val rowsPerPart = math.max(1L, opts.partitionTargetBytes / math.max(1, md.recordLen))
-    if (md.compression == 0) {
-      val total = limit.map(math.min(_, n0)).getOrElse(n0)
-      if (total == 0) return Seq(RangePartition(path, 0, 0))
-      return (0L until total by rowsPerPart).map { s =>
-        RangePartition(path, s, math.min(rowsPerPart, total - s))
-      }
-    }
-    // compressed (bytecode/zsav): sequential single range when it is
-    // small or cheaply bounded — otherwise build the checkpoint index
-    // and emit resumable range partitions
-    val boundKnown = n0 != Long.MaxValue
-    val bounded = limit.map(l => if (boundKnown) math.min(l, n0) else l)
-      .getOrElse(if (boundKnown) n0 else Long.MaxValue)
-    if (bounded <= rowsPerPart)
+    if (md.compression == 0)
+      return seekableRowRanges(path, opts, 0L, limit, n0, md.recordLen)
+    // compressed (bytecode/zsav): one sequential range when the rows to
+    // read fit one stride — otherwise build the checkpoint index and
+    // emit resumable range partitions
+    val k = compressedStride(path, opts, md)
+    val bounded = limit.fold(n0)(math.min(_, n0))
+    if (bounded <= k)
       return Seq(RangePartition(path, 0, bounded))
     // mode=permissive: a damaged file can fail the index skim (zsav's
     // block trailer lives at EOF — exactly what a truncated download
     // loses). Degrade to ONE sequential partition so the executor-side
     // salvage still recovers the decodable prefix, instead of the
     // planner dropping the whole file.
-    val idx = try savIndex(path, md, rowsPerPart) catch {
+    val idx = try savIndex(path, md, k) catch {
       case scala.util.control.NonFatal(_) if opts.salvage =>
         return Seq(RangePartition(path, 0, bounded))
     }
     val total = math.min(bounded, idx.totalRows)
     if (total == 0) return Seq(RangePartition(path, 0, 0))
-    (0L until total by rowsPerPart).map { s =>
-      RangePartition(path, s, math.min(rowsPerPart, total - s),
-        Some(idx.checkpoints((s / rowsPerPart).toInt)))
+    (0L until total by k).map { s =>
+      RangePartition(path, s, math.min(k, total - s),
+        Some(idx.checkpoints((s / k).toInt)))
     }
   }
 
@@ -163,11 +175,11 @@ object SpssModule extends FormatModule {
     * Uncompressed rows are fixed `recordLen` bytes and seek in O(1).
     * Bytecode/zsav streams cannot seek to a row, but they CAN resume
     * at a checkpoint of the same index the parallel scan already
-    * builds, then decode-forward the ≤rowsPerPart mid-interval
-    * remainder ([[RangePartition.skipRows]]); small files skip the
-    * index entirely and decode-skip from the data start — either way
-    * the skipped prefix never materializes strings, missing rules or
-    * boxed cells, only the command-stream expansion. */
+    * builds, then decode-forward the mid-range remainder
+    * ([[RangePartition.skipRows]]); files the split plans as one range
+    * skip the index entirely and decode-skip from the data start —
+    * either way the skipped prefix never materializes strings, missing
+    * rules or boxed cells, only the command-stream expansion. */
   override def plansOffset(path: String, opts: ReadstatOptions): Boolean = true
 
   override def planPartitionsAt(path: String, opts: ReadstatOptions,
@@ -177,26 +189,25 @@ object SpssModule extends FormatModule {
       return Some(seekableRowRanges(path, opts, offset, limit,
         rowCount(path, md), md.recordLen))
     val off0 = math.max(0L, offset)
-    val rowsPerPart =
-      math.max(1L, opts.partitionTargetBytes / math.max(1, md.recordLen))
-    if (new java.io.File(path).length() < 2 * opts.partitionTargetBytes) {
+    val k = compressedStride(path, opts, md)
+    if (k >= rowCount(path, md)) {
       // single sequential partition; the row source's toSkip consumes
       // startRow rows before emitting (numRows caps AFTER the skip,
       // `limit` is an absolute row cap from file start)
       val numRows = limit.map(l => math.max(0L, l - off0)).getOrElse(Long.MaxValue)
       return Some(Seq(RangePartition(path, off0, numRows)))
     }
-    val idx = savIndex(path, md, rowsPerPart)
+    val idx = savIndex(path, md, k)
     val total = limit.map(math.min(_, idx.totalRows)).getOrElse(idx.totalRows)
     val start0 = math.min(off0, total)
     if (total - start0 <= 0) return Some(Seq(RangePartition(path, start0, 0)))
-    val i0 = (start0 / rowsPerPart).toInt
+    val i0 = (start0 / k).toInt
     val first = RangePartition(path, start0,
-      math.min((i0 + 1) * rowsPerPart, total) - start0,
-      Some(idx.checkpoints(i0)), skipRows = start0 - i0 * rowsPerPart)
-    val rest = ((i0 + 1) * rowsPerPart until total by rowsPerPart).map { s =>
-      RangePartition(path, s, math.min(rowsPerPart, total - s),
-        Some(idx.checkpoints((s / rowsPerPart).toInt)))
+      math.min((i0 + 1) * k, total) - start0,
+      Some(idx.checkpoints(i0)), skipRows = start0 - i0 * k)
+    val rest = ((i0 + 1) * k until total by k).map { s =>
+      RangePartition(path, s, math.min(k, total - s),
+        Some(idx.checkpoints((s / k).toInt)))
     }
     Some(first +: rest)
   }

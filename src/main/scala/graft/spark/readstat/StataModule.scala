@@ -179,13 +179,7 @@ object StataModule extends FormatModule {
   override def planPartitions(path: String, opts: ReadstatOptions,
       limit: Option[Long]): Seq[RangePartition] = {
     val md = metadata(path)
-    val total = limit.map(math.min(_, md.nObs)).getOrElse(md.nObs)
-    if (total == 0) return Seq(RangePartition(path, 0, 0))
-    val rowLen = math.max(1, md.rowLen)
-    val rowsPerPart = math.max(1L, opts.partitionTargetBytes / rowLen)
-    (0L until total by rowsPerPart).map { start =>
-      RangePartition(path, start, math.min(rowsPerPart, total - start))
-    }
+    seekableRowRanges(path, opts, 0L, limit, md.nObs, md.rowLen)
   }
 
   /** Fixed-width rows seek in O(1), so OFFSET pushdown is pure range

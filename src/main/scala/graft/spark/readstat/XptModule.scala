@@ -133,10 +133,7 @@ object XptModule extends FormatModule {
   override def planPartitions(path: String, opts: ReadstatOptions,
       limit: Option[Long]): Seq[RangePartition] = {
     val md = metadata(path)
-    val total = limit.map(math.min(_, md.rowCount)).getOrElse(md.rowCount)
-    if (total == 0) return Seq(RangePartition(path, 0, 0))
-    val rpp = math.max(1L, opts.partitionTargetBytes / math.max(1, md.rowLength))
-    (0L until total by rpp).map(s => RangePartition(path, s, math.min(rpp, total - s)))
+    seekableRowRanges(path, opts, 0L, limit, md.rowCount, md.rowLength)
   }
 
   /** Fixed 80-byte-record rows seek in O(1): OFFSET pushdown is pure

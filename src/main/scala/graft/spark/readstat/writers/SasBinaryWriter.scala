@@ -342,23 +342,17 @@ object SasBinaryWriter {
     }
     if (options.get("multiFile").exists(_.toBoolean)) {
       val st = known.getOrElse(WriteStats.of(df))
-      val nObs = st.rows
       val specsB = df.sparkSession.sparkContext.broadcast(layoutOf(st))
       val labelsB = df.sparkSession.sparkContext.broadcast(varLabels)
-      val partPrefix = MultiFileParts.prepare(new File(path), "sas7bdat", options)
-      val counts: Array[Long] =
-        df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-          if (!it.hasNext) Iterator.empty
-          else {
-            val f = File.createTempFile(s"graft_msas_${pid}_", ".chunk")
-            val rows = encodeTo(specsB.value, rle, it, f)
-            assemble(s"$path/$partPrefix" + f"$pid%05d.sas7bdat", specsB.value,
-              labelsB.value, rows, dsName, rle, Seq(f.getAbsolutePath))
-            f.delete()
-            Iterator(rows)
-          }
-        }.collect()
-      require(counts.sum == nObs, s"row count drift: agg=$nObs write=${counts.sum}")
+      WritePass.multiFile(df, options, path, "sas7bdat", "sas7bdat", st.rows) {
+        (it, scratch, partPath) =>
+          val f = scratch("msas")
+          val rows = encodeTo(specsB.value, rle, it, f)
+          assemble(partPath, specsB.value, labelsB.value, rows, dsName, rle,
+            Seq(f.getAbsolutePath))
+          f.delete()
+          rows
+      }
       writeCatalog()
       return
     }

@@ -154,33 +154,25 @@ object SpssSavWriter {
     // widths from a stats job keep every part's dictionary identical)
     if (options.get("multiFile").exists(_.toBoolean)) {
       val st = known.getOrElse(WriteStats.of(df))
-      val nObs = st.rows
       val specsB = spark.sparkContext.broadcast(layoutOf(st))
       val ext = if (zlib) "zsav" else "sav"
-      val partPrefix = MultiFileParts.prepare(new File(path), "(sav|zsav)", options)
       val vls = valueLabels
       val vlbB = varLabels
       val vmB = varMeasures
       val vdwB = varDisplayWidths
       val vaB = varAlignments
       val mvB = missingValues
-      val counts: Array[Long] =
-        df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-          if (!it.hasNext) Iterator.empty
-          else {
-            val specs = specsB.value
-            val f = File.createTempFile(s"graft_msav_${pid}_", ".chunk")
-            val (rows, blocks) = encodeChunk(specs, zlibB, it, f)
-            val dictLocal = buildDictionary(specs, rows, zlibB, vls, vlbB,
-              vmB, vdwB, vaB, mvB)
-            assembleSav(s"$path/$partPrefix" + f"$pid%05d.$ext", dictLocal, zlibB,
-              Seq(f.getAbsolutePath), blocks)
-            f.delete()
-            Iterator(rows)
-          }
-        }.collect()
-      require(counts.sum == nObs,
-        s"row count drift: agg=$nObs write=${counts.sum}")
+      WritePass.multiFile(df, options, path, "(sav|zsav)", ext, st.rows) {
+        (it, scratch, partPath) =>
+          val specs = specsB.value
+          val f = scratch("msav")
+          val (rows, blocks) = encodeChunk(specs, zlibB, it, f)
+          val dictLocal = buildDictionary(specs, rows, zlibB, vls, vlbB,
+            vmB, vdwB, vaB, mvB)
+          assembleSav(partPath, dictLocal, zlibB, Seq(f.getAbsolutePath), blocks)
+          f.delete()
+          rows
+      }
       return
     }
 

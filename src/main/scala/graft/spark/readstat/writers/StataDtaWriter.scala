@@ -261,40 +261,32 @@ object StataDtaWriter {
     // the set back as one frame.
     if (options.get("multiFile").exists(_.toBoolean)) {
       val st = known.getOrElse(WriteStats.of(df))
-      val nObs = st.rows
       val cols = layoutOf(st)
-      checkVersion(cols, nObs)
-      val partPrefix = MultiFileParts.prepare(new File(path), "dta", options)
+      checkVersion(cols, st.rows)
       val specsB = spark.sparkContext.broadcast(cols)
       val ordsB = spark.sparkContext.broadcast(ordinalsArr)
       val tagOrdsB = spark.sparkContext.broadcast(tagOrdinalsArr)
       val vls = valueLabels
       val mvl = varLabels
-      val counts: Array[Long] =
-        df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-          if (!it.hasNext) Iterator.empty
-          else {
-            val specs = specsB.value
-            val cs2 = java.nio.charset.Charset.forName(csName)
-            val dataF = File.createTempFile(s"graft_mdta_${pid}_", ".chunk")
-            val gsoF = File.createTempFile(s"graft_mgso_${pid}_", ".chunk")
-            val out = new BufferedOutputStream(new FileOutputStream(dataF), 1 << 20)
-            val gso = new BufferedOutputStream(new FileOutputStream(gsoF), 1 << 20)
-            // v16 = 1: each part file is self-contained, so strL refs
-            // restart as if it were a single-chunk file
-            val enc = new RowEncoder(specs, version, cs2, 1, out, gso,
-              ordsB.value, tagOrdsB.value)
-            it.foreach(enc.encode)
-            out.close(); gso.close()
-            val rows = enc.rows
-            assembleFile(s"$path/$partPrefix" + f"$pid%05d.dta", version, specs, rows,
-              Seq((dataF.getAbsolutePath, gsoF.getAbsolutePath)), vls, mvl)
-            dataF.delete(); gsoF.delete()
-            Iterator(rows)
-          }
-        }.collect()
-      require(counts.sum == nObs,
-        s"row count drift: agg=$nObs write=${counts.sum}")
+      WritePass.multiFile(df, options, path, "dta", "dta", st.rows) {
+        (it, scratch, partPath) =>
+          val specs = specsB.value
+          val cs2 = java.nio.charset.Charset.forName(csName)
+          val dataF = scratch("mdta")
+          val gsoF = scratch("mgso")
+          val out = new BufferedOutputStream(new FileOutputStream(dataF), 1 << 20)
+          val gso = new BufferedOutputStream(new FileOutputStream(gsoF), 1 << 20)
+          // v16 = 1: each part file is self-contained, so strL refs
+          // restart as if it were a single-chunk file
+          val enc = new RowEncoder(specs, version, cs2, 1, out, gso,
+            ordsB.value, tagOrdsB.value)
+          it.foreach(enc.encode)
+          out.close(); gso.close()
+          assembleFile(partPath, version, specs, enc.rows,
+            Seq((dataF.getAbsolutePath, gsoF.getAbsolutePath)), vls, mvl)
+          dataF.delete(); gsoF.delete()
+          enc.rows
+      }
       return
     }
 

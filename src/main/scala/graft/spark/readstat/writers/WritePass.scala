@@ -41,6 +41,9 @@ import org.apache.spark.unsafe.Platform
   * the driver before the re-encode for a chunk that is kept, and by the
   * re-encode task for one it replaces, so no spill outlives the jobs.
   * The driver deletes the directory when the write ends, either way.
+  * The driver's directory must therefore be on storage every executor
+  * sees. [[multiFile]] runs a `multiFile` write's one job; its chunks
+  * stay on the executor that made them, in a directory of the task's own.
   */
 private[graft] object WritePass {
 
@@ -72,9 +75,7 @@ private[graft] object WritePass {
     val names = schema.fieldNames.toIndexedSeq
     val kinds = schema.fields.map(f => WriteStats.plainKind(f.dataType))
     val width = schema.length
-    // the write's own directory under scratchDir: one listing removes it
-    val dir = new File(StreamSinkCore.scratchDir(options),
-      "graft_write_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+    val dir = scratchDirOf(options)
     val path = dir.getPath
     // no stats to wait for: the one layout is fixed before the job
     val direct = known.map(layoutOf).orElse(
@@ -129,15 +130,73 @@ private[graft] object WritePass {
           }.collect().toMap
       }
       body(Pass(stats, global, full.toSeq.map(p => again.getOrElse(p.pid, p.chunk.get))))
-    } finally {
-      // a task still finishing after a failed job may add a file between
-      // the listing and the removal; once the directory is gone it cannot
-      var tries = 0
-      while (dir.exists && tries < 3) {
-        Option(dir.listFiles()).foreach(_.foreach(_.delete()))
-        dir.delete()
-        tries += 1
-      }
+    } finally remove(dir)
+  }
+
+  /** The one job behind a `multiFile` write: `path` becomes a directory
+    * of self-contained part files, one per non-empty partition, named
+    * `<prefix>NNNNN.ext`. `part(rows, scratch, out)` encodes a
+    * partition, assembles it at `out` on its executor and returns its
+    * row count, which must sum to `rows`. A part's chunks are read only
+    * by the task that made them, so each task makes its own directory
+    * under its host's `scratchDir` and removes it when it ends, however
+    * it ends: unlike [[run]], nothing here needs a directory the driver
+    * shares. A task killed after it assembled its part (its job failed)
+    * removes the part. If the write fails, the driver removes every part
+    * file of this write's prefix, and the target directory if the write
+    * made it. `clearExt` is the extension pattern `MultiFileParts.prepare`
+    * clears on overwrite. */
+  def multiFile(df: DataFrame, options: Map[String, String], path: String,
+      clearExt: String, ext: String, rows: Long)(
+      part: (Iterator[InternalRow], String => File, String) => Long): Unit = {
+    val name = scratchDirOf(options).getName
+    val target = new File(path)
+    val existed = target.exists
+    val prefix = MultiFileParts.prepare(target, clearExt, options)
+    try {
+      val counts = df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
+        if (!it.hasNext) Iterator.empty
+        else {
+          val ctx = TaskContext.get()
+          val dir = new File(StreamSinkCore.scratchDir(options), s"${name}_${ctx.taskAttemptId}")
+          Files.createDirectories(dir.toPath)
+          ctx.addTaskCompletionListener[Unit](_ => remove(dir))
+          val out = s"$path/$prefix" + f"$pid%05d.$ext"
+          val n = part(it, StreamSinkCore.scratchFileIn(dir, _, pid), out)
+          if (ctx.isInterrupted()) {
+            new File(out).delete()
+            throw new TaskKilledException
+          }
+          Iterator(n)
+        }
+      }.collect()
+      require(counts.sum == rows, s"row count drift: agg=$rows write=${counts.sum}")
+    } catch {
+      case e: Throwable =>
+        Option(target.listFiles()).foreach(_.foreach { f =>
+          if (f.getName.startsWith(prefix) && f.getName.matches(s".*\\.$clearExt"))
+            f.delete()
+        })
+        if (!existed) target.delete() // only if empty
+        throw e
+    }
+  }
+
+  /** A write's own directory under scratchDir (not made yet): one
+    * listing removes it. */
+  private def scratchDirOf(options: Map[String, String]): File =
+    new File(StreamSinkCore.scratchDir(options),
+      "graft_write_" + java.util.UUID.randomUUID().toString.replace("-", ""))
+
+  /** Remove a write's scratch directory. A task still finishing after a
+    * failed job may add a file between the listing and the removal;
+    * once the directory is gone it cannot. */
+  private def remove(dir: File): Unit = {
+    var tries = 0
+    while (dir.exists && tries < 3) {
+      Option(dir.listFiles()).foreach(_.foreach(_.delete()))
+      dir.delete()
+      tries += 1
     }
   }
 

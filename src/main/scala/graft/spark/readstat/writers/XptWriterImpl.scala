@@ -1,6 +1,6 @@
 package graft.spark.readstat.writers
 
-import java.io.{BufferedOutputStream, File, FileOutputStream}
+import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Paths, StandardOpenOption}
 
@@ -194,21 +194,16 @@ object XptWriterImpl {
     // row count, so each part is just header + its records + 80-pad)
     if (options.get("multiFile").exists(_.toBoolean)) {
       val st = known.getOrElse(WriteStats.of(df))
-      val nObs = st.rows
       val cols = layoutOf(st)
       val specsB = spark.sparkContext.broadcast(cols)
       val ordsB = spark.sparkContext.broadcast(ordinalsArr)
       val tagOrdsB = spark.sparkContext.broadcast(tagOrdinalsArr)
-      val partPrefix = MultiFileParts.prepare(new File(path), "xpt", options)
       val header = buildHeader(cols, version, varLabels, tableName, fileLabel)
-      val counts: Array[Long] =
-        df.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-          if (!it.hasNext) Iterator.empty
-          else {
-            val specs = specsB.value
-            val partPath = s"$path/$partPrefix" + f"$pid%05d.xpt"
-            var rows = 0L
-            AtomicFile.write(partPath) { tmp =>
+      WritePass.multiFile(df, options, path, "xpt", "xpt", st.rows) {
+        (it, _, partPath) =>
+          val specs = specsB.value
+          var rows = 0L
+          AtomicFile.write(partPath) { tmp =>
             val out = new BufferedOutputStream(new FileOutputStream(tmp), 1 << 20)
             out.write(header)
             val enc = new XptRowEncoder(specs, out, ordsB.value, tagOrdsB.value)
@@ -226,11 +221,9 @@ object XptWriterImpl {
               StandardOpenOption.READ, StandardOpenOption.WRITE)
             try pandasTailFix(fix, header.length.toLong, partRowLen, rows)
             finally fix.close()
-            }
-            Iterator(rows)
           }
-        }.collect()
-      require(counts.sum == nObs, s"row count drift: agg=$nObs write=${counts.sum}")
+          rows
+      }
       writeCatalog()
       return
     }

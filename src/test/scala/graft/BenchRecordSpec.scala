@@ -6,6 +6,13 @@ import org.scalatest.funsuite.AnyFunSuite
   * never be able to corrupt it. */
 class BenchRecordSpec extends AnyFunSuite {
 
+  test("every touchedThisRound name is a registered query") {
+    // the set is kept by hand; a stale name would silently drop that
+    // query's priority slot in the packed record
+    val unknown = Bench.touchedThisRound -- SparkEntry.queries.keySet
+    assert(unknown.isEmpty, s"not in SparkEntry.queries: ${unknown.toSeq.sorted}")
+  }
+
   test("sanitizeErr strips every JSON-hostile character") {
     val nasty = new RuntimeException(
       "path \"C:\\tmp\"\nline2\u0000\u001b[31mred\u001b[0m\tend\b\f")

@@ -37,4 +37,29 @@ class SmallFilesSpec extends SparkTestBase {
     assert(df.rdd.getNumPartitions >= 40)
     assert(df.count() == 2000L)
   }
+
+  test("mid-size files that fill the slots between them still pack") {
+    // each file alone is 8 open costs of rows, so on its own it splits
+    // into a wave of 4 ranges; eight of them fill the 4 slots between
+    // them, so each keeps one range and they pack as small files do
+    import spark.implicits._
+    val mid = Files.createTempDirectory("graft_mid").toFile
+    mid.deleteOnExit()
+    (0 until 8).foreach { i =>
+      Seq.tabulate(4000)(j => i * 4000.0 + j).toDF("x").coalesce(1)
+        .write.format("readstat").mode("overwrite").save(f"$mid/m$i%02d.dta")
+    }
+    val old = spark.conf.getOption("spark.sql.files.openCostInBytes")
+    spark.conf.set("spark.sql.files.openCostInBytes", "4000")
+    try {
+      val one = spark.read.format("readstat").load(f"$mid/m00.dta")
+      assert(one.rdd.getNumPartitions == 4)
+      val df = spark.read.format("readstat").load(mid.getPath)
+      assert(df.rdd.getNumPartitions == 1)
+      assert(df.count() == 32000L)
+    } finally old match {
+      case Some(v) => spark.conf.set("spark.sql.files.openCostInBytes", v)
+      case None => spark.conf.unset("spark.sql.files.openCostInBytes")
+    }
+  }
 }

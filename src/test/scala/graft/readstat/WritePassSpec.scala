@@ -328,10 +328,10 @@ class WritePassSpec extends SparkTestBase {
     val notADir = File.createTempFile("graft_scratch_", ".file")
     notADir.deleteOnExit()
     val dir = tmpDir()
-    for (ext <- Targets) {
+    for (ext <- Targets; multi <- Seq(false, true)) {
       intercept[Exception](Readstat.write(frame, s"$dir/nodir.$ext",
-        Map("scratchDir" -> notADir.getPath)))
-      assert(!new File(s"$dir/nodir.$ext").exists(), ext)
+        Map("scratchDir" -> notADir.getPath, "multiFile" -> multi.toString)))
+      assert(!new File(s"$dir/nodir.$ext").exists(), s"$ext multiFile=$multi")
     }
   }
 
@@ -345,14 +345,27 @@ class WritePassSpec extends SparkTestBase {
     val df = spark.range(0, 300, 1, 3).select(boom(col("id")).as("x"),
       concat(lit("v"), col("id").cast("string")).as("s"))
     val dir = tmpDir()
-    for (ext <- Targets) {
+    for (ext <- Targets; multi <- Seq(false, true)) {
+      val ctx = s"$ext multiFile=$multi"
       val scratch = Files.createTempDirectory(dir.toPath, "scratch").toFile
-      val e = intercept[Exception](Readstat.write(df, s"$dir/fail.$ext",
-        Map("scratchDir" -> scratch.getPath)))
+      val target = new File(s"$dir/fail_$multi.$ext")
+      val e = intercept[Exception](Readstat.write(df, target.getPath,
+        Map("scratchDir" -> scratch.getPath, "multiFile" -> multi.toString)))
       assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .exists(t => String.valueOf(t.getMessage).contains("boom")), s"$ext: $e")
-      assert(scratch.list().isEmpty, s"$ext: left ${scratch.list().mkString(", ")}")
-      assert(!new File(s"$dir/fail.$ext").exists(), ext)
+        .exists(t => String.valueOf(t.getMessage).contains("boom")), s"$ctx: $e")
+      // a multiFile part task keeps its chunks on its own host and
+      // removes them, and its part if the failed job killed it, when it
+      // ends, which can be after the write has returned
+      def settled(cond: => Boolean): Boolean = if (!multi) cond else {
+        val end = System.nanoTime + 10000000000L
+        while (!cond && System.nanoTime < end) Thread.sleep(20)
+        cond
+      }
+      assert(settled(scratch.list().isEmpty), s"$ctx: left ${scratch.list().mkString(", ")}")
+      // the driver removes the parts of the partitions that finished,
+      // and the directory a multiFile write made for them
+      assert(settled(Option(target.list()).forall(_.isEmpty)) && (multi || !target.exists()),
+        s"$ctx: left ${Option(target.list()).map(_.mkString(", "))}")
     }
   }
 }
