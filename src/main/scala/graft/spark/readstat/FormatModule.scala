@@ -1,6 +1,8 @@
 package graft.spark.readstat
 
+import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
 /** One statistical-file format (dta/sav/sas7bdat/xpt/por) as seen by the
   * DSv2 connector: driver-side schema + partition planning, executor-side
@@ -10,6 +12,12 @@ import org.apache.spark.sql.types.StructType
   * Implementations must keep `metadata` cheap (header/meta parse only —
   * no data read) because it runs at planning time, and the decode
   * embarrassingly parallel across disjoint row ranges.
+  *
+  * Batch reuse contract (Spark's own, as in its vectorized Parquet
+  * reader): a batch and its vectors are valid until the next `next()` of
+  * the iterator that returned it. Every decoder refills one
+  * [[ReusedBatch]] per partition, so consumers must read (or copy) a
+  * batch before pulling the next one.
   */
 trait FormatModule extends Serializable {
 
@@ -56,18 +64,32 @@ trait FormatModule extends Serializable {
     * (dta/xpt/uncompressed sav, with and without an offset): row ranges
     * covering [clamp(offset), min(limit, rowCount)), split by the
     * session's [[SplitRule]]. One definition — an edge-case fix here
-    * must not be applied three times. */
+    * must not be applied three times. The split strides only over the
+    * rows the file's length holds ([[rowsHeld]]): rows a corrupt header
+    * declares beyond them go into one final range, whose decode fails
+    * (or is salvaged) like any truncated tail, instead of planning one
+    * range per target's worth of bytes that are not there. */
   protected final def seekableRowRanges(path: String, opts: ReadstatOptions,
       offset: Long, limit: Option[Long], rowCount: Long,
-      rowLen: Int): Seq[RangePartition] = {
+      rowLen: Int, dataStart: Long, dataEnd: Long = Long.MaxValue): Seq[RangePartition] = {
     val total = limit.map(math.min(_, rowCount)).getOrElse(rowCount)
     val start0 = math.min(math.max(0L, offset), total)
     if (total - start0 <= 0) return Seq(RangePartition(path, start0, 0))
-    val stride = opts.split.stride(total - start0, rowLen, opts.partitionTargetBytes)
-    (start0 until total by stride).map { start =>
-      RangePartition(path, start, math.min(stride, total - start))
-    }
+    val held = math.max(start0, math.min(total, rowsHeld(path, dataStart, rowLen, dataEnd)))
+    val stride = opts.split.stride(held - start0, rowLen, opts.partitionTargetBytes)
+    (start0 until held by stride).map { start =>
+      RangePartition(path, start, math.min(stride, held - start))
+    } ++ (if (held < total) Seq(RangePartition(path, held, total - held)) else Nil)
   }
+
+  /** Complete `rowLen`-byte rows the file holds between `dataStart` and
+    * `dataEnd` (the file's end, when that comes first): the
+    * truncated-tail arithmetic of the fixed-width regimes'
+    * [[salvageableRowCount]]. */
+  protected final def rowsHeld(path: String, dataStart: Long, rowLen: Int,
+      dataEnd: Long = Long.MaxValue): Long =
+    math.max(0L, math.min(dataEnd, new java.io.File(path).length()) - dataStart) /
+      math.max(1, rowLen)
 
   /** Exact total data-row count when obtainable from metadata alone
     * (header fields, record-length arithmetic, page indexes) — the basis
@@ -133,6 +155,87 @@ trait FormatModule extends Serializable {
   final def columnarRows(part: RangePartition, opts: ReadstatOptions,
       required: StructType): Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] =
     columnarRows(part, opts, required, Array.empty)
+}
+
+/** One partition's batch: its vectors are allocated once, at the first
+  * batch's row count, and every later batch `reset`s and refills them
+  * (growing them if a batch is larger). A `new OnHeapColumnVector` costs
+  * two `SQLConf.get` lookups, which on a task thread build a conf object
+  * each, so a decoder allocating per batch pays for them on every batch. */
+final class ReusedBatch(schema: StructType) {
+  private var vectors: Array[OnHeapColumnVector] = _
+  private var batch: ColumnarBatch = _
+
+  /** Empties every vector for a batch of up to `rows` rows. */
+  def reset(rows: Int): Unit =
+    if (vectors == null) {
+      vectors = schema.fields.map(f => new OnHeapColumnVector(math.max(1, rows), f.dataType))
+      batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
+    } else {
+      var i = 0
+      while (i < vectors.length) { vectors(i).reset(); vectors(i).reserve(rows); i += 1 }
+    }
+
+  /** The `i`th column's vector, emptied by the last [[reset]]. */
+  def apply(i: Int): OnHeapColumnVector = vectors(i)
+
+  /** The batch of the vectors' first `rows` rows. */
+  def emit(rows: Int): ColumnarBatch = { batch.setNumRows(rows); batch }
+}
+
+object ReusedBatch {
+  /** Source bytes per batch: the row-major chunk a decoder walks once per
+    * column stays in the core's cache, where a 4 MB chunk is streamed
+    * from memory once per column. From a sweep of 64 KB, 256 KB and 1 MB
+    * (CHANGES.md): the three read the same end to end, and one thread
+    * decoded dta and sav fastest at 64-256 KB. */
+  val TargetBytes: Int = 256 << 10
+
+  /** THE batch-size rule of every decoder, for a batch of `rowBytes`-byte
+    * records with `remaining` rows left: `batchRows` when set, else
+    * [[TargetBytes]] of records (at least one). */
+  def rows(opts: ReadstatOptions, rowBytes: Long, remaining: Long): Int = {
+    val rule =
+      if (opts.batchRows > 0) opts.batchRows.toLong
+      else math.max(1L, TargetBytes / math.max(1L, rowBytes))
+    // a decoder's chunk of rows x rowBytes is one byte array
+    math.min(math.min(rule, remaining), Int.MaxValue / math.max(1L, rowBytes)).toInt
+  }
+}
+
+/** String cells that go into a vector as their file bytes. A cell whose
+  * bytes are all below 0x80 decodes, in a charset that maps 0x00-0x7F to
+  * the same ASCII characters, to exactly those bytes in UTF-8 — so the
+  * String round trip (decode, trim, encode) can be skipped for it. Every
+  * other cell takes the String path. */
+private[readstat] object AsciiCells {
+  private val compat = new java.util.concurrent.ConcurrentHashMap[java.nio.charset.Charset, java.lang.Boolean]()
+
+  /** Whether `cs` decodes every byte 0x00-0x7F, alone and in a run, to
+    * the same character (UTF-16 and EBCDIC do not; ISO-2022-JP reads
+    * escape sequences out of ASCII bytes). */
+  def compatible(cs: java.nio.charset.Charset): Boolean =
+    compat.computeIfAbsent(cs, c => {
+      val all = Array.tabulate(128)(_.toByte)
+      val ascii = new String(all, java.nio.charset.StandardCharsets.ISO_8859_1)
+      java.lang.Boolean.valueOf(new String(all, c) == ascii &&
+        all.forall(b => new String(Array(b), c) == ascii.substring(b, b + 1)))
+    }).booleanValue
+
+  /** Whether `buf[from, until)` holds only bytes below 0x80. */
+  def isAscii(buf: Array[Byte], from: Int, until: Int): Boolean = {
+    var i = from
+    while (i < until && buf(i) >= 0) i += 1
+    i == until
+  }
+
+  /** End of a cell's content in `buf[from, until)` once trailing blanks
+    * and NULs are trimmed. */
+  def trimEnd(buf: Array[Byte], from: Int, until: Int): Int = {
+    var end = until
+    while (end > from && (buf(end - 1) == ' ' || buf(end - 1) == 0)) end -= 1
+    end
+  }
 }
 
 /** THE integral-rendering rule for numeric value-label codes: exact
@@ -246,7 +349,9 @@ final case class ReadstatOptions(
     // more, smaller ranges when that fills the session's task slots
     // (see [[SplitRule]])
     partitionTargetBytes: Long = 128L * 1024 * 1024,
-    batchRows: Int = 0, // 0 = auto (~2M cells per batch)
+    // rows per decoded batch; 0 = auto, a cache-sized byte budget of
+    // records ([[ReusedBatch.rows]])
+    batchRows: Int = 0,
     compress: Boolean = false,
     timeAsTimeType: Boolean = false,
     compressProbeRows: Int = 1000,

@@ -86,6 +86,9 @@ object InformativeNulls {
     override def hasNull: Boolean = false
     override def numNulls: Int = 0
     override def close(): Unit = { main.close(); ind.close() }
+    // Spark frees a consumed batch's non-writable columns through this;
+    // the pair's vectors are the decoder's, refilled for the next batch
+    override def closeIfFreeable(): Unit = { main.closeIfFreeable(); ind.closeIfFreeable() }
     private def leaf = throw new UnsupportedOperationException("struct column")
     override def getBoolean(r: Int): Boolean = leaf
     override def getByte(r: Int): Byte = leaf
@@ -102,12 +105,12 @@ object InformativeNulls {
   }
 
   /** Merged mode's string column from `batch`'s main column `mi` (of
-    * type `mainType`) and indicator column `ii`: the value's string
-    * form, else the indicator, else null. */
+    * type `mainType`) and indicator column `ii`, into `out` (emptied for
+    * the batch's rows): the value's string form, else the indicator,
+    * else null. */
   def mergedVector(batch: ColumnarBatch, mi: Int, ii: Int,
-      mainType: DataType): ColumnVector = {
+      mainType: DataType, out: OnHeapColumnVector): ColumnVector = {
     val rows = batch.numRows
-    val out = new OnHeapColumnVector(math.max(rows, 1), StringType)
     var r = 0
     while (r < rows) {
       val row = batch.getRow(r)

@@ -117,31 +117,29 @@ object Narrowing {
   /** Batches decode with the format's NATURAL types, then only the
     * columns whose target type differs are re-materialized through the
     * castValue semantics (strict downcasts throw, string→double parse
-    * failures null); same-typed columns pass through by reference, zero
-    * copy. Serves compress, schemaOverrides and mergeSchema widening. */
+    * failures null) into one [[ReusedBatch]]; same-typed columns pass
+    * through by reference, zero copy. Serves compress, schemaOverrides
+    * and mergeSchema widening. */
   def castingBatchIterator(
       it: Iterator[org.apache.spark.sql.vectorized.ColumnarBatch],
       from: StructType, to: StructType)
       : Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
     import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
     val n = from.length
     val needs: Array[Int] =
       (0 until n).filter(i => from(i).dataType != to(i).dataType).toArray
     if (needs.isEmpty) return it
+    val cast = new ReusedBatch(StructType(needs.map(to(_))))
     it.map { batch =>
       val rows = batch.numRows()
-      val outVec = new Array[OnHeapColumnVector](n)
-      needs.foreach { i =>
-        outVec(i) = new OnHeapColumnVector(math.max(rows, 1), to(i).dataType)
-      }
+      cast.reset(rows)
       var r = 0
       while (r < rows) {
         val row = batch.getRow(r)
         var k = 0
         while (k < needs.length) {
           val i = needs(k)
-          val vec = outVec(i)
+          val vec = cast(k)
           if (row.isNullAt(i)) vec.putNull(r)
           else castValue(row, i, from(i).dataType, to(i).dataType) match {
             case null => vec.putNull(r) // string→double parse failure
@@ -151,9 +149,9 @@ object Narrowing {
         }
         r += 1
       }
-      val vecs = Array.tabulate[ColumnVector](n) { i =>
-        if (outVec(i) != null) outVec(i) else batch.column(i)
-      }
+      val vecs = Array.tabulate[ColumnVector](n)(batch.column)
+      var k = 0
+      while (k < needs.length) { vecs(needs(k)) = cast(k); k += 1 }
       new ColumnarBatch(vecs, rows)
     }
   }

@@ -190,7 +190,7 @@ object PorModule extends FormatModule {
       pushed: Array[org.apache.spark.sql.sources.Filter])
       : Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+    import org.apache.spark.sql.vectorized.ColumnarBatch
 
     val md = metadata(part.path)
     require(md.vars.nonEmpty, "por: file declares no variables")
@@ -253,11 +253,7 @@ object PorModule extends FormatModule {
       if (pred == null) -1
       else pushed.flatMap(_.references).flatMap(byName.get).foldLeft(-1)(math.max)
 
-    // ~2M cells per batch, same auto rule as the fixed-width modules
-    val batchRows = math.max(1, math.min(
-      if (opts.batchRows > 0) opts.batchRows.toLong
-      else math.max(1024L, (2L << 20) / md.vars.length),
-      Int.MaxValue)).toInt
+    val vecs = new ReusedBatch(required)
 
     new Iterator[ColumnarBatch] {
       private var limit = if (skimEof) 0L else part.numRows
@@ -362,7 +358,7 @@ object PorModule extends FormatModule {
         case other => other
       }
 
-      /** Decode up to batchRows rows straight into fresh vectors; null
+      /** Decode up to the batch rule's rows straight into the vectors; null
         * when the stream (or the partition's row budget) is exhausted.
         * Cells no required field reads are skimmed, same as the row
         * path. With a pushed predicate, each row's prefix up to the
@@ -373,13 +369,10 @@ object PorModule extends FormatModule {
         * propagate — never masquerade as EOF. */
       private def readBatch(): ColumnarBatch = {
         if (limit <= 0) { finish(); return null }
-        val m = math.min(batchRows.toLong, limit).toInt
-        val vectors = new Array[ColumnVector](required.length)
-        var c = 0
-        while (c < required.length) {
-          vectors(c) = new OnHeapColumnVector(m, required.fields(c).dataType)
-          c += 1
-        }
+        // POR's text records have no fixed length: the batch rule counts
+        // a row as one 8-byte decoded cell per variable
+        val m = ReusedBatch.rows(opts, 8L * md.vars.length, limit)
+        vecs.reset(m)
         var r = 0
         var scanned = 0
         while (scanned < m && !done) {
@@ -421,34 +414,40 @@ object PorModule extends FormatModule {
                 // (they set lastInd) and route both outputs
                 val value = if (v.isString) decodeStrCell(i, v, c0)
                             else decodeNumCell(i, v, c0)
-                val ivec = vectors(indFi).asInstanceOf[OnHeapColumnVector]
+                val ivec = vecs(indFi)
                 if (lastInd == null) ivec.putNull(r)
                 else ivec.putByteArray(r, lastInd, 0, lastInd.length)
                 if (fi >= 0)
-                  putCell(vectors(fi).asInstanceOf[OnHeapColumnVector], r, value)
+                  putCell(vecs(fi), r, value)
               } else if (v.isString) {
                 // direct, boxing-free vector writes on the hot path
-                val vec = vectors(fi).asInstanceOf[OnHeapColumnVector]
-                val len = stream.readDoublePeek(c0).toInt
-                val s0 = new String(stream.readChars(len),
-                  java.nio.charset.StandardCharsets.ISO_8859_1)
-                var e = s0.length
-                while (e > 0 && s0(e - 1) == ' ') e -= 1
-                val s = s0.substring(0, e)
-                val userMiss = v.missingStrings.nonEmpty &&
-                  v.missingStrings.contains(s)
-                if ((s.isEmpty && opts.missingStringAsNull) || userMiss)
-                  vec.putNull(r)
-                else {
-                  var b: Array[Byte] =
-                    if (labelStr(i) != null) labelStr(i).getOrElse(s, null)
-                    else null
-                  if (b == null)
-                    b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-                  vec.putByteArray(r, b, 0, b.length)
+                val vec = vecs(fi)
+                val raw = stream.readChars(stream.readDoublePeek(c0).toInt)
+                var e = raw.length
+                while (e > 0 && raw(e - 1) == ' ') e -= 1
+                if (v.missingStrings.isEmpty && labelStr(i) == null &&
+                    AsciiCells.isAscii(raw, 0, e)) {
+                  // ISO-8859-1 maps every byte below 0x80 to itself
+                  if (e == 0 && opts.missingStringAsNull) vec.putNull(r)
+                  else vec.putByteArray(r, raw, 0, e)
+                } else {
+                  val s = new String(raw, 0, e,
+                    java.nio.charset.StandardCharsets.ISO_8859_1)
+                  val userMiss = v.missingStrings.nonEmpty &&
+                    v.missingStrings.contains(s)
+                  if ((s.isEmpty && opts.missingStringAsNull) || userMiss)
+                    vec.putNull(r)
+                  else {
+                    var b: Array[Byte] =
+                      if (labelStr(i) != null) labelStr(i).getOrElse(s, null)
+                      else null
+                    if (b == null)
+                      b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+                    vec.putByteArray(r, b, 0, b.length)
+                  }
                 }
               } else {
-                val vec = vectors(fi).asInstanceOf[OnHeapColumnVector]
+                val vec = vecs(fi)
                 val d =
                   if (c0 == '*') {
                     val c2 = stream.readChar()
@@ -480,10 +479,10 @@ object PorModule extends FormatModule {
                   while (j <= maxPredVar) {
                     val fj = fieldOfVar(j)
                     if (fj >= 0)
-                      putCell(vectors(fj).asInstanceOf[OnHeapColumnVector], r, pv(j))
+                      putCell(vecs(fj), r, pv(j))
                     val ij = indFieldOfVar(j)
                     if (ij >= 0) {
-                      val ivec = vectors(ij).asInstanceOf[OnHeapColumnVector]
+                      val ivec = vecs(ij)
                       if (pvInd(j) == null) ivec.putNull(r)
                       else ivec.putByteArray(r, pvInd(j), 0, pvInd(j).length)
                     }
@@ -523,8 +522,7 @@ object PorModule extends FormatModule {
             scanned += 1
             if (!skipped) {
               if (rowIdxField >= 0)
-                vectors(rowIdxField).asInstanceOf[OnHeapColumnVector]
-                  .putLong(r, rowIdx)
+                vecs(rowIdxField).putLong(r, rowIdx)
               r += 1
             }
             rowIdx += 1
@@ -533,8 +531,8 @@ object PorModule extends FormatModule {
         limit -= scanned
         if (done) stream.close()
         else if (limit <= 0) finish()
-        if (r == 0 && (done || limit <= 0)) { vectors.foreach(_.close()); null }
-        else new ColumnarBatch(vectors, r)
+        if (r == 0 && (done || limit <= 0)) null
+        else vecs.emit(r)
       }
     }
   }

@@ -864,7 +864,11 @@ class ReadstatPartitionReaderFactory(required: StructType,
           // merged renders the value's natural type
           val mi = slot(main, main.dataType)
           val ii = slot(byName(ind), StringType)
-          (b: ColumnarBatch) => InformativeNulls.mergedVector(b, mi, ii, main.dataType)
+          val merged = new ReusedBatch(StructType(Seq(f)))
+          (b: ColumnarBatch) => {
+            merged.reset(b.numRows)
+            InformativeNulls.mergedVector(b, mi, ii, main.dataType, merged(0))
+          }
         case (Some(col), None) if InformativeNulls.structValue(f.dataType).isDefined =>
           // no indicator in this file (mergeSchema): a null one
           val j = slot(col, InformativeNulls.structValue(f.dataType).get)

@@ -330,8 +330,9 @@ object SasModule extends FormatModule {
     }
   }
 
-  /** One ColumnarBatch per data-bearing page: per-column tight loops over
-    * the page's fixed-width row slots (rows never span pages). RLE/RDC
+  /** Batches of a page's fixed-width row slots: per-column tight loops,
+    * at most the batch rule's rows each, and never spanning pages (rows
+    * never do; with the default rule a batch is a whole page). RLE/RDC
     * pages decompress their row subheaders into one contiguous page-local
     * buffer first, then run the same column loops over it.
     *
@@ -344,7 +345,7 @@ object SasModule extends FormatModule {
       pushed: Array[org.apache.spark.sql.sources.Filter])
       : Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+    import org.apache.spark.sql.vectorized.ColumnarBatch
 
     val md = metadata(part.path)
     failIfTruncated(part.path, md, opts)
@@ -377,6 +378,7 @@ object SasModule extends FormatModule {
         pageRowOffsets(part.path)(part.startRow.toInt)
       else 0L)
     val cs = md.charset
+    val asciiCs = AsciiCells.compatible(cs)
     val little = md.little
     val rowLen = md.rowLength
     val startPage = part.startRow.toInt
@@ -504,11 +506,13 @@ object SasModule extends FormatModule {
         }
         case None => null
       }
-    val decoders = cellDecoders.toArray
+    val rowFilter =
+      if (bytesPred == null) null else new RowFilter(cellDecoders.toArray, bytesPred, fastPred)
 
     val raf = new RandomAccessFile(part.path, "r")
     raf.seek(md.headerLength.toLong + startPage.toLong * md.pageLength)
     val page = new Array[Byte](md.pageLength)
+    val vecs = new ReusedBatch(required)
 
     new Iterator[ColumnarBatch] {
       private var pageIdx = startPage
@@ -516,9 +520,12 @@ object SasModule extends FormatModule {
       // OFFSET pushdown: leading rows to drop from the first page(s)
       private var toSkip = part.skipRows
       // prefetched page's rows: buffer + per-row offsets (buffer is the
-      // page itself when nothing needed decompression)
+      // page itself when nothing needed decompression), of which the
+      // first pendingPos are consumed
       private var pendingBuf: Array[Byte] = _
       private var pendingOffs: Array[Int] = _
+      private var pendingPos = 0
+      private var unpacked: Array[Byte] = Array.emptyByteArray
       private var closed = false
       private def close(): Unit = if (!closed) { closed = true; raf.close() }
 
@@ -528,11 +535,14 @@ object SasModule extends FormatModule {
       private def materializePage(): Boolean = {
         val slots = pageRowSlots(page, md)
         if (slots.isEmpty) return false
+        pendingPos = 0
         if (!slots.exists(_._3)) {
           pendingBuf = page
           pendingOffs = slots.map(_._1).toArray
         } else {
-          val buf = new Array[Byte](slots.length * rowLen)
+          if (unpacked.length < slots.length * rowLen)
+            unpacked = new Array[Byte](slots.length * rowLen)
+          val buf = unpacked
           var i = 0
           slots.foreach { case (off, len, needsDecomp) =>
             if (!needsDecomp) System.arraycopy(page, off, buf, i * rowLen, len)
@@ -572,82 +582,59 @@ object SasModule extends FormatModule {
         if (pendingOffs == null) { close(); false } else true
       }
 
-      // current buffer context for the bytes-predicate getter; decoded
-      // filter cells memoize per row — Catalyst pushes IsNotNull
-      // alongside every range conjunct, so a compiled predicate reads
-      // the same slot 2-3× per row (see StataModule)
-      private var curBuf: Array[Byte] = _
-      private var curBase = 0
-      private var predRow = 0L
-      private val slotVals = new Array[Any](decoders.length)
-      private val slotStamp = Array.fill(decoders.length)(Long.MinValue)
-      private val predGetter: Int => Any = slot => {
-        if (slotStamp(slot) == predRow) slotVals(slot)
-        else {
-          val v = decoders(slot)(curBuf, curBase)
-          slotVals(slot) = v; slotStamp(slot) = predRow; v
-        }
-      }
-      private def rowPass(buf: Array[Byte], base: Int): Boolean =
-        if (fastPred != null) fastPred(buf, base)
-        else {
-          curBuf = buf; curBase = base; predRow += 1
-          bytesPred(predGetter)
-        }
 
       override def next(): ColumnarBatch = {
         if (!hasNext) throw new NoSuchElementException
         val buf = pendingBuf
         var offs = pendingOffs
-        pendingBuf = null; pendingOffs = null
         // OFFSET pushdown: drop leading skipped slots positionally
         // (counted as consumed — capRows caps consumption). By
         // construction skipRows lands mid-FIRST-page (planPartitionsAt
         // picks the last page with prefix <= offset), so one drop here
         // always leaves the batch non-empty; the min() is just defensive
         if (toSkip > 0) {
-          val k = math.min(toSkip, offs.length.toLong).toInt
-          offs = java.util.Arrays.copyOfRange(offs, k, offs.length)
-          emitted += k; toSkip -= k
+          val k = math.min(toSkip, (offs.length - pendingPos).toLong).toInt
+          pendingPos += k; emitted += k; toSkip -= k
         }
-        if (emitted + offs.length > capRows)
-          offs = offs.take((capRows - emitted).toInt)
-        val rawN = offs.length
+        var from = pendingPos
+        val rawN = math.max(0L, math.min(
+          ReusedBatch.rows(opts, rowLen, offs.length - from), capRows - emitted)).toInt
         val startRow = rowIndexBase + emitted
         emitted += rawN
+        pendingPos += rawN
+        if (pendingPos >= offs.length || emitted >= capRows) {
+          pendingBuf = null; pendingOffs = null
+        }
         // pushed-filter pass: keep only passing row offsets; `sel`
-        // remembers each survivor's page-local position for row indexes
+        // remembers each survivor's position in the batch for row indexes
         var sel: Array[Int] = null
         var n = rawN
-        if (bytesPred != null) {
+        if (rowFilter != null) {
           val keptOff = new Array[Int](rawN)
           val keptPos = new Array[Int](rawN)
           var k = 0
           var r = 0
           while (r < rawN) {
-            if (rowPass(buf, offs(r))) { keptOff(k) = offs(r); keptPos(k) = r; k += 1 }
+            if (rowFilter.pass(buf, offs(from + r))) {
+              keptOff(k) = offs(from + r); keptPos(k) = r; k += 1
+            }
             r += 1
           }
-          if (k < rawN) {
-            offs = java.util.Arrays.copyOf(keptOff, k)
-            sel = java.util.Arrays.copyOf(keptPos, k)
-            n = k
-          }
+          if (k < rawN) { offs = keptOff; from = 0; sel = keptPos; n = k }
         }
-        val vectors = new Array[ColumnVector](plans.length)
+        vecs.reset(n)
         var c = 0
         while (c < plans.length) {
-          val vec = new OnHeapColumnVector(math.max(n, 1), required.fields(c).dataType)
-          decodeColumn(plans(c), buf, offs, n, startRow, vec, sel)
-          vectors(c) = vec
+          decodeColumn(plans(c), buf, offs, from, n, startRow, vecs(c), sel)
           c += 1
         }
-        new ColumnarBatch(vectors, n)
+        vecs.emit(n)
       }
 
+      /** Decodes the rows at `offs(from)` .. `offs(from + n - 1)`. */
       private def decodeColumn(pl: (SasColumn, Kind, DoubleByteLut, Map[String, String], Boolean),
           page: Array[Byte],
-          offs: Array[Int], n: Int,
+          offs: Array[Int], from: Int, n: Int,
           startRow: Long, vec: OnHeapColumnVector, sel: Array[Int] = null): Unit = {
         val (col, kind, numLut, chLabels, indicator) = pl
         if (col == null) { // row index (filtered batches map through sel)
@@ -663,7 +650,7 @@ object SasModule extends FormatModule {
           while (r < n) {
             if (col.isChar) vec.putNull(r)
             else {
-              val k = SasModule.missingTagIn(page, offs(r) + col.offset,
+              val k = SasModule.missingTagIn(page, offs(from + r) + col.offset,
                 col.length, little)
               if (k >= 1 && k <= 26) {
                 val b = ("." + ('A' + k - 1).toChar)
@@ -679,16 +666,18 @@ object SasModule extends FormatModule {
           return
         }
         if (kind == KChar) {
+          val bytePath = asciiCs && chLabels == null
           var r = 0
           while (r < n) {
-            val off = offs(r) + col.offset
-            var end = off + col.length
-            while (end > off && (page(end - 1) == ' ' || page(end - 1) == 0)) end -= 1
+            val off = offs(from + r) + col.offset
+            val end = AsciiCells.trimEnd(page, off, off + col.length)
             var stop = off
             while (stop < end && page(stop) != 0) stop += 1
             if (stop == off) {
               if (opts.missingStringAsNull) vec.putNull(r)
               else vec.putByteArray(r, Array.emptyByteArray, 0, 0)
+            } else if (bytePath && AsciiCells.isAscii(page, off, stop)) {
+              vec.putByteArray(r, page, off, stop - off)
             } else {
               val s = new String(page, off, stop - off, cs)
               // char-format catalog labels: matched codes map, unmatched
@@ -707,7 +696,7 @@ object SasModule extends FormatModule {
           val dictIds = vec.reserveDictionaryIds(n)
           var r = 0
           while (r < n) {
-            val v = SasCore.incompleteDouble(page, offs(r) + col.offset,
+            val v = SasCore.incompleteDouble(page, offs(from + r) + col.offset,
               col.length, little)
             if (v.isNaN || v.isInfinite) vec.putNull(r)
             else {
@@ -723,7 +712,7 @@ object SasModule extends FormatModule {
         } else {
           var r = 0
           while (r < n) {
-            val v = SasCore.incompleteDouble(page, offs(r) + col.offset,
+            val v = SasCore.incompleteDouble(page, offs(from + r) + col.offset,
               col.length, little)
             if (v.isNaN || v.isInfinite) vec.putNull(r)
             else kind match {

@@ -134,8 +134,7 @@ object SpssModule extends FormatModule {
       opts: ReadstatOptions): Option[Long] = {
     val md = metadata(path)
     if (md.compression != 0 || md.recordLen <= 0) return None
-    val avail = new java.io.File(path).length() - md.dataOffset
-    val phys = if (avail < 0) 0L else avail / md.recordLen
+    val phys = rowsHeld(path, md.dataOffset, md.recordLen)
     val declared = rowCount(path, md)
     Some(if (declared == Long.MaxValue) phys else math.min(declared, phys))
   }
@@ -145,7 +144,7 @@ object SpssModule extends FormatModule {
     val md = metadata(path)
     val n0 = rowCount(path, md)
     if (md.compression == 0)
-      return seekableRowRanges(path, opts, 0L, limit, n0, md.recordLen)
+      return seekableRowRanges(path, opts, 0L, limit, n0, md.recordLen, md.dataOffset)
     // compressed (bytecode/zsav): one sequential range when the rows to
     // read fit one stride — otherwise build the checkpoint index and
     // emit resumable range partitions
@@ -187,7 +186,7 @@ object SpssModule extends FormatModule {
     val md = metadata(path)
     if (md.compression == 0)
       return Some(seekableRowRanges(path, opts, offset, limit,
-        rowCount(path, md), md.recordLen))
+        rowCount(path, md), md.recordLen, md.dataOffset))
     val off0 = math.max(0L, offset)
     val k = compressedStride(path, opts, md)
     if (k >= rowCount(path, md)) {
@@ -230,19 +229,18 @@ object SpssModule extends FormatModule {
     * recordLen-strided chunk buffer, so every regime runs the same
     * typed column loops.
     *
-    * Pushed filters (r12): filter cells evaluate over the raw chunk
-    * first, passing rows compact into a contiguous buffer, and the
-    * per-column loops run over the survivors (see StataModule — same
-    * compaction design). */
+    * Pushed filters (r12) skip rows through [[RowFilter]]: passing rows
+    * compact before the per-column loops run over the survivors. */
   override def columnarRows(part: RangePartition, opts: ReadstatOptions,
       required: StructType,
       pushed: Array[org.apache.spark.sql.sources.Filter])
       : Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+    import org.apache.spark.sql.vectorized.ColumnarBatch
 
     val md = metadata(part.path)
     val recordLen = md.recordLen
+    val asciiCs = AsciiCells.compatible(md.charset)
     val byName = md.vars.zipWithIndex.map { case (v, i) => v.name -> i }.toMap
     // (var or null for row index, numeric label LUT or null,
     //  string-label flag, indicator flag)
@@ -405,13 +403,14 @@ object SpssModule extends FormatModule {
         }
         case None => null
       }
-    val decoders = cellDecoders.toArray
+    val rowFilter =
+      if (bytesPred == null) null else new RowFilter(cellDecoders.toArray, bytesPred, fastPred)
     // projected decode bytes per row, for the compaction gate below
     val projBytes: Long = plans.collect {
       case (v, _, _, _) if v != null =>
         (if (v.isString) v.widthUnits * 8 else 8).toLong }.sum
 
-    val chunkRows = math.max(1, (4 << 20) / math.max(1, recordLen))
+    val vecs = new ReusedBatch(required)
     // uncompressed: bulk reads off a seek; compressed: checkpointed
     // sequential decompression through a RowSource
     val raf = if (md.compression == 0) {
@@ -438,10 +437,12 @@ object SpssModule extends FormatModule {
         remaining > 0
       }
 
+      private var buf: Array[Byte] = Array.emptyByteArray
+
       override def next(): ColumnarBatch = {
-        var n = math.min(chunkRows.toLong, remaining).toInt
-        val buf = new Array[Byte](n * recordLen)
-        if (raf != null) raf.readFully(buf)
+        var n = ReusedBatch.rows(opts, recordLen, remaining)
+        if (buf.length < n * recordLen) buf = new Array[Byte](n * recordLen)
+        if (raf != null) raf.readFully(buf, 0, n * recordLen)
         else {
           // assemble the chunk from decompressed rows; the source
           // null-terminates at EOF (checkpoint row counts are exact,
@@ -459,97 +460,22 @@ object SpssModule extends FormatModule {
         val startRow = globalRow
         remaining -= n; globalRow += n
         if (remaining <= 0) close()
-        // pushed-filter pass: evaluate on filter cells, compact the
-        // survivors — gated by the same byte model as StataModule (a
-        // high-selectivity batch with a narrow projection emits
-        // unfiltered; the Catalyst residual filters it)
         var data = buf
         var m = n
         var sel: Array[Int] = null
-        if (bytesPred != null) {
-          if (predDisabled) {
-            // periodic re-probe, same rationale as StataModule (r13)
-            batchesSinceProbe += 1
-            if (batchesSinceProbe >= 8) predDisabled = false
-          }
-          if (!predDisabled) {
-            // r13 row-sample probe before the full pass, same design
-            // as StataModule: ≤256 strided rows estimate selectivity;
-            // the exact per-batch gate below stays as the backstop
-            val stride = math.max(1, n / 256)
-            var samples = 0
-            var hits = 0
-            var sr = 0
-            while (sr < n) {
-              if (rowPass(buf, sr * recordLen)) hits += 1
-              samples += 1
-              sr += stride
-            }
-            val selEst = n.toLong * hits / math.max(1, samples)
-            if (hits == samples ||
-                selEst * recordLen >= (n - selEst) * (projBytes + 16)) {
-              predDisabled = true
-              batchesSinceProbe = 0
-            } else {
-              val s = new Array[Int](n)
-              var selLen = 0
-              var r = 0
-              while (r < n) {
-                if (rowPass(buf, r * recordLen)) { s(selLen) = r; selLen += 1 }
-                r += 1
-              }
-              if (selLen < n &&
-                  selLen.toLong * recordLen <
-                    (n - selLen).toLong * (projBytes + 16)) {
-                val cbuf = new Array[Byte](selLen * recordLen)
-                var i = 0
-                while (i < selLen) {
-                  System.arraycopy(buf, s(i) * recordLen, cbuf, i * recordLen, recordLen)
-                  i += 1
-                }
-                data = cbuf; m = selLen; sel = s
-              } else {
-                predDisabled = true
-                batchesSinceProbe = 0
-              }
-            }
-          }
+        if (rowFilter != null) {
+          m = rowFilter.compact(buf, n, recordLen, projBytes)
+          data = rowFilter.data; sel = rowFilter.sel
         }
-        val vectors = new Array[ColumnVector](plans.length)
+        vecs.reset(m)
         var c = 0
         while (c < plans.length) {
-          val vec = new OnHeapColumnVector(math.max(m, 1), required.fields(c).dataType)
-          decodeColumn(plans(c), required.fields(c).dataType, data, m, startRow, vec, sel)
-          vectors(c) = vec
+          decodeColumn(plans(c), required.fields(c).dataType, data, m, startRow, vecs(c), sel)
           c += 1
         }
-        new ColumnarBatch(vectors, m)
+        vecs.emit(m)
       }
 
-      // current chunk context for the bytes-predicate getter; decoded
-      // filter cells memoize per row — Catalyst pushes IsNotNull
-      // alongside every range conjunct, so a compiled predicate reads
-      // the same slot 2-3× per row (see StataModule)
-      private var curBuf: Array[Byte] = _
-      private var curBase = 0
-      private var predRow = 0L
-      private val slotVals = new Array[Any](decoders.length)
-      private val slotStamp = Array.fill(decoders.length)(Long.MinValue)
-      private val predGetter: Int => Any = slot => {
-        if (slotStamp(slot) == predRow) slotVals(slot)
-        else {
-          val v = decoders(slot)(curBuf, curBase)
-          slotVals(slot) = v; slotStamp(slot) = predRow; v
-        }
-      }
-      private def rowPass(buf: Array[Byte], base: Int): Boolean =
-        if (fastPred != null) fastPred(buf, base)
-        else {
-          curBuf = buf; curBase = base; predRow += 1
-          bytesPred(predGetter)
-        }
-      private var predDisabled = false
-      private var batchesSinceProbe = 0
 
       private val missingBytes =
         "MISSING".getBytes(java.nio.charset.StandardCharsets.UTF_8)
@@ -618,22 +544,31 @@ object SpssModule extends FormatModule {
         val off = v.offsetUnits * 8
         if (v.isString) {
           val storage = v.widthUnits * 8
+          val width = math.min(v.stringLen, storage)
+          // byte path: trimming blanks and NULs off ASCII bytes is trimSav
+          val bytePath = asciiCs && v.stringLen <= 255 && v.missingStrings.isEmpty && !strLab
           var r = 0; var base = 0
           while (r < n) {
-            val raw =
-              if (v.stringLen > 255)
-                SpssCore.reconstructVeryLong(buf, base + off, storage, v.stringLen)
-              else java.util.Arrays.copyOfRange(buf, base + off,
-                base + off + math.min(v.stringLen, storage))
-            val s = SpssCore.trimSav(new String(raw, md.charset))
-            if ((opts.missingStringAsNull && s.isEmpty) || v.missingStrings.contains(s))
-              vec.putNull(r)
-            else {
-              // string value labels decode in place (label beats the
-              // stored value, unlabeled values pass)
-              val out = if (strLab) v.strLabels.getOrElse(s, s) else s
-              val b = out.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-              vec.putByteArray(r, b, 0, b.length)
+            val from = base + off
+            val end = if (bytePath) AsciiCells.trimEnd(buf, from, from + width) else -1
+            if (bytePath && AsciiCells.isAscii(buf, from, end)) {
+              if (end == from && opts.missingStringAsNull) vec.putNull(r)
+              else vec.putByteArray(r, buf, from, end - from)
+            } else {
+              val raw =
+                if (v.stringLen > 255)
+                  SpssCore.reconstructVeryLong(buf, from, storage, v.stringLen)
+                else java.util.Arrays.copyOfRange(buf, from, from + width)
+              val s = SpssCore.trimSav(new String(raw, md.charset))
+              if ((opts.missingStringAsNull && s.isEmpty) || v.missingStrings.contains(s))
+                vec.putNull(r)
+              else {
+                // string value labels decode in place (label beats the
+                // stored value, unlabeled values pass)
+                val out = if (strLab) v.strLabels.getOrElse(s, s) else s
+                val b = out.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+                vec.putByteArray(r, b, 0, b.length)
+              }
             }
             r += 1; base += recordLen
           }

@@ -171,16 +171,30 @@ object StataModule extends FormatModule {
     // which fails loudly, never to a silent metadata count. v117+ rows
     // start AFTER the 6-byte <data> tag (same geometry as the decoders
     // and salvageableRowCount), so the presence check must include it
-    val dataStart = md.dataOffset + (if (md.version >= 117) 6 else 0)
-    val need = dataStart + md.nObs * math.max(1, md.rowLen).toLong
+    val need = dataStart(md) + md.nObs * math.max(1, md.rowLen).toLong
     if (new java.io.File(path).length() >= need) Some(md.nObs) else None
   }
 
   override def planPartitions(path: String, opts: ReadstatOptions,
       limit: Option[Long]): Seq[RangePartition] = {
     val md = metadata(path)
-    seekableRowRanges(path, opts, 0L, limit, md.nObs, md.rowLen)
+    seekableRowRanges(path, opts, 0L, limit, md.nObs, md.rowLen, dataStart(md),
+      dataEnd(md))
   }
+
+  /** File offset of the first data row: v117+ rows start AFTER the
+    * 6-byte <data> tag. */
+  private def dataStart(md: StataTypes.Metadata): Long =
+    md.dataOffset + (if (md.version >= 117) 6 else 0)
+
+  /** File offset just past the last data row: v117+ rows end at the
+    * `</data>` tag before the map's `<strls>` offset (when that offset
+    * lies after the data start). Older files have no map: their rows are
+    * counted to the end of the file. */
+  private def dataEnd(md: StataTypes.Metadata): Long =
+    if (md.version >= 117 && md.strlsOffset >= dataStart(md) + "</data>".length)
+      md.strlsOffset - "</data>".length
+    else Long.MaxValue
 
   /** Fixed-width rows seek in O(1), so OFFSET pushdown is pure range
     * arithmetic: partitions over rows [offset, min(limit, nObs)). */
@@ -189,7 +203,8 @@ object StataModule extends FormatModule {
   override def planPartitionsAt(path: String, opts: ReadstatOptions,
       offset: Long, limit: Option[Long]): Option[Seq[RangePartition]] = {
     val md = metadata(path)
-    Some(seekableRowRanges(path, opts, offset, limit, md.nObs, md.rowLen))
+    Some(seekableRowRanges(path, opts, offset, limit, md.nObs, md.rowLen,
+      dataStart(md), dataEnd(md)))
   }
 
   /** Truncated-tail arithmetic for `mode=permissive`: the complete
@@ -203,10 +218,7 @@ object StataModule extends FormatModule {
     val md = metadata(path)
     if (md.variables.exists(_.varType == TStrL))
       return None
-    val dataStart = md.dataOffset + (if (md.version >= 117) 6 else 0)
-    val avail = new java.io.File(path).length() - dataStart
-    if (avail < 0) Some(0L)
-    else Some(math.min(md.nObs, avail / math.max(1, md.rowLen)))
+    Some(math.min(md.nObs, rowsHeld(path, dataStart(md), md.rowLen, dataEnd(md))))
   }
 
   /** strL (GSO) reference cell: (v, o) key into the strL table. One
@@ -233,22 +245,20 @@ object StataModule extends FormatModule {
     * per cell, and values land unboxed in OnHeapColumnVectors (mirrors
     * the reference's per-column byte plans, stata/data.rs).
     *
-    * Pushed filters (r12): the predicate runs over the raw chunk FIRST
-    * — decoding only the filter columns' bytes per row — then passing
-    * rows COMPACT into a contiguous buffer and the per-column loops run
-    * unchanged over the survivors. Failing rows' non-filter bytes are
-    * never decoded; the copy is sequential and cheap next to decode. */
+    * Pushed filters (r12) skip rows through [[RowFilter]]: passing rows
+    * compact before the per-column loops run over the survivors. */
   override def columnarRows(part: RangePartition, opts: ReadstatOptions,
       required: StructType,
       pushed: Array[org.apache.spark.sql.sources.Filter])
       : Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+    import org.apache.spark.sql.vectorized.ColumnarBatch
 
     val md = metadata(part.path)
     val little = md.littleEndian
     val rules = md.rules
     val cs = md.charset
+    val asciiCs = AsciiCells.compatible(cs)
     val rowLen = md.rowLen
 
     val offsets = new Array[Int](md.nVars)
@@ -427,18 +437,15 @@ object StataModule extends FormatModule {
         }
         case None => null
       }
-    val decoders = cellDecoders.toArray
+    val rowFilter =
+      if (bytesPred == null) null else new RowFilter(cellDecoders.toArray, bytesPred, fastPred)
     // projected decode bytes per row, for the compaction gate below
     val projBytes: Long = plans.collect {
       case p if p._1 >= 0 => p._3.width.toLong }.sum
 
     val raf = new RandomAccessFile(part.path, "r")
-    val dataStart = md.dataOffset + (if (md.version >= 117) 6 else 0)
-    raf.seek(dataStart + part.startRow * rowLen)
-    val chunkRows = math.max(1, math.min(
-      if (opts.batchRows > 0) opts.batchRows
-      else math.max(1024, (4 << 20) / math.max(1, rowLen)),
-      Int.MaxValue)).toInt
+    raf.seek(dataStart(md) + part.startRow * rowLen)
+    val vecs = new ReusedBatch(required)
 
     new Iterator[ColumnarBatch] {
       private var remaining = part.numRows
@@ -451,124 +458,30 @@ object StataModule extends FormatModule {
         remaining > 0
       }
 
-      // current chunk context for the bytes-predicate getter. Decoded
-      // filter cells MEMOIZE per row (stamp array): Catalyst pushes
-      // IsNotNull alongside every range conjunct, so a compiled
-      // predicate reads the same slot 2-3× per row — without the memo
-      // each read re-decodes the cell from bytes (the r13 date-range
-      // band paid ~2.7 date decodes/row and measured SLOWER than the
-      // unfiltered read).
-      private var curBuf: Array[Byte] = _
-      private var curBase = 0
-      private var predRow = 0L
-      private val slotVals = new Array[Any](decoders.length)
-      private val slotStamp = Array.fill(decoders.length)(Long.MinValue)
-      private val predGetter: Int => Any = slot => {
-        if (slotStamp(slot) == predRow) slotVals(slot)
-        else {
-          val v = decoders(slot)(curBuf, curBase)
-          slotVals(slot) = v; slotStamp(slot) = predRow; v
-        }
-      }
-      private def rowPass(buf: Array[Byte], base: Int): Boolean =
-        if (fastPred != null) fastPred(buf, base)
-        else {
-          curBuf = buf; curBase = base; predRow += 1
-          bytesPred(predGetter)
-        }
-      private var predDisabled = false
-      private var batchesSinceProbe = 0
+      private var buf: Array[Byte] = Array.emptyByteArray
 
       override def next(): ColumnarBatch = {
-        val n = math.min(chunkRows.toLong, remaining).toInt
-        val buf = new Array[Byte](n * rowLen)
-        try raf.readFully(buf)
+        val n = ReusedBatch.rows(opts, rowLen, remaining)
+        if (buf.length < n * rowLen) buf = new Array[Byte](n * rowLen)
+        try raf.readFully(buf, 0, n * rowLen)
         catch { case e: Throwable => close(); throw e }
         val startRow = globalRow
         remaining -= n; globalRow += n
         if (remaining <= 0) close()
-        // pushed-filter pass: decode ONLY filter cells per row, compact
-        // the passing rows' bytes, then run the per-column loops over
-        // the survivors — failing rows' other cells are never decoded.
-        // Compaction gate: the copy moves selLen×rowLen bytes while the
-        // skip saves (n-selLen)×(projected decode + ~16 B/row of
-        // downstream ColumnarToRow/Filter work) — at high selectivity
-        // with a narrow projection the copy would cost MORE than it
-        // saves (a 50%-selective 1-column count got 2× slower without
-        // the gate), so such batches emit unfiltered and the Catalyst
-        // residual does the filtering alone.
         var data = buf
         var m = n
         var sel: Array[Int] = null
-        if (bytesPred != null) {
-          if (predDisabled) {
-            // periodic re-probe (r13): data sorted on the filter column
-            // can turn selective mid-partition — a permanent latch
-            // would decode everything for the rest of the file; the
-            // probe below costs ~256 cell decodes, so re-arming every
-            // 8th batch is effectively free
-            batchesSinceProbe += 1
-            if (batchesSinceProbe >= 8) predDisabled = false
-          }
-          if (!predDisabled) {
-            // r13 row-sample probe: the r12 warmup decoded filter cells
-            // for TWO FULL batches before concluding a 50%-selective
-            // filter never compacts (+33% on stata_subset_filter).
-            // Estimate selectivity from ≤256 evenly strided rows —
-            // ~0.1% of the batch — and run the full pass only when the
-            // compaction byte-gate holds on the estimate; the exact
-            // per-batch gate stays as the backstop for probe misses.
-            val stride = math.max(1, n / 256)
-            var samples = 0
-            var hits = 0
-            var sr = 0
-            while (sr < n) {
-              if (rowPass(buf, sr * rowLen)) hits += 1
-              samples += 1
-              sr += stride
-            }
-            val selEst = n.toLong * hits / math.max(1, samples)
-            if (hits == samples ||
-                selEst * rowLen >= (n - selEst) * (projBytes + 16)) {
-              predDisabled = true
-              batchesSinceProbe = 0
-            } else {
-              val s = new Array[Int](n)
-              var selLen = 0
-              var r = 0
-              while (r < n) {
-                if (rowPass(buf, r * rowLen)) { s(selLen) = r; selLen += 1 }
-                r += 1
-              }
-              if (selLen < n &&
-                  selLen.toLong * rowLen <
-                    (n - selLen).toLong * (projBytes + 16)) {
-                val cbuf = new Array[Byte](selLen * rowLen)
-                var i = 0
-                while (i < selLen) {
-                  System.arraycopy(buf, s(i) * rowLen, cbuf, i * rowLen, rowLen)
-                  i += 1
-                }
-                data = cbuf; m = selLen; sel = s
-              } else {
-                // probe misjudged a borderline batch — ground truth
-                // says no compaction; disable and let the re-probe
-                // re-arm (the Catalyst residual filters regardless)
-                predDisabled = true
-                batchesSinceProbe = 0
-              }
-            }
-          }
+        if (rowFilter != null) {
+          m = rowFilter.compact(buf, n, rowLen, projBytes)
+          data = rowFilter.data; sel = rowFilter.sel
         }
-        val vectors = new Array[ColumnVector](plans.length)
+        vecs.reset(m)
         var c = 0
         while (c < plans.length) {
-          val vec = new OnHeapColumnVector(math.max(m, 1), required.fields(c).dataType)
-          decodeColumn(plans(c), data, m, startRow, vec, sel)
-          vectors(c) = vec
+          decodeColumn(plans(c), data, m, startRow, vecs(c), sel)
           c += 1
         }
-        new ColumnarBatch(vectors, m)
+        vecs.emit(m)
       }
 
       /** Labeled numeric column → DICTIONARY-encoded string vector
@@ -781,10 +694,14 @@ object StataModule extends FormatModule {
           case TStr(w) =>
             var r = 0; var p = off
             while (r < n) {
-              val s = Bin.zstr(buf, p, w, cs)
-              if (s.isEmpty && opts.missingStringAsNull) vec.putNull(r)
+              var end = p
+              while (end < p + w && buf(end) != 0) end += 1
+              if (end == p && opts.missingStringAsNull) vec.putNull(r)
+              else if (asciiCs && AsciiCells.isAscii(buf, p, end))
+                vec.putByteArray(r, buf, p, end - p)
               else {
-                val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+                val b = new String(buf, p, end - p, cs)
+                  .getBytes(java.nio.charset.StandardCharsets.UTF_8)
                 vec.putByteArray(r, b, 0, b.length)
               }
               r += 1; p += rowLen

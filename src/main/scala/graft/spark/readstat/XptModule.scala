@@ -133,7 +133,7 @@ object XptModule extends FormatModule {
   override def planPartitions(path: String, opts: ReadstatOptions,
       limit: Option[Long]): Seq[RangePartition] = {
     val md = metadata(path)
-    seekableRowRanges(path, opts, 0L, limit, md.rowCount, md.rowLength)
+    seekableRowRanges(path, opts, 0L, limit, md.rowCount, md.rowLength, md.dataOffset)
   }
 
   /** Fixed 80-byte-record rows seek in O(1): OFFSET pushdown is pure
@@ -144,20 +144,19 @@ object XptModule extends FormatModule {
       offset: Long, limit: Option[Long]): Option[Seq[RangePartition]] = {
     val md = metadata(path)
     Some(seekableRowRanges(path, opts, offset, limit, md.rowCount,
-      md.rowLength))
+      md.rowLength, md.dataOffset))
   }
 
   /** Per-column tight loops over fixed-width 80-byte-aligned chunks;
     * trailing all-space padding rows (only possible inside the file's
-    * final 80-byte record) truncate the last batch. Pushed filters run
-    * over the raw chunk first and survivors compact (StataModule's
-    * design); the padding cut happens BEFORE filtering, on raw rows. */
+    * final 80-byte record) truncate the last batch. Pushed filters skip
+    * rows through [[RowFilter]]; the padding cut happens BEFORE filtering, on raw rows. */
   override def columnarRows(part: RangePartition, opts: ReadstatOptions,
       required: StructType,
       pushed: Array[org.apache.spark.sql.sources.Filter])
       : Iterator[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-    import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+    import org.apache.spark.sql.vectorized.ColumnarBatch
 
     val md = metadata(part.path)
     failIfTruncated(part.path, md, opts)
@@ -189,7 +188,7 @@ object XptModule extends FormatModule {
     val fileLen = new java.io.File(part.path).length()
     val raf = new RandomAccessFile(part.path, "r")
     raf.seek(md.dataOffset + part.startRow * rowLen)
-    val chunkRows = math.max(1, (4 << 20) / math.max(1, rowLen))
+    val vecs = new ReusedBatch(required)
 
     // bytes-predicate over filter cells (plain numeric/char only;
     // temporal kinds don't compile — residual Filter covers them)
@@ -311,7 +310,8 @@ object XptModule extends FormatModule {
         }
         case None => null
       }
-    val decoders = cellDecoders.toArray
+    val rowFilter =
+      if (bytesPred == null) null else new RowFilter(cellDecoders.toArray, bytesPred, fastPred)
     // projected decode bytes per row, for the compaction gate below
     val projBytes: Long = plans.collect {
       case (c, _, _, _, _) if c != null => c.width.toLong }.sum
@@ -322,40 +322,18 @@ object XptModule extends FormatModule {
       private var closed = false
       private def close(): Unit = if (!closed) { closed = true; raf.close() }
 
-      // current chunk context for the bytes-predicate getter; decoded
-      // filter cells memoize per row — Catalyst pushes IsNotNull
-      // alongside every range conjunct, so a compiled predicate reads
-      // the same slot 2-3× per row (see StataModule)
-      private var curBuf: Array[Byte] = _
-      private var curBase = 0
-      private var predRow = 0L
-      private val slotVals = new Array[Any](decoders.length)
-      private val slotStamp = Array.fill(decoders.length)(Long.MinValue)
-      private val predGetter: Int => Any = slot => {
-        if (slotStamp(slot) == predRow) slotVals(slot)
-        else {
-          val v = decoders(slot)(curBuf, curBase)
-          slotVals(slot) = v; slotStamp(slot) = predRow; v
-        }
-      }
-      private def rowPass(buf: Array[Byte], base: Int): Boolean =
-        if (fastPred != null) fastPred(buf, base)
-        else {
-          curBuf = buf; curBase = base; predRow += 1
-          bytesPred(predGetter)
-        }
-      private var predDisabled = false
-      private var batchesSinceProbe = 0
 
       override def hasNext: Boolean = {
         if (remaining <= 0) close()
         remaining > 0
       }
 
+      private var buf: Array[Byte] = Array.emptyByteArray
+
       override def next(): ColumnarBatch = {
-        var n = math.min(chunkRows.toLong, remaining).toInt
-        val buf = new Array[Byte](n * rowLen)
-        raf.readFully(buf)
+        var n = ReusedBatch.rows(opts, rowLen, remaining)
+        if (buf.length < n * rowLen) buf = new Array[Byte](n * rowLen)
+        raf.readFully(buf, 0, n * rowLen)
         // truncate trailing all-space padding rows in the final record
         var r = 0
         var cut = -1
@@ -377,71 +355,20 @@ object XptModule extends FormatModule {
         val startRow = globalRow
         remaining -= n; globalRow += n
         if (remaining <= 0) close()
-        // pushed-filter pass: evaluate on filter cells, compact survivors
         var data = buf
         var m = n
         var sel: Array[Int] = null
-        if (bytesPred != null) {
-          if (predDisabled) {
-            // periodic re-probe, same rationale as StataModule (r13)
-            batchesSinceProbe += 1
-            if (batchesSinceProbe >= 8) predDisabled = false
-          }
-          if (!predDisabled) {
-            // r13 row-sample probe before the full pass, same design
-            // as StataModule: ≤256 strided rows estimate selectivity;
-            // the exact per-batch gate below stays as the backstop
-            val stride = math.max(1, n / 256)
-            var samples = 0
-            var hits = 0
-            var sr = 0
-            while (sr < n) {
-              if (rowPass(buf, sr * rowLen)) hits += 1
-              samples += 1
-              sr += stride
-            }
-            val selEst = n.toLong * hits / math.max(1, samples)
-            if (hits == samples ||
-                selEst * rowLen >= (n - selEst) * (projBytes + 16)) {
-              predDisabled = true
-              batchesSinceProbe = 0
-            } else {
-              val s = new Array[Int](n)
-              var selLen = 0
-              var rr = 0
-              while (rr < n) {
-                if (rowPass(buf, rr * rowLen)) { s(selLen) = rr; selLen += 1 }
-                rr += 1
-              }
-              // same byte-model gate as StataModule: compact only when
-              // the copy is cheaper than the decode + downstream work
-              // it saves
-              if (selLen < n &&
-                  selLen.toLong * rowLen <
-                    (n - selLen).toLong * (projBytes + 16)) {
-                val cbuf = new Array[Byte](selLen * rowLen)
-                var i = 0
-                while (i < selLen) {
-                  System.arraycopy(buf, s(i) * rowLen, cbuf, i * rowLen, rowLen)
-                  i += 1
-                }
-                data = cbuf; m = selLen; sel = s
-              } else {
-                predDisabled = true
-                batchesSinceProbe = 0
-              }
-            }
-          }
+        if (rowFilter != null) {
+          m = rowFilter.compact(buf, n, rowLen, projBytes)
+          data = rowFilter.data; sel = rowFilter.sel
         }
-        val vectors = new Array[ColumnVector](plans.length)
+        vecs.reset(m)
         var c = 0
         while (c < plans.length) {
-          val vec = new OnHeapColumnVector(math.max(m, 1), required.fields(c).dataType)
-          decodeColumn(plans(c), data, m, startRow, vec, sel)
-          vectors(c) = vec
+          decodeColumn(plans(c), data, m, startRow, vecs(c), sel)
           c += 1
         }
-        new ColumnarBatch(vectors, m)
+        vecs.emit(m)
       }
 
       private def decodeColumn(pl: (XptColumn, SasCore.Kind, DoubleByteLut, Map[String, String], Boolean),
@@ -476,11 +403,13 @@ object XptModule extends FormatModule {
         } else if (col.isChar) {
           var r = 0; var p = off
           while (r < n) {
-            var end = p + w
-            while (end > p && (buf(end - 1) == ' ' || buf(end - 1) == 0)) end -= 1
+            val end = AsciiCells.trimEnd(buf, p, p + w)
             if (end == p) {
               if (opts.missingStringAsNull) vec.putNull(r)
               else vec.putByteArray(r, Array.emptyByteArray, 0, 0)
+            } else if (chLabels == null && AsciiCells.isAscii(buf, p, end)) {
+              // ISO-8859-1 maps every byte below 0x80 to itself
+              vec.putByteArray(r, buf, p, end - p)
             } else {
               val s = new String(buf, p, end - p,
                 java.nio.charset.StandardCharsets.ISO_8859_1)

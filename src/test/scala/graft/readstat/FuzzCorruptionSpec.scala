@@ -32,6 +32,11 @@ class FuzzCorruptionSpec extends SparkTestBase {
     n
   }
 
+  /** Ranges the module plans for the file, if planning succeeds. */
+  private def planned(path: String): Option[Int] =
+    try Some(Formats.moduleFor(path).planPartitions(path, ReadstatOptions(), None).length)
+    catch { case _: Exception => None }
+
   private def fuzzOne(src: String, ext: String, trial: Int,
       rnd: java.util.Random): Unit = {
     val bytes = Files.readAllBytes(Paths.get(src))
@@ -57,6 +62,7 @@ class FuzzCorruptionSpec extends SparkTestBase {
     val out = Files.createTempFile(s"graft_fuzz_${ext}_$trial", s".$ext")
     Files.write(out, bytes)
     out.toFile.deleteOnExit()
+    val ranges = Future(planned(out.toString))
     val attempt = Future(try Right(readAll(out.toString)) catch {
       case e: Exception => Left(e)
       case e: StackOverflowError => Left(new RuntimeException(e))
@@ -65,6 +71,15 @@ class FuzzCorruptionSpec extends SparkTestBase {
       Await.result(attempt, 60.seconds) match {
         case Right(n) => assert(n >= 0) // parsed despite the flip: fine
         case Left(_) => ()             // clean error: fine
+      }
+      // fixed-width rows plan from what the file holds, whatever row
+      // count a flipped header claims (dta trial 35 claims 1.7e14 rows
+      // in a 67 KB file): at most one range per openCostInBytes of file,
+      // plus one range for declared rows the file does not hold
+      if (Set("dta", "sav", "xpt")(ext)) Await.result(ranges, 60.seconds).foreach { k =>
+        val bound = (bytes.length - 1) / ReadstatOptions().split.floorBytes + 2
+        assert(k <= bound, s"$ext fuzz trial $trial (${where.mkString(",")}): " +
+          s"$k ranges planned for ${bytes.length} bytes")
       }
     } catch {
       case _: java.util.concurrent.TimeoutException =>
@@ -260,5 +275,40 @@ class FuzzCorruptionSpec extends SparkTestBase {
     }
     val e = intercept[Exception](readAll(p))
     assert(e.getMessage.contains("long-string value label"), e.getMessage)
+  }
+
+  test("a dta header claiming rows the file does not hold plans from the file") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_fuzz_rows").toString
+    val p0 = s"$dir/rows.dta"
+    (1 to 2000).map(i => (i, i * 1.5)).toDF("id", "v").coalesce(1)
+      .write.format("readstat").mode("overwrite").save(p0)
+    val md = graft.core.stata.StataParser.parse(p0)
+    assert(md.version >= 118 && md.littleEndian)
+    // the <N> tag's u64 row count: claim 1.7e14 rows (fuzz dta trial 35)
+    val p = corruptCopy(p0, "dta") { b =>
+      val n = b.indices.find(i => b.startsWith("<N>".getBytes, i)).get + 3
+      java.nio.ByteBuffer.wrap(b, n, 8).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+        .putLong(171092622706640L)
+    }
+    // one range over the 2000 rows the data section holds (it ends at the
+    // map's <strls> offset), one for the rest of the claim
+    val parts = Formats.moduleFor(p).planPartitions(p, ReadstatOptions(), None)
+    assert(parts.length == 2 && parts.head.startRow == 0 && parts.head.numRows == 2000 &&
+      parts.last.startRow == 2000 && parts.last.numRows == 171092622706640L - 2000,
+      parts.toString)
+    def read(mode: String) = spark.read.format("readstat").option("mode", mode)
+      .option("rowIndexName", "_ri").load(p)
+    // the declared rows beyond the file fail loudly, as any truncated
+    // tail does outside permissive salvage
+    Seq("failfast", "dropmalformed").foreach { mode =>
+      val e = intercept[Exception](read(mode).agg(org.apache.spark.sql.functions.sum("id")).collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[java.io.EOFException]), s"$mode: $e")
+    }
+    val salvaged = read("permissive")
+    assert(salvaged.count() == 2000)
+    assert(salvaged.agg(org.apache.spark.sql.functions.sum("id"), org.apache.spark.sql.functions.max("_ri"))
+      .collect()(0) == org.apache.spark.sql.Row(2001000L, 1999L))
   }
 }
