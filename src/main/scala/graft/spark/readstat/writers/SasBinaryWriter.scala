@@ -575,20 +575,12 @@ object SasBinaryWriter {
     val metaPages = buildMetaPages(specs, varLabels, rowCount, rowLen,
       pageLen, rowsPerPage, rle)
     val dataPages = chunkFiles.map(f => new File(f).length() / pageLen).sum
-    AtomicFile.write(path) { tmp =>
-      val os = new BufferedOutputStream(new FileOutputStream(tmp), 1 << 20)
-      os.write(buildHeader(pageLen, metaPages.length + dataPages.toInt, dsName))
-      metaPages.foreach(os.write)
-      val buf = new Array[Byte](1 << 20)
-      chunkFiles.foreach { f =>
-        val in = new java.io.FileInputStream(f)
-        try {
-          var n = in.read(buf)
-          while (n > 0) { os.write(buf, 0, n); n = in.read(buf) }
-        } finally in.close()
-      }
-      os.close()
-    }
+    val bos = new java.io.ByteArrayOutputStream()
+    bos.write(buildHeader(pageLen, metaPages.length + dataPages.toInt, dsName))
+    metaPages.foreach(bos.write)
+    val pre = bos.toByteArray
+    FileAssembler.write(path, FileAssembler.whole(pre, chunkFiles,
+      pre.length + dataPages * pageLen), "sas7bdat writer")
   }
 
   private[writers] def buildHeader(pageLen: Int, pageCount: Int, dsName: String): Array[Byte] = {

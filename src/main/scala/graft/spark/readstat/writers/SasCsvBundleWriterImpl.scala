@@ -2,7 +2,7 @@ package graft.spark.readstat.writers
 
 import java.io.File
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -97,31 +97,22 @@ object SasCsvBundleWriter {
             .fold(0L) { case (lo, hi) => math.max(math.abs(lo), math.abs(hi)) }).toMap)
       }
 
-    val scratch = Files.createTempDirectory("graft_sascsv").toFile
-    df.select(csvCols.toIndexedSeq: _*)
-      .write.mode("overwrite")
-      .option("header", "false").option("nullValue", "")
-      .csv(scratch.getAbsolutePath)
-
-    // driver splice: header + part files in order (temp + atomic rename)
-    AtomicFile.write(path) { tmpOut =>
-    val outPath = Paths.get(tmpOut)
-    val ch = java.nio.channels.FileChannel.open(outPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE,
-      StandardOpenOption.TRUNCATE_EXISTING)
+    // the CSV parts go to a directory of this write under scratchDir,
+    // removed however the write ends
+    val scratch = new File(StreamSinkCore.scratchDir(options),
+      "graft_sascsv_" + java.util.UUID.randomUUID().toString.replace("-", ""))
     try {
-      val header = schema.fieldNames.mkString(",") + "\n"
-      ch.write(java.nio.ByteBuffer.wrap(header.getBytes(StandardCharsets.UTF_8)))
-      scratch.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
-        .foreach { p =>
-          val in = java.nio.channels.FileChannel.open(p.toPath, StandardOpenOption.READ)
-          try { var pos = 0L; val n = in.size()
-            while (pos < n) pos += in.transferTo(pos, n - pos, ch)
-          } finally in.close()
-        }
-    } finally ch.close()
-    }
-    scratch.listFiles().foreach(_.delete()); scratch.delete()
+      df.select(csvCols.toIndexedSeq: _*)
+        .write.mode("overwrite")
+        .option("header", "false").option("nullValue", "")
+        .csv(scratch.getAbsolutePath)
+      // driver splice: header + part files in order (temp + atomic rename)
+      val header = (schema.fieldNames.mkString(",") + "\n").getBytes(StandardCharsets.UTF_8)
+      val parts = FileAssembler.sized(scratch.listFiles()
+        .filter(_.getName.startsWith("part-")).sortBy(_.getName).map(_.getPath).toSeq)
+      FileAssembler.write(path, FileAssembler.Layout(header, header.length,
+        parts, header.length + parts.map(_._2).sum), "sas csv bundle")
+    } finally WritePass.remove(scratch)
 
     // ---- generated SAS import script (reference writer.rs:330-470) ----
     val usedNames = scala.collection.mutable.Set[String]()

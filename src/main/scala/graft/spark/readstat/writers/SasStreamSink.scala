@@ -1,8 +1,6 @@
 package graft.spark.readstat.writers
 
 import java.nio.ByteBuffer
-import java.nio.channels.FileChannel
-import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.DataWriter
@@ -13,26 +11,26 @@ import graft.core.sas.SasCore
 /** SINGLE-FILE streaming .sas7bdat sink — completes the sink matrix
   * (dta/sav/xpt/sas7bdat); the reference has no SAS write path at all.
   *
-  * sas7bdat is PAGE-structured, so the flat-record splice in
-  * [[StreamSinkCore.commitEpoch]] does not apply: rows live on DATA
-  * pages that each declare their own count. The commit here is
-  * page-aware but keeps the same contract — the pre-data section
-  * (header + META pages) is CONSTANT-LENGTH for a fixed schema, only
-  * its embedded row/page counts change, and each epoch (1) rewrites
-  * header + meta pages wholesale, (2) re-opens the last committed
-  * partial DATA page, appends rows into it and onward pages, patching
-  * each page's block count, (3) truncates + fsyncs, and only then (4)
-  * advances the sidecar state. Replay skip, schema-fingerprint drift
-  * refusal, pre-length guard, and crash-healing (recompute positions
-  * from the COMMITTED row count, overwriting any partial bytes) follow
-  * the shared protocol.
+  * sas7bdat is PAGE-structured, so uncompressed rows cannot simply be
+  * spliced: they live on DATA pages that each declare their own count.
+  * The commit runs inside [[StreamSinkCore.commitEpoch]]'s protocol
+  * but repacks the rows itself — the pre-data section (header + META
+  * pages) is CONSTANT-LENGTH for a fixed schema, only its embedded
+  * row/page counts change, and each epoch (1) rewrites header + meta
+  * pages wholesale, (2) re-opens the last committed partial DATA page,
+  * appends rows into it and onward pages, patching each page's block
+  * count, (3) truncates + fsyncs, and only then (4) advances the
+  * sidecar state. Replay skip, schema-fingerprint drift refusal,
+  * pre-length guard, and crash-healing (recompute positions from the
+  * COMMITTED row count, overwriting any partial bytes) are the shared
+  * protocol's.
   *
   * `compression=rle` (SASYZCRL) streams too, with a different append
   * unit: rle rows are variable-width, so positions cannot derive from
   * the row count — instead executors build WHOLE rle pages (per-row
   * compressed subheaders, the batch writer's [[SasBinaryWriter.RlePageEncoder]])
   * and the commit splices complete pageLen-sized pages at the committed
-  * page boundary, carrying the committed DATA-page count in the
+  * page boundary through [[FileAssembler]], carrying the committed DATA-page count in the
   * sidecar's `extra` field (healing truncates to that boundary — the
   * zsav sink's block-index pattern, one number instead of a list
   * because sas pages are fixed-size). Committed pages are immutable:
@@ -116,7 +114,7 @@ object SasStreamSink extends StreamSinkCore.Format {
 
   def commitEpoch(path: String, epochId: Long,
       chunks: Seq[(Int, String, Long)], schema: StructType,
-      options: Map[String, String], queryId: String = ""): Unit = synchronized {
+      options: Map[String, String], queryId: String = ""): Unit = {
     require(!options.contains("metadataPath"),
       "sas7bdat streaming sink: metadataPath is not supported — use the batch writer")
     val rle = isRle(options)
@@ -146,35 +144,23 @@ object SasStreamSink extends StreamSinkCore.Format {
       specs.map(c => s"${c.name}|${c.isChar}|${c.width}|${c.fmtName}").toIndexedSeq
         ++ (if (rle) Seq(s"|rle|page:$pageLen") else Nil))
 
-    val state = StreamSinkCore.readState(path)
-    try {
-      val replayed = state.exists(st =>
-        st.queryId == queryId && epochId <= st.epoch)
-      if (replayed) return
-      state.foreach { st =>
-        require(st.rowLen == rowLen &&
-            (st.schemaHash.isEmpty || st.schemaHash == schemaHash),
-          s"sas7bdat streaming sink: schema drift — the file at $path was " +
-            s"committed with a different column layout (rowLen ${st.rowLen}" +
-            s", fingerprint ${st.schemaHash}) than this query produces " +
-            s"(rowLen $rowLen, fingerprint $schemaHash); appends cannot " +
-            "change schema mid-file")
-      }
-      val prevRows = state.map(_.rows).getOrElse(0L)
-      val total = prevRows + chunks.map(_._3).sum
-
+    StreamSinkCore.commitEpoch("sas7bdat", path, epochId, queryId, schemaHash,
+      chunks, rowLen) { (state, total, files) =>
       val metaPages = SasBinaryWriter.buildMetaPages(specs, varLabels, total,
         rowLen, pageLen, rowsPerPage, rle)
       val m = metaPages.length
       val preLen = SasBinaryWriter.headerLen.toLong + m.toLong * pageLen
-      state.foreach(st => require(st.preLen < 0 || st.preLen == preLen,
-        s"sas7bdat streaming sink: pre-data section length changed " +
-          s"(${st.preLen} -> $preLen) for $path — appends must declare " +
-          "the same labels/formats as the original write"))
-      // committed DATA-page count: derived from the row count for fixed
-      // rows; carried in the sidecar for rle (variable rows per page)
-      val prevPages: Long =
-        if (rle) state.map(_.extra).filter(_.nonEmpty).map { e =>
+      def prefix(dataPages: Long): Array[Byte] = {
+        val bos = new java.io.ByteArrayOutputStream()
+        bos.write(SasBinaryWriter.buildHeader(pageLen, (m + dataPages).toInt, dsName))
+        metaPages.foreach(bos.write)
+        bos.toByteArray
+      }
+      if (rle) {
+        // splice whole rle pages at the committed page boundary, carried
+        // in the sidecar (rows per page vary); the chunk files ARE page
+        // streams (each a multiple of pageLen)
+        val prevPages: Long = state.map(_.extra).filter(_.nonEmpty).map { e =>
           try e.toLong catch { case _: NumberFormatException =>
             throw new IllegalStateException(
               s"sas7bdat streaming sink: corrupt page count '$e' in the " +
@@ -183,109 +169,77 @@ object SasStreamSink extends StreamSinkCore.Format {
                 "restart from scratch")
           }
         }.getOrElse(0L)
-        else (prevRows + rowsPerPage - 1) / rowsPerPage
+        val newPages = files.map { f =>
+          val len = new java.io.File(f).length()
+          require(len % pageLen == 0,
+            s"sas7bdat streaming sink: rle chunk $f is not page-aligned " +
+              s"($len B, page $pageLen B)")
+          len / pageLen
+        }.sum
+        val pages = prevPages + newPages
+        StreamSinkCore.assembled("sas7bdat", FileAssembler.Layout(prefix(pages),
+          preLen + prevPages * pageLen, FileAssembler.sized(files),
+          preLen + pages * pageLen), preLen, pages.toString)
+      } else StreamSinkCore.Epoch({ ch =>
+        val prevRows = state.map(_.rows).getOrElse(0L)
+        val expectPages = (total + rowsPerPage - 1) / rowsPerPage
+        ch.position(0L)
+        FileAssembler.put(ch, prefix(expectPages))
 
-      val p = Paths.get(path)
-      Option(p.getParent).foreach(Files.createDirectories(_))
-      val ch = FileChannel.open(p, StandardOpenOption.CREATE,
-        StandardOpenOption.READ, StandardOpenOption.WRITE)
-      var committedPages = 0L
-      try {
-        val dataPages: Long = if (rle) {
-          // splice whole rle pages at the committed page boundary; the
-          // chunk files ARE page streams (each a multiple of pageLen)
-          val newPages = chunks.sortBy(_._1).map { case (_, f, _) =>
-            val len = new java.io.File(f).length()
-            require(len % pageLen == 0,
-              s"sas7bdat streaming sink: rle chunk $f is not page-aligned " +
-                s"($len B, page $pageLen B)")
-            len / pageLen
-          }.sum
-          ch.position(0L)
-          ch.write(ByteBuffer.wrap(SasBinaryWriter.buildHeader(pageLen,
-            (m + prevPages + newPages).toInt, dsName)))
-          metaPages.foreach(pg => ch.write(ByteBuffer.wrap(pg)))
-          ch.position(preLen + prevPages * pageLen)
-          chunks.sortBy(_._1).foreach { case (_, f, _) =>
-            val in = FileChannel.open(Paths.get(f), StandardOpenOption.READ)
-            try {
-              var pos = 0L
-              val n = in.size()
-              while (pos < n) pos += in.transferTo(pos, n - pos, ch)
-            } finally in.close()
-          }
-          require(ch.position() == preLen + (prevPages + newPages) * pageLen,
-            s"sas7bdat streaming sink: rle page drift at epoch $epochId")
-          prevPages + newPages
-        } else {
-          val expectPages = (total + rowsPerPage - 1) / rowsPerPage
-          ch.position(0L)
-          ch.write(ByteBuffer.wrap(SasBinaryWriter.buildHeader(pageLen,
-            (m + expectPages).toInt, dsName)))
-          metaPages.foreach(pg => ch.write(ByteBuffer.wrap(pg)))
-
-          def pagePos(i: Long): Long = preLen + i * pageLen
-          var pageIdx = prevRows / rowsPerPage
-          var fill = (prevRows % rowsPerPage).toInt
-          val page = new Array[Byte](pageLen)
-          if (fill > 0) {
-            // reopen the committed partial page; its first `fill` rows are
-            // the healing boundary — everything after them is overwritten
-            val buf = ByteBuffer.wrap(page)
-            ch.position(pagePos(pageIdx))
-            while (buf.hasRemaining && ch.read(buf) >= 0) ()
-          }
-          def flushPage(): Unit = {
-            putU16(page, 32, SasCore.PtData)
-            putU16(page, 34, fill)
-            putU16(page, 36, 0)
-            ch.position(pagePos(pageIdx))
-            ch.write(ByteBuffer.wrap(page))
-            pageIdx += 1; fill = 0
-            java.util.Arrays.fill(page, 0.toByte)
-          }
-          val rowBuf = new Array[Byte](rowLen)
-          chunks.sortBy(_._1).foreach { case (_, f, _) =>
-            val in = new java.io.BufferedInputStream(
-              new java.io.FileInputStream(f), 1 << 20)
-            try {
-              var n = readFully(in, rowBuf)
-              while (n == rowLen) {
-                System.arraycopy(rowBuf, 0,
-                  page, SasBinaryWriter.dataPageStart + fill * rowLen, rowLen)
-                fill += 1
-                if (fill == rowsPerPage) flushPage()
-                n = readFully(in, rowBuf)
-              }
-              require(n == 0,
-                s"sas7bdat streaming sink: chunk $f has a torn row ($n of $rowLen bytes)")
-            } finally in.close()
-          }
-          if (fill > 0) flushPage()
-          require(pageIdx == expectPages &&
-              preLen + pageIdx * pageLen == pagePos(pageIdx.toInt),
-            s"sas7bdat streaming sink: page drift at epoch $epochId")
-          expectPages
+        def pagePos(i: Long): Long = preLen + i * pageLen
+        var pageIdx = prevRows / rowsPerPage
+        var fill = (prevRows % rowsPerPage).toInt
+        val page = new Array[Byte](pageLen)
+        if (fill > 0) {
+          // reopen the committed partial page; its first `fill` rows are
+          // the healing boundary — everything after them is overwritten
+          val buf = ByteBuffer.wrap(page)
+          ch.position(pagePos(pageIdx))
+          while (buf.hasRemaining && ch.read(buf) >= 0) ()
         }
-        committedPages = dataPages
-        ch.truncate(preLen + dataPages * pageLen)
-        ch.force(true)
-      } finally ch.close()
-      // sibling catalog for valueLabels, like the batch writer — labels
-      // are constant per query so the rewrite is idempotent (and atomic
-      // inside SasCatalogWriter), label-table-sized per commit
-      val vls = parseSinkValueLabels(schema, options)
-      if (vls.nonEmpty) {
-        val catPath = options.getOrElse("catalogPath",
-          path.replaceAll("(?i)\\.sas7bdat$", "") + ".sas7bcat")
-        SasBinaryWriter.writeLabelCatalog(catPath, schema, vls,
-          SasBinaryWriter.labelFormatNames(schema, vls),
-          "sas7bdat streaming sink")
-      }
-      StreamSinkCore.writeState(path, StreamSinkCore.StreamState(
-        epochId, total, rowLen, queryId, schemaHash, preLen,
-        if (rle) committedPages.toString else ""))
-    } finally chunks.foreach { case (_, f, _) => new java.io.File(f).delete() }
+        def flushPage(): Unit = {
+          putU16(page, 32, SasCore.PtData)
+          putU16(page, 34, fill)
+          putU16(page, 36, 0)
+          ch.position(pagePos(pageIdx))
+          ch.write(ByteBuffer.wrap(page))
+          pageIdx += 1; fill = 0
+          java.util.Arrays.fill(page, 0.toByte)
+        }
+        val rowBuf = new Array[Byte](rowLen)
+        files.foreach { f =>
+          val in = new java.io.BufferedInputStream(
+            new java.io.FileInputStream(f), 1 << 20)
+          try {
+            var n = readFully(in, rowBuf)
+            while (n == rowLen) {
+              System.arraycopy(rowBuf, 0,
+                page, SasBinaryWriter.dataPageStart + fill * rowLen, rowLen)
+              fill += 1
+              if (fill == rowsPerPage) flushPage()
+              n = readFully(in, rowBuf)
+            }
+            require(n == 0,
+              s"sas7bdat streaming sink: chunk $f has a torn row ($n of $rowLen bytes)")
+          } finally in.close()
+        }
+        if (fill > 0) flushPage()
+        require(pageIdx == expectPages,
+          s"sas7bdat streaming sink: page drift at epoch $epochId")
+        ch.truncate(pagePos(expectPages))
+      }, preLen)
+    }
+    // sibling catalog for valueLabels, like the batch writer — labels
+    // are constant per query so the rewrite is idempotent (and atomic
+    // inside SasCatalogWriter), label-table-sized per commit
+    val vls = parseSinkValueLabels(schema, options)
+    if (vls.nonEmpty) {
+      val catPath = options.getOrElse("catalogPath",
+        path.replaceAll("(?i)\\.sas7bdat$", "") + ".sas7bcat")
+      SasBinaryWriter.writeLabelCatalog(catPath, schema, vls,
+        SasBinaryWriter.labelFormatNames(schema, vls),
+        "sas7bdat streaming sink")
+    }
   }
 
   private def readFully(in: java.io.InputStream, buf: Array[Byte]): Int = {

@@ -118,9 +118,9 @@ object SavStreamSink extends StreamSinkCore.Format {
       resolveStream("sav", schema, options)
     val recordLen = cols.map(_.widthUnits).sum * 8
     StreamSinkCore.commitEpoch("sav", path, epochId, queryId, schemaHash,
-      chunks, recordLen,
-      total => (SpssSavWriter.buildDictionary(cols, total, zlib = false,
-        valueLabels, varLabels, varMeasures), Array.emptyByteArray))
+      chunks, recordLen)(StreamSinkCore.fixedWidth("sav", recordLen, total =>
+        (SpssSavWriter.buildDictionary(cols, total, zlib = false,
+          valueLabels, varLabels, varMeasures), _ => ())))
   }
 
   override def chunkWriter(schema: StructType, options: Map[String, String],

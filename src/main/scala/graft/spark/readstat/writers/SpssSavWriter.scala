@@ -1,8 +1,7 @@
 package graft.spark.readstat.writers
 
-import java.io.{BufferedOutputStream, File, FileOutputStream}
+import java.io.{File, FileOutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -169,7 +168,8 @@ object SpssSavWriter {
           val (rows, blocks) = encodeChunk(specs, zlibB, it, f)
           val dictLocal = buildDictionary(specs, rows, zlibB, vls, vlbB,
             vmB, vdwB, vaB, mvB)
-          assembleSav(partPath, dictLocal, zlibB, Seq(f.getAbsolutePath), blocks)
+          assembleSav(partPath, dictLocal, specs.map(_.widthUnits).sum * 8, rows,
+            zlibB, Seq(f.getAbsolutePath), blocks)
           f.delete()
           rows
       }
@@ -186,7 +186,8 @@ object SpssSavWriter {
     WritePass.run(df, options, known, layoutOf, encode) { pass =>
       val dict = buildDictionary(pass.layout, pass.stats.rows, zlib, valueLabels,
         varLabels, varMeasures, varDisplayWidths, varAlignments, missingValues)
-      assembleSav(path, dict, zlib, pass.chunks.map(_._1), pass.chunks.flatMap(_._2))
+      assembleSav(path, dict, pass.layout.map(_.widthUnits).sum * 8, pass.stats.rows,
+        zlib, pass.chunks.map(_._1), pass.chunks.flatMap(_._2))
     }
   }
 
@@ -295,71 +296,59 @@ object SpssSavWriter {
   }
 
   /** Header + dictionary, then the data chunks (raw records, or zsav
-    * blocks + zheader/ztrailer). Pure IO — runs on the driver for the
-    * single-file splice and on executors for multiFile part assembly.
-    * Emits via a same-directory temp + atomic rename (no partial files
-    * at the final name). */
-  private def assembleSav(path: String, dict: Array[Byte], zlib: Boolean,
-      chunkPaths: Seq[String], zsavBlocks: Seq[(Int, Int)]): Unit =
-    AtomicFile.write(path)(tmp => assembleSavRaw(tmp, dict, zlib, chunkPaths, zsavBlocks))
-
-  private def assembleSavRaw(path: String, dict: Array[Byte], zlib: Boolean,
-      chunkPaths: Seq[String], zsavBlocks: Seq[(Int, Int)]): Unit = {
-    val outPath = Paths.get(path)
-    Option(outPath.getParent).foreach(Files.createDirectories(_))
-    val ch = java.nio.channels.FileChannel.open(outPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE,
-      StandardOpenOption.TRUNCATE_EXISTING)
-    try {
-      ch.write(java.nio.ByteBuffer.wrap(dict))
-      if (!zlib) {
-        chunkPaths.foreach { c =>
-          val in = java.nio.channels.FileChannel.open(Paths.get(c), StandardOpenOption.READ)
-          try { var p = 0L; val n = in.size()
-            while (p < n) p += in.transferTo(p, n - p, ch)
-          } finally in.close()
-        }
-      } else {
-        // terminal block: [252,0,0,0,0,0,0,0] control group, deflated
-        val endDef = new java.util.zip.Deflater()
-        val endRaw = Array[Byte](252.toByte, 0, 0, 0, 0, 0, 0, 0)
-        endDef.setInput(endRaw); endDef.finish()
-        val endBuf = new Array[Byte](64)
-        val endLen = endDef.deflate(endBuf)
-        endDef.end()
-
-        val allBlocks = zsavBlocks :+ (8, endLen)
-        val zheaderOfs = dict.length.toLong
-        val totalCompressed = allBlocks.map(_._2.toLong).sum
-        val ztrailerOfs = zheaderOfs + 24 + totalCompressed
-        val hb = new java.io.ByteArrayOutputStream()
-        Bin.putU64(hb, zheaderOfs)
-        Bin.putU64(hb, ztrailerOfs)
-        Bin.putU64(hb, 24L + 24L * allBlocks.length)
-        ch.write(java.nio.ByteBuffer.wrap(hb.toByteArray))
-        chunkPaths.foreach { c =>
-          val in = java.nio.channels.FileChannel.open(Paths.get(c), StandardOpenOption.READ)
-          try { var p = 0L; val n = in.size()
-            while (p < n) p += in.transferTo(p, n - p, ch)
-          } finally in.close()
-        }
-        ch.write(java.nio.ByteBuffer.wrap(java.util.Arrays.copyOf(endBuf, endLen)))
-        // trailer: bias, zero, block_size, n_blocks, then per-block entries
-        val tb = new java.io.ByteArrayOutputStream()
-        Bin.putU64(tb, -100L)
-        Bin.putU64(tb, 0L)
-        Bin.putU32(tb, 0x3FF000L)
-        Bin.putU32(tb, allBlocks.length.toLong)
-        var uOfs = zheaderOfs
-        var cOfs = zheaderOfs + 24
-        allBlocks.foreach { case (u, c0) =>
-          Bin.putU64(tb, uOfs); Bin.putU64(tb, cOfs)
-          Bin.putU32(tb, u.toLong); Bin.putU32(tb, c0.toLong)
-          uOfs += u; cOfs += c0
-        }
-        ch.write(java.nio.ByteBuffer.wrap(tb.toByteArray))
+    * blocks framed by [[zsavFrame]]), through [[FileAssembler]]. Pure
+    * IO — runs on the driver for the single-file splice and on
+    * executors for multiFile part assembly. */
+  private def assembleSav(path: String, dict: Array[Byte], recordLen: Int,
+      nObs: Long, zlib: Boolean, chunkPaths: Seq[String],
+      zsavBlocks: Seq[(Int, Int)]): Unit = {
+    val layout =
+      if (!zlib) FileAssembler.whole(dict, chunkPaths, dict.length + nObs * recordLen)
+      else {
+        val (pre, tail) = zsavFrame(dict, zsavBlocks)
+        FileAssembler.whole(pre, chunkPaths,
+          pre.length + zsavBlocks.map(_._2.toLong).sum, FileAssembler.bytes(tail))
       }
-    } finally ch.close()
+    FileAssembler.write(path, layout, if (zlib) "zsav writer" else "sav writer")
+  }
+
+  /** Deflated terminal block holding the end-of-data control group
+    * ([252, 0×7]), closing every zsav's data blocks. */
+  private[writers] val TerminalBlock: Array[Byte] = {
+    val d = new java.util.zip.Deflater()
+    val raw = Array[Byte](252.toByte, 0, 0, 0, 0, 0, 0, 0)
+    d.setInput(raw); d.finish()
+    val buf = new Array[Byte](64)
+    val n = d.deflate(buf)
+    d.end()
+    java.util.Arrays.copyOf(buf, n)
+  }
+
+  /** The zsav frame around deflated `blocks` ((raw, deflated) sizes):
+    * the prefix of `dict` and the 24-byte zheader, and the tail of
+    * [[TerminalBlock]] plus the ztrailer (bias, zero, block size, block
+    * count, then per block its raw and deflated offsets and sizes). */
+  private[writers] def zsavFrame(dict: Array[Byte],
+      blocks: Seq[(Int, Int)]): (Array[Byte], Array[Byte]) = {
+    val all = blocks :+ ((8, TerminalBlock.length))
+    val zheaderOfs = dict.length.toLong
+    val dataStart = zheaderOfs + 24
+    val ztrailerLen = 24 + 24 * all.length
+    val hb = java.nio.ByteBuffer.allocate(24).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    hb.putLong(zheaderOfs); hb.putLong(dataStart + all.map(_._2.toLong).sum)
+    hb.putLong(ztrailerLen.toLong)
+    val tb = java.nio.ByteBuffer.allocate(TerminalBlock.length + ztrailerLen)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    tb.put(TerminalBlock)
+    tb.putLong(-100L); tb.putLong(0L)
+    tb.putInt(0x3FF000); tb.putInt(all.length)
+    var uOfs = zheaderOfs
+    var cOfs = dataStart
+    all.foreach { case (u, c) =>
+      tb.putLong(uOfs); tb.putLong(cOfs); tb.putInt(u); tb.putInt(c)
+      uOfs += u; cOfs += c
+    }
+    (dict ++ hb.array(), tb.array())
   }
 
   /** Bytecode+deflate block encoder for zsav: elements become literal

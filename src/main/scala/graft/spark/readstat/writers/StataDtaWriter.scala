@@ -1,8 +1,7 @@
 package graft.spark.readstat.writers
 
-import java.io.{BufferedOutputStream, File, FileOutputStream}
+import java.io.{BufferedOutputStream, FileOutputStream}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
@@ -610,22 +609,10 @@ object StataDtaWriter {
         }
     }
 
-  private def spliceChunks(ch: java.nio.channels.FileChannel,
-      files: Iterator[String]): Unit =
-    files.foreach { f =>
-      val in = java.nio.channels.FileChannel.open(Paths.get(f), StandardOpenOption.READ)
-      try { var p = 0L; val n = in.size()
-        while (p < n) p += in.transferTo(p, n - p, ch)
-      } finally in.close()
-    }
+  private def ascii(s: String): Array[Byte] = s.getBytes(StandardCharsets.US_ASCII)
 
-  private def openOut(path: String): java.nio.channels.FileChannel = {
-    val outPath = Paths.get(path)
-    Option(outPath.getParent).foreach(Files.createDirectories(_))
-    java.nio.channels.FileChannel.open(outPath,
-      StandardOpenOption.CREATE, StandardOpenOption.WRITE,
-      StandardOpenOption.TRUNCATE_EXISTING)
-  }
+  /** What sits between the records and the strL payloads. */
+  private[writers] val DataClose = ascii("</data><strls>")
 
   /** Assemble the final .dta via a same-directory temp + atomic rename
     * (partial files are never visible at the target name). `chunks` are
@@ -633,18 +620,35 @@ object StataDtaWriter {
   private def assembleFile(path: String, version: Int, cols: Array[ColSpec],
       nObs: Long, chunks: Seq[(String, String)],
       valueLabels: Map[String, Seq[(Int, String)]],
-      varLabels: Map[String, String]): Unit =
-    AtomicFile.write(path)(tmp => assembleFileRaw(tmp, version, cols, nObs,
-      chunks, valueLabels, varLabels))
-
-  private def assembleFileRaw(path: String, version: Int, cols: Array[ColSpec],
-      nObs: Long, chunks: Seq[(String, String)],
-      valueLabels: Map[String, Seq[(Int, String)]],
       varLabels: Map[String, String]): Unit = {
-    if (version < 117) {
-      assembleLegacy(path, version, cols, nObs, chunks, valueLabels, varLabels)
-      return
-    }
+    val (pre, trailer) =
+      if (version < 117) {
+        val (p, post) = legacyFrame(version, cols, nObs, valueLabels, varLabels)
+        (p, FileAssembler.bytes(post))
+      } else {
+        val gso = FileAssembler.sized(chunks.map(_._2))
+        val (p, tail) = frame(version, cols, nObs, gso.map(_._2).sum,
+          valueLabels, varLabels)
+        (p, { (ch: java.nio.channels.FileChannel) =>
+          FileAssembler.put(ch, DataClose)
+          FileAssembler.splice(ch, gso)
+          FileAssembler.put(ch, tail)
+        })
+      }
+    FileAssembler.write(path, FileAssembler.whole(pre, chunks.map(_._1),
+      pre.length + nObs * cols.map(_.w.width).sum, trailer), "stata writer")
+  }
+
+  /** The dta 117+ frame around `nObs` fixed-width records followed by
+    * `strlBytes` of GSO records: the prefix through `<data>`, and the
+    * tail from `</strls>` on (value labels and the closing tag). The
+    * file is prefix, records, [[DataClose]], GSO records, tail. Only the
+    * counts and offsets the prefix embeds depend on `nObs` and
+    * `strlBytes`, never its length — which is what lets a streaming
+    * commit rewrite it in place. */
+  private[writers] def frame(version: Int, cols: Array[ColSpec], nObs: Long,
+      strlBytes: Long, valueLabels: Map[String, Seq[(Int, String)]],
+      varLabels: Map[String, String]): (Array[Byte], Array[Byte]) = {
     val k = cols.length
     // per-version record widths — same matrix the reader uses
     val layout = graft.core.stata.StataParser.layoutFor(version)
@@ -653,8 +657,6 @@ object StataDtaWriter {
     val fmtRecLen = layout.fmtLen        // 49 before 118, 57 after
     val varLabelLen = layout.varLabelLen // 81 before 118, 321 after
     val bos = new java.io.ByteArrayOutputStream()
-
-    def ascii(s: String): Array[Byte] = s.getBytes(StandardCharsets.US_ASCII)
     def tag(s: String): Unit = bos.write(ascii(s))
 
     // header — 119 ("wide") widens K to u32 and sortlist entries to u32;
@@ -688,9 +690,9 @@ object StataDtaWriter {
     val chOff = vlbOff + vlbLen
     val chLen = 17 + 18
     val dataOff = chOff + chLen
-    val dataLen = 6 + chunks.map(c => new File(c._1).length()).sum + 7
+    val dataLen = 6 + nObs * cols.map(_.w.width).sum + 7
     val strlOff = dataOff + dataLen
-    val strlLen = 7 + chunks.map(c => new File(c._2).length()).sum + 8
+    val strlLen = 7 + strlBytes + 8
     val vlTables = buildVlTables(cols, valueLabels, cs)
     val vlBody = vlTables.map { case (_, t) => 5 + 4 + nameLen + 3 + t.length + 6 }.sum
     val vlOff = strlOff + strlLen
@@ -730,34 +732,27 @@ object StataDtaWriter {
     tag("<characteristics></characteristics>")
     tag("<data>")
 
-    val ch = openOut(path)
-    try {
-      ch.write(java.nio.ByteBuffer.wrap(bos.toByteArray))
-      spliceChunks(ch, chunks.iterator.map(_._1))
-      ch.write(java.nio.ByteBuffer.wrap(ascii("</data><strls>")))
-      spliceChunks(ch, chunks.iterator.map(_._2))
-      val vlOut = new java.io.ByteArrayOutputStream()
-      vlOut.write(ascii("</strls><value_labels>"))
-      vlTables.foreach { case (name, table) =>
-        vlOut.write(ascii("<lbl>"))
-        Bin.putU32(vlOut, table.length.toLong)
-        Bin.putZPad(vlOut, name, nameLen, cs)
-        vlOut.write(0); vlOut.write(0); vlOut.write(0) // padding
-        vlOut.write(table)
-        vlOut.write(ascii("</lbl>"))
-      }
-      vlOut.write(ascii("</value_labels></stata_dta>"))
-      ch.write(java.nio.ByteBuffer.wrap(vlOut.toByteArray))
-    } finally ch.close()
+    val t = new java.io.ByteArrayOutputStream()
+    t.write(ascii("</strls><value_labels>"))
+    vlTables.foreach { case (name, table) =>
+      t.write(ascii("<lbl>"))
+      Bin.putU32(t, table.length.toLong)
+      Bin.putZPad(t, name, nameLen, cs)
+      t.write(0); t.write(0); t.write(0) // padding
+      t.write(table)
+      t.write(ascii("</lbl>"))
+    }
+    t.write(ascii("</value_labels></stata_dta>"))
+    (bos.toByteArray, t.toByteArray)
   }
 
   /** Pre-xml binary layout (dta 114). Same chunk encode; only the
     * metadata framing differs: fixed header, one-byte typlist codes,
-    * 5-zero-byte expansion terminator, value-label tables to EOF. */
-  private def assembleLegacy(path: String, version: Int, cols: Array[ColSpec],
-      nObs: Long, chunks: Seq[(String, String)],
+    * 5-zero-byte expansion terminator, value-label tables to EOF.
+    * Returns the prefix and the value-label section after the records. */
+  private def legacyFrame(version: Int, cols: Array[ColSpec], nObs: Long,
       valueLabels: Map[String, Seq[(Int, String)]],
-      varLabels: Map[String, String]): Unit = {
+      varLabels: Map[String, String]): (Array[Byte], Array[Byte]) = {
     require(version == 114, s"legacy dta writer supports 114 (got $version)")
     val k = cols.length
     val layout = graft.core.stata.StataParser.layoutFor(version)
@@ -797,19 +792,14 @@ object StataDtaWriter {
     // expansion fields: terminator only (type u8 = 0, len u32 = 0)
     bos.write(0); Bin.putU32(bos, 0L)
 
-    val ch = openOut(path)
-    try {
-      ch.write(java.nio.ByteBuffer.wrap(bos.toByteArray))
-      spliceChunks(ch, chunks.iterator.map(_._1))
-      // value-label section runs to EOF: {len, labname[33], pad[3], table}
-      val vlOut = new java.io.ByteArrayOutputStream()
-      buildVlTables(cols, valueLabels, cs).foreach { case (name, table) =>
-        Bin.putU32(vlOut, table.length.toLong)
-        Bin.putZPad(vlOut, name, layout.vlLabnameLen, cs)
-        vlOut.write(0); vlOut.write(0); vlOut.write(0)
-        vlOut.write(table)
-      }
-      ch.write(java.nio.ByteBuffer.wrap(vlOut.toByteArray))
-    } finally ch.close()
+    // value-label section runs to EOF: {len, labname[33], pad[3], table}
+    val vlOut = new java.io.ByteArrayOutputStream()
+    buildVlTables(cols, valueLabels, cs).foreach { case (name, table) =>
+      Bin.putU32(vlOut, table.length.toLong)
+      Bin.putZPad(vlOut, name, layout.vlLabnameLen, cs)
+      vlOut.write(0); vlOut.write(0); vlOut.write(0)
+      vlOut.write(table)
+    }
+    (bos.toByteArray, vlOut.toByteArray)
   }
 }

@@ -1,12 +1,9 @@
 package graft.spark.readstat.writers
 
-import java.nio.charset.StandardCharsets
-
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.DataWriter
 import org.apache.spark.sql.types._
 
-import graft.core.Bin
 import StataDtaWriter.{ColSpec, RowEncoder, W, WByte, WDouble, WFloat, WInt, WLong, WStr}
 
 /** SINGLE-FILE streaming .dta sink — the Spark-native analog of the
@@ -31,10 +28,12 @@ import StataDtaWriter.{ColSpec, RowEncoder, W, WByte, WDouble, WFloat, WInt, WLo
   * rewrites the (small) prefix with the updated row count and map
   * offsets, splices the new row chunks at the fixed-width data end, and
   * rewrites the trailer — O(new rows + constant) IO per epoch, valid
-  * file at every point. The commit protocol, exactly-once sidecar
-  * state, and crash-healing live in [[StreamSinkCore]], shared with
-  * the sav/xpt sinks; on a multi-node cluster `scratchDir` must be
-  * shared storage, like the batch writer.
+  * file at every point. Prefix and trailer come from the batch writer's
+  * own frame function (`StataDtaWriter.frame`, with an empty strL
+  * section). The commit protocol, exactly-once sidecar state, and
+  * crash-healing live in [[StreamSinkCore]], shared with the other
+  * sinks; on a multi-node cluster `scratchDir` must be shared storage,
+  * like the batch writer.
   */
 object StataStreamSink extends StreamSinkCore.Format {
 
@@ -97,109 +96,6 @@ object StataStreamSink extends StreamSinkCore.Format {
     (cols, version)
   }
 
-  /** (prefix bytes through `<data>`, trailer bytes from `</data>`) for
-    * the given totals. Both have length INDEPENDENT of nObs/dataBytes —
-    * only embedded counts and offsets change — which is what lets a
-    * commit rewrite them in place. */
-  private[writers] def frame(version: Int, cols: Array[ColSpec], nObs: Long,
-      valueLabels: Map[String, Seq[(Int, String)]],
-      varLabels: Map[String, String]): (Array[Byte], Array[Byte]) = {
-    val k = cols.length
-    val layout = graft.core.stata.StataParser.layoutFor(version)
-    val cs = graft.core.stata.StataTypes.charsetFor(version)
-    val nameLen = layout.varNameLen
-    val fmtRecLen = layout.fmtLen
-    val varLabelLen = layout.varLabelLen
-    val rowLen = cols.map(_.w.width).sum
-    val dataBytes = nObs * rowLen
-    val bos = new java.io.ByteArrayOutputStream()
-    def ascii(s: String): Array[Byte] = s.getBytes(StandardCharsets.US_ASCII)
-    def tag(s: String): Unit = bos.write(ascii(s))
-
-    tag(s"<stata_dta><header><release>$version</release><byteorder>LSF</byteorder><K>")
-    if (version >= 119) Bin.putU32(bos, k.toLong) else Bin.putU16(bos, k)
-    tag("</K><N>")
-    Bin.putU64(bos, nObs) // streaming sink is 118/119 only
-    tag("</N><label>")
-    Bin.putU16(bos, 0)
-    tag("</label><timestamp>")
-    bos.write(0)
-    tag("</timestamp></header>")
-
-    val mapOff = bos.size().toLong
-    val mapLen = 5 + 14 * 8 + 6
-    val vtOff = mapOff + mapLen
-    val vtLen = 16 + 2 * k + 17
-    val vnOff = vtOff + vtLen
-    val vnLen = 10 + nameLen * k + 11
-    val srtEntryLen = layout.srtEntryLen
-    val soOff = vnOff + vnLen
-    val soLen = 10 + srtEntryLen * (k + 1) + 11
-    val fmtOff = soOff + soLen
-    val fmtLen = 9 + fmtRecLen * k + 10
-    val vlnOff = fmtOff + fmtLen
-    val vlnLen = 19 + nameLen * k + 20
-    val vlbOff = vlnOff + vlnLen
-    val vlbLen = 17 + varLabelLen * k + 18
-    val chOff = vlbOff + vlbLen
-    val chLen = 17 + 18
-    val dataOff = chOff + chLen
-    val dataLen = 6 + dataBytes + 7
-    val strlOff = dataOff + dataLen
-    val strlLen = 7L + 8L // empty <strls></strls>
-    val vlTables = StataDtaWriter.buildVlTables(cols, valueLabels, cs)
-    val vlBody = vlTables.map { case (_, t) => 5 + 4 + nameLen + 3 + t.length + 6 }.sum
-    val vlOff = strlOff + strlLen
-    val vlLen = 14 + vlBody + 15
-    val endOff = vlOff + vlLen
-    val eofOff = endOff + 12
-
-    tag("<map>")
-    Seq(0L, mapOff, vtOff, vnOff, soOff, fmtOff, vlnOff, vlbOff, chOff,
-      dataOff, strlOff, vlOff, endOff, eofOff).foreach(Bin.putU64(bos, _))
-    tag("</map>")
-    tag("<variable_types>")
-    cols.foreach(c => Bin.putU16(bos, c.w.typeCode))
-    tag("</variable_types>")
-    tag("<varnames>")
-    cols.foreach(c => Bin.putZPad(bos, c.stataName, nameLen, cs))
-    tag("</varnames>")
-    tag("<sortlist>")
-    (0 to k).foreach(_ =>
-      if (version >= 119) Bin.putU32(bos, 0L) else Bin.putU16(bos, 0))
-    tag("</sortlist>")
-    tag("<formats>")
-    cols.foreach(c => Bin.putZPad(bos, c.fmt, fmtRecLen, cs))
-    tag("</formats>")
-    tag("<value_label_names>")
-    cols.foreach { c =>
-      val lbl = if (valueLabels.contains(c.name) &&
-          (c.w == WLong || c.w == WInt || c.w == WByte)) c.stataName else ""
-      Bin.putZPad(bos, lbl, nameLen, cs)
-    }
-    tag("</value_label_names>")
-    tag("<variable_labels>")
-    cols.foreach(c =>
-      Bin.putZPad(bos, varLabels.getOrElse(c.name, ""), varLabelLen, cs))
-    tag("</variable_labels>")
-    tag("<characteristics></characteristics>")
-    tag("<data>")
-    val prefix = bos.toByteArray
-
-    val t = new java.io.ByteArrayOutputStream()
-    t.write(ascii("</data><strls></strls><value_labels>"))
-    vlTables.foreach { case (name, table) =>
-      t.write(ascii("<lbl>"))
-      Bin.putU32(t, table.length.toLong)
-      Bin.putZPad(t, name, nameLen, cs)
-      t.write(0); t.write(0); t.write(0)
-      t.write(table)
-      t.write(ascii("</lbl>"))
-    }
-    t.write(ascii("</value_labels></stata_dta>"))
-    (prefix, t.toByteArray)
-  }
-
   /** Driver-side epoch commit (spec-facing signature; the splice and
     * exactly-once state protocol live in [[StreamSinkCore]]). */
   def commitEpoch(path: String, epochId: Long,
@@ -230,9 +126,13 @@ object StataStreamSink extends StreamSinkCore.Format {
       }
     val schemaHash = StreamSinkCore.hashSpecs(
       cols.map(c => s"${c.name}|${c.w}|${c.fmt}").toIndexedSeq)
+    // no strL in the sink: the GSO section stays empty
     StreamSinkCore.commitEpoch("stata", path, epochId, queryId, schemaHash,
-      chunks, rowLen,
-      total => frame(version, cols, total, valueLabels, varLabels))
+      chunks, rowLen)(StreamSinkCore.fixedWidth("stata", rowLen, { total =>
+        val (pre, tail) = StataDtaWriter.frame(version, cols, total, 0L,
+          valueLabels, varLabels)
+        (pre, FileAssembler.bytes(StataDtaWriter.DataClose ++ tail))
+      }))
   }
 
   override def commit(path: String, epochId: Long, queryId: String,

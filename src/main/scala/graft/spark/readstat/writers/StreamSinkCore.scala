@@ -1,7 +1,6 @@
 package graft.spark.readstat.writers
 
 import java.io.{BufferedOutputStream, File, FileOutputStream}
-import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
@@ -11,14 +10,17 @@ import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo, Writ
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.StructType
 
-/** Shared machinery for the single-file streaming sinks (dta/sav/xpt).
+/** Shared machinery for the single-file streaming sinks (dta, sav,
+  * zsav, xpt and sas7bdat; por re-wraps its lines and keeps its own).
   *
-  * All three formats share the property that makes in-place epoch
-  * append possible: a CONSTANT-LENGTH pre-data section (only embedded
-  * counts/offsets vary with the row total), fixed-width records, and a
-  * constant-length (possibly empty) post-data section. One commit
-  * algorithm therefore serves every format; each contributes only its
-  * prefix/trailer bytes and its per-partition row encoder.
+  * Every one of them has the property that makes in-place epoch append
+  * possible: a CONSTANT-LENGTH pre-data section (only embedded
+  * counts/offsets vary with the row total), a data section that grows
+  * by whole chunks (fixed-width records, zsav deflate blocks, sas7bdat
+  * pages), and a trailer rebuilt at each commit. One commit protocol
+  * therefore serves every format, and [[FileAssembler]] lays its bytes
+  * out as it does for a batch write; each format contributes its frame
+  * (prefix, committed data end, trailer) and its per-partition encoder.
   *
   * Exactly-once protocol (shared): the sidecar `<path>.stream_state`
   * records (epochId, rows, rowLen, queryId, schemaHash) and is
@@ -92,19 +94,25 @@ object StreamSinkCore {
     md.digest().map(b => f"$b%02x").mkString
   }
 
-  /** The one commit algorithm: rewrite prefix, splice chunks at the
-    * committed row boundary, rewrite trailer, pad, truncate, fsync,
+  /** One epoch's commit: `write` lays its bytes out over the open file
+    * (a [[FileAssembler.Layout]] whose splice starts at the committed
+    * data end, for every format but the uncompressed sas7bdat page
+    * repack), `preLen` is the pre-data length the sidecar pins, and
+    * `extra` the format's own commit state. */
+  final case class Epoch(write: FileChannel => Unit, preLen: Long,
+      extra: String = "")
+
+  /** The one commit protocol: skip a replayed epoch, refuse schema or
+    * pre-data drift, assemble the epoch's layout over the file, fsync,
     * then (and only then) advance the sidecar state.
     *
-    * @param frame    (prefix, trailer) bytes for a given row total;
-    *                 their LENGTHS must not depend on the total
-    * @param padBlock if > 0, space-pad the end to this block size (xpt)
+    * @param epoch the format's layout for (committed state, new row
+    *              total, the new chunk files in partition order)
     */
   def commitEpoch(label: String, path: String, epochId: Long,
       queryId: String, schemaHash: String,
-      chunks: Seq[(Int, String, Long)], rowLen: Int,
-      frame: Long => (Array[Byte], Array[Byte]),
-      padBlock: Int = 0): Unit = synchronized {
+      chunks: Seq[(Int, String, Long)], rowLen: Int)(
+      epoch: (Option[StreamState], Long, Seq[String]) => Epoch): Unit = synchronized {
     val state = readState(path)
     try {
       val replayed = state.exists(st =>
@@ -119,52 +127,40 @@ object StreamSinkCore {
             s"(rowLen $rowLen, fingerprint $schemaHash); appends cannot " +
             "change schema mid-file")
       }
-      val prevRows = state.map(_.rows).getOrElse(0L)
-      val total = prevRows + chunks.map(_._3).sum
-      val (pre, post) = frame(total)
-      // the prefix length is the data section's base offset: ANY change
+      val total = state.map(_.rows).getOrElse(0L) + chunks.map(_._3).sum
+      val e = epoch(state, total, chunks.sortBy(_._1).map(_._2))
+      // the pre-data length is the data section's base offset: ANY change
       // (e.g. a cross-query append declaring different label text in a
       // format whose label records are length-prefixed) would shift all
       // previously committed rows — refuse before corrupting them
-      state.foreach(st => require(st.preLen < 0 || st.preLen == pre.length,
+      state.foreach(st => require(st.preLen < 0 || st.preLen == e.preLen,
         s"$label streaming sink: pre-data section length changed " +
-          s"(${st.preLen} -> ${pre.length}) for $path — appends must " +
+          s"(${st.preLen} -> ${e.preLen}) for $path — appends must " +
           "declare the same labels/formats as the original write"))
       val p = Paths.get(path)
       Option(p.getParent).foreach(Files.createDirectories(_))
       val ch = FileChannel.open(p, StandardOpenOption.CREATE,
         StandardOpenOption.READ, StandardOpenOption.WRITE)
-      try {
-        ch.position(0L)
-        ch.write(ByteBuffer.wrap(pre))
-        ch.position(pre.length + prevRows * rowLen)
-        chunks.sortBy(_._1).foreach { case (_, f, _) =>
-          val in = FileChannel.open(Paths.get(f), StandardOpenOption.READ)
-          try { var pos = 0L; val n = in.size()
-            while (pos < n) pos += in.transferTo(pos, n - pos, ch)
-          } finally in.close()
-        }
-        require(ch.position() == pre.length + total * rowLen,
-          s"$label streaming sink: chunk byte drift at epoch $epochId")
-        ch.write(ByteBuffer.wrap(post))
-        if (padBlock > 0) {
-          val rem = (ch.position() % padBlock).toInt
-          if (rem != 0) {
-            val pad = new Array[Byte](padBlock - rem)
-            java.util.Arrays.fill(pad, ' '.toByte)
-            ch.write(ByteBuffer.wrap(pad))
-          }
-        }
-        ch.truncate(ch.position())
-        if (padBlock == 80)
-          // xpt (the only padBlock user): dodge pandas' tail-pad
-          // heuristic when one blank card makes its row count exact
-          XptWriterImpl.pandasTailFix(ch, pre.length.toLong, rowLen, total)
-        ch.force(true)
-      } finally ch.close()
+      try { e.write(ch); ch.force(true) } finally ch.close()
       writeState(path, StreamState(epochId, total, rowLen, queryId,
-        schemaHash, pre.length.toLong))
+        schemaHash, e.preLen, e.extra))
     } finally chunks.foreach { case (_, f, _) => new File(f).delete() }
+  }
+
+  /** An epoch laid out by [[FileAssembler]]. */
+  def assembled(label: String, layout: FileAssembler.Layout, preLen: Long,
+      extra: String = ""): Epoch =
+    Epoch(FileAssembler.assemble(_, layout, s"$label streaming sink"), preLen, extra)
+
+  /** The epoch of fixed-width records: `frame(total)` gives the prefix
+    * and the trailer, and the new rows go at the committed row boundary. */
+  def fixedWidth(label: String, rowLen: Int,
+      frame: Long => (Array[Byte], FileChannel => Unit))(
+      state: Option[StreamState], total: Long, files: Seq[String]): Epoch = {
+    val (pre, trailer) = frame(total)
+    val from = pre.length + state.map(_.rows).getOrElse(0L) * rowLen
+    assembled(label, FileAssembler.Layout(pre, from, FileAssembler.sized(files),
+      pre.length + total * rowLen, trailer), pre.length.toLong)
   }
 
   /** Per-format plug-in: per-partition encoder on executors, epoch

@@ -188,13 +188,14 @@ private[graft] object WritePass {
     new File(StreamSinkCore.scratchDir(options),
       "graft_write_" + java.util.UUID.randomUUID().toString.replace("-", ""))
 
-  /** Remove a write's scratch directory. A task still finishing after a
-    * failed job may add a file between the listing and the removal;
-    * once the directory is gone it cannot. */
-  private def remove(dir: File): Unit = {
+  /** Remove a write's scratch directory and what is in it. A task still
+    * finishing after a failed job may add a file between the listing and
+    * the removal; once the directory is gone it cannot. */
+  private[writers] def remove(dir: File): Unit = {
     var tries = 0
     while (dir.exists && tries < 3) {
-      Option(dir.listFiles()).foreach(_.foreach(_.delete()))
+      Option(dir.listFiles()).foreach(_.foreach(f =>
+        if (f.isDirectory) remove(f) else f.delete()))
       dir.delete()
       tries += 1
     }

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types._
   * the only invariant is that the data section is space-padded to an
   * 80-byte boundary at EOF. An epoch commit writes the constant header
   * once, splices new chunks at `header + rows·rowLen` (over the previous
-  * commit's padding), re-pads, truncates, and fsyncs. Row count lives
+  * commit's padding), re-pads with the batch writer's own end
+  * (`XptWriterImpl.finish`), truncates, and fsyncs. Row count lives
   * ONLY in the sidecar state — exactly the property that makes the
   * format appendable. Same declared-width/exactly-once/crash-healing
   * contract as [[StataStreamSink]] (shared [[StreamSinkCore]] protocol).
@@ -132,12 +133,11 @@ object XptStreamSink extends StreamSinkCore.Format {
             s"${c.fmtName}.${c.fmtW}.${c.fmtD}").mkString(",")) else Nil)
         ++ (if (tableName.nonEmpty || fileLabel.nonEmpty)
           Seq(s"|ds:$tableName|lbl:$fileLabel") else Nil))
+    val header = XptWriterImpl.buildHeader(cols, version, varLabels,
+      tableName, fileLabel)
     StreamSinkCore.commitEpoch("xpt", path, epochId, queryId, schemaHash,
-      chunks, rowLen,
-      _ => (XptWriterImpl.buildHeader(cols, version, varLabels,
-        tableName, fileLabel),
-        Array.emptyByteArray),
-      padBlock = 80)
+      chunks, rowLen)(StreamSinkCore.fixedWidth("xpt", rowLen, total =>
+        (header, XptWriterImpl.finish(header.length, rowLen, total))))
     if (vls.nonEmpty) {
       val catPath = options.getOrElse("catalogPath",
         path.replaceAll("(?i)\\.xpt[589]?$", "") + ".sas7bcat")

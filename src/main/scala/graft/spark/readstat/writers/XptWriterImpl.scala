@@ -1,6 +1,7 @@
 package graft.spark.readstat.writers
 
 import java.io.{BufferedOutputStream, FileOutputStream}
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Paths, StandardOpenOption}
 
@@ -203,24 +204,22 @@ object XptWriterImpl {
         (it, _, partPath) =>
           val specs = specsB.value
           var rows = 0L
+          // no count in the header to patch: the records go straight
+          // into the part after it, then the one xpt end
           AtomicFile.write(partPath) { tmp =>
             val out = new BufferedOutputStream(new FileOutputStream(tmp), 1 << 20)
-            out.write(header)
-            val enc = new XptRowEncoder(specs, out, ordsB.value, tagOrdsB.value)
-            it.foreach(enc.encode)
-            rows = enc.rows
-            val partRowLen = specs.map(_.width).sum
-            val rem = ((rows * partRowLen) % 80).toInt
-            if (rem != 0) {
-              val pad = new Array[Byte](80 - rem)
-              java.util.Arrays.fill(pad, ' '.toByte)
-              out.write(pad)
-            }
-            out.close()
-            val fix = java.nio.channels.FileChannel.open(Paths.get(tmp),
-              StandardOpenOption.READ, StandardOpenOption.WRITE)
-            try pandasTailFix(fix, header.length.toLong, partRowLen, rows)
-            finally fix.close()
+            try {
+              out.write(header)
+              val enc = new XptRowEncoder(specs, out, ordsB.value, tagOrdsB.value)
+              it.foreach(enc.encode)
+              rows = enc.rows
+            } finally out.close()
+            val ch = FileChannel.open(Paths.get(tmp), StandardOpenOption.READ,
+              StandardOpenOption.WRITE)
+            try {
+              ch.position(ch.size())
+              finish(header.length, specs.map(_.width).sum, rows)(ch)
+            } finally ch.close()
           }
           rows
       }
@@ -238,32 +237,11 @@ object XptWriterImpl {
       f.getAbsolutePath
     }
     WritePass.run(df, options, known, layoutOf, encode) { pass =>
-      val cols = pass.layout
-      val header = buildHeader(cols, version, varLabels, tableName, fileLabel)
-      AtomicFile.write(path) { tmpOut =>
-        val ch = java.nio.channels.FileChannel.open(Paths.get(tmpOut),
-          StandardOpenOption.CREATE, StandardOpenOption.READ,
-          StandardOpenOption.WRITE, StandardOpenOption.TRUNCATE_EXISTING)
-        try {
-          ch.write(java.nio.ByteBuffer.wrap(header))
-          var written = 0L
-          pass.chunks.foreach { c =>
-            val in = java.nio.channels.FileChannel.open(Paths.get(c), StandardOpenOption.READ)
-            try { var p = 0L; val n = in.size()
-              while (p < n) p += in.transferTo(p, n - p, ch)
-              written += n
-            } finally in.close()
-          }
-          // pad data section to an 80-byte boundary with spaces
-          val rem = (written % 80).toInt
-          if (rem != 0) {
-            val pad = new Array[Byte](80 - rem)
-            java.util.Arrays.fill(pad, ' '.toByte)
-            ch.write(java.nio.ByteBuffer.wrap(pad))
-          }
-          pandasTailFix(ch, header.length.toLong, cols.map(_.width).sum, pass.stats.rows)
-        } finally ch.close()
-      }
+      val header = buildHeader(pass.layout, version, varLabels, tableName, fileLabel)
+      val rowLen = pass.layout.map(_.width).sum
+      FileAssembler.write(path, FileAssembler.whole(header, pass.chunks,
+        header.length + pass.stats.rows * rowLen,
+        finish(header.length, rowLen, pass.stats.rows)), "xpt writer")
     }
     writeCatalog()
   }
@@ -328,7 +306,10 @@ object XptWriterImpl {
     }
   }
 
-  /** pandas' xport reader estimates the row count by subtracting
+  /** The end of an xpt file, written at the end of its records: space
+    * padding to the next 80-byte card, then possibly one blank card.
+    *
+    * pandas' xport reader estimates the row count by subtracting
     * 8-byte-ALIGNED all-space blocks found anywhere in the FINAL 80-byte
     * card (its tail-pad heuristic). Real char data whose trailing spaces
     * form such blocks makes it UNDERCOUNT — pandas silently drops the
@@ -339,37 +320,34 @@ object XptWriterImpl {
     * trailing all-blank rows inside the final card either way, so the
     * extra card is invisible to them, while pandas then sees tail_pad=80
     * and counts exactly. When neither layout is exact (pad ≥ rowLen
-    * corner), keep the spec-minimal pad. Call with the channel holding a
-    * complete, boundary-padded file. */
-  private[writers] def pandasTailFix(ch: java.nio.channels.FileChannel,
-      dataStart: Long, rowLen: Int, nRows: Long): Unit = {
-    val end = ch.size()
+    * corner), keep the spec-minimal pad. The channel must be readable. */
+  private[writers] def finish(dataStart: Long, rowLen: Int,
+      nRows: Long): java.nio.channels.FileChannel => Unit = { ch =>
+    val rem = ((ch.position() - dataStart) % 80).toInt
+    if (rem != 0) FileAssembler.put(ch, blanks(80 - rem))
+    val end = ch.position()
     val dataLen = end - dataStart
-    if (dataLen < 80 || rowLen <= 0) return
-    val card = java.nio.ByteBuffer.allocate(80)
-    var read = 0
-    while (read < 80) {
-      val n = ch.read(card, end - 80 + read)
-      if (n < 0) return
-      read += n
-    }
-    var blocks = 0
-    var i = 0
-    while (i < 80) {
-      var all = true
-      var j = 0
-      while (j < 8) { if (card.get(i + j) != ' ') all = false; j += 1 }
-      if (all) blocks += 1
-      i += 8
-    }
-    val pandasRows = (dataLen - 8L * blocks) / rowLen
-    if (pandasRows != nRows && dataLen / rowLen == nRows) {
-      val blank = new Array[Byte](80)
-      java.util.Arrays.fill(blank, ' '.toByte)
-      ch.position(end)
-      ch.write(java.nio.ByteBuffer.wrap(blank))
+    if (dataLen >= 80 && rowLen > 0) {
+      val card = java.nio.ByteBuffer.allocate(80)
+      while (card.hasRemaining && ch.read(card, end - 80 + card.position()) >= 0) ()
+      var blocks = 0
+      var i = 0
+      while (i < 80) {
+        var all = true
+        var j = 0
+        while (j < 8) { if (card.get(i + j) != ' ') all = false; j += 1 }
+        if (all) blocks += 1
+        i += 8
+      }
+      val pandasRows = (dataLen - 8L * blocks) / rowLen
+      if (pandasRows != nRows && dataLen / rowLen == nRows) {
+        ch.position(end)
+        FileAssembler.put(ch, blanks(80))
+      }
     }
   }
+
+  private def blanks(n: Int): Array[Byte] = Array.fill[Byte](n)(' '.toByte)
 
   /** Per-partition specialized row encoder (same rationale as the
     * dta/sav writers): source-type dispatch resolves once per column and

@@ -1,9 +1,8 @@
 package graft.spark.readstat.writers
 
-import java.io.File
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.channels.FileChannel
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Paths, StandardOpenOption}
 import java.util.Base64
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -35,23 +34,12 @@ import org.apache.spark.sql.types._
   * resolution): declared string widths, loud over-width failures,
   * exactly-once across restarts scoped to the streaming query id,
   * schema-fingerprint drift refusal, constant dictionary length pinned
-  * by the preLen guard.
+  * by the preLen guard — all of it [[StreamSinkCore.commitEpoch]]'s,
+  * whose committed data end here is the end of the committed blocks.
+  * The zheader and ztrailer come from the batch writer's
+  * `SpssSavWriter.zsavFrame`.
   */
 object ZsavStreamSink extends StreamSinkCore.Format {
-
-  /** Deflated terminal block holding the end-of-data control group
-    * ([252, 0×7]) — regenerated at the tail of every commit, never part
-    * of the committed block index. Matches the batch writer's terminal
-    * block bit for bit. */
-  private[writers] val TerminalBlock: Array[Byte] = {
-    val d = new java.util.zip.Deflater()
-    val raw = Array[Byte](252.toByte, 0, 0, 0, 0, 0, 0, 0)
-    d.setInput(raw); d.finish()
-    val buf = new Array[Byte](64)
-    val n = d.deflate(buf)
-    d.end()
-    java.util.Arrays.copyOf(buf, n)
-  }
 
   // ---- sidecar block-index codec: base64 of LE (u32 u, u32 c) pairs ----
   private[writers] def packBlocks(blocks: Seq[(Int, Int)]): String = {
@@ -78,112 +66,44 @@ object ZsavStreamSink extends StreamSinkCore.Format {
 
   override def commit(path: String, epochId: Long, queryId: String,
       chunks: Seq[(Int, String, Long)], schema: StructType,
-      options: Map[String, String]): Unit = synchronized {
+      options: Map[String, String]): Unit = {
     val (cols, valueLabels, varLabels, varMeasures, schemaHash) =
       SavStreamSink.resolveStream("zsav", schema, options)
-    val recordLen = cols.map(_.widthUnits).sum * 8
-    val state = StreamSinkCore.readState(path)
-    try {
-      val replayed = state.exists(st =>
-        st.queryId == queryId && epochId <= st.epoch)
-      if (replayed) return
-      state.foreach { st =>
-        require(st.rowLen == recordLen &&
-            (st.schemaHash.isEmpty || st.schemaHash == schemaHash),
-          s"zsav streaming sink: schema drift — the file at $path was " +
-            s"committed with a different column layout (rowLen ${st.rowLen}" +
-            s", fingerprint ${st.schemaHash}) than this query produces " +
-            s"(rowLen $recordLen, fingerprint $schemaHash); appends cannot " +
-            "change schema mid-file")
-      }
-      val prevRows = state.map(_.rows).getOrElse(0L)
+    StreamSinkCore.commitEpoch("zsav", path, epochId, queryId, schemaHash,
+      chunks, cols.map(_.widthUnits).sum * 8) { (state, total, files) =>
       val prevBlocks = state.map(st => unpackBlocks(st.extra)).getOrElse(Nil)
-
       // each chunk file = concatenated deflate blocks + a footer of
       // LE (u32 u, u32 c) per block + u32 block count; read the footers
-      val parts: Seq[(String, Long, Seq[(Int, Int)])] =
-        chunks.sortBy(_._1).map { case (_, f, _) =>
-          val in = FileChannel.open(Paths.get(f), StandardOpenOption.READ)
-          try {
-            val sz = in.size()
-            require(sz >= 4, s"zsav streaming sink: truncated chunk $f")
-            val cntBuf = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
-            in.read(cntBuf, sz - 4)
-            val cnt = cntBuf.getInt(0)
-            val footerLen = 8L * cnt + 4
-            require(cnt >= 0 && footerLen <= sz,
-              s"zsav streaming sink: corrupt chunk footer in $f")
-            val fb = ByteBuffer.allocate(8 * cnt).order(ByteOrder.LITTLE_ENDIAN)
-            in.read(fb, sz - footerLen)
-            fb.flip()
-            val bl = Seq.fill(cnt)((fb.getInt(), fb.getInt()))
-            require(bl.map(_._2.toLong).sum == sz - footerLen,
-              s"zsav streaming sink: chunk block-size drift in $f")
-            (f, sz - footerLen, bl)
-          } finally in.close()
-        }
-      val newBlocks = parts.flatMap(_._3)
-      val total = prevRows + chunks.map(_._3).sum
+      val parts: Seq[(String, Long, Seq[(Int, Int)])] = files.map { f =>
+        val in = FileChannel.open(Paths.get(f), StandardOpenOption.READ)
+        try {
+          val sz = in.size()
+          require(sz >= 4, s"zsav streaming sink: truncated chunk $f")
+          val cntBuf = ByteBuffer.allocate(4).order(ByteOrder.LITTLE_ENDIAN)
+          in.read(cntBuf, sz - 4)
+          val cnt = cntBuf.getInt(0)
+          val footerLen = 8L * cnt + 4
+          require(cnt >= 0 && footerLen <= sz,
+            s"zsav streaming sink: corrupt chunk footer in $f")
+          val fb = ByteBuffer.allocate(8 * cnt).order(ByteOrder.LITTLE_ENDIAN)
+          in.read(fb, sz - footerLen)
+          fb.flip()
+          val bl = Seq.fill(cnt)((fb.getInt(), fb.getInt()))
+          require(bl.map(_._2.toLong).sum == sz - footerLen,
+            s"zsav streaming sink: chunk block-size drift in $f")
+          (f, sz - footerLen, bl)
+        } finally in.close()
+      }
+      val dataBlocks = prevBlocks ++ parts.flatMap(_._3)
       val dict = SpssSavWriter.buildDictionary(cols, total, zlib = true,
         valueLabels, varLabels, varMeasures)
-      state.foreach(st => require(st.preLen < 0 || st.preLen == dict.length,
-        s"zsav streaming sink: pre-data section length changed " +
-          s"(${st.preLen} -> ${dict.length}) for $path — appends must " +
-          "declare the same labels/formats as the original write"))
-
-      val zheaderOfs = dict.length.toLong
-      val dataStart = zheaderOfs + 24
-      val dataBlocks = prevBlocks ++ newBlocks
-      val allBlocks = dataBlocks :+ ((8, TerminalBlock.length))
-      val ztrailerOfs = dataStart + allBlocks.map(_._2.toLong).sum
-      val ztrailerLen = 24L + 24L * allBlocks.length
-
-      val p = Paths.get(path)
-      Option(p.getParent).foreach(Files.createDirectories(_))
-      val ch = FileChannel.open(p, StandardOpenOption.CREATE,
-        StandardOpenOption.WRITE)
-      try {
-        ch.position(0L)
-        ch.write(ByteBuffer.wrap(dict))
-        val hb = ByteBuffer.allocate(24).order(ByteOrder.LITTLE_ENDIAN)
-        hb.putLong(zheaderOfs); hb.putLong(ztrailerOfs); hb.putLong(ztrailerLen)
-        hb.flip()
-        ch.write(hb)
-        // splice new blocks at the committed data end (over the previous
-        // terminal block + trailer)
-        ch.position(dataStart + prevBlocks.map(_._2.toLong).sum)
-        parts.foreach { case (f, dataLen, _) =>
-          val in = FileChannel.open(Paths.get(f), StandardOpenOption.READ)
-          try {
-            var pos = 0L
-            while (pos < dataLen) pos += in.transferTo(pos, dataLen - pos, ch)
-          } finally in.close()
-        }
-        require(ch.position() == ztrailerOfs - TerminalBlock.length,
-          s"zsav streaming sink: block byte drift at epoch $epochId")
-        ch.write(ByteBuffer.wrap(TerminalBlock))
-        // ztrailer: bias, zero, block_size, n_blocks, then per-block
-        // (uncompressed ofs, compressed ofs, uncompressed size,
-        // compressed size) — same layout the batch writer emits
-        val tb = ByteBuffer.allocate(ztrailerLen.toInt)
-          .order(ByteOrder.LITTLE_ENDIAN)
-        tb.putLong(-100L); tb.putLong(0L)
-        tb.putInt(0x3FF000); tb.putInt(allBlocks.length)
-        var uOfs = zheaderOfs
-        var cOfs = dataStart
-        allBlocks.foreach { case (u, c) =>
-          tb.putLong(uOfs); tb.putLong(cOfs); tb.putInt(u); tb.putInt(c)
-          uOfs += u; cOfs += c
-        }
-        tb.flip()
-        ch.write(tb)
-        ch.truncate(ch.position())
-        ch.force(true)
-      } finally ch.close()
-      StreamSinkCore.writeState(path, StreamSinkCore.StreamState(epochId,
-        total, recordLen, queryId, schemaHash, dict.length.toLong,
-        packBlocks(dataBlocks)))
-    } finally chunks.foreach { case (_, f, _) => new File(f).delete() }
+      val (pre, tail) = SpssSavWriter.zsavFrame(dict, dataBlocks)
+      // the new blocks go over the previous terminal block + ztrailer
+      val from = pre.length + prevBlocks.map(_._2.toLong).sum
+      StreamSinkCore.assembled("zsav", FileAssembler.Layout(pre, from,
+        parts.map(p => p._1 -> p._2), from + parts.map(_._2).sum,
+        FileAssembler.bytes(tail)), dict.length.toLong, packBlocks(dataBlocks))
+    }
   }
 }
 

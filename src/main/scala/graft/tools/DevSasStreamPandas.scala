@@ -23,7 +23,7 @@ import org.apache.spark.sql.SparkSession
   * Last verified (this round): pandas 2.x reads the streamed sas7bdat
   * in both compression modes, the streamed dta, and the streamed xpt
   * exactly — 5002 rows, exact sums. The xpt result REQUIRES the
-  * tail-pad dodge in XptWriterImpl.pandasTailFix: before it, pandas'
+  * tail-pad dodge in XptWriterImpl.finish: before it, pandas'
   * aligned-space-block heuristic dropped the final row (5001/5002).
   */
 object DevSasStreamPandas {

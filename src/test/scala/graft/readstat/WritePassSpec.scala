@@ -191,6 +191,48 @@ class WritePassSpec extends SparkTestBase {
     assert(got == Pinned)
   }
 
+  /** Framing shapes the pins above leave out: the legacy dta layout,
+    * label sections, and the strL section between the data and the
+    * value labels. (case name, target file, options, long strings). */
+  private val FrameCases: Seq[(String, String, Map[String, String], Boolean)] = {
+    val labels = Map(
+      "valueLabels" -> "b:-1=minus one,0=zero,7=seven|sh:0=none,12=twelve",
+      "varLabels" -> "x:Quarter of a hash|s:Accented text|d:A date")
+    Seq(
+      ("dta114", "f114.dta", Map("dtaVersion" -> "114"), false),
+      ("dta+labels", "flab.dta", labels, false),
+      ("dta117+labels", "flab117.dta", labels + ("dtaVersion" -> "117"), false),
+      ("sav+labels", "flab.sav", labels, false),
+      ("zsav+labels", "flab.zsav", labels, false),
+      ("dta+strl", "fstrl.dta", Map.empty[String, String], true),
+      ("dta117+strl", "fstrl117.dta", Map("dtaVersion" -> "117"), true))
+  }
+
+  /** Recorded before the batch writers and the streaming sinks shared
+    * one file assembler. */
+  private val FramePinned: Map[String, String] = Map(
+    "dta+labels" -> "6d16d147c78a914bf0fef8e45f56e892edb74f9cb2e9e3d110ec8ee8dc6d0ff9",
+    "dta+strl" -> "481131f174a0d80dfe6dbb413551031b30012883aa965e12b6fc6df06bb5dae3",
+    "dta114" -> "7b4b6a5031314041c4cb25c2373a96166e7f0a79e96dfd0326231d08e3460bd3",
+    "dta117+labels" -> "34f952b24a9eabc16f23ddbb1b8f84b1ab0b33ecd2e7b3334d08089079c9380c",
+    "dta117+strl" -> "00854b0a56d5a63263c40b42fe66cd1742e9dcd49a9e2b11f06ad30637c2b934",
+    "sav+labels" -> "d6efd692a0cd1e85c4dc6dbbc48ad1035c224add78a5274db61dd3e5ac258113",
+    "zsav+labels" -> "26554e4ddb0fdc85d02df3fb3b5e51479f0c81aec401dfb4c425babff01e3283")
+
+  test("label, legacy and strL framings match their pinned digests") {
+    val dir = tmpDir()
+    // every fifth row holds a string past dta's 2045-byte str# cap
+    val strl = frame.withColumn("long", when(h(12, 5) === 0,
+      repeat(concat(lit("strL "), col("id").cast("string")), 300))
+      .otherwise(concat(lit("short "), col("id").cast("string"))))
+    val got = FrameCases.map { case (name, file, opts, long) =>
+      Readstat.write(if (long) strl else frame, s"$dir/$file", opts)
+      name -> sha256(new File(s"$dir/$file"))
+    }.toMap
+    assert(got == FramePinned, got.toSeq.sorted.map { case (k, v) => s"\"$k\" -> \"$v\"" }
+      .mkString(",\n"))
+  }
+
   /** Recorded at the commit before the one-job pass (two jobs, one
     * global layout for every partition). */
   private val SkewedPinned: Map[String, String] = Map(
@@ -328,7 +370,7 @@ class WritePassSpec extends SparkTestBase {
     val notADir = File.createTempFile("graft_scratch_", ".file")
     notADir.deleteOnExit()
     val dir = tmpDir()
-    for (ext <- Targets; multi <- Seq(false, true)) {
+    for (ext <- Targets :+ "csv"; multi <- Seq(false, true)) {
       intercept[Exception](Readstat.write(frame, s"$dir/nodir.$ext",
         Map("scratchDir" -> notADir.getPath, "multiFile" -> multi.toString)))
       assert(!new File(s"$dir/nodir.$ext").exists(), s"$ext multiFile=$multi")
@@ -345,7 +387,7 @@ class WritePassSpec extends SparkTestBase {
     val df = spark.range(0, 300, 1, 3).select(boom(col("id")).as("x"),
       concat(lit("v"), col("id").cast("string")).as("s"))
     val dir = tmpDir()
-    for (ext <- Targets; multi <- Seq(false, true)) {
+    for (ext <- Targets :+ "csv"; multi <- Seq(false, true)) {
       val ctx = s"$ext multiFile=$multi"
       val scratch = Files.createTempDirectory(dir.toPath, "scratch").toFile
       val target = new File(s"$dir/fail_$multi.$ext")
